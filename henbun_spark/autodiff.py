@@ -35,6 +35,18 @@ def _unbroadcast(grad: np.ndarray, shape: tuple) -> np.ndarray:
     return grad.reshape(shape)
 
 
+def _acc(t: "Tensor", g) -> None:
+    """Add the gradient contribution `g` into ``t.grad``.
+
+    The first contribution allocates the array: ``g + 0.0`` written into
+    a fresh array of t's dtype is exactly ``zeros + g`` (``-0.0`` turns
+    into ``0.0`` as it would), so no node pays a zero-fill."""
+    if t.grad is None:
+        t.grad = np.add(g, 0.0, out=np.empty_like(t.data))
+    else:
+        t.grad += g
+
+
 class Tensor:
     __slots__ = ("data", "grad", "_backward", "_prev", "requires_grad")
     __array_priority__ = 100  # so np.ndarray + Tensor defers to us
@@ -44,7 +56,12 @@ class Tensor:
         # float32 mode halves Arrow/broadcast bytes at reference tolerances)
         self.data = np.asarray(data, dtype=settings.dtypes.float_type)
         self.grad = None
-        self.requires_grad = requires_grad or any(p.requires_grad for p in _prev)
+        if not requires_grad:
+            for p in _prev:
+                if p.requires_grad:
+                    requires_grad = True
+                    break
+        self.requires_grad = requires_grad
         self._prev = _prev
         self._backward = _backward
 
@@ -75,11 +92,13 @@ class Tensor:
             topo.append(t)
 
         build(self)
+        # gradients are allocated by each node's first contribution
+        # (`_acc`); clearing here drops any left by an earlier backward
         for t in topo:
-            t.grad = np.zeros_like(t.data)
+            t.grad = None
         self.grad = np.asarray(grad, dtype=self.data.dtype)
         for t in reversed(topo):
-            if t._backward is not None:
+            if t._backward is not None and t.grad is not None:
                 t._backward(t.grad)
 
     # -- helpers --------------------------------------------------------
@@ -94,9 +113,9 @@ class Tensor:
 
         def _backward(g):
             if self.requires_grad:
-                self.grad += _unbroadcast(bwd_self(g, self.data, other.data, out_data), self.shape)
+                _acc(self, _unbroadcast(bwd_self(g, self.data, other.data, out_data), self.shape))
             if other.requires_grad:
-                other.grad += _unbroadcast(bwd_other(g, self.data, other.data, out_data), other.shape)
+                _acc(other, _unbroadcast(bwd_other(g, self.data, other.data, out_data), other.shape))
 
         out._backward = _backward
         return out
@@ -135,7 +154,7 @@ class Tensor:
 
         def _backward(g):
             if self.requires_grad:
-                self.grad += g * p * self.data ** (p - 1)
+                _acc(self, g * p * self.data ** (p - 1))
 
         out._backward = _backward
         return out
@@ -151,10 +170,10 @@ class Tensor:
         def _backward(g):
             if a.requires_grad:
                 ga = g @ np.swapaxes(b.data, -1, -2)
-                a.grad += _unbroadcast(ga, a.shape)
+                _acc(a, _unbroadcast(ga, a.shape))
             if b.requires_grad:
                 gb = np.swapaxes(a.data, -1, -2) @ g
-                b.grad += _unbroadcast(gb, b.shape)
+                _acc(b, _unbroadcast(gb, b.shape))
 
         out._backward = _backward
         return out
@@ -164,6 +183,8 @@ class Tensor:
 
         def _backward(g):
             if self.requires_grad:
+                if self.grad is None:
+                    self.grad = np.zeros_like(self.data)
                 np.add.at(self.grad, idx, g)
 
         out._backward = _backward
@@ -177,7 +198,7 @@ class Tensor:
 
         def _backward(g):
             if self.requires_grad:
-                self.grad += g.reshape(old)
+                _acc(self, g.reshape(old))
 
         out._backward = _backward
         return out
@@ -188,7 +209,7 @@ class Tensor:
 
         def _backward(g):
             if self.requires_grad:
-                self.grad += np.swapaxes(g, -1, -2)
+                _acc(self, np.swapaxes(g, -1, -2))
 
         out._backward = _backward
         return out
@@ -200,10 +221,10 @@ class Tensor:
             if not self.requires_grad:
                 return
             if axis is None:
-                self.grad += np.broadcast_to(g, self.shape)
+                _acc(self, np.broadcast_to(g, self.shape))
             else:
                 gg = g if keepdims else np.expand_dims(g, axis)
-                self.grad += np.broadcast_to(gg, self.shape)
+                _acc(self, np.broadcast_to(gg, self.shape))
 
         out._backward = _backward
         return out
@@ -228,7 +249,7 @@ def _unary(x, fwd, dfdx):
 
     def _backward(g):
         if x.requires_grad:
-            x.grad += g * dfdx(x.data, out_data)
+            _acc(x, g * dfdx(x.data, out_data))
 
     out._backward = _backward
     return out
@@ -335,7 +356,7 @@ def transpose(x, axes=None):
 
     def _backward(g):
         if x.requires_grad:
-            x.grad += np.transpose(g, inv)
+            _acc(x, np.transpose(g, inv))
 
     out._backward = _backward
     return out
@@ -360,7 +381,7 @@ def concat(tensors, axis=0):
         parts = np.split(g, np.cumsum(sizes)[:-1], axis=axis)
         for t, p in zip(tensors, parts):
             if t.requires_grad:
-                t.grad += p
+                _acc(t, p)
 
     out._backward = _backward
     return out
@@ -431,13 +452,13 @@ def cholesky(a):
         if not a.requires_grad:
             return
         if L.ndim == 2:
-            a.grad += _bw_2d(L, g)
+            _acc(a, _bw_2d(L, g))
         else:
             n = L.shape[-1]
             Lf = L.reshape(-1, n, n)
             gf = np.asarray(g).reshape(-1, n, n)
             ab = np.stack([_bw_2d(Lf[i], gf[i]) for i in range(Lf.shape[0])])
-            a.grad += ab.reshape(L.shape)
+            _acc(a, ab.reshape(L.shape))
 
     out._backward = _backward
     return out
@@ -455,11 +476,11 @@ def triangular_solve(L, b, lower=True):
         gmat = g if not squeeze else g[:, None]
         gb = _solve_tri_np(L.data, gmat, lower=lower, trans=True)  # L^{-T} g
         if b.requires_grad:
-            b.grad += gb[..., 0] if squeeze else _unbroadcast(gb, b.shape)
+            _acc(b, gb[..., 0] if squeeze else _unbroadcast(gb, b.shape))
         if L.requires_grad:
             gL = -gb @ np.swapaxes(x, -1, -2)
             gL = np.tril(gL) if lower else np.triu(gL)
-            L.grad += _unbroadcast(gL, L.shape)
+            _acc(L, _unbroadcast(gL, L.shape))
 
     out._backward = _backward
     return out

@@ -288,20 +288,23 @@ class Parameterized(Parentable):
 
     def __getattribute__(self, key):
         o = object.__getattribute__(self, key)
+        # only tree children are swapped for tensors, so the common case
+        # (methods, arrays, flags) returns before reading _tf_mode
+        if not isinstance(o, (Parameterized, Variable)) or key == "_parent":
+            return o
         try:
             if not object.__getattribute__(self, "_tf_mode"):
                 return o
         except AttributeError:
             return o
-        if key == "_parent":
-            return o
-        if isinstance(o, (Parameterized, Variable)) and hasattr(o, "tensor"):
+        if hasattr(o, "tensor"):
             return o.tensor()
         return o
 
     def __setattr__(self, key, value):
-        if key in self.__dict__.keys():
-            p = object.__getattribute__(self, key)
+        d = object.__getattribute__(self, "__dict__")
+        p = d.get(key)
+        if key in d:
             try:
                 if object.__getattribute__(self, "_tf_mode"):
                     if isinstance(p, (Variable, Parameterized)):
@@ -320,8 +323,34 @@ class Parameterized(Parentable):
             ):
                 p._parent = None
         object.__setattr__(self, key, value)
-        if isinstance(value, Parentable) and key != "_parent":
-            value._parent = self
+        if key == "_parent":
+            return
+        if isinstance(value, Parentable):
+            self._adopt(value)
+        if isinstance(value, (Variable, Parameterized)) or isinstance(
+            p, (Variable, Parameterized)
+        ):
+            self._invalidate_children()
+
+    def __delattr__(self, key):
+        p = object.__getattribute__(self, "__dict__").get(key)
+        object.__delattr__(self, key)
+        if isinstance(p, (Variable, Parameterized)):
+            if p._parent is self:
+                p._parent = None
+            self._invalidate_children()
+
+    def _adopt(self, child):
+        """Make self the parent of `child`. A former parent's sorted
+        children are invalidated too: their order is by child name,
+        which is looked up through the child's current parent."""
+        old = getattr(child, "_parent", None)
+        if isinstance(old, Parameterized) and old is not self:
+            old._invalidate_children()
+        child._parent = self
+
+    def _invalidate_children(self):
+        object.__getattribute__(self, "__dict__").pop("_children", None)
 
     @contextmanager
     def tf_mode(self):
@@ -341,13 +370,25 @@ class Parameterized(Parentable):
 
     @property
     def sorted_variables(self):
-        """Child Variables/Parameterized sorted by name (`param.py:455-465`)."""
-        variables = [
-            child
-            for key, child in self.__dict__.items()
-            if isinstance(child, (Variable, Parameterized)) and key != "_parent"
-        ]
-        return sorted(variables, key=lambda x: x.name)
+        """Child Variables/Parameterized sorted by name (`param.py:455-465`).
+
+        Computed once and kept in ``_children`` until a child attribute
+        is set, replaced or deleted (`__setattr__`/`__delattr__`); every
+        evaluation walks the tree several times, and each sort re-derives
+        the children's names by scanning this ``__dict__``."""
+        d = object.__getattribute__(self, "__dict__")
+        children = d.get("_children")
+        if children is None:
+            children = d["_children"] = tuple(sorted(
+                (
+                    child
+                    for key, child in d.items()
+                    if isinstance(child, (Variable, Parameterized))
+                    and key != "_parent"
+                ),
+                key=lambda x: x.name,
+            ))
+        return children
 
     def get_variables(self, collection=None):
         """Recursively collect tagged Variables (`param.py:467-485`)."""
@@ -454,7 +495,7 @@ class ParamList(Parameterized):
     def append(self, item):
         if not isinstance(item, Parentable):
             raise AssertionError("can only append Parentable items")
-        item._parent = self
+        self._adopt(item)
         self._list.append(item)
 
     def __len__(self):
@@ -474,7 +515,7 @@ class ParamList(Parameterized):
         if isinstance(p, Variable) and isinstance(value, np.ndarray):
             p.assign(value)
             return
-        value._parent = self
+        self._adopt(value)
         self._list[i] = value
 
     @property

@@ -23,7 +23,20 @@ decompose as  sum over rows  +  dataset-level terms. ``local_objective``
 is evaluated per batch (its value/gradient sum across partitions);
 ``global_objective`` (optional: priors/KL of *global* parameters) is
 evaluated once per step on the driver. KL of LOCAL variationals is
-row-additive and belongs in ``local_objective``.
+row-additive and belongs in ``local_objective``. ``local_objective`` may
+depend only on the global state, the batch and the seeded RNG
+(``draw_normal``), never on what an earlier evaluation left on the
+model: a task evaluates every Arrow batch of its partition on one
+unpickled model, and the driver-local replay keeps that model for every
+step of a fit.
+
+Driver-local replay (under LOCAL_ROWS_CAP): the first multi-step fit
+fetches the frame's (partition, Arrow batch) pandas frames in one job,
+and the trainer keeps them for its lifetime. Every step of a fit then
+runs on the driver with no Spark job: one `_Replica` per partition,
+unpickled at its first batch of the fit, gets the step's global state
+injected and evaluates that partition's batches with the distributed
+job's seeds and fold order, so the training history is bit-identical.
 
 Determinism under task retry (SURVEY §4 O3): the per-batch sample RNG is
 seeded with (step, partitionId, batch_index), so a re-executed task
@@ -37,6 +50,8 @@ the tree depth (default 2) bounds any single combiner's fan-in.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 import numpy as np
 
@@ -132,8 +147,8 @@ def _tree_depth(nparts: int) -> int:
 #: round-trip (~0.1-0.3s each) dwarfs the per-step numpy work on the
 #: driver test frames. Under the cap, ONE bounded job fetches the exact
 #: (partition, Arrow-batch) pandas frames the distributed mapInPandas
-#: would see, and every step replays `_evaluate_batch` on them with the
-#: same fresh-model-per-partition protocol, the same (step, pid, bi)
+#: would see, and every step replays them through one `_Replica` per
+#: partition with the same state injection, the same (step, pid, bi)
 #: seeds, and the same partial-fold order — so the Adam trajectory is
 #: REPLICATED BIT-FOR-BIT (pytest-pinned), exactly like the PageRank
 #: driver-local path under the union-find cap. Above the cap (or past
@@ -266,27 +281,66 @@ def _flatten(arrs) -> np.ndarray:
     )
 
 
-def _evaluate_batch(model, pdf, seed, want_grad, var_names):
-    """Feed one pandas batch into the model and evaluate local_objective."""
-    for cd in _collect_column_data(model):
-        cd.bind_batch(pdf)
-    model.new_eval(seed=seed)
-    with model.tf_mode():
-        obj = model.local_objective()
-    if not isinstance(obj, ad.Tensor):
-        obj = ad.Tensor(obj)
-    if obj.data.ndim > 0:
-        obj = obj.sum()
-    if not want_grad:
-        return float(obj.data), None
-    obj.backward()
-    by_name = {v.long_name: v for v in model.get_variables()}
-    grads = []
-    for name in var_names:
-        v = by_name[name]
-        g = v._leaf.grad if v._leaf is not None and v._leaf.grad is not None else None
-        grads.append(g if g is not None else np.zeros_like(v._array))
-    return float(obj.data), _flatten(grads)
+@contextmanager
+def _float_type(name: str):
+    """Run a worker-side block under the driver's float_type (by dtype
+    name), then restore the worker's own. Executors import config fresh
+    (float64 default), and Spark reuses Python workers across jobs, so a
+    job that set the type and kept it would make later jobs in the same
+    worker compute in float32."""
+    prev = settings.dtypes.float_type
+    settings.dtypes.float_type = np.dtype(name).type
+    try:
+        yield
+    finally:
+        settings.dtypes.float_type = prev
+
+
+class _Replica:
+    """The model as one task holds it: unpickled once, with its
+    ColumnData feeds and its Variables by long_name looked up once, so
+    each Arrow batch pays only for binding and evaluation.
+
+    Used by a distributed task for its partition, and by the driver-local
+    replay for each partition across every step of a fit; `load` injects
+    the step's global state."""
+
+    def __init__(self, model_bytes: bytes, var_names):
+        import pickle
+
+        self.model = pickle.loads(model_bytes)
+        self.columns = _collect_column_data(self.model)
+        self.by_name = {v.long_name: v for v in self.model.get_variables()}
+        self.vars = [self.by_name[name] for name in var_names]
+
+    def load(self, state: dict, float_type) -> None:
+        for name, arr in state.items():
+            v = self.by_name[name]
+            v._array = np.array(arr, dtype=float_type)
+            v._pending = None
+            v.finalize()
+
+    def evaluate(self, pdf, seed, want_grad):
+        """Feed one pandas batch into the model and evaluate
+        local_objective: ``(loss, flat gradient or None)``."""
+        model = self.model
+        for cd in self.columns:
+            cd.bind_batch(pdf)
+        model.new_eval(seed=seed)
+        with model.tf_mode():
+            obj = model.local_objective()
+        if not isinstance(obj, ad.Tensor):
+            obj = ad.Tensor(obj)
+        if obj.data.ndim > 0:
+            obj = obj.sum()
+        if not want_grad:
+            return float(obj.data), None
+        obj.backward()
+        grads = []
+        for v in self.vars:
+            g = v._leaf.grad if v._leaf is not None else None
+            grads.append(g if g is not None else np.zeros_like(v._array))
+        return float(obj.data), _flatten(grads)
 
 
 class SparkTrainer:
@@ -333,13 +387,17 @@ class SparkTrainer:
         self._model_bytes_bc = sc.broadcast(cloudpickle.dumps(model))
         self.step_count = 0
         self.history: list[float] = []
-        # driver-local replay state, set/cleared by fit() (see
-        # LOCAL_ROWS_CAP): [(pid, bi, pandas frame), ...] or None
+        # driver-local replay state (see LOCAL_ROWS_CAP), fetched by the
+        # first fit that localizes and kept for the trainer's lifetime:
+        # [(pid, bi, pandas frame), ...], or None when over the cap
         self._local_batches = None
+        self._fetched = False
         # per-partition concatenated frames + Arrow chunk size, built
         # lazily by the first minibatch replay step (_sampled_batches)
         self._local_parts = None
         self._arrow_max_records = 10000
+        # {pid: _Replica} while a fit replays on the driver, else None
+        self._replicas = None
 
     # -- internals --------------------------------------------------------
     def _state(self) -> dict:
@@ -359,37 +417,27 @@ class SparkTrainer:
         model_bytes_bc = self._model_bytes_bc
         var_names = list(self.var_names)
         state_items = {k: np.array(v) for k, v in state.items()}
-        # executors re-import config fresh (float64 default), so the
-        # driver's float_type must travel with the job for the float32
-        # mode's Arrow/compute savings to materialize cluster-side
+        # the driver's float_type travels with the job, so the float32
+        # mode's Arrow/compute savings materialize cluster-side
         float_name = np.dtype(settings.dtypes.float_type).name
 
         def fn(iterator):
-            import pickle
-
             import pandas as pd
 
-            from henbun_spark.config import settings as wsettings
-
-            wsettings.dtypes.float_type = np.dtype(float_name).type
-            model = pickle.loads(model_bytes_bc.value)
-            by_name = {v.long_name: v for v in model.get_variables()}
-            for name, arr in state_items.items():
-                v = by_name[name]
-                v._array = np.array(arr, dtype=wsettings.dtypes.float_type)
-                v._pending = None
-                v.finalize()
-            pid = TaskContext.get().partitionId() if TaskContext.get() else 0
-            for bi, pdf in enumerate(iterator):
-                if len(pdf) == 0:
-                    continue
-                seed = hash((int(step), int(pid), int(bi))) % (2**63)
-                loss, grad = _evaluate_batch(model, pdf, seed, want_grad, var_names)
-                out = {"loss": [loss], "n": [len(pdf)]}
-                out["grad"] = [
-                    (grad if grad is not None else np.zeros(0)).tolist()
-                ]
-                yield pd.DataFrame(out)
+            with _float_type(float_name):
+                rep = _Replica(model_bytes_bc.value, var_names)
+                rep.load(state_items, np.dtype(float_name).type)
+                pid = TaskContext.get().partitionId() if TaskContext.get() else 0
+                for bi, pdf in enumerate(iterator):
+                    if len(pdf) == 0:
+                        continue
+                    seed = hash((int(step), int(pid), int(bi))) % (2**63)
+                    loss, grad = rep.evaluate(pdf, seed, want_grad)
+                    out = {"loss": [loss], "n": [len(pdf)]}
+                    out["grad"] = [
+                        (grad if grad is not None else np.zeros(0)).tolist()
+                    ]
+                    yield pd.DataFrame(out)
 
         schema = "loss double, n long, grad array<double>"
         partials = df.mapInPandas(fn, schema=schema)
@@ -483,36 +531,32 @@ class SparkTrainer:
         )
 
     def _job_local(self, state, step, want_grad: bool, batches=None):
-        """Driver-local replica of `_job` over the fetched batches:
-        fresh model per partition (as each task unpickles its own), the
-        same state injection, the same (step, pid, bi) seeds into
-        `_evaluate_batch`, partials folded in (pid, bi) order — the
-        identical order the depth-1 collect fold uses — so every float
-        matches the distributed job bit-for-bit (pytest-pinned).
-        `batches` overrides the full fetched list (the minibatch replay
-        passes the step's sampled chunks)."""
-        import pickle
-
+        """Driver-local replica of `_job` over the fetched batches: one
+        `_Replica` per partition, unpickled at its first batch of the
+        fit and kept for the fit's later steps (as a task keeps its model
+        across its Arrow batches), the step's state injected into it, the
+        same (step, pid, bi) seeds, partials folded in (pid, bi) order —
+        the identical order the depth-1 collect fold uses — so every float
+        matches the distributed job bit-for-bit (pytest-pinned). Reuse
+        across steps relies on the objective contract in the module
+        docstring. `batches` overrides the full fetched list (the
+        minibatch replay passes the step's sampled chunks)."""
         float_type = np.dtype(settings.dtypes.float_type).type
-        state_items = {k: np.array(v) for k, v in state.items()}
         n_params = int(np.sum(self.var_sizes)) if self.var_sizes else 0
         loss, n = 0.0, 0
         grad = np.zeros(n_params, dtype=np.float64) if want_grad else None
-        model, cur_pid = None, None
+        rep, cur_pid = None, None
         for pid, bi, pdf in (self._local_batches if batches is None else batches):
             if pid != cur_pid:
-                model = pickle.loads(self._model_bytes_bc.value)
-                by_name = {v.long_name: v for v in model.get_variables()}
-                for name, arr in state_items.items():
-                    v = by_name[name]
-                    v._array = np.array(arr, dtype=float_type)
-                    v._pending = None
-                    v.finalize()
+                rep = self._replicas.get(pid)
+                if rep is None:
+                    rep = self._replicas[pid] = _Replica(
+                        self._model_bytes_bc.value, self.var_names
+                    )
+                rep.load(state, float_type)
                 cur_pid = pid
             seed = hash((int(step), int(pid), int(bi))) % (2**63)
-            bloss, bgrad = _evaluate_batch(
-                model, pdf, seed, want_grad, self.var_names
-            )
+            bloss, bgrad = rep.evaluate(pdf, seed, want_grad)
             if want_grad:
                 g = bgrad if bgrad is not None else np.zeros(0)
                 grad[: g.size] += g
@@ -601,14 +645,14 @@ class SparkTrainer:
     def step(self, minibatch_fraction=None) -> float:
         """One distributed gradient step; returns the objective value."""
         self.step_count += 1
-        if self._local_batches is not None and (
+        if self._replicas is not None and (
             minibatch_fraction is None or minibatch_fraction >= 1.0
         ):
             loss, n, total = self._job_local(
                 self._state(), self.step_count, want_grad=True
             )
             scale = 1.0
-        elif self._local_batches is not None:
+        elif self._replicas is not None:
             # minibatch replay: same sampled rows (bit-exact RNG
             # replica), same chunking, same seeds and fold order as the
             # distributed sampled job — pytest-pinned parity
@@ -641,8 +685,9 @@ class SparkTrainer:
 
     def fit(self, maxiter=100, minibatch_fraction=None, callback=None):
         # multi-step fits localize under the cap: the fetch costs ~2
-        # jobs and saves one per step. Minibatch fits replay
-        # `df.sample` with a bit-exact XORShiftRandom replica
+        # jobs, once per trainer (the frame is persisted and immutable),
+        # and saves one job per step. Minibatch fits replay `df.sample`
+        # with a bit-exact XORShiftRandom replica
         # (`_bernoulli_keep_mask`, pytest-pinned parity);
         # SPARK_GRAFT_TRAINER_LOCAL_MINIBATCH=0 pins sampling to the
         # cluster as a safety valve.
@@ -655,17 +700,18 @@ class SparkTrainer:
             minibatch
             and os.environ.get("SPARK_GRAFT_TRAINER_LOCAL_MINIBATCH", "1") == "0"
         )
-        if localize and self._local_batches is None:
+        if localize and not self._fetched:
             self._local_batches = self._fetch_local_batches()
+            self._fetched = True
+        if localize and self._local_batches is not None:
+            self._replicas = {}
         try:
             for it in range(maxiter):
                 loss = self.step(minibatch_fraction)
                 if callback is not None:
                     callback(it, loss)
         finally:
-            if localize:
-                self._local_batches = None
-                self._local_parts = None
+            self._replicas = None
         return self
 
 
@@ -682,30 +728,33 @@ def predict(model: Model, df, method_name: str, output_schema: str):
     _register_by_value(type(model), cloudpickle)
     model.initialize()
     model_bytes = cloudpickle.dumps(model)
+    float_name = np.dtype(settings.dtypes.float_type).name
 
     def fn(iterator):
         import pickle
 
         import pandas as pd
 
-        m = pickle.loads(model_bytes)
-        pid = TaskContext.get().partitionId() if TaskContext.get() else 0
-        for bi, pdf in enumerate(iterator):
-            if len(pdf) == 0:
-                continue
-            for cd in _collect_column_data(m):
-                cd.bind_batch(pdf)
-            m.new_eval(seed=hash((int(pid), int(bi))) % (2**63))
-            with m.tf_mode():
-                out = getattr(m, method_name)()
-            if isinstance(out, ad.Tensor):
-                out = {"value": out.data}
-            elif isinstance(out, np.ndarray):
-                out = {"value": out}
-            cols = {}
-            for k, v in out.items():
-                v = v.data if isinstance(v, ad.Tensor) else np.asarray(v)
-                cols[k] = list(v) if v.ndim > 1 else v
-            yield pd.DataFrame(cols)
+        with _float_type(float_name):
+            m = pickle.loads(model_bytes)
+            columns = _collect_column_data(m)
+            pid = TaskContext.get().partitionId() if TaskContext.get() else 0
+            for bi, pdf in enumerate(iterator):
+                if len(pdf) == 0:
+                    continue
+                for cd in columns:
+                    cd.bind_batch(pdf)
+                m.new_eval(seed=hash((int(pid), int(bi))) % (2**63))
+                with m.tf_mode():
+                    out = getattr(m, method_name)()
+                if isinstance(out, ad.Tensor):
+                    out = {"value": out.data}
+                elif isinstance(out, np.ndarray):
+                    out = {"value": out}
+                cols = {}
+                for k, v in out.items():
+                    v = v.data if isinstance(v, ad.Tensor) else np.asarray(v)
+                    cols[k] = list(v) if v.ndim > 1 else v
+                yield pd.DataFrame(cols)
 
     return df.mapInPandas(fn, schema=output_schema)

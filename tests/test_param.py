@@ -165,3 +165,115 @@ def test_save_restore_roundtrip(tmp_path):
     # re-initialize must NOT clobber restored values
     m2.initialize()
     np.testing.assert_allclose(m2.p.value, np.full((2, 3), 1.5))
+
+
+# -- cached child order ------------------------------------------------------
+LOCAL = graph_key.LOCAL
+
+
+class CacheTree(hb.Model):
+    def setUp(self):
+        self.b = Variable([2], collections=LOCAL)
+        self.a = Variable([1], collections=LOCAL)
+        self.g = Variable([3])
+        self.sub = Parameterized()
+        self.sub.d = Variable([2], collections=LOCAL)
+        self.sub.c = Variable([1], collections=LOCAL)
+        self.items = ParamList([Variable([1], collections=LOCAL)])
+
+
+def _fresh_variables(node):
+    """get_variables() of a freshly built tree: children re-sorted by
+    name at every visit, nothing cached."""
+    if isinstance(node, ParamList):
+        children = list(node._list)
+    elif isinstance(node, Parameterized):
+        children = sorted(
+            (
+                c
+                for k, c in vars(node).items()
+                if isinstance(c, (Variable, Parameterized)) and k != "_parent"
+            ),
+            key=lambda c: c.name,
+        )
+    else:
+        return [node]
+    return [v for c in children for v in _fresh_variables(c)]
+
+
+def _add_children(m):
+    m.aa = Variable([2], collections=LOCAL)
+    m.sub.e = Variable([3], collections=LOCAL)
+    m.zz = Parameterized()
+    m.zz.f = Variable([1], collections=LOCAL)
+    return m
+
+
+def _replace_children(m):
+    m.a = Variable([3], collections=LOCAL)  # Variable -> Variable
+    sub = Parameterized()
+    sub.y = Variable([2], collections=LOCAL)
+    sub.x = Variable([1], collections=LOCAL)
+    m.sub = sub  # Parameterized -> Parameterized
+    m.g = Parameterized()  # Variable -> Parameterized
+    m.g.h = Variable([1], collections=LOCAL)
+    return m
+
+
+def _delete_children(m):
+    del m.a
+    del m.sub.d
+    return m
+
+
+def _append_to_list(m):
+    m.items.append(Variable([2], collections=LOCAL))
+    m.items.append(Variable([1], collections=LOCAL))
+    return m
+
+
+def _reparent_child(m):
+    # sub.c, shared with m, is now named through m: after sub.d
+    m.zz_c = m.sub.c
+    return m
+
+
+def _cloudpickle_roundtrip(m):
+    import cloudpickle
+
+    m = cloudpickle.loads(cloudpickle.dumps(m))
+    m.sub.a0 = Variable([1], collections=LOCAL)  # the copy's caches update too
+    return m
+
+
+@pytest.mark.parametrize(
+    "mutate",
+    [_add_children, _replace_children, _delete_children, _append_to_list,
+     _reparent_child, _cloudpickle_roundtrip],
+    ids=lambda f: f.__name__.lstrip("_"),
+)
+def test_cached_child_order_matches_fresh_tree(mutate):
+    """sorted_variables is computed once per node; after each way the
+    tree can change, get_variables() order, long_names and the split of
+    a LOCAL feed must match the freshly built tree's."""
+    m = CacheTree()
+    m.feed(np.zeros((1, m.feed_size)))  # fill every node's cache first
+    before = [v.long_name for v in m.get_variables()]
+    m = mutate(m)
+
+    got, want = m.get_variables(), _fresh_variables(m)
+    assert [id(v) for v in got] == [id(v) for v in want]
+    assert [v.long_name for v in got] == [v.long_name for v in want]
+    assert [v.long_name for v in got] != before
+
+    local = [v for v in want if v.collections == LOCAL]
+    width = sum(v.feed_size for v in local)
+    assert m.feed_size == width
+    x = np.arange(4.0 * width).reshape(4, width)
+    m.feed(x)
+    fed, begin = {}, 0
+    for v in local:  # a shared Variable keeps its last slice
+        fed[id(v)] = v, x[:, begin: begin + v.feed_size].reshape([4] + v.shape)
+        begin += v.feed_size
+    for v, want_cols in fed.values():
+        np.testing.assert_array_equal(v._tensor.data, want_cols, err_msg=v.long_name)

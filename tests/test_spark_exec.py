@@ -135,7 +135,7 @@ def test_amortized_local_variational_trains(spark):
 def test_local_replay_bitwise_equals_distributed(spark, monkeypatch, model_cls, lr):
     """fit()'s driver-local replay under LOCAL_ROWS_CAP must REPLICATE
     the distributed loop bit-for-bit: same Arrow batch frames, same
-    fresh-model-per-partition state injection, same (step, pid, bi)
+    per-partition model state injection, same (step, pid, bi)
     seeds (AmortizedVI pins the MC-sampling path), same partial-fold
     order. Exact float equality on every history entry and every
     trained parameter — not allclose."""
@@ -198,32 +198,44 @@ def test_sample_mask_matches_jvm(spark, seed, fraction):
         assert got.get(pid, []) == want, f"partition {pid} diverged"
 
 
-@pytest.mark.parametrize("fraction,arrow_batch", [(0.25, None), (0.5, 37), (0.06, None)])
+_MINIBATCH_CASES = [(0.25, None), (0.5, 37), (0.06, None)]
+
+
+@pytest.mark.parametrize(
+    "model_cls,lr,fraction,arrow_batch",
+    [pytest.param(LinReg, 0.05, f, b, id=f"{f}-{b}") for f, b in _MINIBATCH_CASES]
+    + [
+        pytest.param(AmortizedVI, 0.02, f, b, id=f"AmortizedVI-{f}-{b}")
+        for f, b in _MINIBATCH_CASES
+    ],
+)
 def test_minibatch_replay_bitwise_equals_distributed(
-    spark, monkeypatch, fraction, arrow_batch
+    spark, monkeypatch, model_cls, lr, fraction, arrow_batch
 ):
     """The minibatch driver-local replay must REPLICATE the distributed
     sampled loop bit-for-bit: identical sampled row sets per step
     (bit-exact RNG replica), identical Arrow chunking of the sampled
     partitions (the 37-row case forces multi-batch partitions),
     identical (step, pid, bi) seeds and fold order. fraction=0.06
-    exercises empty sampled partitions. Exact float equality on every
-    history entry and every trained parameter."""
+    exercises empty sampled partitions. AmortizedVI pins MC sampling
+    through the per-partition models the replay keeps across steps.
+    Exact float equality on every history entry and every trained
+    parameter."""
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     prev = spark.conf.get(key)
     if arrow_batch is not None:
         spark.conf.set(key, str(arrow_batch))
     try:
         df, _, _ = make_df(spark)
-        m1 = LinReg()
-        tr1 = SparkTrainer(m1, df, optimizer=Adam(learning_rate=0.05))
+        m1 = model_cls()
+        tr1 = SparkTrainer(m1, df, optimizer=Adam(learning_rate=lr))
         init = tr1._state()
 
         monkeypatch.setenv("SPARK_GRAFT_TRAINER_LOCAL_CAP", "0")  # distributed
         tr1.fit(maxiter=6, minibatch_fraction=fraction)
 
-        m2 = LinReg()
-        tr2 = SparkTrainer(m2, df, optimizer=Adam(learning_rate=0.05))
+        m2 = model_cls()
+        tr2 = SparkTrainer(m2, df, optimizer=Adam(learning_rate=lr))
         for v in tr2.vars:
             v._array = np.array(init[v.long_name])
             v._pending = None
@@ -356,3 +368,32 @@ def test_logreg_classifier_separates(spark, sf_dir):
     total = sum(r["n_docs"] for r in rows)
     for r in rows:
         assert 0.1 * total <= r["n_docs"] <= 0.9 * total, rows
+
+
+class BitWidth(hb.Model):
+    def setUp(self):
+        self.x = ColumnData("x")
+
+    def bits(self):
+        return {"bits": np.full(len(self.x.data), 8 * self.x.data.itemsize)}
+
+
+def test_predict_computes_in_driver_float_type_after_float32_job(spark):
+    """Spark reuses Python workers across jobs, so a float32 `_job` must
+    not leave its workers computing in float32 for a later float64
+    `predict`, and `predict` must follow the driver's float_type. The
+    float32 job runs 24 tasks, which cycle through every idle worker of
+    the pool; each predict reports the bit width it computed in."""
+    from henbun_spark.config import Settings, temp_settings
+
+    df, _, _ = make_df(spark, n=96, parts=24)
+    one = df.coalesce(1)
+    tmp = Settings()
+    tmp.dtypes.float_type = np.float32
+    with temp_settings(tmp):
+        tr = SparkTrainer(LinReg(), df)
+        tr._job(tr.df, tr._state(), step=0, want_grad=True)
+        bits32 = predict(BitWidth(), one, "bits", "bits long").toPandas()
+    bits64 = predict(BitWidth(), one, "bits", "bits long").toPandas()
+    assert set(bits32["bits"]) == {32}
+    assert set(bits64["bits"]) == {64}
