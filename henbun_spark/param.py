@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import functools
 from contextlib import contextmanager
+from operator import itemgetter
 
 import numpy as np
 
@@ -302,9 +303,8 @@ class Parameterized(Parentable):
         return o
 
     def __setattr__(self, key, value):
-        d = object.__getattribute__(self, "__dict__")
-        p = d.get(key)
-        if key in d:
+        if key in self.__dict__.keys():
+            p = object.__getattribute__(self, key)
             try:
                 if object.__getattribute__(self, "_tf_mode"):
                     if isinstance(p, (Variable, Parameterized)):
@@ -323,34 +323,8 @@ class Parameterized(Parentable):
             ):
                 p._parent = None
         object.__setattr__(self, key, value)
-        if key == "_parent":
-            return
-        if isinstance(value, Parentable):
-            self._adopt(value)
-        if isinstance(value, (Variable, Parameterized)) or isinstance(
-            p, (Variable, Parameterized)
-        ):
-            self._invalidate_children()
-
-    def __delattr__(self, key):
-        p = object.__getattribute__(self, "__dict__").get(key)
-        object.__delattr__(self, key)
-        if isinstance(p, (Variable, Parameterized)):
-            if p._parent is self:
-                p._parent = None
-            self._invalidate_children()
-
-    def _adopt(self, child):
-        """Make self the parent of `child`. A former parent's sorted
-        children are invalidated too: their order is by child name,
-        which is looked up through the child's current parent."""
-        old = getattr(child, "_parent", None)
-        if isinstance(old, Parameterized) and old is not self:
-            old._invalidate_children()
-        child._parent = self
-
-    def _invalidate_children(self):
-        object.__getattribute__(self, "__dict__").pop("_children", None)
+        if isinstance(value, Parentable) and key != "_parent":
+            value._parent = self
 
     @contextmanager
     def tf_mode(self):
@@ -372,23 +346,20 @@ class Parameterized(Parentable):
     def sorted_variables(self):
         """Child Variables/Parameterized sorted by name (`param.py:455-465`).
 
-        Computed once and kept in ``_children`` until a child attribute
-        is set, replaced or deleted (`__setattr__`/`__delattr__`); every
-        evaluation walks the tree several times, and each sort re-derives
-        the children's names by scanning this ``__dict__``."""
-        d = object.__getattribute__(self, "__dict__")
-        children = d.get("_children")
-        if children is None:
-            children = d["_children"] = tuple(sorted(
-                (
-                    child
-                    for key, child in d.items()
-                    if isinstance(child, (Variable, Parameterized))
-                    and key != "_parent"
-                ),
-                key=lambda x: x.name,
-            ))
-        return children
+        A child's name is the first key its parent holds it under, so a
+        child of this node sorts by that key, read off this walk of
+        ``__dict__``; only a child held here but parented elsewhere asks
+        `Parentable.name`, which scans its parent's ``__dict__``."""
+        keyed, first = [], {}
+        for key, child in object.__getattribute__(self, "__dict__").items():
+            if isinstance(child, (Variable, Parameterized)) and key != "_parent":
+                if child._parent is self:
+                    name = first.setdefault(id(child), key)
+                else:
+                    name = child.name
+                keyed.append((name, child))
+        keyed.sort(key=itemgetter(0))
+        return [child for _, child in keyed]
 
     def get_variables(self, collection=None):
         """Recursively collect tagged Variables (`param.py:467-485`)."""
@@ -495,7 +466,7 @@ class ParamList(Parameterized):
     def append(self, item):
         if not isinstance(item, Parentable):
             raise AssertionError("can only append Parentable items")
-        self._adopt(item)
+        item._parent = self
         self._list.append(item)
 
     def __len__(self):
@@ -515,7 +486,7 @@ class ParamList(Parameterized):
         if isinstance(p, Variable) and isinstance(value, np.ndarray):
             p.assign(value)
             return
-        self._adopt(value)
+        value._parent = self
         self._list[i] = value
 
     @property

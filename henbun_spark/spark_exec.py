@@ -30,13 +30,13 @@ model: a task evaluates every Arrow batch of its partition on one
 unpickled model, and the driver-local replay keeps that model for every
 step of a fit.
 
-Driver-local replay (under LOCAL_ROWS_CAP): the first multi-step fit
-fetches the frame's (partition, Arrow batch) pandas frames in one job,
-and the trainer keeps them for its lifetime. Every step of a fit then
-runs on the driver with no Spark job: one `_Replica` per partition,
-unpickled at its first batch of the fit, gets the step's global state
-injected and evaluates that partition's batches with the distributed
-job's seeds and fold order, so the training history is bit-identical.
+Driver-local replay (under LOCAL_ROWS_CAP): a multi-step fit fetches
+the frame's (partition, Arrow batch) pandas frames in one job and drops
+them when it returns. Every step of the fit then runs on the driver
+with no Spark job: one `_Replica` per partition, unpickled at its first
+batch of the fit, gets the step's global state injected and evaluates
+that partition's batches with the distributed job's seeds and fold
+order, so the training history is bit-identical.
 
 Determinism under task retry (SURVEY §4 O3): the per-batch sample RNG is
 seeded with (step, partitionId, batch_index), so a re-executed task
@@ -387,16 +387,14 @@ class SparkTrainer:
         self._model_bytes_bc = sc.broadcast(cloudpickle.dumps(model))
         self.step_count = 0
         self.history: list[float] = []
-        # driver-local replay state (see LOCAL_ROWS_CAP), fetched by the
-        # first fit that localizes and kept for the trainer's lifetime:
-        # [(pid, bi, pandas frame), ...], or None when over the cap
+        # driver-local replay state, set/cleared by fit() (see
+        # LOCAL_ROWS_CAP): [(pid, bi, pandas frame), ...] or None
         self._local_batches = None
-        self._fetched = False
         # per-partition concatenated frames + Arrow chunk size, built
         # lazily by the first minibatch replay step (_sampled_batches)
         self._local_parts = None
         self._arrow_max_records = 10000
-        # {pid: _Replica} while a fit replays on the driver, else None
+        # {pid: _Replica}, set/cleared with _local_batches
         self._replicas = None
 
     # -- internals --------------------------------------------------------
@@ -645,14 +643,14 @@ class SparkTrainer:
     def step(self, minibatch_fraction=None) -> float:
         """One distributed gradient step; returns the objective value."""
         self.step_count += 1
-        if self._replicas is not None and (
+        if self._local_batches is not None and (
             minibatch_fraction is None or minibatch_fraction >= 1.0
         ):
             loss, n, total = self._job_local(
                 self._state(), self.step_count, want_grad=True
             )
             scale = 1.0
-        elif self._replicas is not None:
+        elif self._local_batches is not None:
             # minibatch replay: same sampled rows (bit-exact RNG
             # replica), same chunking, same seeds and fold order as the
             # distributed sampled job — pytest-pinned parity
@@ -685,9 +683,8 @@ class SparkTrainer:
 
     def fit(self, maxiter=100, minibatch_fraction=None, callback=None):
         # multi-step fits localize under the cap: the fetch costs ~2
-        # jobs, once per trainer (the frame is persisted and immutable),
-        # and saves one job per step. Minibatch fits replay `df.sample`
-        # with a bit-exact XORShiftRandom replica
+        # jobs and saves one per step. Minibatch fits replay
+        # `df.sample` with a bit-exact XORShiftRandom replica
         # (`_bernoulli_keep_mask`, pytest-pinned parity);
         # SPARK_GRAFT_TRAINER_LOCAL_MINIBATCH=0 pins sampling to the
         # cluster as a safety valve.
@@ -700,10 +697,8 @@ class SparkTrainer:
             minibatch
             and os.environ.get("SPARK_GRAFT_TRAINER_LOCAL_MINIBATCH", "1") == "0"
         )
-        if localize and not self._fetched:
+        if localize and self._local_batches is None:
             self._local_batches = self._fetch_local_batches()
-            self._fetched = True
-        if localize and self._local_batches is not None:
             self._replicas = {}
         try:
             for it in range(maxiter):
@@ -711,7 +706,10 @@ class SparkTrainer:
                 if callback is not None:
                     callback(it, loss)
         finally:
-            self._replicas = None
+            if localize:
+                self._local_batches = None
+                self._local_parts = None
+                self._replicas = None
         return self
 
 

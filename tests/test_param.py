@@ -167,11 +167,11 @@ def test_save_restore_roundtrip(tmp_path):
     np.testing.assert_allclose(m2.p.value, np.full((2, 3), 1.5))
 
 
-# -- cached child order ------------------------------------------------------
+# -- child order after tree changes ------------------------------------------
 LOCAL = graph_key.LOCAL
 
 
-class CacheTree(hb.Model):
+class OrderTree(hb.Model):
     def setUp(self):
         self.b = Variable([2], collections=LOCAL)
         self.a = Variable([1], collections=LOCAL)
@@ -183,8 +183,8 @@ class CacheTree(hb.Model):
 
 
 def _fresh_variables(node):
-    """get_variables() of a freshly built tree: children re-sorted by
-    name at every visit, nothing cached."""
+    """get_variables() as a fresh walk: children sorted by
+    `Parentable.name` at every visit."""
     if isinstance(node, ParamList):
         children = list(node._list)
     elif isinstance(node, Parameterized):
@@ -232,6 +232,12 @@ def _append_to_list(m):
     return m
 
 
+def _alias_child(m):
+    # one child under two keys of one parent: both sort at its name "b"
+    m.y_b = m.b
+    return m
+
+
 def _reparent_child(m):
     # sub.c, shared with m, is now named through m: after sub.d
     m.zz_c = m.sub.c
@@ -242,22 +248,23 @@ def _cloudpickle_roundtrip(m):
     import cloudpickle
 
     m = cloudpickle.loads(cloudpickle.dumps(m))
-    m.sub.a0 = Variable([1], collections=LOCAL)  # the copy's caches update too
+    m.sub.a0 = Variable([1], collections=LOCAL)  # the copy's tree changes too
     return m
 
 
 @pytest.mark.parametrize(
     "mutate",
     [_add_children, _replace_children, _delete_children, _append_to_list,
-     _reparent_child, _cloudpickle_roundtrip],
+     _alias_child, _reparent_child, _cloudpickle_roundtrip],
     ids=lambda f: f.__name__.lstrip("_"),
 )
-def test_cached_child_order_matches_fresh_tree(mutate):
-    """sorted_variables is computed once per node; after each way the
-    tree can change, get_variables() order, long_names and the split of
-    a LOCAL feed must match the freshly built tree's."""
-    m = CacheTree()
-    m.feed(np.zeros((1, m.feed_size)))  # fill every node's cache first
+def test_child_order_matches_fresh_tree(mutate):
+    """sorted_variables orders a node's own children by their keys, not
+    by `Parentable.name`; after each way the tree can change,
+    get_variables() order, long_names and the split of a LOCAL feed
+    must match a walk by name."""
+    m = OrderTree()
+    m.feed(np.zeros((1, m.feed_size)))
     before = [v.long_name for v in m.get_variables()]
     m = mutate(m)
 

@@ -258,6 +258,46 @@ def test_minibatch_replay_bitwise_equals_distributed(
         spark.conf.set(key, prev)
 
 
+def test_local_replay_refetches_reassigned_frame(spark, monkeypatch):
+    """StreamingTrainer points `trainer.df` at each micro-batch and fits
+    again, so a replayed fit must read the frame the trainer holds now,
+    not the rows an earlier fit fetched. Two fits on different frames
+    replay bit-for-bit like the same two fits run distributed."""
+    df_a, _, _ = make_df(spark, n=400)
+    df_b, _, _ = make_df(spark, n=240)
+    m1 = LinReg()
+    tr1 = SparkTrainer(m1, df_a, optimizer=Adam(learning_rate=0.05))
+    init = tr1._state()
+    monkeypatch.setenv("SPARK_GRAFT_TRAINER_LOCAL_CAP", "0")  # distributed
+    tr1.fit(maxiter=5)
+    tr1.df = df_b
+    tr1.fit(maxiter=5)
+
+    m2 = LinReg()
+    tr2 = SparkTrainer(m2, df_a, optimizer=Adam(learning_rate=0.05))
+    for v in tr2.vars:
+        v._array = np.array(init[v.long_name])
+        v._pending = None
+        v.finalize()
+    monkeypatch.delenv("SPARK_GRAFT_TRAINER_LOCAL_CAP")  # local replay
+    fetched = []
+    orig_fetch = tr2._fetch_local_batches
+
+    def spy():
+        batches = orig_fetch()
+        fetched.append(sum(len(pdf) for _, _, pdf in batches))
+        return batches
+
+    tr2._fetch_local_batches = spy
+    tr2.fit(maxiter=5)
+    tr2.df = df_b
+    tr2.fit(maxiter=5)
+    assert fetched == [400, 240]
+    assert tr1.history == tr2.history  # bitwise, every step
+    for v1, v2 in zip(tr1.vars, tr2.vars):
+        assert np.array_equal(np.asarray(v1._array), np.asarray(v2._array))
+
+
 class PredModel(hb.Model):
     def setUp(self):
         self.x = ColumnData("x")
