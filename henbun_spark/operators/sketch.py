@@ -290,8 +290,8 @@ def bloom_build(
     salt: str = "bloom",
 ) -> DataFrame:
     """Build a Bloom filter over ``df[key_col]`` as a bitmap TABLE
-    (word_idx int, bits bigint) — at most m_bits/32 rows regardless of
-    input size.
+    (word_idx int, bits bigint) — at most ceil(m_bits/32) rows regardless
+    of input size.
 
     This is the runtime-filter pattern behind every modern engine's
     large-join optimization: build a tiny bitmap from the selective
@@ -339,7 +339,7 @@ def bloom_filter_probe(
     """Keep probe rows whose key MIGHT be in the Bloom filter (all k
     bits set) — no false negatives, false-positive rate ~ (1-e^{-kn/m})^k.
 
-    The bitmap table (<= m_bits/32 rows) broadcasts; each probe row
+    The bitmap table (<= ceil(m_bits/32) rows) broadcasts; each probe row
     joins its k words and passes iff every bit is present. The passing
     subset then feeds the real (shuffle) join — at 100 TB the bloom
     drops the non-matching majority before any exchange.
@@ -352,7 +352,8 @@ def bloom_filter_probe(
     )
     min_mb = float(os.environ.get("SPARK_GRAFT_BLOOM_LITERAL_MIN_MB",
                                   _BLOOM_LITERAL_PROBE_MIN_BYTES >> 20))
-    n_words = m_bits // _BLOOM_WORD_BITS
+    # ceil: when m_bits % 32 != 0 the top word is partial but still used
+    n_words = (m_bits + _BLOOM_WORD_BITS - 1) // _BLOOM_WORD_BITS
     use_literal = (
         min_mb >= 0
         and n_words <= _BLOOM_LITERAL_MAX_WORDS
@@ -360,7 +361,7 @@ def bloom_filter_probe(
     )
     if use_literal:
         # r13 (guide §2.4 / §1.2, gated re-land of the r12 pair
-        # 3850fda/78ac95b): the bitmap is PARAMETER-bounded (<= m_bits/32
+        # 3850fda/78ac95b): the bitmap is PARAMETER-bounded (<= n_words
         # rows regardless of data size), so collect it once into a dense
         # literal array and test all k bits with pure Column math — the
         # k chained broadcast-hash joins this replaces each added a

@@ -45,7 +45,16 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Opinionated local-mode session: AQE on, Arrow on, UTC, shuffle
-    partitions sized to cores (not the 200 default)."""
+    partitions sized to cores (not the 200 default).
+
+    Python workers run under `henbun_spark._daemon`, pyspark's daemon
+    minus the re-read of every unchanged zip archive (pyspark.zip, the
+    spark-core jar) that pyspark otherwise does before each task, most
+    of the CPU of a short Arrow task. It is set as the daemon module
+    because pyspark's daemon ignores a `spark.python.worker.module` whose
+    name does not start with "pyspark". The executors' Python must
+    therefore import `henbun_spark`, as the library's UDFs already
+    require."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
     master = master or f"local[{cpus}]"
     shuffle = shuffle_partitions or int(cpus)
@@ -65,6 +74,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "henbun_spark._daemon")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

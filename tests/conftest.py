@@ -10,20 +10,16 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    from henbun_spark import sources
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("henbun_spark_tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.warehouse.dir", "/tmp/henbun_test_warehouse")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = sources.get_spark(
+        "henbun_spark_tests",
+        master="local[4]",
+        shuffle_partitions=8,
+        extra_conf={
+            "spark.driver.memory": "8g",
+            "spark.sql.warehouse.dir": "/tmp/henbun_test_warehouse",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
     yield spark

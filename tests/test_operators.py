@@ -2760,25 +2760,31 @@ def test_bloom_literal_path_matches_join_path(spark, monkeypatch):
     positions, same bit tests, missing words read as 0 on both. Forced
     on via SPARK_GRAFT_BLOOM_LITERAL_MIN_MB=0 / off via -1 (the default
     gate keys on Catalyst's probe-side size estimate, which small test
-    frames never reach)."""
+    frames never reach). m_bits=1000 leaves a partial top word (31 full
+    words + 8 bits) that the literal array must still hold, or its
+    positions index past the array and inserted keys are lost."""
     from pyspark.sql import functions as F
 
     from henbun_spark.operators import sketch
 
     right = spark.range(0, 300).select((F.col("id") * 11).alias("k"))
     probe = spark.range(0, 5000).select(F.col("id").alias("k"))
-    bloom = sketch.bloom_build(right, "k", m_bits=1 << 12, k=4)
-    monkeypatch.setenv("SPARK_GRAFT_BLOOM_LITERAL_MIN_MB", "-1")
-    via_join = sorted(
-        r["k"] for r in
-        sketch.bloom_filter_probe(probe, bloom, "k", m_bits=1 << 12, k=4).collect()
-    )
-    monkeypatch.setenv("SPARK_GRAFT_BLOOM_LITERAL_MIN_MB", "0")
-    lit_df = sketch.bloom_filter_probe(probe, bloom, "k", m_bits=1 << 12, k=4)
-    via_literal = sorted(r["k"] for r in lit_df.collect())
-    assert via_join == via_literal
-    # the literal plan must carry no join at all
-    assert "Join" not in lit_df._jdf.queryExecution().executedPlan().toString()
+    for m_bits in (1 << 12, 1000):
+        bloom = sketch.bloom_build(right, "k", m_bits=m_bits, k=4)
+        monkeypatch.setenv("SPARK_GRAFT_BLOOM_LITERAL_MIN_MB", "-1")
+        via_join = sorted(
+            r["k"] for r in
+            sketch.bloom_filter_probe(probe, bloom, "k", m_bits=m_bits, k=4).collect()
+        )
+        monkeypatch.setenv("SPARK_GRAFT_BLOOM_LITERAL_MIN_MB", "0")
+        lit_df = sketch.bloom_filter_probe(probe, bloom, "k", m_bits=m_bits, k=4)
+        via_literal = sorted(r["k"] for r in lit_df.collect())
+        assert via_join == via_literal, m_bits
+        assert set(range(0, 300 * 11, 11)) <= set(via_literal), m_bits
+        # the literal plan must carry no join at all
+        assert "Join" not in lit_df._jdf.queryExecution().executedPlan().toString()
+    # the partial top word is present in the bitmap
+    assert bloom.where(F.col("word_idx") == 1000 // 32).count() == 1
 
 
 def test_chunk_with_overlap_lineage_and_coverage(spark):

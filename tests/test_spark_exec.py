@@ -5,6 +5,11 @@ driver Adam, on a Spark DataFrame. Mirrors the reference's
 gradient parity.
 """
 
+import importlib
+import sys
+import zipfile
+import zipimport
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -437,3 +442,65 @@ def test_predict_computes_in_driver_float_type_after_float32_job(spark):
     bits64 = predict(BitWidth(), one, "bits", "bits long").toPandas()
     assert set(bits32["bits"]) == {32}
     assert set(bits64["bits"]) == {64}
+
+
+@pytest.mark.skipif(
+    hasattr(zipimport.zipimporter, "_get_files"),
+    reason="this interpreter's zipimporter re-reads lazily; the shim is a no-op",
+)
+def test_daemon_rereads_only_changed_archives(tmp_path, monkeypatch):
+    """The worker daemon's shim keeps an unchanged archive's directory
+    across `importlib.invalidate_caches()` and still re-reads one whose
+    stat signature changed, so a module added to it imports."""
+    from henbun_spark import _daemon
+
+    # install into a clean slate; teardown restores the unpatched method
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches", zipimport.zipimporter.invalidate_caches
+    )
+    archive = str(tmp_path / "mods.zip")
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("henbun_zip_a.py", "X = 1\n")
+    monkeypatch.syspath_prepend(archive)
+    try:
+        assert importlib.import_module("henbun_zip_a").X == 1
+        _daemon.install()
+        _daemon.install()  # a second install is harmless
+        before = zipimport._zip_directory_cache[archive]
+        importlib.invalidate_caches()
+        assert zipimport._zip_directory_cache[archive] is before
+        with zipfile.ZipFile(archive, "w") as z:
+            z.writestr("henbun_zip_a.py", "X = 1\n")
+            z.writestr("henbun_zip_b.py", "Y = 2\n")
+        importlib.invalidate_caches()
+        assert zipimport._zip_directory_cache[archive] is not before
+        assert importlib.import_module("henbun_zip_b").Y == 2
+    finally:
+        for name in ("henbun_zip_a", "henbun_zip_b"):
+            sys.modules.pop(name, None)
+        sys.path_importer_cache.pop(archive, None)
+        zipimport._zip_directory_cache.pop(archive, None)
+
+
+def test_session_workers_run_under_henbun_daemon(spark):
+    """Python workers of a `get_spark` session are forked by
+    `henbun_spark._daemon`, and a task's `invalidate_caches()` keeps the
+    directory of the unchanged pyspark.zip."""
+
+    def probe(_):
+        import importlib
+        import os
+        import sys
+        import zipimport
+
+        archive = next(
+            (p for p in zipimport._zip_directory_cache if os.path.basename(p) == "pyspark.zip"),
+            None,
+        )
+        before = zipimport._zip_directory_cache.get(archive)
+        importlib.invalidate_caches()
+        kept = before is not None and zipimport._zip_directory_cache.get(archive) is before
+        yield sys.modules["__main__"].__spec__.name, archive is not None, kept
+
+    got = spark.sparkContext.parallelize([0], 1).mapPartitions(probe).collect()
+    assert got == [("henbun_spark._daemon", True, True)]
