@@ -145,47 +145,9 @@ def _iteration(
     return sums.reshape(k, dim), cnts, sse
 
 
-#: row cap for the driver-local Lloyd replay (the SparkTrainer
-#: LOCAL_ROWS_CAP pattern): below it, ONE bounded job fetches the exact
-#: per-(partition, Arrow-batch) float64 matrices the distributed
-#: partials closure would build, and every iteration replays the same
-#: batch math and the same partition-order fold on the driver — each
-#: Lloyd step stops costing a Spark job. Above the cap (or past
-#: TREE_DEPTH_CUTOVER partitions) the distributed loop is untouched:
-#: iterations x one scan + tree reduction is the 100 TB design.
-#: Override with SPARK_GRAFT_KMEANS_LOCAL_CAP (0 disables).
-KMEANS_LOCAL_ROWS_CAP = 1 << 17
-
-
-def _fetch_local_matrices(data: DataFrame):
-    """[(pid, bi, n x dim float64 matrix), ...] in (pid, bi) order —
-    the matrices are built INSIDE the task from the same Arrow batches
-    the distributed closure would see, so values round-trip
-    bit-exactly. `data` must already be the `_v`-projected frame."""
-    import pickle
-
-    import pandas as pd
-    from pyspark import TaskContext
-
-    def grab(batches):
-        pid = TaskContext.get().partitionId() if TaskContext.get() else 0
-        for bi, pdf in enumerate(batches):
-            if not len(pdf):
-                continue
-            x = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-            yield pd.DataFrame(
-                {"pid": [pid], "bi": [bi], "data": [pickle.dumps(x)]}
-            )
-
-    rows = data.mapInPandas(grab, schema="pid int, bi int, data binary").collect()
-    return sorted(
-        ((r["pid"], r["bi"], pickle.loads(bytes(r["data"]))) for r in rows),
-        key=lambda t: (t[0], t[1]),
-    )
-
-
 def _iteration_local(batches, centroids: np.ndarray):
-    """Driver-local replica of `_iteration` over the fetched matrices:
+    """Driver-local replica of `_iteration` over the fetched
+    [(pid, bi, n x dim float64 matrix), ...] (see `kmeans_fit`):
     per-partition partials accumulated in batch order via the SAME
     `_acc_batch`, then folded across partitions in partition order —
     identical to the depth-1 collect fold, so every float matches the
@@ -249,6 +211,10 @@ def kmeans_fit(
     association wobble, exactly as any partitioning change would."""
     import os
 
+    from henbun_spark.local_replay import fetch_batches
+    from henbun_spark.operators._parallel import _plan_partitions
+    from henbun_spark.spark_exec import LOCAL_ROWS_CAP, _tree_depth
+
     centroids = _init_centroids(df, emb_col, id_col, k)
     data = df.select(F.col(emb_col).cast("array<double>").alias(emb_col))
     if slices is not None:
@@ -259,20 +225,23 @@ def kmeans_fit(
     # iteration scheduling overhead; at cluster scale (partitions >>
     # cutover) depth 2 keeps the driver at one k x dim matrix per
     # iteration, unchanged
-    from henbun_spark.operators._parallel import _plan_partitions
-    from henbun_spark.spark_exec import _tree_depth
-
-    nparts = _plan_partitions(data)
-    depth = _tree_depth(nparts)
-    # driver-local Lloyd replay under the row cap (see
-    # KMEANS_LOCAL_ROWS_CAP): one bounded fetch replaces one Spark job
-    # PER ITERATION; the LIMIT probe short-circuits at scale
-    cap = int(os.environ.get("SPARK_GRAFT_KMEANS_LOCAL_CAP", KMEANS_LOCAL_ROWS_CAP))
-    local = None
-    if cap > 0 and depth == 1:
-        proj = data.select(F.col(emb_col).cast("array<double>").alias("_v"))
-        if proj.limit(cap + 1).count() <= cap:
-            local = _fetch_local_matrices(proj)
+    depth = _tree_depth(_plan_partitions(data))
+    # driver-local Lloyd replay (the SparkTrainer replay, same
+    # LOCAL_ROWS_CAP and byte budget): ONE bounded job fetches the exact
+    # per-(partition, Arrow-batch) float64 matrices the distributed
+    # partials closure builds, and every iteration replays the same
+    # `_acc_batch` math and partition-order fold on the driver, so a
+    # Lloyd step stops costing a Spark job. Each task sends at most its
+    # 1/P share of the rows and bytes, else the fit stays distributed
+    # (a skewed frame under both totals included); past
+    # TREE_DEPTH_CUTOVER partitions no fetch runs and iterations x one
+    # scan + tree reduction is the 100 TB design. Override with
+    # SPARK_GRAFT_KMEANS_LOCAL_CAP (0 disables).
+    local = fetch_batches(
+        data.select(F.col(emb_col).cast("array<double>").alias("_v")),
+        lambda pdf: np.stack(pdf["_v"].to_numpy()).astype(np.float64),
+        int(os.environ.get("SPARK_GRAFT_KMEANS_LOCAL_CAP", LOCAL_ROWS_CAP)),
+    )
     for _ in range(max_iter):
         if local is not None:
             sums, cnts, sse = _iteration_local(local, centroids)

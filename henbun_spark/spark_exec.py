@@ -30,13 +30,19 @@ model: a task evaluates every Arrow batch of its partition on one
 unpickled model, and the driver-local replay keeps that model for every
 step of a fit.
 
-Driver-local replay (under LOCAL_ROWS_CAP): a multi-step fit fetches
-the frame's (partition, Arrow batch) pandas frames in one job and drops
-them when it returns. Every step of the fit then runs on the driver
-with no Spark job: one `_Replica` per partition, unpickled at its first
-batch of the fit, gets the step's global state injected and evaluates
-that partition's batches with the distributed job's seeds and fold
-order, so the training history is bit-identical.
+Driver-local replay (under LOCAL_ROWS_CAP and the byte budget): a
+multi-step fit fetches the frame's (partition, Arrow batch) pandas frames
+in ONE job (`local_replay.fetch_batches`, no LIMIT probe) and drops them
+when it returns. Each task sends at most its 1/P share of the row cap
+and of `REPLAY_BUDGET_BYTES`; a task past its share sends a marker
+instead and the fit stays distributed, so a skewed frame under both
+totals trains distributed (same result, slower). Every step of a
+replayed fit then runs on the driver with no Spark job: one `_Replica`
+per partition, unpickled at its first batch of the fit, gets the step's
+global state injected and evaluates that partition's batches with the
+distributed job's seeds and fold order, so the training history is
+bit-identical. The partition count P (and so the tree depth) is read
+from the frame being fitted, once per `fit` and per `evaluate`.
 
 Determinism under task retry (SURVEY §4 O3): the per-batch sample RNG is
 seeded with (step, partitionId, batch_index), so a re-executed task
@@ -52,18 +58,19 @@ the tree depth (default 2) bounds any single combiner's fan-in.
 from __future__ import annotations
 
 from contextlib import contextmanager
+from functools import lru_cache
 
 import numpy as np
 
 from henbun_spark import autodiff as ad
 from henbun_spark.config import settings
+from henbun_spark.local_replay import fetch_batches
 from henbun_spark.model import Adam, Model
 from henbun_spark.param import Data, graph_key
 
 try:
     from pyspark import TaskContext
     from pyspark.sql import DataFrame
-    from pyspark.sql import functions as F
 except ImportError:  # pragma: no cover
     DataFrame = None
 
@@ -140,21 +147,24 @@ def _tree_depth(nparts: int) -> int:
     return 2 if nparts >= TREE_DEPTH_CUTOVER else 1
 
 
-#: row count at or below which ``fit()`` replays the per-batch gradient
-#: evaluation DRIVER-LOCALLY (r12, guide §1.2 "the distributed
+#: row cap of the DRIVER-LOCAL replay (r12, guide §1.2 "the distributed
 #: algorithm" / §5 driver): a full-batch training loop is maxiter
 #: sequential Spark jobs whose per-job scheduling + Python-boundary
 #: round-trip (~0.1-0.3s each) dwarfs the per-step numpy work on the
-#: driver test frames. Under the cap, ONE bounded job fetches the exact
-#: (partition, Arrow-batch) pandas frames the distributed mapInPandas
-#: would see, and every step replays them through one `_Replica` per
-#: partition with the same state injection, the same (step, pid, bi)
-#: seeds, and the same partial-fold order — so the Adam trajectory is
-#: REPLICATED BIT-FOR-BIT (pytest-pinned), exactly like the PageRank
-#: driver-local path under the union-find cap. Above the cap (or past
-#: TREE_DEPTH_CUTOVER partitions) nothing changes: the distributed loop
-#: is the 100 TB design. Override with SPARK_GRAFT_TRAINER_LOCAL_CAP
-#: (0 disables).
+#: driver test frames. `fit()` fetches the exact (partition, Arrow-batch)
+#: pandas frames the distributed mapInPandas would see in ONE job
+#: (`local_replay.fetch_batches`), bounded twice: each of the P tasks
+#: sends at most LOCAL_ROWS_CAP // P rows and REPLAY_BUDGET_BYTES // P
+#: pickled bytes, else a marker that keeps the fit distributed. The
+#: per-task share trades skew for the single job: a frame under both
+#: totals whose largest partition is over its share trains distributed,
+#: bit-identically, only slower. Every replayed step runs through one
+#: `_Replica` per partition with the same state injection, the same
+#: (step, pid, bi) seeds, and the same partial-fold order — so the Adam
+#: trajectory is REPLICATED BIT-FOR-BIT (pytest-pinned). Past
+#: TREE_DEPTH_CUTOVER partitions no fetch runs: the distributed loop is
+#: the 100 TB design. Override with SPARK_GRAFT_TRAINER_LOCAL_CAP
+#: (0 disables). `clustering.kmeans_fit` replays under the same cap.
 LOCAL_ROWS_CAP = 1 << 17
 
 
@@ -227,38 +237,55 @@ def _xs_step(x: np.ndarray) -> np.ndarray:
     return x
 
 
-def _gf2_apply(basis: np.ndarray, x: np.ndarray) -> np.ndarray:
-    """Apply the GF(2)-linear map given by `basis` (basis[i] = image of
-    bit i, 64 uint64s) to every element of `x`."""
-    r = np.zeros_like(x)
-    one = np.uint64(1)
-    for i in range(64):
-        r ^= basis[i] * ((x >> np.uint64(i)) & one)
+def _xs_table(basis: np.ndarray) -> np.ndarray:
+    """8 x 256 byte table of the GF(2)-linear map whose images of the 64
+    unit vectors are `basis`: row j, column b is the image of b << 8j."""
+    tab = np.zeros((8, 256), dtype=np.uint64)
+    for j in range(8):
+        for i in range(8):
+            tab[j, 1 << i: 2 << i] = tab[j, : 1 << i] ^ basis[8 * j + i]
+    return tab
+
+
+def _xs_apply(tab: np.ndarray, x: np.ndarray) -> np.ndarray:
+    """Apply the map of byte table `tab` to every element of `x`: one
+    gather and XOR per byte."""
+    b = x.astype("<u8", copy=False).view(np.uint8).reshape(-1, 8)
+    r = tab[0, b[:, 0]]
+    for j in range(1, 8):
+        r ^= tab[j, b[:, j]]
     return r
 
 
-#: images of the 64 unit vectors under one XORShift step (the map A)
-_XS_BASIS = _xs_step(np.uint64(1) << np.arange(64, dtype=np.uint64))
+_XS_UNITS = np.uint64(1) << np.arange(64, dtype=np.uint64)
+
+
+@lru_cache(maxsize=None)
+def _xs_level(k: int) -> np.ndarray:
+    """Byte table of A^(2^k), A being one XORShift step. Built on first
+    use, one level at a time: an eager build of every level would add
+    to the import time of each forked Python worker."""
+    if k == 0:
+        return _xs_table(_xs_step(_XS_UNITS))
+    prev = _xs_level(k - 1)
+    return _xs_table(_xs_apply(prev, _xs_apply(prev, _XS_UNITS)))
 
 
 def _xs_states(seed0: int, n: int) -> np.ndarray:
     """The first `n` XORShift states after state `seed0` (i.e. the
     values successive `next()` calls are derived from), via doubling:
-    out[:m] known => out[m:2m] = A^m(out[:m]), squaring A^m each level.
-    O(64 n) vector ops instead of an n-step Python loop."""
+    out[:m] known => out[m:2m] = A^m(out[:m]) with m = 2^k, through the
+    cached byte table of A^(2^k). O(8 n) gathers instead of an n-step
+    Python loop."""
     out = np.empty(n, dtype=np.uint64)
     if n == 0:
         return out
     out[0] = _xs_step(np.uint64(seed0))
-    m = 1
-    basis = _XS_BASIS
+    m, level = 1, 0
     while m < n:
         k = min(m, n - m)
-        out[m: m + k] = _gf2_apply(basis, out[:k])
-        m2 = m * 2
-        if m2 < n:
-            basis = _gf2_apply(basis, basis)
-        m = m2
+        out[m: m + k] = _xs_apply(_xs_level(level), out[:k])
+        m, level = 2 * m, level + 1
     return out
 
 
@@ -376,10 +403,6 @@ class SparkTrainer:
         self.var_shapes = [v._array.shape for v in self.vars]
         self.var_sizes = [v._array.size for v in self.vars]
         self.spark = df.sparkSession
-        # drives the adaptive treeAggregate depth (see _tree_depth);
-        # minibatch samples inherit the parent's partitioning, so one
-        # probe at construction covers every step
-        self._nparts = self.df.rdd.getNumPartitions()
         sc = self.spark.sparkContext
         # structure is broadcast ONCE; per-step only the parameter state
         # dict travels (compile-once memoization, SURVEY §4 O11)
@@ -387,6 +410,11 @@ class SparkTrainer:
         self._model_bytes_bc = sc.broadcast(cloudpickle.dumps(model))
         self.step_count = 0
         self.history: list[float] = []
+        # partition count of the frame being fitted, set/cleared by fit()
+        # (StreamingTrainer re-points `df` between fits); drives the
+        # treeAggregate depth (see _tree_depth). Minibatch samples
+        # inherit the parent's partitioning.
+        self._nparts = None
         # driver-local replay state, set/cleared by fit() (see
         # LOCAL_ROWS_CAP): [(pid, bi, pandas frame), ...] or None
         self._local_batches = None
@@ -439,17 +467,16 @@ class SparkTrainer:
 
         schema = "loss double, n long, grad array<double>"
         partials = df.mapInPandas(fn, schema=schema)
-        if not want_grad:
-            row = partials.groupBy().agg(
-                F.sum("loss").alias("loss"), F.sum("n").alias("n")
-            ).collect()[0]
-            n = int(row["n"] or 0)
-            return float(row["loss"] or 0.0), n, None
-
-        n_params = int(np.sum(self.var_sizes)) if self.var_sizes else 0
+        n_params = int(np.sum(self.var_sizes)) if want_grad and self.var_sizes else 0
         zero = (0.0, 0, np.zeros(n_params, dtype=np.float64))
+        nparts = self._nparts
+        if nparts is None:  # outside fit(): evaluate, or a bare step
+            from henbun_spark.operators._parallel import _plan_partitions
 
-        if _tree_depth(self._nparts) == 1:
+            nparts = _plan_partitions(df)
+        depth = _tree_depth(nparts)
+
+        if depth == 1:
             # depth-1 regime (driver SFs: a handful of partitions, one
             # small partial row per Arrow batch): collect the partials
             # directly and fold on the driver in partition/batch order.
@@ -460,14 +487,16 @@ class SparkTrainer:
             # driver receives the same few rows either way (guide §4:
             # eliminate boundary crossings). Float sums regroup at the
             # batch level (~1 ulp), same class of reorder the tree
-            # combine already allowed.
+            # combine already allowed. `evaluate` takes this path too:
+            # one stage, where a groupBy sum planned a shuffle and a
+            # second stage to add a few rows.
             loss, n, grad = zero
             for row in partials.collect():
                 g = np.asarray(row["grad"], dtype=np.float64)
                 grad[: g.size] += g
                 loss += row["loss"]
                 n += int(row["n"])
-            return float(loss), int(n), grad
+            return float(loss), int(n), grad if want_grad else None
 
         def seq(acc, row):
             g = np.asarray(row["grad"], dtype=np.float64)
@@ -480,53 +509,18 @@ class SparkTrainer:
             gacc += a[2]
             return (a[0] + b[0], a[1] + b[1], gacc)
 
-        loss, n, grad = partials.rdd.treeAggregate(
-            zero, seq, comb, depth=_tree_depth(self._nparts)
-        )
-        return float(loss), int(n), grad
+        loss, n, grad = partials.rdd.treeAggregate(zero, seq, comb, depth=depth)
+        return float(loss), int(n), grad if want_grad else None
 
     def _fetch_local_batches(self):
-        """ONE bounded job: materialize the exact (partitionId, batch
-        index, pandas frame) triples the distributed ``mapInPandas``
-        would iterate — same session Arrow batching, same partition
-        layout, frames shipped back pickled so dtypes round-trip
-        bit-exactly. Returns None (and fetches nothing but a count)
-        when the frame is over LOCAL_ROWS_CAP / too many partitions —
-        the distributed path is the design at scale; this is a bounded
-        driver fast path like the PageRank union-find cap."""
+        """The frame's (partitionId, batch index, pandas frame) triples,
+        exactly as the distributed ``mapInPandas`` would iterate them, in
+        one bounded job; None when the frame is over its budget or has
+        too many partitions (`local_replay.fetch_batches`)."""
         import os
 
         cap = int(os.environ.get("SPARK_GRAFT_TRAINER_LOCAL_CAP", LOCAL_ROWS_CAP))
-        if cap <= 0 or self._nparts >= TREE_DEPTH_CUTOVER:
-            return None
-        # bounded existence probe: LIMIT cap+1 short-circuits the scan
-        # once cap+1 rows are seen, so the over-cap path at scale (where
-        # the answer is "stay distributed") never pays a full count job
-        if self.df.limit(cap + 1).count() > cap:
-            return None
-
-        def grab(iterator):
-            import pickle
-
-            import pandas as pd
-
-            pid = TaskContext.get().partitionId() if TaskContext.get() else 0
-            for bi, pdf in enumerate(iterator):
-                if len(pdf) == 0:
-                    continue
-                yield pd.DataFrame(
-                    {"pid": [pid], "bi": [bi], "data": [pickle.dumps(pdf)]}
-                )
-
-        import pickle
-
-        rows = self.df.mapInPandas(
-            grab, schema="pid int, bi int, data binary"
-        ).collect()
-        return sorted(
-            ((r["pid"], r["bi"], pickle.loads(bytes(r["data"]))) for r in rows),
-            key=lambda t: (t[0], t[1]),
-        )
+        return fetch_batches(self.df, lambda pdf: pdf, cap)
 
     def _job_local(self, state, step, want_grad: bool, batches=None):
         """Driver-local replica of `_job` over the fetched batches: one
@@ -682,8 +676,8 @@ class SparkTrainer:
         return loss
 
     def fit(self, maxiter=100, minibatch_fraction=None, callback=None):
-        # multi-step fits localize under the cap: the fetch costs ~2
-        # jobs and saves one per step. Minibatch fits replay
+        # multi-step fits localize under the cap: the fetch costs one
+        # job and saves one per step. Minibatch fits replay
         # `df.sample` with a bit-exact XORShiftRandom replica
         # (`_bernoulli_keep_mask`, pytest-pinned parity);
         # SPARK_GRAFT_TRAINER_LOCAL_MINIBATCH=0 pins sampling to the
@@ -697,15 +691,19 @@ class SparkTrainer:
             minibatch
             and os.environ.get("SPARK_GRAFT_TRAINER_LOCAL_MINIBATCH", "1") == "0"
         )
-        if localize and self._local_batches is None:
-            self._local_batches = self._fetch_local_batches()
-            self._replicas = {}
+        from henbun_spark.operators._parallel import _plan_partitions
+
+        self._nparts = _plan_partitions(self.df)
         try:
+            if localize and self._local_batches is None:
+                self._local_batches = self._fetch_local_batches()
+                self._replicas = {}
             for it in range(maxiter):
                 loss = self.step(minibatch_fraction)
                 if callback is not None:
                     callback(it, loss)
         finally:
+            self._nparts = None
             if localize:
                 self._local_batches = None
                 self._local_parts = None

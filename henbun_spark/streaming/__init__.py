@@ -323,9 +323,12 @@ class StreamingTrainer:
         self.trainer.df = batch_df
         try:
             # fit() == the former step() loop, plus the driver-local
-            # replay under LOCAL_ROWS_CAP: a micro-batch is re-fetched
-            # once instead of re-scanned on every one of the
-            # steps_per_batch gradient jobs (bit-identical trajectory)
+            # replay: a micro-batch under LOCAL_ROWS_CAP and the byte
+            # budget (each of its P partitions within a 1/P share) is
+            # fetched in one job instead of re-scanned on every one of
+            # the steps_per_batch gradient jobs (bit-identical
+            # trajectory). fit() reads P from this batch's frame, not
+            # from the one the trainer was built with.
             self.trainer.fit(maxiter=self.steps_per_batch)
         finally:
             self.trainer.df = saved_df

@@ -303,6 +303,31 @@ def test_local_replay_refetches_reassigned_frame(spark, monkeypatch):
         assert np.array_equal(np.asarray(v1._array), np.asarray(v2._array))
 
 
+
+def test_fit_reads_partition_count_of_reassigned_frame(spark):
+    """A trainer built on a 4-partition frame and re-pointed at a
+    64-partition one (as StreamingTrainer re-points it per micro-batch)
+    must read 64 when it fits: past TREE_DEPTH_CUTOVER the fit stays
+    distributed, one `_job` per step, and never replays."""
+    from pyspark.sql import functions as F
+
+    df, _, _ = make_df(spark)
+    tr = SparkTrainer(LinReg(), df, optimizer=Adam(learning_rate=0.05))
+    x = F.col("id") / 640.0
+    tr.df = spark.range(0, 640, 1, 64).select(
+        x.alias("x"), (A_TRUE + B_TRUE * x).alias("y")
+    )
+    calls = []
+    orig_job = tr._job
+
+    def spy(*a, **k):
+        calls.append(1)
+        return orig_job(*a, **k)
+
+    tr._job = spy
+    tr.fit(maxiter=4)
+    assert len(calls) == 4, "fit replayed on a stale partition count"
+
 class PredModel(hb.Model):
     def setUp(self):
         self.x = ColumnData("x")
