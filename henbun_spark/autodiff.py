@@ -13,6 +13,15 @@ broadcasting support (gradients un-broadcast back to input shapes).
 Matrix ops needed by the GP layer (cholesky, triangular_solve) implement
 standard backward rules (Murray 2016, "Differentiation of the Cholesky
 decomposition") without scipy.
+
+Gradient ownership: a node's first gradient contribution is stored as
+is, without a copy, so ``t.grad`` may alias another node's gradient or
+be a read-only ``np.broadcast_to`` view; every later contribution
+allocates a fresh sum (`_acc`). This is safe because nothing writes a
+gradient in place: `backward` and every rule here only read them, and
+the optimizers (`model.Adam`, `model.GradientDescent`) and
+`spark_exec._Replica.evaluate` only read the leaf gradients they are
+handed. Code that wants to modify a ``.grad`` copies it first.
 """
 
 from __future__ import annotations
@@ -38,13 +47,31 @@ def _unbroadcast(grad: np.ndarray, shape: tuple) -> np.ndarray:
 def _acc(t: "Tensor", g) -> None:
     """Add the gradient contribution `g` into ``t.grad``.
 
-    The first contribution allocates the array: ``g + 0.0`` written into
-    a fresh array of t's dtype is exactly ``zeros + g`` (``-0.0`` turns
-    into ``0.0`` as it would), so no node pays a zero-fill."""
-    if t.grad is None:
-        t.grad = np.add(g, 0.0, out=np.empty_like(t.data))
+    The first contribution is borrowed when it already has t's shape and
+    dtype: ``t.grad`` becomes `g` itself, which may be another node's
+    gradient or a read-only broadcast view and is never written. A
+    first contribution of another shape or dtype is written into a fresh
+    array of t's dtype (``g + 0.0``, so float32 gradients stay float32).
+    A later contribution allocates ``t.grad + g`` and never adds in
+    place, which keeps any borrowed array untouched."""
+    if t.grad is not None:
+        t.grad = np.add(t.grad, g, out=np.empty_like(t.data))
+    elif (isinstance(g, np.ndarray) and g.shape == t.data.shape
+          and g.dtype == t.data.dtype):
+        t.grad = g
     else:
-        t.grad += g
+        t.grad = np.add(g, 0.0, out=np.empty_like(t.data))
+
+
+def _is_basic_index(idx) -> bool:
+    """True for a numpy basic index (ints, slices, Ellipsis, None): it
+    selects each element at most once, so its gradient is a plain
+    assignment into zeros."""
+    for i in idx if isinstance(idx, tuple) else (idx,):
+        if not (i is None or i is Ellipsis or isinstance(i, slice)
+                or (isinstance(i, (int, np.integer)) and not isinstance(i, bool))):
+            return False
+    return True
 
 
 class Tensor:
@@ -81,19 +108,23 @@ class Tensor:
     def backward(self, grad=None):
         if grad is None:
             grad = np.ones_like(self.data)
-        topo, visited = [], set()
-
-        def build(t):
-            if id(t) in visited or not t.requires_grad:
-                return
-            visited.add(id(t))
-            for p in t._prev:
-                build(p)
-            topo.append(t)
-
-        build(self)
-        # gradients are allocated by each node's first contribution
-        # (`_acc`); clearing here drops any left by an earlier backward
+        # post-order over the graph with an explicit stack: each node is
+        # appended after all of its inputs, in the order a recursive
+        # depth-first walk over `_prev` would append them
+        topo, visited = [], {id(self)}
+        stack = [(self, iter(self._prev))] if self.requires_grad else []
+        while stack:
+            t, inputs = stack[-1]
+            for p in inputs:
+                if p.requires_grad and id(p) not in visited:
+                    visited.add(id(p))
+                    stack.append((p, iter(p._prev)))
+                    break
+            else:
+                stack.pop()
+                topo.append(t)
+        # gradients are set by each node's first contribution (`_acc`);
+        # clearing here drops any left by an earlier backward
         for t in topo:
             t.grad = None
         self.grad = np.asarray(grad, dtype=self.data.dtype)
@@ -180,12 +211,16 @@ class Tensor:
 
     def __getitem__(self, idx):
         out = Tensor(self.data[idx], _prev=(self,))
+        basic = _is_basic_index(idx)
 
         def _backward(g):
             if self.requires_grad:
-                if self.grad is None:
-                    self.grad = np.zeros_like(self.data)
-                np.add.at(self.grad, idx, g)
+                full = np.zeros_like(self.data)
+                if basic:
+                    full[idx] = g
+                else:  # fancy indices may repeat an element
+                    np.add.at(full, idx, g)
+                _acc(self, full)
 
         out._backward = _backward
         return out
@@ -280,15 +315,7 @@ def square(x):
 
 
 def sigmoid(x):
-    def fwd(a):
-        out = np.empty_like(a)
-        pos = a >= 0
-        out[pos] = 1.0 / (1.0 + np.exp(-a[pos]))
-        ea = np.exp(a[~pos])
-        out[~pos] = ea / (1.0 + ea)
-        return out
-
-    return _unary(x, fwd, lambda a, o: o * (1.0 - o))
+    return _unary(x, _sigmoid_np, lambda a, o: o * (1.0 - o))
 
 
 def tanh(x):
@@ -296,7 +323,7 @@ def tanh(x):
 
 
 def relu(x):
-    return _unary(x, lambda a: np.maximum(a, 0.0), lambda a, o: (a > 0).astype(np.float64))
+    return _unary(x, lambda a: np.maximum(a, 0.0), lambda a, o: a > 0)
 
 
 def softplus(x):
@@ -330,7 +357,7 @@ def clip(x, lo, hi):
     return _unary(
         x,
         lambda a: np.clip(a, lo, hi),
-        lambda a, o: ((a >= lo) & (a <= hi)).astype(np.float64),
+        lambda a, o: (a >= lo) & (a <= hi),
     )
 
 

@@ -289,6 +289,17 @@ def _xs_states(seed0: int, n: int) -> np.ndarray:
     return out
 
 
+#: Spark ``major.minor`` versions whose ``df.sample`` stream
+#: `_bernoulli_keep_mask` was checked against, row for row
+#: (``test_sample_mask_matches_jvm``). Under any other version a minibatch
+#: fit samples on the cluster: the same result, one job per step.
+SAMPLER_VERIFIED_SPARK = ("4.1",)
+
+
+def _sampler_verified(version: str) -> bool:
+    return ".".join(version.split(".")[:2]) in SAMPLER_VERIFIED_SPARK
+
+
 def _bernoulli_keep_mask(seed: int, pid: int, n_rows: int, fraction: float) -> np.ndarray:
     """Boolean keep-mask for one partition of `df.sample(fraction,
     seed)`: java.util.Random.nextDouble consumes next(26) then next(27),
@@ -679,7 +690,8 @@ class SparkTrainer:
         # multi-step fits localize under the cap: the fetch costs one
         # job and saves one per step. Minibatch fits replay
         # `df.sample` with a bit-exact XORShiftRandom replica
-        # (`_bernoulli_keep_mask`, pytest-pinned parity);
+        # (`_bernoulli_keep_mask`, pytest-pinned parity) on the Spark
+        # versions it was verified against (SAMPLER_VERIFIED_SPARK);
         # SPARK_GRAFT_TRAINER_LOCAL_MINIBATCH=0 pins sampling to the
         # cluster as a safety valve.
         import os
@@ -689,7 +701,10 @@ class SparkTrainer:
         )
         localize = maxiter >= 4 and not (
             minibatch
-            and os.environ.get("SPARK_GRAFT_TRAINER_LOCAL_MINIBATCH", "1") == "0"
+            and (
+                os.environ.get("SPARK_GRAFT_TRAINER_LOCAL_MINIBATCH", "1") == "0"
+                or not _sampler_verified(self.spark.version)
+            )
         )
         from henbun_spark.operators._parallel import _plan_partitions
 

@@ -459,9 +459,20 @@ def asof_join_stream(
     Cross-flush ties cannot occur: a row sealed in an earlier flush has
     ts <= that flush's watermark, and any row arriving later with the
     same ts would be late data the engine already dropped.
+
+    ``key_col`` must be an integral column: the state stores keys as
+    int64, so a string key would fail inside the first batch and a
+    float key would be truncated into colliding keys. Any other type
+    raises ``TypeError`` here, before the query is planned.
     """
     import os
 
+    key_type = tagged.schema[key_col].dataType
+    if not isinstance(key_type, T.IntegralType):
+        raise TypeError(
+            f"asof_join_stream: key column {key_col!r} must be integral, "
+            f"got {key_type.simpleString()}"
+        )
     groups = num_groups or int(os.environ.get("SPARK_GRAFT_ASOF_GROUPS", "0"))
     if groups <= 0:
         groups = tagged.sparkSession.sparkContext.defaultParallelism

@@ -49,6 +49,80 @@ def test_autodiff_gradient_matches_finite_difference(xs):
         np.testing.assert_allclose(grad[i], num, atol=1e-5, rtol=1e-4)
 
 
+# graphs that reach one node along several paths, so a gradient borrowed
+# by one consumer (`autodiff._acc`) is also read or summed by another
+_SHARED_NODE_GRAPHS = {
+    "x+x": lambda t: ad.sum(ad.square(t + t)),
+    "2x+2x+x": lambda t: ad.sum(ad.square((2.0 * t) + (2.0 * t) + t)),
+    "reshape-T": lambda t: ad.sum(t.reshape(-1).reshape(t.shape).T * t.T)
+    + ad.sum(t.reshape(t.size)[:, None] * t.reshape(t.size)[None, :]),
+    "sum-broadcast": lambda t: ad.sum(t * ad.sum(t, axis=0, keepdims=True))
+    + ad.sum(t) * ad.sum(t[0]),
+    "basic-slices": lambda t: ad.sum(ad.square(t[0] * t[-1]))
+    + ad.sum(t[1:, ::2] * t[:-1, ::2])
+    + ad.sum(t[..., None][:, 0] * t[None, ...][0]),
+    "fancy-repeat": lambda t: ad.sum(ad.square(t[[0, 0, 1, 0]]))
+    + ad.sum(t[[1, 1, 0], [0, 0, 1]] * t[0, 0]),
+}
+
+
+@settings(max_examples=40, deadline=None)
+@given(
+    st.sampled_from(sorted(_SHARED_NODE_GRAPHS)),
+    st.integers(min_value=2, max_value=4),
+    st.integers(min_value=2, max_value=4),
+    st.integers(min_value=0, max_value=2**31),
+)
+def test_shared_node_gradients_own_their_arrays(name, rows, cols, seed):
+    """Leaf gradients of graphs that reuse a node match central finite
+    differences, and a second `backward()` returns the same leaf
+    gradients: no borrowed first contribution was written in place."""
+    f = _SHARED_NODE_GRAPHS[name]
+    x = np.random.default_rng(seed).uniform(-2.0, 2.0, (rows, cols))
+    t = ad.Tensor(x, requires_grad=True)
+    out = f(t)
+    out.backward()
+    grad = np.array(t.grad)
+    eps = 1e-6
+    for i in np.ndindex(x.shape):
+        xp, xm = x.copy(), x.copy()
+        xp[i] += eps
+        xm[i] -= eps
+        num = (float(f(ad.Tensor(xp)).data) - float(f(ad.Tensor(xm)).data)) / (2 * eps)
+        np.testing.assert_allclose(grad[i], num, atol=1e-4, rtol=1e-5)
+    out.backward()
+    np.testing.assert_array_equal(t.grad, grad)
+
+
+@settings(max_examples=20, deadline=None)
+@given(st.lists(st.floats(min_value=-3.0, max_value=3.0, allow_nan=False),
+                min_size=4, max_size=8))
+def test_float32_leaf_gradients_stay_float32(xs):
+    """In float32 mode, leaf gradients through relu, clip and both
+    `__getitem__` paths keep float32: bool masks and borrowed
+    contributions add no float64 on the way."""
+    import copy
+
+    from henbun_spark.config import settings as hb_settings
+    from henbun_spark.config import temp_settings
+
+    tmp = copy.deepcopy(hb_settings)
+    tmp.dtypes.float_type = np.float32
+    with temp_settings(tmp):
+        a = ad.Tensor(np.asarray(xs), requires_grad=True)
+        b = ad.Tensor(np.asarray(xs), requires_grad=True)
+        c = ad.Tensor(np.asarray(xs), requires_grad=True)
+        out = (
+            ad.sum(ad.relu(a) * a)
+            + ad.sum(ad.clip(b, -1.0, 1.0))
+            + ad.sum(c[1:] * c[:-1])
+            + ad.sum(c[[0, 0, 2]])
+        )
+        out.backward()
+        for leaf in (a, b, c):
+            assert leaf.grad.dtype == np.float32
+
+
 @settings(max_examples=20, deadline=None)
 @given(st.integers(min_value=1, max_value=8), st.integers(min_value=1, max_value=4),
        st.integers(min_value=0, max_value=2**31))

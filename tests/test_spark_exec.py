@@ -203,6 +203,44 @@ def test_sample_mask_matches_jvm(spark, seed, fraction):
         assert got.get(pid, []) == want, f"partition {pid} diverged"
 
 
+def test_sampler_replica_verified_for_running_spark(spark):
+    """The running Spark's major.minor is one the sampler replica was
+    verified against. A version bump fails here until
+    `test_sample_mask_matches_jvm` is rerun on it and the version is
+    added to SAMPLER_VERIFIED_SPARK."""
+    from henbun_spark.spark_exec import SAMPLER_VERIFIED_SPARK, _sampler_verified
+
+    assert _sampler_verified(spark.version), (
+        f"Spark {spark.version} not in {SAMPLER_VERIFIED_SPARK}"
+    )
+
+
+def test_unverified_spark_samples_minibatch_on_cluster(spark, monkeypatch):
+    """Under a Spark version outside SAMPLER_VERIFIED_SPARK a minibatch
+    fit never replays the sampler: every step is a distributed job."""
+    from henbun_spark import spark_exec
+
+    monkeypatch.setattr(spark_exec, "SAMPLER_VERIFIED_SPARK", ("3.5",))
+    df, _, _ = make_df(spark)
+    tr = SparkTrainer(LinReg(), df, optimizer=Adam(learning_rate=0.05))
+    sampled, jobs = [], []
+    orig_sample, orig_job = tr._sampled_batches, tr._job
+
+    def spy_sample(*a, **k):
+        sampled.append(1)
+        return orig_sample(*a, **k)
+
+    def spy_job(*a, **k):
+        jobs.append(1)
+        return orig_job(*a, **k)
+
+    tr._sampled_batches, tr._job = spy_sample, spy_job
+    tr.fit(maxiter=4, minibatch_fraction=0.5)
+    assert not sampled, "minibatch fit replayed on an unverified Spark"
+    assert len(jobs) == 4
+    assert len(tr.history) == 4 and np.all(np.isfinite(tr.history))
+
+
 _MINIBATCH_CASES = [(0.25, None), (0.5, 37), (0.06, None)]
 
 

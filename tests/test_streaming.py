@@ -300,6 +300,21 @@ def test_streaming_asof_exact_under_out_of_order_batches(spark, tmp_path):
     assert len(got) == left.count()
 
 
+@pytest.mark.parametrize("key_type", ["double", "string"])
+def test_streaming_asof_rejects_non_integral_key(spark, tmp_path, key_type):
+    """A non-integral key column raises TypeError when the join is
+    built, before any query starts: the state keeps keys as int64, so a
+    float key would be truncated into colliding keys and a string key
+    would fail inside the first batch."""
+    stream = spark.readStream.schema(
+        f"user_id {key_type}, ts timestamp, is_left int, event_id long, value double"
+    ).parquet(str(tmp_path))
+    active = len(spark.streams.active)
+    with pytest.raises(TypeError, match=f"'user_id'.*{key_type}"):
+        streaming.asof_join_stream(stream, watermark="12 hours")
+    assert len(spark.streams.active) == active
+
+
 def test_mg_stream_maintenance_covers_hot_keys(spark, tmp_path):
     """MG state folded across micro-batches still covers every key above
     N/k of the WHOLE stream, with the hot key's rows scattered across
