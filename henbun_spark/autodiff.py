@@ -1,4 +1,4 @@
-"""Tiny pure-numpy reverse-mode autodiff.
+"""Tiny pure-numpy reverse-mode autodiff that records a replayable tape.
 
 Spark has no gradient engine — this is the single biggest delta from the
 TensorFlow-based reference (`SURVEY.md §7`). The reference leans on TF
@@ -8,11 +8,31 @@ pandas UDFs (executor-side), or directly on the driver for small data.
 Gradients aggregate linearly across partitions, so per-partition partial
 gradients sum into the full gradient (map-side combine -> driver Adam).
 
-Design: classic tape-free reverse-mode over numpy ndarrays with full
-broadcasting support (gradients un-broadcast back to input shapes).
-Matrix ops needed by the GP layer (cholesky, triangular_solve) implement
-standard backward rules (Murray 2016, "Differentiation of the Cholesky
-decomposition") without scipy.
+Design: reverse-mode over numpy ndarrays with full broadcasting support
+(gradients un-broadcast back to input shapes). Matrix ops needed by the
+GP layer (cholesky, triangular_solve) implement standard backward rules
+(Murray 2016, "Differentiation of the Cholesky decomposition") without
+scipy.
+
+Trace and replay (the reference's compile-once graph, `SURVEY.md §4
+O11`): every op computes its value eagerly and keeps two rules on the
+node it returns. The forward rule recomputes ``data`` from its inputs'
+``.data``; the backward rule is called with the node's gradient and
+current ``data`` and reads its inputs' current ``.data`` (never an array
+captured when the node was built, and never the node itself, so no rule
+makes a reference cycle and a dropped graph is freed at once). Values from
+outside the graph — a Variable's free array, a data feed, an RNG draw,
+or a non-differentiable value computed from other nodes — enter through
+`leaf`, whose forward rule re-reads them. Inside `record()` every new
+node is collected in creation order; `Tape` keeps those nodes and the
+backward post-order of the output. `Tape.replay` then rewrites each
+node's ``data`` through its forward rule (with the same
+``np.asarray(..., float_type)`` as `Tensor.__init__`) and runs the
+stored backward rules in the stored order: the same numpy calls and the
+same `_acc` calls as an eager evaluation, so every bit is the same. A
+value read from ``.data`` in plain numpy and wrapped as a constant is
+NOT re-read by a replay; code that is replayed computes such values
+with ops or `leaf`.
 
 Gradient ownership: a node's first gradient contribution is stored as
 is, without a copy, so ``t.grad`` may alias another node's gradient or
@@ -21,10 +41,14 @@ allocates a fresh sum (`_acc`). This is safe because nothing writes a
 gradient in place: `backward` and every rule here only read them, and
 the optimizers (`model.Adam`, `model.GradientDescent`) and
 `spark_exec._Replica.evaluate` only read the leaf gradients they are
-handed. Code that wants to modify a ``.grad`` copies it first.
+handed. Code that wants to modify a ``.grad`` copies it first. A replay
+never writes a node's ``data`` in place either: it binds a new array.
 """
 
 from __future__ import annotations
+
+import threading
+from contextlib import contextmanager
 
 import numpy as np
 
@@ -74,11 +98,34 @@ def _is_basic_index(idx) -> bool:
     return True
 
 
+class _Recorder(threading.local):
+    """Per-thread list that collects new nodes inside `record()`. Per
+    thread because a StreamingTrainer fits on Spark's foreachBatch
+    callback thread while the main thread may evaluate too."""
+
+    nodes = None
+
+
+_recorder = _Recorder()
+
+
+@contextmanager
+def record():
+    """Collect every `Tensor` this thread creates inside the block, in
+    creation order, into the yielded list (the input of `Tape`)."""
+    prev, nodes = _recorder.nodes, []
+    _recorder.nodes = nodes
+    try:
+        yield nodes
+    finally:
+        _recorder.nodes = prev
+
+
 class Tensor:
-    __slots__ = ("data", "grad", "_backward", "_prev", "requires_grad")
+    __slots__ = ("data", "grad", "_forward", "_backward", "_prev", "requires_grad")
     __array_priority__ = 100  # so np.ndarray + Tensor defers to us
 
-    def __init__(self, data, requires_grad: bool = False, _prev=(), _backward=None):
+    def __init__(self, data, requires_grad: bool = False, _prev=()):
         # compute dtype follows settings.dtypes.float_type (float64 default;
         # float32 mode halves Arrow/broadcast bytes at reference tolerances)
         self.data = np.asarray(data, dtype=settings.dtypes.float_type)
@@ -90,7 +137,12 @@ class Tensor:
                     break
         self.requires_grad = requires_grad
         self._prev = _prev
-        self._backward = _backward
+        # a constant has no forward rule: a replay keeps its data
+        self._forward = None
+        self._backward = None
+        nodes = _recorder.nodes
+        if nodes is not None:
+            nodes.append(self)
 
     # -- graph ---------------------------------------------------------
     @property
@@ -106,11 +158,12 @@ class Tensor:
         return self.data.size
 
     def backward(self, grad=None):
-        if grad is None:
-            grad = np.ones_like(self.data)
-        # post-order over the graph with an explicit stack: each node is
-        # appended after all of its inputs, in the order a recursive
-        # depth-first walk over `_prev` would append them
+        self._backprop(self._post_order(), grad)
+
+    def _post_order(self) -> list:
+        """The nodes that need a gradient, each after all of its inputs,
+        in the order a recursive depth-first walk over `_prev` would
+        append them (explicit stack, so deep graphs do not recurse)."""
         topo, visited = [], {id(self)}
         stack = [(self, iter(self._prev))] if self.requires_grad else []
         while stack:
@@ -123,6 +176,13 @@ class Tensor:
             else:
                 stack.pop()
                 topo.append(t)
+        return topo
+
+    def _backprop(self, topo: list, grad=None) -> None:
+        """Run the backward rules of `topo` (this node's `_post_order`)
+        from the output down."""
+        if grad is None:
+            grad = np.ones_like(self.data)
         # gradients are set by each node's first contribution (`_acc`);
         # clearing here drops any left by an earlier backward
         for t in topo:
@@ -130,7 +190,7 @@ class Tensor:
         self.grad = np.asarray(grad, dtype=self.data.dtype)
         for t in reversed(topo):
             if t._backward is not None and t.grad is not None:
-                t._backward(t.grad)
+                t._backward(t.grad, t.data)
 
     # -- helpers --------------------------------------------------------
     @staticmethod
@@ -139,17 +199,14 @@ class Tensor:
 
     def _binop(self, other, fwd, bwd_self, bwd_other):
         other = Tensor._wrap(other)
-        out_data = fwd(self.data, other.data)
-        out = Tensor(out_data, _prev=(self, other))
 
-        def _backward(g):
+        def backward(g, o):
             if self.requires_grad:
-                _acc(self, _unbroadcast(bwd_self(g, self.data, other.data, out_data), self.shape))
+                _acc(self, _unbroadcast(bwd_self(g, self.data, other.data, o), self.shape))
             if other.requires_grad:
-                _acc(other, _unbroadcast(bwd_other(g, self.data, other.data, out_data), other.shape))
+                _acc(other, _unbroadcast(bwd_other(g, self.data, other.data, o), other.shape))
 
-        out._backward = _backward
-        return out
+        return _op(lambda: fwd(self.data, other.data), (self, other), backward)
 
     # -- arithmetic ------------------------------------------------------
     def __add__(self, other):
@@ -181,24 +238,20 @@ class Tensor:
 
     def __pow__(self, p):
         assert isinstance(p, (int, float))
-        out = Tensor(self.data ** p, _prev=(self,))
 
-        def _backward(g):
+        def backward(g, o):
             if self.requires_grad:
                 _acc(self, g * p * self.data ** (p - 1))
 
-        out._backward = _backward
-        return out
+        return _op(lambda: self.data ** p, (self,), backward)
 
     def __neg__(self):
         return self * -1.0
 
     def __matmul__(self, other):
-        other = Tensor._wrap(other)
-        out = Tensor(self.data @ other.data, _prev=(self, other))
-        a, b = self, other
+        a, b = self, Tensor._wrap(other)
 
-        def _backward(g):
+        def backward(g, o):
             if a.requires_grad:
                 ga = g @ np.swapaxes(b.data, -1, -2)
                 _acc(a, _unbroadcast(ga, a.shape))
@@ -206,14 +259,12 @@ class Tensor:
                 gb = np.swapaxes(a.data, -1, -2) @ g
                 _acc(b, _unbroadcast(gb, b.shape))
 
-        out._backward = _backward
-        return out
+        return _op(lambda: a.data @ b.data, (a, b), backward)
 
     def __getitem__(self, idx):
-        out = Tensor(self.data[idx], _prev=(self,))
         basic = _is_basic_index(idx)
 
-        def _backward(g):
+        def backward(g, o):
             if self.requires_grad:
                 full = np.zeros_like(self.data)
                 if basic:
@@ -222,37 +273,29 @@ class Tensor:
                     np.add.at(full, idx, g)
                 _acc(self, full)
 
-        out._backward = _backward
-        return out
+        return _op(lambda: self.data[idx], (self,), backward)
 
     def reshape(self, *shape):
         if len(shape) == 1 and isinstance(shape[0], (tuple, list)):
             shape = tuple(shape[0])
         old = self.shape
-        out = Tensor(self.data.reshape(shape), _prev=(self,))
 
-        def _backward(g):
+        def backward(g, o):
             if self.requires_grad:
                 _acc(self, g.reshape(old))
 
-        out._backward = _backward
-        return out
+        return _op(lambda: self.data.reshape(shape), (self,), backward)
 
     @property
     def T(self):
-        out = Tensor(np.swapaxes(self.data, -1, -2), _prev=(self,))
-
-        def _backward(g):
+        def backward(g, o):
             if self.requires_grad:
                 _acc(self, np.swapaxes(g, -1, -2))
 
-        out._backward = _backward
-        return out
+        return _op(lambda: np.swapaxes(self.data, -1, -2), (self,), backward)
 
     def sum(self, axis=None, keepdims=False):
-        out = Tensor(self.data.sum(axis=axis, keepdims=keepdims), _prev=(self,))
-
-        def _backward(g):
+        def backward(g, o):
             if not self.requires_grad:
                 return
             if axis is None:
@@ -261,8 +304,7 @@ class Tensor:
                 gg = g if keepdims else np.expand_dims(g, axis)
                 _acc(self, np.broadcast_to(gg, self.shape))
 
-        out._backward = _backward
-        return out
+        return _op(lambda: self.data.sum(axis=axis, keepdims=keepdims), (self,), backward)
 
     def mean(self, axis=None, keepdims=False):
         n = self.size if axis is None else self.shape[axis]
@@ -275,19 +317,73 @@ class Tensor:
         return f"Tensor(shape={self.shape}, requires_grad={self.requires_grad})"
 
 
+def _op(forward, prev, backward):
+    """The node ``forward()`` computes from `prev`, with its forward and
+    backward rules attached; ``backward(g, o)`` adds the input gradients
+    given the node's gradient `g` and data `o`."""
+    out = Tensor(forward(), _prev=prev)
+    out._forward = forward
+    out._backward = backward
+    return out
+
+
+def leaf(read, requires_grad: bool = False):
+    """A graph leaf whose value ``read()`` fetches from outside the graph:
+    a Variable's free array, a data feed, an RNG draw, or a value
+    computed in numpy from other nodes' ``.data`` that takes no
+    gradient. A replay calls `read` again, in creation order, so it sees
+    the current array, the current batch, the re-seeded stream or the
+    replayed inputs."""
+    t = Tensor(read(), requires_grad=requires_grad)
+    t._forward = read
+    return t
+
+
+class Tape:
+    """One recorded evaluation of `out`: the nodes `record()` collected
+    and the backward post-order of `out`. `replay` re-evaluates the same
+    graph on whatever its leaves read now, with no new node."""
+
+    __slots__ = ("forward", "out", "order")
+
+    def __init__(self, nodes, out: Tensor):
+        self.forward = [t for t in nodes if t._forward is not None]
+        self.out = out
+        self.order = out._post_order()
+
+    def backward(self) -> None:
+        self.out._backprop(self.order)
+
+    def replay(self, want_grad: bool = True) -> None:
+        float_type = settings.dtypes.float_type
+        for t in self.forward:
+            t.data = np.asarray(t._forward(), dtype=float_type)
+        if want_grad:
+            self.backward()
+
+    def nbytes(self) -> int:
+        """Bytes the nodes' data and gradients hold now, each array
+        that owns its memory counted once (views and borrowed gradients
+        are free)."""
+        arrays = {id(t.data): t.data for t in self.forward}
+        arrays.update((id(t.grad), t.grad) for t in self.order if t.grad is not None)
+        total = 0
+        for a in arrays.values():
+            if a.flags.owndata:
+                total += a.nbytes
+        return total
+
+
 # -- unary ops -------------------------------------------------------------
 
 def _unary(x, fwd, dfdx):
     x = Tensor._wrap(x)
-    out_data = fwd(x.data)
-    out = Tensor(out_data, _prev=(x,))
 
-    def _backward(g):
+    def backward(g, o):
         if x.requires_grad:
-            _acc(x, g * dfdx(x.data, out_data))
+            _acc(x, g * dfdx(x.data, o))
 
-    out._backward = _backward
-    return out
+    return _op(lambda: fwd(x.data), (x,), backward)
 
 
 def exp(x):
@@ -379,14 +475,12 @@ def transpose(x, axes=None):
     x = Tensor._wrap(x)
     axes_t = tuple(range(x.ndim))[::-1] if axes is None else tuple(axes)
     inv = np.argsort(axes_t)
-    out = Tensor(np.transpose(x.data, axes_t), _prev=(x,))
 
-    def _backward(g):
+    def backward(g, o):
         if x.requires_grad:
             _acc(x, np.transpose(g, inv))
 
-    out._backward = _backward
-    return out
+    return _op(lambda: np.transpose(x.data, axes_t), (x,), backward)
 
 
 def maximum(a, b):
@@ -401,25 +495,25 @@ def maximum(a, b):
 
 def concat(tensors, axis=0):
     tensors = [Tensor._wrap(t) for t in tensors]
-    out = Tensor(np.concatenate([t.data for t in tensors], axis=axis), _prev=tuple(tensors))
     sizes = [t.shape[axis] for t in tensors]
 
-    def _backward(g):
+    def backward(g, o):
         parts = np.split(g, np.cumsum(sizes)[:-1], axis=axis)
         for t, p in zip(tensors, parts):
             if t.requires_grad:
                 _acc(t, p)
 
-    out._backward = _backward
-    return out
+    return _op(lambda: np.concatenate([t.data for t in tensors], axis=axis),
+               tuple(tensors), backward)
 
 
 def log_sum_exp(x, axis=-1):
-    """Stable LSE with gradient (mirrors `tf_wraps.py:42-48`)."""
+    """Stable LSE with gradient (mirrors `tf_wraps.py:42-48`). The max
+    shift takes no gradient, as in TF: it is a `leaf` read off x."""
     x = Tensor._wrap(x)
-    m = np.max(x.data, axis=axis, keepdims=True)
-    shifted = x - Tensor(m)
-    return log(exp(shifted).sum(axis=axis)) + Tensor(np.squeeze(m, axis=axis))
+    m = leaf(lambda: np.max(x.data, axis=axis, keepdims=True))
+    shifted = x - m
+    return log(exp(shifted).sum(axis=axis)) + leaf(lambda: np.squeeze(m.data, axis=axis))
 
 
 # -- linear-algebra ops (GP layer) ------------------------------------------
@@ -461,8 +555,6 @@ def _solve_tri_np(L, b, lower=True, trans=False):
 def cholesky(a):
     """chol(A) with Murray (2016) backward rule; batched over leading axes."""
     a = Tensor._wrap(a)
-    L = np.linalg.cholesky(a.data)
-    out = Tensor(L, _prev=(a,))
 
     def _phi(M):
         P = np.tril(M)
@@ -475,9 +567,10 @@ def cholesky(a):
         Abar = _solve_tri_2d(Lk, tmp, lower=True, trans=True)     # L^{-T} @ ...
         return 0.5 * (Abar + Abar.T)
 
-    def _backward(g):
+    def backward(g, o):
         if not a.requires_grad:
             return
+        L = o
         if L.ndim == 2:
             _acc(a, _bw_2d(L, g))
         else:
@@ -487,19 +580,22 @@ def cholesky(a):
             ab = np.stack([_bw_2d(Lf[i], gf[i]) for i in range(Lf.shape[0])])
             _acc(a, ab.reshape(L.shape))
 
-    out._backward = _backward
-    return out
+    return _op(lambda: np.linalg.cholesky(a.data), (a,), backward)
 
 
 def triangular_solve(L, b, lower=True):
     """x = L^{-1} b with gradients to both L and b (batched)."""
     L, b = Tensor._wrap(L), Tensor._wrap(b)
-    bdat = b.data if b.data.ndim > 1 else b.data[:, None]
     squeeze = b.data.ndim == 1
-    x = _solve_tri_np(L.data, bdat, lower=lower)
-    out = Tensor(x[..., 0] if squeeze else x, _prev=(L, b))
+    x = None  # the float64 solve, before the cast to float_type
 
-    def _backward(g):
+    def forward():
+        nonlocal x
+        bdat = b.data if b.data.ndim > 1 else b.data[:, None]
+        x = _solve_tri_np(L.data, bdat, lower=lower)
+        return x[..., 0] if squeeze else x
+
+    def backward(g, o):
         gmat = g if not squeeze else g[:, None]
         gb = _solve_tri_np(L.data, gmat, lower=lower, trans=True)  # L^{-T} g
         if b.requires_grad:
@@ -509,5 +605,4 @@ def triangular_solve(L, b, lower=True):
             gL = np.tril(gL) if lower else np.triu(gL)
             _acc(L, _unbroadcast(gL, L.shape))
 
-    out._backward = _backward
-    return out
+    return _op(forward, (L, b), backward)

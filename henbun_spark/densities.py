@@ -142,9 +142,12 @@ def bernoulli(p, y):
         p, y = _c(p), _c(y)
         return F.when(y == F.lit(1.0), F.log(p)).otherwise(F.log(F.lit(1.0) - p))
     if _mode(p, y) == "ad":
-        # select(y==1, p, 1-p) differentiable in p
-        ydat = y.data if isinstance(y, ad.Tensor) else np.asarray(y)
-        mask = (ydat == 1).astype(np.float64)
+        # select(y==1, p, 1-p) differentiable in p; the mask takes no
+        # gradient and is a traced leaf, so a replay reads the batch's y
+        if isinstance(y, ad.Tensor):
+            mask = ad.leaf(lambda: (y.data == 1).astype(np.float64))
+        else:
+            mask = ad.Tensor((np.asarray(y) == 1).astype(np.float64))
         return ad.log(p * mask + (1.0 - p) * (1.0 - mask))
     p, y = np.asarray(p, dtype=np.float64), np.asarray(y)
     return np.where(y == 1, np.log(p), np.log(1.0 - p))

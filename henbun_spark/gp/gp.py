@@ -22,8 +22,8 @@ from henbun_spark.param import Parameterized, Variable, graph_key
 def _draw_normal(node, shape):
     root = node.highest_parent
     if hasattr(root, "draw_normal"):
-        return ad.Tensor(root.draw_normal(shape))
-    return ad.Tensor(np.random.default_rng().standard_normal(shape))
+        return ad.leaf(lambda: root.draw_normal(shape))
+    return ad.leaf(lambda: np.random.default_rng().standard_normal(shape))
 
 
 def _t(x):

@@ -132,13 +132,18 @@ class Model(Parameterized):
         (SURVEY §4 O3)."""
         return self._eval_rng.standard_normal(size=shape)
 
-    def new_eval(self, minibatch_index=None, seed=None):
-        """Start a fresh evaluation: clear autodiff leaves, re-seed the
-        sample RNG, feed data."""
+    def reseed(self, seed=None):
+        """Re-seed the sample RNG for a new evaluation: all a tape replay
+        of the objective needs from `new_eval` (`autodiff.Tape`)."""
         self._eval_step += 1
         self._eval_rng = np.random.default_rng(
             self._eval_step if seed is None else seed
         )
+
+    def new_eval(self, minibatch_index=None, seed=None):
+        """Start a fresh evaluation: clear autodiff leaves, re-seed the
+        sample RNG, feed data."""
+        self.reseed(seed)
         self.reset_eval()
         self.get_feed_dict(minibatch_index)
 

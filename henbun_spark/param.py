@@ -167,7 +167,7 @@ class Variable(Parentable):
         if self._assigned and self._pending is not None:
             self.initialize()
         if self._leaf is None:
-            self._leaf = ad.Tensor(self._array, requires_grad=True)
+            self._leaf = ad.leaf(lambda: self._array, requires_grad=True)
         return self._leaf
 
     def tensor(self):
@@ -253,14 +253,14 @@ class Data(Variable):
 
     def tensor(self):
         if self._tensor is None:
-            self._tensor = ad.Tensor(self.data)  # Tensor casts to float_type
+            self._tensor = ad.leaf(lambda: self.data)  # cast to float_type
         return self._tensor
 
     def reset_eval(self):
         self._tensor = None
 
     def get_feed_dict(self, minibatch_index=None):
-        self._tensor = ad.Tensor(self.data)
+        self._tensor = ad.leaf(lambda: self.data)
         return {self: self.data}
 
     @property

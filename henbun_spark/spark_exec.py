@@ -26,9 +26,15 @@ evaluated once per step on the driver. KL of LOCAL variationals is
 row-additive and belongs in ``local_objective``. ``local_objective`` may
 depend only on the global state, the batch and the seeded RNG
 (``draw_normal``), never on what an earlier evaluation left on the
-model: a task evaluates every Arrow batch of its partition on one
-unpickled model, and the driver-local replay keeps that model for every
-step of a fit.
+model, and it reads data and parameter values only through
+`henbun_spark.autodiff` ops: the driver-local replay runs it eagerly
+once per (batch row count, float type) on each partition's model and
+replays it from that trace after (`_Replica`), so a value taken from
+``.data`` in plain numpy, or a Python branch on one, would keep the
+traced batch's value. This is enforced: the first replay of every trace
+is also evaluated eagerly and a result that differs in any bit raises a
+RuntimeError naming the model class. A distributed task evaluates each
+batch eagerly and replays nothing.
 
 Driver-local replay (under LOCAL_ROWS_CAP and the byte budget): a
 multi-step fit fetches the frame's (partition, Arrow batch) pandas frames
@@ -334,6 +340,34 @@ def _float_type(name: str):
         settings.dtypes.float_type = prev
 
 
+class _Traced:
+    """One trace of a replica's objective: its `autodiff.Tape`, the
+    leaves of the trainable Variables in gradient order, the bytes the
+    tape holds once kept, and how far a replay was checked against an
+    eager evaluation (0 not yet, 1 the loss, 2 loss and gradient)."""
+
+    __slots__ = ("tape", "grad_leaves", "nbytes", "checked")
+
+    def __init__(self, tape, grad_leaves):
+        self.tape, self.grad_leaves = tape, grad_leaves
+        self.nbytes = self.checked = 0
+
+
+#: traces a `_Replica` keeps: one for its partition's full Arrow batches
+#: and one for the shorter last batch; a trace at a new key drops the
+#: least recently used one, so a minibatch step's changing last-batch
+#: row count never evicts the full batches' trace
+MAX_TRACES = 2
+
+#: bytes of node data and gradients the driver-local replay's tapes may
+#: hold between steps, over all partitions of a fit (each replica keeps
+#: a 1/P share). A tape holds its whole graph from one step to the next,
+#: where an eager evaluation frees it, so without this bound a fit near
+#: LOCAL_ROWS_CAP would hold two batches' graphs for every partition. A
+#: trace over the share is not kept: its batches trace again each step.
+TAPE_BUDGET_BYTES = 64 << 20
+
+
 class _Replica:
     """The model as one task holds it: unpickled once, with its
     ColumnData feeds and its Variables by long_name looked up once, so
@@ -341,15 +375,31 @@ class _Replica:
 
     Used by a distributed task for its partition, and by the driver-local
     replay for each partition across every step of a fit; `load` injects
-    the step's global state."""
+    the step's global state.
 
-    def __init__(self, model_bytes: bytes, var_names):
+    An evaluation at a (batch row count, float type) key with no kept
+    tape runs local_objective eagerly under `autodiff.record`. The
+    driver-local replay keeps that graph as a tape, within MAX_TRACES
+    and `keep_bytes`; every later evaluation at the key replays it: the
+    step's seed re-seeds the sample stream, the leaves re-read the
+    Variables' arrays and the bound batch, and the stored forward and
+    backward rules run in the stored order, bit-identical to an eager
+    evaluation. The first replay of each tape is also evaluated eagerly
+    and must match bit for bit (the objective contract in the module
+    docstring). A distributed task's replica lives for one step and keeps
+    no tape (`keep_bytes=0`): there a tape would be replayed only by the
+    task's other batches of the same row count, each first replay behind
+    an extra eager check."""
+
+    def __init__(self, model_bytes: bytes, var_names, keep_bytes: int):
         import pickle
 
         self.model = pickle.loads(model_bytes)
         self.columns = _collect_column_data(self.model)
         self.by_name = {v.long_name: v for v in self.model.get_variables()}
         self.vars = [self.by_name[name] for name in var_names]
+        self.keep_bytes = keep_bytes
+        self.traces = {}  # {(rows, float type): _Traced}, least recent first
 
     def load(self, state: dict, float_type) -> None:
         for name, arr in state.items():
@@ -361,24 +411,74 @@ class _Replica:
     def evaluate(self, pdf, seed, want_grad):
         """Feed one pandas batch into the model and evaluate
         local_objective: ``(loss, flat gradient or None)``."""
-        model = self.model
         for cd in self.columns:
             cd.bind_batch(pdf)
-        model.new_eval(seed=seed)
-        with model.tf_mode():
-            obj = model.local_objective()
-        if not isinstance(obj, ad.Tensor):
-            obj = ad.Tensor(obj)
-        if obj.data.ndim > 0:
-            obj = obj.sum()
+        key = (len(pdf), settings.dtypes.float_type)
+        traced = self.traces.pop(key, None)
+        if traced is None:
+            traced = self._trace(seed, want_grad)
+            self._keep(key, traced)
+            return self._read(traced, want_grad)
+        self.traces[key] = traced  # now the most recently used
+        self.model.reseed(seed)
+        traced.tape.replay(want_grad)
+        out = self._read(traced, want_grad)
+        need = 2 if want_grad else 1
+        if traced.checked < need:
+            eager = self._read(self._trace(seed, want_grad), want_grad)
+            if _bits(*eager) != _bits(*out):
+                raise RuntimeError(
+                    f"{type(self.model).__name__}.local_objective replayed "
+                    f"from its trace differs from an eager evaluation on a "
+                    f"batch of {len(pdf)} rows: it reads a data or parameter "
+                    f"value outside autodiff ops (e.g. a Tensor built from "
+                    f"`.data`), which a replay cannot follow"
+                )
+            traced.checked = need
+        return out
+
+    def _keep(self, key, traced: _Traced) -> None:
+        """Keep a new trace if it fits `keep_bytes` next to the traces
+        that stay; at MAX_TRACES the least recently used one goes."""
+        if not self.keep_bytes:
+            return
+        traced.nbytes = traced.tape.nbytes()
+        stay = list(self.traces.values())[max(0, len(self.traces) + 1 - MAX_TRACES):]
+        if sum(t.nbytes for t in stay) + traced.nbytes > self.keep_bytes:
+            return
+        while len(self.traces) >= MAX_TRACES:
+            del self.traces[next(iter(self.traces))]
+        self.traces[key] = traced
+
+    def _trace(self, seed, want_grad) -> _Traced:
+        """Evaluate local_objective eagerly, recording its tape."""
+        model = self.model
+        with ad.record() as nodes:
+            model.new_eval(seed=seed)
+            with model.tf_mode():
+                obj = model.local_objective()
+            if not isinstance(obj, ad.Tensor):
+                obj = ad.Tensor(obj)
+            if obj.data.ndim > 0:
+                obj = obj.sum()
+        tape = ad.Tape(nodes, obj)
+        if want_grad:
+            tape.backward()
+        return _Traced(tape, [v._leaf for v in self.vars])
+
+    def _read(self, traced: _Traced, want_grad):
+        loss = float(traced.tape.out.data)
         if not want_grad:
-            return float(obj.data), None
-        obj.backward()
+            return loss, None
         grads = []
-        for v in self.vars:
-            g = v._leaf.grad if v._leaf is not None else None
+        for v, t in zip(self.vars, traced.grad_leaves):
+            g = t.grad if t is not None else None
             grads.append(g if g is not None else np.zeros_like(v._array))
-        return float(obj.data), _flatten(grads)
+        return loss, _flatten(grads)
+
+
+def _bits(loss: float, grad) -> bytes:
+    return np.float64(loss).tobytes() + (b"" if grad is None else grad.tobytes())
 
 
 class SparkTrainer:
@@ -462,7 +562,7 @@ class SparkTrainer:
             import pandas as pd
 
             with _float_type(float_name):
-                rep = _Replica(model_bytes_bc.value, var_names)
+                rep = _Replica(model_bytes_bc.value, var_names, keep_bytes=0)
                 rep.load(state_items, np.dtype(float_name).type)
                 pid = TaskContext.get().partitionId() if TaskContext.get() else 0
                 for bi, pdf in enumerate(iterator):
@@ -540,10 +640,11 @@ class SparkTrainer:
         across its Arrow batches), the step's state injected into it, the
         same (step, pid, bi) seeds, partials folded in (pid, bi) order —
         the identical order the depth-1 collect fold uses — so every float
-        matches the distributed job bit-for-bit (pytest-pinned). Reuse
-        across steps relies on the objective contract in the module
-        docstring. `batches` overrides the full fetched list (the
-        minibatch replay passes the step's sampled chunks)."""
+        matches the distributed job bit-for-bit (pytest-pinned). Each
+        replica keeps its traces across steps within its 1/P share of
+        TAPE_BUDGET_BYTES, so a full-batch step replays every partition's
+        objective (the enforced contract in the module docstring). `batches` overrides the full fetched list
+        (the minibatch replay passes the step's sampled chunks)."""
         float_type = np.dtype(settings.dtypes.float_type).type
         n_params = int(np.sum(self.var_sizes)) if self.var_sizes else 0
         loss, n = 0.0, 0
@@ -553,8 +654,11 @@ class SparkTrainer:
             if pid != cur_pid:
                 rep = self._replicas.get(pid)
                 if rep is None:
+                    nparts = len({p for p, _, _ in self._local_batches})
                     rep = self._replicas[pid] = _Replica(
-                        self._model_bytes_bc.value, self.var_names
+                        self._model_bytes_bc.value,
+                        self.var_names,
+                        keep_bytes=TAPE_BUDGET_BYTES // nparts,
                     )
                 rep.load(state, float_type)
                 cur_pid = pid
@@ -691,20 +795,12 @@ class SparkTrainer:
         # job and saves one per step. Minibatch fits replay
         # `df.sample` with a bit-exact XORShiftRandom replica
         # (`_bernoulli_keep_mask`, pytest-pinned parity) on the Spark
-        # versions it was verified against (SAMPLER_VERIFIED_SPARK);
-        # SPARK_GRAFT_TRAINER_LOCAL_MINIBATCH=0 pins sampling to the
-        # cluster as a safety valve.
-        import os
-
+        # versions it was verified against (SAMPLER_VERIFIED_SPARK).
         minibatch = (
             minibatch_fraction is not None and minibatch_fraction < 1.0
         )
         localize = maxiter >= 4 and not (
-            minibatch
-            and (
-                os.environ.get("SPARK_GRAFT_TRAINER_LOCAL_MINIBATCH", "1") == "0"
-                or not _sampler_verified(self.spark.version)
-            )
+            minibatch and not _sampler_verified(self.spark.version)
         )
         from henbun_spark.operators._parallel import _plan_partitions
 

@@ -97,8 +97,8 @@ class Variational(Parameterized):
             return ad.Tensor(self._fixed_u)
         root = self.highest_parent
         if hasattr(root, "draw_normal"):
-            return ad.Tensor(root.draw_normal(sample_shape))
-        return ad.Tensor(np.random.default_rng().standard_normal(sample_shape))
+            return ad.leaf(lambda: root.draw_normal(sample_shape))
+        return ad.leaf(lambda: np.random.default_rng().standard_normal(sample_shape))
 
     def _ensure_sample(self):
         """Draw u and build the reparameterized sample for this evaluation.

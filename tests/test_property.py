@@ -4,6 +4,7 @@ packing round-trips — the fuzzing layer on top of the example-based suite
 (SURVEY §5's scipy-parity pillar, generalized)."""
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -121,6 +122,108 @@ def test_float32_leaf_gradients_stay_float32(xs):
         out.backward()
         for leaf in (a, b, c):
             assert leaf.grad.dtype == np.float32
+
+
+def _spd(a):
+    """A symmetric positive-definite [rows, rows] node built from a."""
+    return a @ a.T + ad.Tensor(np.eye(a.shape[0]) * a.shape[0])
+
+
+# every public op of `autodiff`, applied to two [rows, cols] leaves
+# (rows >= 2); positivity and squareness are built from the leaves
+_REPLAY_OPS = {
+    "add": lambda a, b: a + b,
+    "radd": lambda a, b: 2.0 + a,
+    "sub": lambda a, b: a - b,
+    "rsub": lambda a, b: 1.5 - b,
+    "mul": lambda a, b: a * b,
+    "div": lambda a, b: a / (ad.square(b) + 1.0),
+    "rdiv": lambda a, b: 2.0 / (ad.square(b) + 1.0),
+    "neg": lambda a, b: -a,
+    "pow": lambda a, b: a ** 3,
+    "matmul": lambda a, b: a @ b.T,
+    "ad.matmul": lambda a, b: ad.matmul(a.T, b),
+    "getitem-basic": lambda a, b: a[1:, ::2] * b[:-1, ::2] + a[0, None, ::2],
+    "getitem-fancy": lambda a, b: a[[0, 0, -1]] * b[[1, 0, 1]],
+    "reshape": lambda a, b: a.reshape((-1,)) * b.reshape(-1),
+    "T": lambda a, b: a.T * b.T,
+    "sum": lambda a, b: ad.sum(a * b),
+    "sum-axis": lambda a, b: ad.sum(a, axis=0) * b.sum(axis=1, keepdims=True),
+    "mean": lambda a, b: ad.mean(a, axis=1) + b.mean(),
+    "exp": lambda a, b: ad.exp(a),
+    "log": lambda a, b: ad.log(ad.square(a) + 0.5),
+    "log1p": lambda a, b: ad.log1p(ad.square(b)),
+    "sqrt": lambda a, b: ad.sqrt(ad.square(a) + 0.25),
+    "abs": lambda a, b: ad.abs(a),
+    "square": lambda a, b: ad.square(b),
+    "sigmoid": lambda a, b: ad.sigmoid(a),
+    "tanh": lambda a, b: ad.tanh(b),
+    "relu": lambda a, b: ad.relu(a),
+    "softplus": lambda a, b: ad.softplus(b),
+    "lgamma": lambda a, b: ad.lgamma(ad.square(a) + 0.5),
+    "clip": lambda a, b: ad.clip(a, -0.5, 1.0),
+    "transpose": lambda a, b: ad.transpose(a) * ad.transpose(b[None], (2, 1, 0))[..., 0],
+    "maximum": lambda a, b: ad.maximum(a, b),
+    "concat": lambda a, b: ad.concat([a, b], axis=0) * ad.concat([b, a], axis=0),
+    "log_sum_exp": lambda a, b: ad.log_sum_exp(a * 3.0) + ad.sum(ad.log_sum_exp(b, axis=0)),
+    "cholesky": lambda a, b: ad.cholesky(_spd(a)),
+    "cholesky-batched": lambda a, b: ad.cholesky(_spd(a).reshape((1,) + (a.shape[0],) * 2)),
+    "triangular_solve": lambda a, b: ad.triangular_solve(ad.cholesky(_spd(a)), b),
+    "triangular_solve-vector": lambda a, b: ad.triangular_solve(ad.cholesky(_spd(a)), b[:, 0]),
+    "triangular_solve-batched": lambda a, b: ad.triangular_solve(
+        ad.cholesky(_spd(a)).reshape((1,) + (a.shape[0],) * 2), b[None]
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_REPLAY_OPS))
+@settings(max_examples=6, deadline=None)
+@given(
+    st.integers(min_value=2, max_value=4),
+    st.integers(min_value=1, max_value=3),
+    st.integers(min_value=0, max_value=2**31),
+    st.booleans(),
+)
+def test_tape_replay_equals_eager_for_every_op(name, rows, cols, seed, float32):
+    """Trace an op on inputs A, replay the tape on inputs B of the same
+    shape: value and leaf gradients equal an eager evaluation on B
+    bit for bit. An op whose forward rule is missing, or whose backward
+    rule reads an array captured at trace time, replays A's values."""
+    import copy
+
+    from henbun_spark.config import settings as hb_settings
+    from henbun_spark.config import temp_settings
+
+    f = _REPLAY_OPS[name]
+    rng = np.random.default_rng(seed)
+    a_in, b_in = (rng.uniform(-2.0, 2.0, (2, rows, cols)) for _ in range(2))
+    tmp = copy.deepcopy(hb_settings)
+    tmp.dtypes.float_type = np.float32 if float32 else np.float64
+    with temp_settings(tmp):
+        box = {"a": a_in[0], "b": b_in[0]}
+        with ad.record() as nodes:
+            a = ad.leaf(lambda: box["a"], requires_grad=True)
+            b = ad.leaf(lambda: box["b"], requires_grad=True)
+            y = f(a, b)
+            out = ad.sum(y * y)
+        tape = ad.Tape(nodes, out)
+        tape.backward()
+        box["a"], box["b"] = a_in[1], b_in[1]
+        tape.replay()
+
+        ea = ad.Tensor(a_in[1], requires_grad=True)
+        eb = ad.Tensor(b_in[1], requires_grad=True)
+        ey = f(ea, eb)
+        eager = ad.sum(ey * ey)
+        eager.backward()
+    assert out.data.dtype == eager.data.dtype
+    assert out.data.tobytes() == eager.data.tobytes()
+    for leaf, ref in ((a, ea), (b, eb)):
+        if ref.grad is None:
+            assert leaf.grad is None
+        else:
+            assert leaf.grad.dtype == ref.grad.dtype
+            assert np.array_equal(leaf.grad, ref.grad)
 
 
 @settings(max_examples=20, deadline=None)

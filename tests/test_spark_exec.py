@@ -9,6 +9,7 @@ import importlib
 import sys
 import zipfile
 import zipimport
+from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
@@ -365,6 +366,230 @@ def test_fit_reads_partition_count_of_reassigned_frame(spark):
     tr._job = spy
     tr.fit(maxiter=4)
     assert len(calls) == 4, "fit replayed on a stale partition count"
+
+
+@contextmanager
+def _arrow_batch_rows(spark, rows):
+    """The session's Arrow maxRecordsPerBatch set to `rows` in the block."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(rows))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _replay_and_distributed(spark, monkeypatch, model_cls, df, lr, maxiter=6):
+    """The same fit from the same initial state, once distributed and
+    once replayed on the driver: (distributed trainer, replay trainer,
+    the replay's fetched batches)."""
+    m1 = model_cls()
+    tr1 = SparkTrainer(m1, df, optimizer=Adam(learning_rate=lr))
+    init = tr1._state()
+    monkeypatch.setenv("SPARK_GRAFT_TRAINER_LOCAL_CAP", "0")  # distributed
+    tr1.fit(maxiter=maxiter)
+
+    m2 = model_cls()
+    tr2 = SparkTrainer(m2, df, optimizer=Adam(learning_rate=lr))
+    for v in tr2.vars:
+        v._array = np.array(init[v.long_name])
+        v._pending = None
+        v.finalize()
+    monkeypatch.delenv("SPARK_GRAFT_TRAINER_LOCAL_CAP")  # local replay
+    fetched = []
+    orig_fetch = tr2._fetch_local_batches
+
+    def spy():
+        batches = orig_fetch()
+        fetched.extend(batches or [])
+        return batches
+
+    tr2._fetch_local_batches = spy
+    tr2.fit(maxiter=maxiter)
+    assert fetched, "local replay did not engage"
+    return tr1, tr2, fetched
+
+
+def _assert_bitwise_equal(tr1, tr2):
+    assert tr1.history == tr2.history  # bitwise, every step
+    for v1, v2 in zip(tr1.vars, tr2.vars):
+        assert np.array_equal(np.asarray(v1._array), np.asarray(v2._array))
+
+
+def test_replay_traces_once_per_batch_shape(spark, monkeypatch):
+    """Partitions of 100 rows in Arrow batches of 37 give a full and a
+    short last batch: each replica traces its objective once per batch
+    row count, checks the first replay of each trace against an eager
+    evaluation, and replays every later evaluation, bit-identical to the
+    distributed fit."""
+    from pyspark.sql import functions as F
+
+    from henbun_spark.spark_exec import _Replica
+
+    traces, replays = [], []
+    orig_trace, orig_replay = _Replica._trace, ad.Tape.replay
+
+    def trace_spy(self, *a, **k):
+        traces.append(1)
+        return orig_trace(self, *a, **k)
+
+    def replay_spy(self, *a, **k):
+        replays.append(1)
+        return orig_replay(self, *a, **k)
+
+    x = F.sin(F.col("id") * 0.37)
+    df = spark.range(0, 400, 1, 4).select(
+        x.alias("x"), (A_TRUE + B_TRUE * x + 0.1 * F.cos(F.col("id") * 1.3)).alias("y")
+    )
+    # spies see the driver-local replay only: distributed tasks evaluate
+    # in Python worker processes
+    monkeypatch.setattr(_Replica, "_trace", trace_spy)
+    monkeypatch.setattr(ad.Tape, "replay", replay_spy)
+    with _arrow_batch_rows(spark, 37):
+        tr1, tr2, fetched = _replay_and_distributed(
+            spark, monkeypatch, AmortizedVI, df, 0.02
+        )
+    _assert_bitwise_equal(tr1, tr2)
+    keys = {(pid, len(pdf)) for pid, _, pdf in fetched}
+    assert sorted(len(pdf) for _, _, pdf in fetched) == [26] * 4 + [37] * 8
+    # one trace per (partition, row count), and one eager check at the
+    # first replay of each; every other evaluation replays
+    assert len(traces) == 2 * len(keys) == 16
+    assert len(replays) == 6 * len(fetched) - len(keys)
+
+
+def test_minibatch_replay_keeps_full_batch_trace(spark, monkeypatch):
+    """A sampled partition of about 90 rows in Arrow batches of 37 has
+    full batches whose row count is the same every step and a last batch
+    whose row count changes: the last batches' traces must not evict the
+    full batch's, so each partition traces (and checks) 37 rows once and
+    replays them at every later step."""
+    from henbun_spark.spark_exec import _Replica
+
+    traced_rows = []
+    orig_trace = _Replica._trace
+
+    def trace_spy(self, *a, **k):
+        traced_rows.append(len(self.columns[0].data))
+        return orig_trace(self, *a, **k)
+
+    monkeypatch.setattr(_Replica, "_trace", trace_spy)
+    df, _, _ = make_df(spark)
+    tr = SparkTrainer(LinReg(), df, optimizer=Adam(learning_rate=0.05))
+    sampled = []
+    orig_sampled = tr._sampled_batches
+
+    def sampled_spy(*a, **k):
+        batches = orig_sampled(*a, **k)
+        sampled.append(batches)
+        return batches
+
+    tr._sampled_batches = sampled_spy
+    with _arrow_batch_rows(spark, 37):
+        tr.fit(maxiter=6, minibatch_fraction=0.9)
+    assert len(sampled) == 6, "minibatch local replay did not engage"
+    pids = {pid for batches in sampled for pid, _, _ in batches}
+    for batches in sampled:  # every partition has a full batch each step
+        assert {pid for pid, _, pdf in batches if len(pdf) == 37} == pids
+    last = {(pid, len(pdf)) for batches in sampled for pid, _, pdf in batches
+            if len(pdf) < 37}
+    assert len(last) > len(pids), "last-batch row counts did not change"
+    assert traced_rows.count(37) == 2 * len(pids)
+
+
+class DataBranch(LinReg):
+    """Reads a batch value outside autodiff ops: a replay would reuse the
+    traced batch's mask, which the replica must refuse."""
+
+    def local_objective(self):
+        pos = ad.Tensor(self.y.data > 0)
+        pred = self.coef[0] + self.coef[1] * self.x
+        return ad.sum(pos * hb.densities.gaussian(self.y, pred, ad.square(self.s)))
+
+
+def test_replica_rejects_objective_reading_data_outside_ops():
+    """The first replay of a trace is checked against an eager
+    evaluation: an objective that builds a constant from `.data` raises,
+    naming the model class, instead of training on a stale value."""
+    import cloudpickle
+
+    from henbun_spark.spark_exec import TAPE_BUDGET_BYTES, _Replica, _trainable
+
+    rng = np.random.default_rng(3)
+    pdfs = [pd.DataFrame({"x": rng.uniform(-1, 1, 50), "y": rng.normal(0, 1, 50)})
+            for _ in range(2)]
+    for cls, raises in ((LinReg, False), (DataBranch, True)):
+        m = cls()
+        m.initialize()
+        names = [v.long_name for v in _trainable(m, graph_key.VARIABLES)]
+        rep = _Replica(cloudpickle.dumps(m), names, keep_bytes=TAPE_BUDGET_BYTES)
+        rep.evaluate(pdfs[0], 1, True)  # traces
+        if raises:
+            with pytest.raises(RuntimeError, match="DataBranch"):
+                rep.evaluate(pdfs[1], 2, True)
+        else:
+            rep.evaluate(pdfs[1], 2, True)
+
+
+def test_replica_keeps_tapes_within_its_bytes():
+    """A replica keeps a trace only within `keep_bytes`: one with no room
+    traces every evaluation (as a distributed task does, at 0 bytes) and
+    returns the same bits as one that replays."""
+    import cloudpickle
+
+    from henbun_spark.spark_exec import TAPE_BUDGET_BYTES, _Replica, _bits, _trainable
+
+    rng = np.random.default_rng(5)
+    pdfs = [pd.DataFrame({"x": rng.uniform(-1, 1, 50), "y": rng.normal(0, 1, 50)})
+            for _ in range(3)]
+    m = LinReg()
+    m.initialize()
+    names = [v.long_name for v in _trainable(m, graph_key.VARIABLES)]
+    kept = _Replica(cloudpickle.dumps(m), names, keep_bytes=TAPE_BUDGET_BYTES)
+    none = _Replica(cloudpickle.dumps(m), names, keep_bytes=0)
+    for seed, pdf in enumerate(pdfs + pdfs):
+        assert _bits(*kept.evaluate(pdf, seed, True)) == _bits(*none.evaluate(pdf, seed, True))
+    assert [t.nbytes > 0 for t in kept.traces.values()] == [True]
+    assert not none.traces
+
+
+class BernoulliReg(hb.Model):
+    """Logistic regression through `densities.bernoulli`, whose label
+    mask must follow the batch on a replay."""
+
+    def setUp(self):
+        self.x = ColumnData("x")
+        self.label = ColumnData("label")
+        self.w = hb.Variable([2], mean=0.0, stddev=0.1)
+
+    def local_objective(self):
+        p = ad.sigmoid(self.w[0] + self.w[1] * self.x)
+        return ad.sum(hb.densities.bernoulli(p, self.label))
+
+
+def test_bernoulli_replay_bitwise_equals_distributed(spark, monkeypatch):
+    """Two equal-size Arrow batches per partition with different labels:
+    the second batch replays the first one's tape, so the label mask must
+    be a traced leaf; the replayed fit is bit-equal to the distributed."""
+    from pyspark.sql import functions as F
+
+    x = F.sin(F.col("id") * 0.61)
+    df = spark.range(0, 400, 1, 4).select(
+        x.alias("x"),
+        (x + 0.5 * F.cos(F.col("id") * 2.3) > 0).cast("double").alias("label"),
+    )
+    with _arrow_batch_rows(spark, 50):
+        tr1, tr2, fetched = _replay_and_distributed(
+            spark, monkeypatch, BernoulliReg, df, 0.1
+        )
+    _assert_bitwise_equal(tr1, tr2)
+    by_pid = {}
+    for pid, _, pdf in fetched:
+        by_pid.setdefault(pid, []).append(pdf)
+    for frames in by_pid.values():
+        assert [len(f) for f in frames] == [50, 50]
+        assert not np.array_equal(frames[0]["label"], frames[1]["label"])
 
 class PredModel(hb.Model):
     def setUp(self):
