@@ -11,9 +11,23 @@ re-read happens only when the archive's stat signature (mtime_ns, size,
 inode) differs from the one recorded at its last read, so an archive
 added or rewritten later (e.g. by `addPyFile`) is still re-read.
 
+The daemon also freezes its heap before it forks. After every task a
+reused worker runs pyspark's full `gc.collect()` (pyspark/daemon.py, the
+worker loop), and a worker forked from this daemon starts with about 74k
+tracked objects: numpy, pandas, pyarrow, pyspark and henbun_spark, all
+imported here. So the daemon runs `gc.collect()` and then `gc.freeze()`
+once, before `daemon.manager()` forks any worker (CPython's pre-fork
+idiom): the daemon's import-time objects move to the permanent
+generation, and the per-task collection walks only what the task itself
+made. A trivial task's worker CPU fell from about 50 to about 5 ms
+(4-core x86 VM). A task's own garbage, cycles included, is still freed;
+frozen objects are never collected, and nothing the daemon creates after
+the freeze is frozen.
+
 Spark runs this as `python -m henbun_spark._daemon pyspark.worker`.
 """
 
+import gc
 import os
 import zipimport
 
@@ -52,4 +66,6 @@ if __name__ == "__main__":
     from pyspark import daemon  # imports the worker module named by sys.argv[1]
 
     install()  # after the imports, so forked workers inherit every signature
+    gc.collect()  # leave no garbage in the permanent generation
+    gc.freeze()  # forked workers' per-task gc.collect() skips these objects
     daemon.manager()

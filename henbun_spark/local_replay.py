@@ -14,7 +14,9 @@ The batch that takes a task past either share is not sent: the task
 yields one marker row instead and stops reading. So the driver never
 receives more than ``rows_cap`` rows or ``REPLAY_BUDGET_BYTES`` bytes,
 and at scale an over-budget task ends after its first batches. Any
-marker means "stay distributed" (None).
+marker means "stay distributed" (None). The driver receives the rows as
+one Arrow table (`DataFrame.toArrow`), not as ``Row`` objects that the
+JVM pickles and the driver unpickles before it reads each payload.
 
 The per-task share is what one job costs under skew: a frame under both
 totals whose largest partition is over its share stays distributed. Its
@@ -68,10 +70,9 @@ def fetch_batches(df, to_payload, rows_cap: int):
                 return
             yield pd.DataFrame({"pid": [pid], "bi": [bi], "data": [data]})
 
-    rows = df.mapInPandas(grab, schema="pid int, bi int, data binary").collect()
-    if any(r["bi"] < 0 for r in rows):
+    got = df.mapInPandas(grab, schema="pid int, bi int, data binary").toArrow()
+    # (pid, bi) is unique per row, so the sort never compares payloads
+    rows = sorted(zip(*(got.column(c).to_pylist() for c in ("pid", "bi", "data"))))
+    if any(bi < 0 for _, bi, _ in rows):
         return None
-    return [
-        (r["pid"], r["bi"], pickle.loads(r["data"]))
-        for r in sorted(rows, key=lambda r: (r["pid"], r["bi"]))
-    ]
+    return [(pid, bi, pickle.loads(data)) for pid, bi, data in rows]

@@ -4,6 +4,7 @@ cap and the byte budget, each task bounded by its 1/P share."""
 import hashlib
 import pickle
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -16,9 +17,10 @@ def _digest(pdf) -> str:
     return hashlib.sha256(pickle.dumps(pdf)).hexdigest()
 
 
-def _seen_by_map_in_pandas(df):
-    """(pid, bi, digest) of every non-empty batch a distributed
-    mapInPandas task iterates, in (pid, bi) order."""
+def _seen_by_map_in_pandas(df, to_payload):
+    """(pid, bi, digest of the pickled payload) of every non-empty batch a
+    distributed mapInPandas task iterates, collected as rows, in (pid,
+    bi) order."""
 
     def fn(iterator):
         import hashlib
@@ -29,7 +31,7 @@ def _seen_by_map_in_pandas(df):
         pid = TaskContext.get().partitionId()
         for bi, pdf in enumerate(iterator):
             if len(pdf):
-                d = hashlib.sha256(pickle.dumps(pdf)).hexdigest()
+                d = hashlib.sha256(pickle.dumps(to_payload(pdf))).hexdigest()
                 yield pd.DataFrame({"pid": [pid], "bi": [bi], "d": [d]})
 
     rows = df.mapInPandas(fn, "pid int, bi int, d string").collect()
@@ -57,32 +59,52 @@ def _vi_frame(spark):
     )
 
 
+def _kmeans_frame(spark):
+    # 4 partitions x 5000 rows of an 8-double array column, the kind of
+    # embedding column `clustering.kmeans_fit` fetches
+    return spark.range(0, 20000, 1, 4).select(
+        F.array(*[F.col("id") * (j + 1) / 7.0 for j in range(8)]).alias("_v")
+    )
+
+
+# payloads are lambdas so that tasks unpickle them by value: a worker
+# cannot import this module. The k-means one is the float64 matrix
+# `clustering.kmeans_fit` fetches per batch.
 @pytest.mark.parametrize(
-    "make,rows_cap,fetched",
+    "make,rows_cap,fetched,to_payload",
     [
-        pytest.param(_dim1024, LOCAL_ROWS_CAP, False, id="dim1024-over-bytes"),
-        pytest.param(_skewed, 400, False, id="partition-over-row-share"),
-        pytest.param(_vi_frame, LOCAL_ROWS_CAP, True, id="vi-frame"),
+        pytest.param(_dim1024, LOCAL_ROWS_CAP, False, lambda pdf: pdf, id="dim1024-over-bytes"),
+        pytest.param(_skewed, 400, False, lambda pdf: pdf, id="partition-over-row-share"),
+        pytest.param(_vi_frame, LOCAL_ROWS_CAP, True, lambda pdf: pdf, id="vi-frame"),
+        pytest.param(
+            _kmeans_frame,
+            LOCAL_ROWS_CAP,
+            True,
+            lambda pdf: np.stack(pdf["_v"].to_numpy()).astype(np.float64),
+            id="kmeans-array",
+        ),
     ],
 )
-def test_fetch_batches_budget_edges(spark, make, rows_cap, fetched):
+def test_fetch_batches_budget_edges(spark, make, rows_cap, fetched, to_payload):
     """(a) a dim-1024 frame under the row cap but over the byte budget
     stays distributed; (b) a frame under the row cap whose largest
-    partition is over its 1/P share stays distributed; (c) the vi frame,
-    cut into several Arrow batches per partition, comes back as every
-    (pid, bi) in order with the pandas frames mapInPandas iterates."""
+    partition is over its 1/P share stays distributed; (c) the vi frame
+    and (d) the k-means array payload, cut into several Arrow batches per
+    partition, come back as every (pid, bi) in order, each payload
+    pickling to the bytes a ``mapInPandas(...).collect()`` of the same
+    batches gives."""
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     prev = spark.conf.get(key)
     spark.conf.set(key, "1500")
     try:
         df = make(spark)
-        got = fetch_batches(df, lambda pdf: pdf, rows_cap)
+        got = fetch_batches(df, to_payload, rows_cap)
         if not fetched:
             assert got is None
             return
-        want = _seen_by_map_in_pandas(df)
+        want = _seen_by_map_in_pandas(df, to_payload)
         assert len(want) == 4 * 4  # 1500, 1500, 1500, 500 per partition
-        assert [(pid, bi, _digest(pdf)) for pid, bi, pdf in got] == want
-        assert sum(len(pickle.dumps(pdf)) for _, _, pdf in got) < REPLAY_BUDGET_BYTES
+        assert [(pid, bi, _digest(data)) for pid, bi, data in got] == want
+        assert sum(len(pickle.dumps(data)) for _, _, data in got) < REPLAY_BUDGET_BYTES
     finally:
         spark.conf.set(key, prev)

@@ -792,3 +792,27 @@ def test_session_workers_run_under_henbun_daemon(spark):
 
     got = spark.sparkContext.parallelize([0], 1).mapPartitions(probe).collect()
     assert got == [("henbun_spark._daemon", True, True)]
+
+
+def test_session_workers_start_frozen_and_still_free_task_cycles(spark):
+    """A worker forked by the daemon inherits its frozen import-time heap
+    (so the per-task `gc.collect()` skips it), and a reference cycle a
+    task builds and drops is still freed by `gc.collect()`."""
+
+    def probe(_):
+        import gc
+        import weakref
+
+        class Node:
+            pass
+
+        a, b = Node(), Node()
+        a.other, b.other = b, a
+        ref = weakref.ref(a)
+        del a, b
+        gc.collect()
+        yield gc.get_freeze_count(), ref() is None
+
+    got = spark.sparkContext.parallelize([0, 1], 2).mapPartitions(probe).collect()
+    assert len(got) == 2
+    assert all(frozen > 0 and freed for frozen, freed in got), got
