@@ -5,6 +5,11 @@ one Spark job per step. When the frame is small, the driver can instead
 fetch the exact (partition, Arrow batch) frames the distributed
 ``mapInPandas`` would iterate, once, and replay every step on them with
 no Spark job. `fetch_batches` is that fetch, shared by both callers.
+A `SparkTrainer` holds its replay while it holds its frame: later fits
+and `evaluate` replay it too, until its `df` is assigned. What it holds
+is bounded by REPLAY_BUDGET_BYTES of batches plus
+`spark_exec.TAPE_BUDGET_BYTES` of tapes. k-means drops its copy when
+the fit returns.
 
 One ``mapInPandas`` job, no LIMIT probe. Each task pickles
 ``to_payload(pdf)`` per Arrow batch and keeps running totals of rows and

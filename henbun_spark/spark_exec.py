@@ -38,17 +38,17 @@ batch eagerly and replays nothing.
 
 Driver-local replay (under LOCAL_ROWS_CAP and the byte budget): a
 multi-step fit fetches the frame's (partition, Arrow batch) pandas frames
-in ONE job (`local_replay.fetch_batches`, no LIMIT probe) and drops them
-when it returns. Each task sends at most its 1/P share of the row cap
-and of `REPLAY_BUDGET_BYTES`; a task past its share sends a marker
-instead and the fit stays distributed, so a skewed frame under both
-totals trains distributed (same result, slower). Every step of a
-replayed fit then runs on the driver with no Spark job: one `_Replica`
-per partition, unpickled at its first batch of the fit, gets the step's
-global state injected and evaluates that partition's batches with the
-distributed job's seeds and fold order, so the training history is
-bit-identical. The partition count P (and so the tree depth) is read
-from the frame being fitted, once per `fit` and per `evaluate`.
+in ONE job (`local_replay.fetch_batches`, no LIMIT probe) and holds
+them until `df` is assigned (see `SparkTrainer`). Each task sends at
+most its 1/P share of the row cap and of `REPLAY_BUDGET_BYTES`; a task
+past its share sends a marker instead and the fit stays distributed, so
+a skewed frame under both totals trains distributed (same result,
+slower). Every replayed step and `evaluate` then runs on the driver with
+no Spark job: one `_Replica` per partition, unpickled at its first
+batch, gets the step's global state injected and evaluates that
+partition's batches with the distributed job's seeds and fold order, so
+training history and objective values are bit-identical. The partition
+count P (and so the tree depth) is read once per frame.
 
 Determinism under task retry (SURVEY §4 O3): the per-batch sample RNG is
 seeded with (step, partitionId, batch_index), so a re-executed task
@@ -492,6 +492,13 @@ class SparkTrainer:
     ...         pred = self.ab[0] + self.ab[1] * self.x
     ...         return hb.densities.gaussian(self.y, pred, 0.1)
     >>> SparkTrainer(Reg(), df).fit(maxiter=50)
+
+    The replay (LOCAL_ROWS_CAP) lives while the trainer holds its frame:
+    its batches (REPLAY_BUDGET_BYTES pickled at most) and one `_Replica`
+    per partition with its tapes (TAPE_BUDGET_BYTES). Assigning `df`,
+    even ``tr.df = tr.df``, or changing the session's Arrow
+    maxRecordsPerBatch releases them. With ``cache=False`` a later fit
+    replays the rows the first replayed fit read until `df` is assigned.
     """
 
     def __init__(
@@ -507,7 +514,7 @@ class SparkTrainer:
         _register_by_value(type(model), cloudpickle)
         self.model = model
         self.model.initialize()
-        self.df = df.persist() if cache else df
+        self.df = df.persist() if cache else df  # holds no replay yet
         self.optimizer = optimizer if optimizer is not None else Adam()
         self.vars = _trainable(model, collection)
         self.var_names = [v.long_name for v in self.vars]
@@ -521,20 +528,21 @@ class SparkTrainer:
         self._model_bytes_bc = sc.broadcast(cloudpickle.dumps(model))
         self.step_count = 0
         self.history: list[float] = []
-        # partition count of the frame being fitted, set/cleared by fit()
-        # (StreamingTrainer re-points `df` between fits); drives the
-        # treeAggregate depth (see _tree_depth). Minibatch samples
-        # inherit the parent's partitioning.
-        self._nparts = None
-        # driver-local replay state, set/cleared by fit() (see
-        # LOCAL_ROWS_CAP): [(pid, bi, pandas frame), ...] or None
-        self._local_batches = None
-        # per-partition concatenated frames + Arrow chunk size, built
-        # lazily by the first minibatch replay step (_sampled_batches)
-        self._local_parts = None
-        self._arrow_max_records = 10000
-        # {pid: _Replica}, set/cleared with _local_batches
-        self._replicas = None
+
+    @property
+    def df(self):
+        """The frame the trainer fits."""
+        return self._df
+
+    @df.setter
+    def df(self, frame):
+        # any assignment releases what is held for the frame: the replay
+        # ([(pid, bi, pandas frame), ...] from fit(), _sampled_batches'
+        # per-partition frames, {pid: _Replica}), the Arrow batch rows of
+        # the last fit or evaluate, and the partition count (_job)
+        self._df = frame
+        self._local_batches = self._local_parts = self._replicas = None
+        self._arrow_max_records = self._nparts = None
 
     # -- internals --------------------------------------------------------
     def _state(self) -> dict:
@@ -580,12 +588,11 @@ class SparkTrainer:
         partials = df.mapInPandas(fn, schema=schema)
         n_params = int(np.sum(self.var_sizes)) if want_grad and self.var_sizes else 0
         zero = (0.0, 0, np.zeros(n_params, dtype=np.float64))
-        nparts = self._nparts
-        if nparts is None:  # outside fit(): evaluate, or a bare step
+        if self._nparts is None:  # `df` is self.df or a sample of it
             from henbun_spark.operators._parallel import _plan_partitions
 
-            nparts = _plan_partitions(df)
-        depth = _tree_depth(nparts)
+            self._nparts = _plan_partitions(self.df)
+        depth = _tree_depth(self._nparts)
 
         if depth == 1:
             # depth-1 regime (driver SFs: a handful of partitions, one
@@ -633,24 +640,36 @@ class SparkTrainer:
         cap = int(os.environ.get("SPARK_GRAFT_TRAINER_LOCAL_CAP", LOCAL_ROWS_CAP))
         return fetch_batches(self.df, lambda pdf: pdf, cap)
 
-    def _job_local(self, state, step, want_grad: bool, batches=None):
-        """Driver-local replica of `_job` over the fetched batches: one
-        `_Replica` per partition, unpickled at its first batch of the
-        fit and kept for the fit's later steps (as a task keeps its model
-        across its Arrow batches), the step's state injected into it, the
-        same (step, pid, bi) seeds, partials folded in (pid, bi) order —
-        the identical order the depth-1 collect fold uses — so every float
+    def _release_if_rebatched(self) -> None:
+        """Release the held replay if the session's Arrow batch rows
+        moved since the last fit or evaluate: the distributed job would
+        now cut the frame into other batches, with other seeds."""
+        rows = int(self.spark.conf.get(
+            "spark.sql.execution.arrow.maxRecordsPerBatch", "10000"
+        ))
+        if rows != self._arrow_max_records:
+            self.df, self._arrow_max_records = self.df, rows
+
+    def _job_local(self, state, step, want_grad: bool, batches):
+        """Driver-local replica of `_job` over `batches` (the held list,
+        or a minibatch step's sampled chunks): one `_Replica` per
+        partition, unpickled at its first batch and kept while the
+        trainer holds its frame (as a task keeps its model across its
+        Arrow batches), the step's state injected into it, the same
+        (step, pid, bi) seeds, partials folded in (pid, bi) order — the
+        identical order the depth-1 collect fold uses — so every float
         matches the distributed job bit-for-bit (pytest-pinned). Each
-        replica keeps its traces across steps within its 1/P share of
-        TAPE_BUDGET_BYTES, so a full-batch step replays every partition's
-        objective (the enforced contract in the module docstring). `batches` overrides the full fetched list
-        (the minibatch replay passes the step's sampled chunks)."""
+        replica keeps its traces across steps and fits within its 1/P
+        share of TAPE_BUDGET_BYTES, so a full-batch step replays every
+        partition's objective (the enforced contract in the module
+        docstring). The replay holds REPLAY_BUDGET_BYTES of batches plus
+        TAPE_BUDGET_BYTES of tapes at most."""
         float_type = np.dtype(settings.dtypes.float_type).type
         n_params = int(np.sum(self.var_sizes)) if self.var_sizes else 0
         loss, n = 0.0, 0
         grad = np.zeros(n_params, dtype=np.float64) if want_grad else None
         rep, cur_pid = None, None
-        for pid, bi, pdf in (self._local_batches if batches is None else batches):
+        for pid, bi, pdf in batches:
             if pid != cur_pid:
                 rep = self._replicas.get(pid)
                 if rep is None:
@@ -698,18 +717,35 @@ class SparkTrainer:
             grads.append(g if g is not None else np.zeros_like(v._array))
         return float(gobj.data), _flatten(grads)
 
-    def _minibatch(self, fraction, step):
-        if fraction is None or fraction >= 1.0:
-            return self.df, 1.0
-        return self.df.sample(fraction=fraction, seed=step), 1.0 / fraction
+    def _replays(self, fraction) -> bool:
+        """Whether a step at `fraction` may replay held batches: a sample
+        only under SAMPLER_VERIFIED_SPARK, else it runs on the cluster."""
+        return (fraction is None or fraction >= 1.0
+                or _sampler_verified(self.spark.version))
+
+    def _partials(self, fraction, step, want_grad: bool):
+        """``(loss, n, grad-or-None, scale)`` of the rows a step at
+        `fraction` sees, `scale` taking the sums to the whole frame; the
+        one selector of steps and `evaluate`. Held batches replay the full
+        batch or, under `_replays`, the step's bit-exact `df.sample`
+        (`_sampled_batches`); otherwise one `_job` runs."""
+        full = fraction is None or fraction >= 1.0
+        scale = 1.0 if full else 1.0 / fraction
+        state = self._state()
+        if self._local_batches is not None and self._replays(fraction):
+            batches = (self._local_batches if full
+                       else self._sampled_batches(fraction, step))
+            return (*self._job_local(state, step, want_grad, batches), scale)
+        df = self.df if full else self.df.sample(fraction=fraction, seed=step)
+        return (*self._job(df, state, step, want_grad), scale)
 
     def _sampled_batches(self, fraction, step):
         """The (pid, bi, frame) chunks the distributed minibatch job
         would see at this step, rebuilt locally: the bit-exact
         `df.sample` keep-mask per partition (`_bernoulli_keep_mask`)
-        over the fetched partition rows, re-chunked at the session's
-        Arrow maxRecordsPerBatch exactly as the JVM would batch the
-        SAMPLED rows into the mapInPandas stream."""
+        over the fetched partition rows, re-chunked at the Arrow
+        maxRecordsPerBatch of the fetch exactly as the JVM would batch
+        the SAMPLED rows into the mapInPandas stream."""
         if self._local_parts is None:
             import pandas as pd
 
@@ -721,11 +757,6 @@ class SparkTrainer:
                  else pd.concat(frames, ignore_index=True))
                 for pid, frames in sorted(parts.items())
             ]
-            self._arrow_max_records = int(
-                self.spark.conf.get(
-                    "spark.sql.execution.arrow.maxRecordsPerBatch", "10000"
-                )
-            )
         out = []
         cap = self._arrow_max_records
         for pid, pdf in self._local_parts:
@@ -743,38 +774,21 @@ class SparkTrainer:
 
     # -- public -----------------------------------------------------------
     def evaluate(self, minibatch_fraction=None) -> float:
-        """Objective value (local sums + global terms) — `Optimizer.run`."""
-        df, scale = self._minibatch(minibatch_fraction, self.step_count)
-        local, _, _ = self._job(df, self._state(), self.step_count, want_grad=False)
+        """Objective value (local sums + global terms) — `Optimizer.run`;
+        replayed on held batches as a step would be (`_partials`)."""
+        self._release_if_rebatched()
+        local, _, _, scale = self._partials(
+            minibatch_fraction, self.step_count, want_grad=False
+        )
         g, _ = self._global_terms(want_grad=False)
         return float(local * scale + g)
 
     def step(self, minibatch_fraction=None) -> float:
-        """One distributed gradient step; returns the objective value."""
+        """One gradient step; returns the objective value."""
         self.step_count += 1
-        if self._local_batches is not None and (
-            minibatch_fraction is None or minibatch_fraction >= 1.0
-        ):
-            loss, n, total = self._job_local(
-                self._state(), self.step_count, want_grad=True
-            )
-            scale = 1.0
-        elif self._local_batches is not None:
-            # minibatch replay: same sampled rows (bit-exact RNG
-            # replica), same chunking, same seeds and fold order as the
-            # distributed sampled job — pytest-pinned parity
-            loss, n, total = self._job_local(
-                self._state(),
-                self.step_count,
-                want_grad=True,
-                batches=self._sampled_batches(minibatch_fraction, self.step_count),
-            )
-            scale = 1.0 / minibatch_fraction
-        else:
-            df, scale = self._minibatch(minibatch_fraction, self.step_count)
-            loss, n, total = self._job(
-                df, self._state(), self.step_count, want_grad=True
-            )
+        loss, n, total, scale = self._partials(
+            minibatch_fraction, self.step_count, want_grad=True
+        )
         if n == 0:
             raise ValueError("empty minibatch: raise minibatch_fraction")
         loss *= scale
@@ -791,34 +805,18 @@ class SparkTrainer:
         return loss
 
     def fit(self, maxiter=100, minibatch_fraction=None, callback=None):
-        # multi-step fits localize under the cap: the fetch costs one
-        # job and saves one per step. Minibatch fits replay
-        # `df.sample` with a bit-exact XORShiftRandom replica
-        # (`_bernoulli_keep_mask`, pytest-pinned parity) on the Spark
-        # versions it was verified against (SAMPLER_VERIFIED_SPARK).
-        minibatch = (
-            minibatch_fraction is not None and minibatch_fraction < 1.0
-        )
-        localize = maxiter >= 4 and not (
-            minibatch and not _sampler_verified(self.spark.version)
-        )
-        from henbun_spark.operators._parallel import _plan_partitions
-
-        self._nparts = _plan_partitions(self.df)
-        try:
-            if localize and self._local_batches is None:
-                self._local_batches = self._fetch_local_batches()
-                self._replicas = {}
-            for it in range(maxiter):
-                loss = self.step(minibatch_fraction)
-                if callback is not None:
-                    callback(it, loss)
-        finally:
-            self._nparts = None
-            if localize:
-                self._local_batches = None
-                self._local_parts = None
-                self._replicas = None
+        # a multi-step fit with no batches held fetches them under the
+        # cap (one job, saving one per step) if its steps can replay
+        # them (`_replays`); they stay held after it returns
+        self._release_if_rebatched()
+        if (maxiter >= 4 and self._local_batches is None
+                and self._replays(minibatch_fraction)):
+            self._local_batches = self._fetch_local_batches()
+            self._replicas = {}
+        for it in range(maxiter):
+            loss = self.step(minibatch_fraction)
+            if callback is not None:
+                callback(it, loss)
         return self
 
 

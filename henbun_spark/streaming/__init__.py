@@ -327,8 +327,10 @@ class StreamingTrainer:
             # budget (each of its P partitions within a 1/P share) is
             # fetched in one job instead of re-scanned on every one of
             # the steps_per_batch gradient jobs (bit-identical
-            # trajectory). fit() reads P from this batch's frame, not
-            # from the one the trainer was built with.
+            # trajectory). Assigning `df` releases what the trainer held
+            # for its previous frame (replayed batches, partition count),
+            # so each micro-batch is read fresh, and so is the trainer's
+            # own frame after the reassignment below.
             self.trainer.fit(maxiter=self.steps_per_batch)
         finally:
             self.trainer.df = saved_df

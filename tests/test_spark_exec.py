@@ -242,6 +242,37 @@ def test_unverified_spark_samples_minibatch_on_cluster(spark, monkeypatch):
     assert len(tr.history) == 4 and np.all(np.isfinite(tr.history))
 
 
+def test_unverified_spark_minibatch_after_full_fit_samples_on_cluster(
+    spark, monkeypatch
+):
+    """A full-batch fit leaves its batches held; a minibatch fit after it
+    on a Spark version outside SAMPLER_VERIFIED_SPARK must still sample
+    on the cluster, not replay `df.sample` from the held batches."""
+    from henbun_spark import spark_exec
+
+    monkeypatch.setattr(spark_exec, "SAMPLER_VERIFIED_SPARK", ("3.5",))
+    df, _, _ = make_df(spark)
+    tr = SparkTrainer(LinReg(), df, optimizer=Adam(learning_rate=0.05))
+    sampled, jobs = [], []
+    orig_sample, orig_job = tr._sampled_batches, tr._job
+
+    def spy_sample(*a, **k):
+        sampled.append(1)
+        return orig_sample(*a, **k)
+
+    def spy_job(*a, **k):
+        jobs.append(1)
+        return orig_job(*a, **k)
+
+    tr._sampled_batches, tr._job = spy_sample, spy_job
+    tr.fit(maxiter=6)
+    assert not jobs and tr._local_batches, "full-batch fit did not replay"
+    tr.fit(maxiter=4, minibatch_fraction=0.5)
+    assert not sampled, "minibatch fit replayed on an unverified Spark"
+    assert len(jobs) == 4
+    assert len(tr.history) == 10 and np.all(np.isfinite(tr.history))
+
+
 _MINIBATCH_CASES = [(0.25, None), (0.5, 37), (0.06, None)]
 
 
@@ -366,6 +397,90 @@ def test_fit_reads_partition_count_of_reassigned_frame(spark):
     tr._job = spy
     tr.fit(maxiter=4)
     assert len(calls) == 4, "fit replayed on a stale partition count"
+
+
+def _fit_evaluate_pass(tr):
+    """fit, minibatch fit, evaluate and minibatch evaluate on one frame:
+    the rounds of a vi_replay pass that do not predict."""
+    tr.fit(maxiter=6)
+    tr.fit(maxiter=5, minibatch_fraction=0.25)
+    return tr.evaluate(), tr.evaluate(0.25)
+
+
+def _twin(model_cls, df, init, lr=0.05):
+    """A trainer over `df` starting from the parameter values `init`."""
+    tr = SparkTrainer(model_cls(), df, optimizer=Adam(learning_rate=lr))
+    for v in tr.vars:
+        v._array = np.array(init[v.long_name])
+        v._pending = None
+        v.finalize()
+    return tr
+
+
+@pytest.mark.parametrize("model_cls", [LinReg, AmortizedVI])
+def test_held_replay_serves_later_fits_and_evaluate(spark, monkeypatch, model_cls):
+    """A trainer holds its replayed batches while it holds its frame: a
+    full fit, a minibatch fit and two evaluations start one Spark job
+    (the fetch) in all, and give the history and objective values of the
+    same rounds run distributed, bit for bit."""
+    df, _, _ = make_df(spark)
+    tr1 = SparkTrainer(model_cls(), df, optimizer=Adam(learning_rate=0.05))
+    tr2 = _twin(model_cls, df, tr1._state())
+    monkeypatch.setenv("SPARK_GRAFT_TRAINER_LOCAL_CAP", "0")  # distributed
+    want = _fit_evaluate_pass(tr1)
+    monkeypatch.delenv("SPARK_GRAFT_TRAINER_LOCAL_CAP")  # local replay
+    tracker = spark.sparkContext.statusTracker()
+    tr2.df.count()  # builds the cache, whatever an earlier test cached
+    before = set(tracker.getJobIdsForGroup(None))
+    got = _fit_evaluate_pass(tr2)
+    assert len(set(tracker.getJobIdsForGroup(None)) - before) == 1
+    assert got == want  # bitwise
+    _assert_bitwise_equal(tr1, tr2)
+
+
+def test_reassigned_frame_releases_held_replay(spark, monkeypatch):
+    """Assigning `df` releases the held replay: a StreamingTrainer
+    micro-batch of 240 rows is fetched fresh (not replayed from the
+    trainer's own 400 rows), a fit after it fetches the trainer's 400
+    rows again (not the micro-batch's), and ``tr.df = tr.df`` forces one
+    more fetch. A change to the session's Arrow batch rows releases the
+    replay too, before `evaluate` and before a fit. Every round is
+    bit-identical to the same rounds run distributed."""
+    from henbun_spark.streaming import StreamingTrainer
+
+    df_a, _, _ = make_df(spark, n=400)
+    df_b, _, _ = make_df(spark, n=240)
+
+    def rounds(tr):
+        tr.fit(maxiter=4)
+        StreamingTrainer(tr, steps_per_batch=4).foreach_batch(df_b, 0)
+        tr.fit(maxiter=4)
+        tr.df = tr.df
+        tr.fit(maxiter=4)
+        with _arrow_batch_rows(spark, 37):
+            out = tr.evaluate()
+            tr.fit(maxiter=4)
+        return out, tr.evaluate()
+
+    tr1 = SparkTrainer(AmortizedVI(), df_a, optimizer=Adam(learning_rate=0.02))
+    tr2 = _twin(AmortizedVI, df_a, tr1._state(), lr=0.02)
+    monkeypatch.setenv("SPARK_GRAFT_TRAINER_LOCAL_CAP", "0")  # distributed
+    want = rounds(tr1)
+    monkeypatch.delenv("SPARK_GRAFT_TRAINER_LOCAL_CAP")  # local replay
+    fetched = []
+    orig_fetch = tr2._fetch_local_batches
+
+    def spy():
+        batches = orig_fetch()
+        fetched.append(sorted(len(pdf) for _, _, pdf in batches))
+        return batches
+
+    tr2._fetch_local_batches = spy
+    got = rounds(tr2)
+    assert [sum(rows) for rows in fetched] == [400, 240, 400, 400, 400]
+    assert 37 in fetched[-1] and 37 not in fetched[-2]
+    assert got == want  # bitwise
+    _assert_bitwise_equal(tr1, tr2)
 
 
 @contextmanager
