@@ -91,16 +91,10 @@ def _drain_to_parquet(spark, out, out_dir: str, ckpt: str) -> None:
     their state stores to the key space, not the cluster width (a
     stateless drain is unaffected — it creates no state store and the
     sink write is one batch either way)."""
+    from henbun_spark import streaming
+
     with _stream_state_scope(spark):
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        streaming.run_available_now(out, ckpt, out_dir)
 
 
 def _stream_state_scope(spark):
@@ -5487,7 +5481,7 @@ def streaming_enrich_static(spark, sf_dir):
     with availableNow into a parquet sink. Decimal-exact value sums per
     (mktsegment, event_type) are re-aggregated from the sink scan, so
     the hash covers the enriched rows end to end."""
-    from henbun_spark import streaming  # noqa: F401 (module parity)
+    from henbun_spark import streaming
 
     ev = _load(spark, sf_dir, "events").select("event_id", "user_id", "value")
     cust = _load(spark, sf_dir, "customer").select(
@@ -5501,15 +5495,7 @@ def streaming_enrich_static(spark, sf_dir):
         "event_id", "c_mktsegment", "value"
     )
     out_dir = f"{base}/out"
-    q = (
-        enriched.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", f"{base}/ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    streaming.run_available_now(enriched, f"{base}/ckpt", out_dir)
     return (
         spark.read.parquet(out_dir)
         .groupBy("c_mktsegment")
@@ -6667,6 +6653,7 @@ def streaming_corpus_ingest(spark, sf_dir):
     history length. The sink parquet is aggregated per language and
     ORACLE-CHECKED against the batch SQL over the same table: a finite
     drain of a stateless pipeline must equal the batch run exactly."""
+    from henbun_spark import streaming
     from henbun_spark.operators import text
 
     docs = _load(spark, sf_dir, "documents")
@@ -6684,15 +6671,7 @@ def streaming_corpus_ingest(spark, sf_dir):
         F.col("token_estimate").cast("long").alias("token_estimate"),
     )
     out_dir = f"{base}/out"
-    q = (
-        kept.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", f"{base}/ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    streaming.run_available_now(kept, f"{base}/ckpt", out_dir)
     return (
         spark.read.parquet(out_dir)
         .groupBy("pred_lang")

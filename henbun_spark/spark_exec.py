@@ -538,10 +538,12 @@ class SparkTrainer:
     def df(self, frame):
         # any assignment releases what is held for the frame: the replay
         # ([(pid, bi, pandas frame), ...] from fit(), _sampled_batches'
-        # per-partition frames, {pid: _Replica}), the Arrow batch rows of
-        # the last fit or evaluate, and the partition count (_job)
+        # per-partition frames, {pid: _Replica}), whether fit() fetched
+        # it (a frame over the budget fetches None, once), the Arrow batch
+        # rows of the last fit or evaluate, and the partition count (_job)
         self._df = frame
         self._local_batches = self._local_parts = self._replicas = None
+        self._fetched = False
         self._arrow_max_records = self._nparts = None
 
     # -- internals --------------------------------------------------------
@@ -807,12 +809,13 @@ class SparkTrainer:
     def fit(self, maxiter=100, minibatch_fraction=None, callback=None):
         # a multi-step fit with no batches held fetches them under the
         # cap (one job, saving one per step) if its steps can replay
-        # them (`_replays`); they stay held after it returns
+        # them (`_replays`); they stay held after it returns, and a frame
+        # over the budget is not fetched again until `df` is assigned
         self._release_if_rebatched()
-        if (maxiter >= 4 and self._local_batches is None
+        if (maxiter >= 4 and not self._fetched
                 and self._replays(minibatch_fraction)):
             self._local_batches = self._fetch_local_batches()
-            self._replicas = {}
+            self._fetched, self._replicas = True, {}
         for it in range(maxiter):
             loss = self.step(minibatch_fraction)
             if callback is not None:

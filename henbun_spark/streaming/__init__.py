@@ -26,29 +26,6 @@ def read_stream_parquet(spark, path: str, schema) -> DataFrame:
     return spark.readStream.schema(schema).parquet(path)
 
 
-# --- versioned foreachBatch state commits -------------------------------
-#
-# foreachBatch is at-least-once: a crash between the state write and the
-# streaming checkpoint commit replays the batch on restart. A maintenance
-# sink that folds each batch into persistent state unconditionally would
-# double-count the replayed batch (and an rmtree+rename snapshot swap has
-# a crash window with NO readable state at all). The recipe below gives
-# every *_stream_maintenance sink exactly-once state folding:
-#
-#   * each commit writes a fresh snapshot dir ``v<batch_id>`` under the
-#     state dir — never overwriting the snapshot it was derived from;
-#   * a ``_CURRENT`` pointer file (JSON: version + batch_id) is flipped
-#     with ``os.replace`` — atomic on POSIX — as the single commit point;
-#   * on entry, a batch with ``batch_id == committed batch_id`` is the
-#     legitimate crash-replay and is skipped (idempotent upsert); a
-#     batch id BELOW the committed id can only come from a reset/
-#     recreated checkpoint whose ids restarted — silently skipping would
-#     drop all new data, so that raises instead (`_should_skip_batch`);
-#   * superseded snapshot dirs are garbage-collected after the flip.
-#
-# A state dir is therefore always readable (old or new snapshot, never a
-# half-written one) and pairs with ONE checkpoint dir.
-
 _STATE_POINTER = "_CURRENT"
 
 
@@ -90,6 +67,21 @@ def _read_state(spark, state_dir: str):
     return df, int(meta["batch_id"])
 
 
+def _write_json_atomic(path: str, obj) -> None:
+    """Write ``obj`` as JSON to ``path``: a fsync'd ``.tmp`` file, then
+    ``os.replace`` (atomic on POSIX), so readers see the old file or the
+    new one, never a torn write."""
+    import json
+    import os
+
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+
+
 def _commit_state(df: DataFrame, state_dir: str, batch_id: int) -> None:
     """Write ``df`` as snapshot v<batch_id> and atomically flip _CURRENT.
 
@@ -97,7 +89,6 @@ def _commit_state(df: DataFrame, state_dir: str, batch_id: int) -> None:
     read from it — no driver collect needed to break lineage), the
     pointer flip is the commit point, and old snapshots are GC'd last.
     """
-    import json
     import os
     import shutil
 
@@ -105,12 +96,10 @@ def _commit_state(df: DataFrame, state_dir: str, batch_id: int) -> None:
     df.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(state_dir, vname)
     )
-    tmp = os.path.join(state_dir, _STATE_POINTER + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump({"version": vname, "batch_id": int(batch_id)}, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(state_dir, _STATE_POINTER))
+    _write_json_atomic(
+        os.path.join(state_dir, _STATE_POINTER),
+        {"version": vname, "batch_id": int(batch_id)},
+    )
     for name in os.listdir(state_dir):
         if name.startswith("v") and name != vname:
             shutil.rmtree(os.path.join(state_dir, name), ignore_errors=True)
@@ -136,6 +125,60 @@ def _should_skip_batch(batch_id: int, committed: int, state_dir: str) -> bool:
             "start from a fresh state dir."
         )
     return False
+
+
+def _versioned_fold(state_dir: str, fold):
+    """The foreachBatch function of a snapshot-state maintenance sink:
+    ``fold(prev, batch_df)`` gets the committed snapshot (None before
+    the first commit) and the micro-batch, and returns the new state
+    DataFrame, or None to commit nothing. The one commit path of every
+    ``*_stream_maintenance`` sink except the hive-partitioned MV.
+
+    foreachBatch is at-least-once: a crash between the state write and
+    the streaming checkpoint commit replays the batch on restart. A sink
+    that folds each batch into persistent state unconditionally would
+    double-count the replayed batch (and an rmtree+rename snapshot swap
+    has a crash window with NO readable state at all). This function
+    gives every sink exactly-once state folding:
+
+      * each commit writes a fresh snapshot dir ``v<batch_id>`` under
+        the state dir — never overwriting the snapshot it was derived
+        from (`_commit_state`);
+      * a ``_CURRENT`` pointer file (JSON: version + batch_id) is
+        flipped with ``os.replace`` — atomic on POSIX — as the single
+        commit point;
+      * on entry, a batch with ``batch_id == committed batch_id`` is the
+        legitimate crash-replay and is skipped (idempotent upsert); a
+        batch id BELOW the committed id can only come from a reset/
+        recreated checkpoint whose ids restarted — silently skipping
+        would drop all new data, so that raises instead
+        (`_should_skip_batch`);
+      * superseded snapshot dirs are garbage-collected after the flip.
+
+    A state dir is therefore always readable (old or new snapshot, never
+    a half-written one) and pairs with ONE checkpoint dir.
+    """
+
+    def fold_batch(bdf: DataFrame, batch_id: int):
+        prev, committed = _read_state(bdf.sparkSession, state_dir)
+        if _should_skip_batch(batch_id, committed, state_dir):
+            return
+        new = fold(prev, bdf)
+        if new is not None:
+            _commit_state(new, state_dir, batch_id)
+
+    return fold_batch
+
+
+def _start_foreach_batch(stream: DataFrame, fn, checkpoint_dir: str):
+    """Start ``fn`` as ``stream``'s foreachBatch sink, drained with
+    availableNow; returns the StreamingQuery."""
+    return (
+        stream.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def windowed_counts(
@@ -335,18 +378,13 @@ class StreamingTrainer:
         finally:
             self.trainer.df = saved_df
 
-    def attach(self, stream: DataFrame, checkpoint_dir: str, trigger_available_now=True):
-        writer = stream.writeStream.foreachBatch(self.foreach_batch).option(
-            "checkpointLocation", checkpoint_dir
-        )
-        if trigger_available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+    def attach(self, stream: DataFrame, checkpoint_dir: str):
+        return _start_foreach_batch(stream, self.foreach_batch, checkpoint_dir)
 
 
 def run_available_now(stream_df: DataFrame, checkpoint_dir: str, out_dir: str):
-    """Drain a file-backed stream to parquet with availableNow (test/CI
-    harness for streaming plans)."""
+    """Drain a stream to parquet with availableNow and wait for it; the
+    one parquet drain of the streaming plans and contract queries."""
     q = (
         stream_df.writeStream.format("parquet")
         .option("path", out_dir)
@@ -575,21 +613,12 @@ def hll_stream_maintenance(
     """
     from henbun_spark.operators import sketch
 
-    def merge_batch(bdf: DataFrame, batch_id: int):
-        spark = bdf.sparkSession
-        prev, committed = _read_state(spark, state_dir)
-        if _should_skip_batch(batch_id, committed, state_dir):
-            return
+    def fold(prev, bdf: DataFrame):
         regs = sketch.hll_registers(bdf, key_col, b=b)
-        if prev is not None:
-            regs = sketch.hll_merge(prev, regs)
-        _commit_state(regs, state_dir, batch_id)
+        return regs if prev is None else sketch.hll_merge(prev, regs)
 
-    return (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start_foreach_batch(
+        stream, _versioned_fold(state_dir, fold), checkpoint_dir
     )
 
 
@@ -619,30 +648,19 @@ def mg_stream_maintenance(
     """
     from henbun_spark.operators import sketch
 
-    def merge_batch(bdf: DataFrame, batch_id: int):
-        spark = bdf.sparkSession
-        prev, committed = _read_state(spark, state_dir)
-        if _should_skip_batch(batch_id, committed, state_dir):
-            return
+    def fold(prev, bdf: DataFrame):
         summ = sketch.mg_summary(bdf, key_col, k=k).collect()
         d: dict = {}
         if prev is not None:
             for row in prev.collect():
                 d[row["key"]] = int(row["wt"])
         sketch.mg_fold(d, ((r["key"], r["wt"]) for r in summ), k)
-        _commit_state(
-            spark.createDataFrame(
-                [(kk, int(v)) for kk, v in d.items()], "key string, wt bigint"
-            ),
-            state_dir,
-            batch_id,
+        return bdf.sparkSession.createDataFrame(
+            [(kk, int(v)) for kk, v in d.items()], "key string, wt bigint"
         )
 
-    return (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start_foreach_batch(
+        stream, _versioned_fold(state_dir, fold), checkpoint_dir
     )
 
 
@@ -671,27 +689,18 @@ def tdigest_stream_maintenance(
     """
     from henbun_spark.operators import sketch
 
-    def merge_batch(bdf: DataFrame, batch_id: int):
-        spark = bdf.sparkSession
-        prev, committed = _read_state(spark, state_dir)
-        if _should_skip_batch(batch_id, committed, state_dir):
-            return
+    def fold(prev, bdf: DataFrame):
         if not bdf.head(1):
-            return
+            return None
         batch_digest = sketch.tdigest_merge(
             sketch.tdigest_build(bdf, value_col, delta=delta), delta=delta
         )
-        if prev is not None:
-            batch_digest = sketch.tdigest_merge(
-                batch_digest, prev, delta=delta
-            )
-        _commit_state(batch_digest, state_dir, batch_id)
+        if prev is None:
+            return batch_digest
+        return sketch.tdigest_merge(batch_digest, prev, delta=delta)
 
-    return (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start_foreach_batch(
+        stream, _versioned_fold(state_dir, fold), checkpoint_dir
     )
 
 
@@ -720,34 +729,26 @@ def pca_stream_maintenance(
 
     from henbun_spark.operators import decomposition
 
-    def fold_batch(bdf: DataFrame, batch_id: int):
-        spark = bdf.sparkSession
-        prev, committed = _read_state(spark, state_dir)
-        if _should_skip_batch(batch_id, committed, state_dir):
-            return
+    def fold(prev, bdf: DataFrame):
         # explicit emptiness probe (limit-1 scan, negligible next to the
         # stats pass) — NOT a broad `except ValueError`, which would
         # also swallow a genuine shape/schema ValueError from
         # suff_stats and silently drop that batch's data
         if bdf.isEmpty():
-            return  # empty micro-batch: nothing to fold
+            return None  # empty micro-batch: nothing to fold
         n, s, g = decomposition.suff_stats(bdf, emb_col)
         if prev is not None:
             r = prev.collect()[0]  # 1-row state: bounded driver read
             n += int(r["n"])
             s = s + np.asarray(r["s"], dtype=np.float64)
             g = g + np.asarray(r["g"], dtype=np.float64)
-        out = spark.createDataFrame(
+        return bdf.sparkSession.createDataFrame(
             [(int(n), [float(x) for x in s], [float(x) for x in g])],
             "n long, s array<double>, g array<double>",
         )
-        _commit_state(out, state_dir, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start_foreach_batch(
+        stream, _versioned_fold(state_dir, fold), checkpoint_dir
     )
 
 
@@ -781,23 +782,16 @@ def mv_stream_maintenance(
 
     relational.validate_agg_spec(agg_spec)  # fail fast, before any state
 
-    def merge_batch(bdf: DataFrame, batch_id: int):
-        spark = bdf.sparkSession
-        prev, committed = _read_state(spark, state_dir)
-        if _should_skip_batch(batch_id, committed, state_dir):
-            return
+    def fold(prev, bdf: DataFrame):
         partials = partials_fn(bdf)
-        if prev is not None:
-            partials = relational.merge_agg_states(
-                prev, partials, key_cols, agg_spec=agg_spec
-            )
-        _commit_state(partials, state_dir, batch_id)
+        if prev is None:
+            return partials
+        return relational.merge_agg_states(
+            prev, partials, key_cols, agg_spec=agg_spec
+        )
 
-    return (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start_foreach_batch(
+        stream, _versioned_fold(state_dir, fold), checkpoint_dir
     )
 
 
@@ -829,25 +823,18 @@ def bloom_stream_maintenance(
     """
     from henbun_spark.operators import sketch
 
-    def fold_batch(bdf: DataFrame, batch_id: int):
-        spark = bdf.sparkSession
-        prev, committed = _read_state(spark, state_dir)
-        if _should_skip_batch(batch_id, committed, state_dir):
-            return
+    def fold(prev, bdf: DataFrame):
         regs = sketch.bloom_build(bdf, key_col, m_bits=m_bits, k=k, salt=salt)
-        if prev is not None:
-            regs = (
-                prev.unionByName(regs)
-                .groupBy("word_idx")
-                .agg(F.bit_or("bits").alias("bits"))
-            )
-        _commit_state(regs, state_dir, batch_id)
+        if prev is None:
+            return regs
+        return (
+            prev.unionByName(regs)
+            .groupBy("word_idx")
+            .agg(F.bit_or("bits").alias("bits"))
+        )
 
-    return (
-        stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start_foreach_batch(
+        stream, _versioned_fold(state_dir, fold), checkpoint_dir
     )
 
 
@@ -881,11 +868,7 @@ def bottomk_stream_maintenance(
     Ties on priority break by key. Read back with `load_state`.
     """
 
-    def fold_batch(bdf: DataFrame, batch_id: int):
-        spark = bdf.sparkSession
-        prev, committed = _read_state(spark, state_dir)
-        if _should_skip_batch(batch_id, committed, state_dir):
-            return
+    def fold(prev, bdf: DataFrame):
         pr = F.substring(
             F.md5(
                 F.concat_ws("|", F.lit(salt), F.col(key_col).cast("string"))
@@ -898,14 +881,10 @@ def bottomk_stream_maintenance(
         ).withColumn("pr", pr)
         if prev is not None:
             cand = prev.unionByName(cand)
-        top = cand.orderBy("pr", key_col).limit(k)
-        _commit_state(top, state_dir, batch_id)
+        return cand.orderBy("pr", key_col).limit(k)
 
-    return (
-        stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start_foreach_batch(
+        stream, _versioned_fold(state_dir, fold), checkpoint_dir
     )
 
 
@@ -992,11 +971,7 @@ def simhash_degree_stream_maintenance(
             cond = c if cond is None else (cond & c)
         return cond
 
-    def fold_batch(bdf: DataFrame, batch_id: int):
-        spark = bdf.sparkSession
-        state, committed = _read_state(spark, state_dir)
-        if _should_skip_batch(batch_id, committed, state_dir):
-            return
+    def fold(state, bdf: DataFrame):
         fps_new = dedup.simhash(
             bdf.select(id_col, text_col), text_col, id_col, bits
         ).withColumnRenamed("simhash", "fp")
@@ -1039,25 +1014,16 @@ def simhash_degree_stream_maintenance(
         grown = fps_new.withColumn("n_near", F.lit(0).cast("long"))
         if state is not None:
             grown = state.unionByName(grown)
-        merged = (
-            grown.join(deltas, on=id_col, how="left")
-            .select(
-                id_col,
-                "fp",
-                (
-                    F.col("n_near") + F.coalesce(F.col("delta"), F.lit(0))
-                )
-                .cast("long")
-                .alias("n_near"),
-            )
+        return grown.join(deltas, on=id_col, how="left").select(
+            id_col,
+            "fp",
+            (F.col("n_near") + F.coalesce(F.col("delta"), F.lit(0)))
+            .cast("long")
+            .alias("n_near"),
         )
-        _commit_state(merged, state_dir, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start_foreach_batch(
+        stream, _versioned_fold(state_dir, fold), checkpoint_dir
     )
 
 
@@ -1100,7 +1066,6 @@ def mv_stream_maintenance_partitioned(
     data. Readers should drop the ``__last_batch`` column
     (`load_partitioned_state` does). Returns the StreamingQuery.
     """
-    import json
     import os
 
     from henbun_spark.operators import relational
@@ -1180,23 +1145,13 @@ def mv_stream_maintenance_partitioned(
         # THEN the non-atomic partition overwrite, then journal removal
         jdir, jmeta = state_dir + "__journal", state_dir + "__journal.meta"
         sdf.coalesce(1).write.mode("overwrite").parquet(jdir)
-        tmp = jmeta + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {"batch_id": int(batch_id), "partition_col": partition_col}, f
-            )
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, jmeta)
+        _write_json_atomic(
+            jmeta, {"batch_id": int(batch_id), "partition_col": partition_col}
+        )
         _overwrite_mv_partitions(spark, sdf, state_dir, partition_col)
         os.remove(jmeta)
 
-    return (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_foreach_batch(stream, merge_batch, checkpoint_dir)
 
 
 def _overwrite_mv_partitions(spark, sdf, state_dir, partition_col):

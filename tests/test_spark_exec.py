@@ -399,6 +399,29 @@ def test_fit_reads_partition_count_of_reassigned_frame(spark):
     assert len(calls) == 4, "fit replayed on a stale partition count"
 
 
+def test_fit_fetches_an_over_budget_frame_once(spark, monkeypatch):
+    """A frame over the replay budget (the fetch returns None) is
+    fetched once while the trainer holds it, not again at every fit;
+    assigning `df` releases that outcome like a held replay."""
+    from henbun_spark import spark_exec
+
+    calls = []
+
+    def over_budget(*a, **k):
+        calls.append(1)
+        return None
+
+    monkeypatch.setattr(spark_exec, "fetch_batches", over_budget)
+    df, _, _ = make_df(spark)
+    tr = SparkTrainer(LinReg(), df, optimizer=Adam(learning_rate=0.05))
+    tr.fit(maxiter=4)
+    tr.fit(maxiter=4)
+    assert len(calls) == 1
+    tr.df = tr.df
+    tr.fit(maxiter=4)
+    assert len(calls) == 2
+
+
 def _fit_evaluate_pass(tr):
     """fit, minibatch fit, evaluate and minibatch evaluate on one frame:
     the rounds of a vi_replay pass that do not predict."""

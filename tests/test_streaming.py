@@ -971,6 +971,54 @@ def test_state_commit_survives_and_gcs_versions(spark, tmp_path):
     assert committed == 3
 
 
+def test_versioned_fold_batch_function_guards_every_commit(spark, tmp_path):
+    """The function `_versioned_fold` returns, called as foreachBatch
+    calls it: a replay of the committed batch never reaches `fold` and
+    leaves `_CURRENT` byte-for-byte as it was, a lower batch id (reset
+    checkpoint) raises, and a fold returning None commits nothing."""
+    state = str(tmp_path / "state")
+    os.makedirs(state)
+    pointer = os.path.join(state, "_CURRENT")
+    seen = []
+    out = {"df": None}
+
+    def fold(prev, bdf):
+        seen.append(None if prev is None else sorted(r["x"] for r in prev.collect()))
+        return out["df"]
+
+    fn = streaming._versioned_fold(state, fold)
+    bdf = spark.createDataFrame(pd.DataFrame({"x": [1, 2]}))
+    out["df"] = bdf
+    fn(bdf, 5)
+    assert seen == [None]
+    with open(pointer, "rb") as f:
+        committed = f.read()
+
+    fn(bdf, 5)  # (a) crash replay of the committed batch
+    assert seen == [None]
+    with open(pointer, "rb") as f:
+        assert f.read() == committed
+
+    with pytest.raises(ValueError, match="checkpoint was reset"):  # (b)
+        fn(bdf, 4)
+    assert seen == [None]
+
+    out["df"] = None  # (c) an empty batch: fold returns None
+    fn(bdf, 6)
+    assert seen == [None, [1, 2]]
+    with open(pointer, "rb") as f:
+        assert f.read() == committed
+    assert sorted(n for n in os.listdir(state) if n.startswith("v")) == [
+        "v" + "5".zfill(20)
+    ]
+    # batch 6 committed nothing, so its replay folds again
+    out["df"] = spark.createDataFrame(pd.DataFrame({"x": [9]}))
+    fn(bdf, 6)
+    assert seen == [None, [1, 2], [1, 2]]
+    assert [r["x"] for r in streaming.load_state(spark, state).collect()] == [9]
+    assert streaming._read_state(spark, state)[1] == 6
+
+
 def test_partitioned_mv_journal_recovers_crashed_overwrite(spark, tmp_path):
     """Dynamic partition overwrite is not atomic: simulate a crash after
     the journal commit but mid-overwrite (one touched partition's files
