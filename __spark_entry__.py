@@ -25,6 +25,7 @@ Float determinism strategy (so Spark and DuckDB hash-match bitwise):
 from __future__ import annotations
 
 from collections.abc import Callable
+from contextlib import contextmanager
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -85,6 +86,22 @@ def _scratch_dir(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
 
 
+def _file_stream(df: DataFrame, prefix: str, one_file_per_batch: bool = False):
+    """Write ``df`` as 4 parquet files into a fresh scratch dir and open
+    a file stream over them. Returns ``(stream, base)``: the query puts
+    its state, checkpoint and output dirs under ``base``. With
+    ``one_file_per_batch`` each micro-batch reads one file
+    (maxFilesPerTrigger=1), so a drain folds several batches; without
+    it a micro-batch takes every file available."""
+    base = _scratch_dir(prefix)
+    in_dir = f"{base}/in"
+    df.repartition(4).write.mode("overwrite").parquet(in_dir)
+    reader = df.sparkSession.readStream.schema(df.schema)
+    if one_file_per_batch:
+        reader = reader.option("maxFilesPerTrigger", 1)
+    return reader.parquet(in_dir), base
+
+
 def _drain_to_parquet(spark, out, out_dir: str, ckpt: str) -> None:
     """Shared availableNow parquet drain for the streaming contract
     queries, run under `_stream_state_scope` so stateful queries size
@@ -97,8 +114,9 @@ def _drain_to_parquet(spark, out, out_dir: str, ckpt: str) -> None:
         streaming.run_available_now(out, ckpt, out_dir)
 
 
+@contextmanager
 def _stream_state_scope(spark):
-    """Context manager sizing STREAMING STATE-STORE partitioning (r12).
+    """Size STREAMING STATE-STORE partitioning for one drain (r12).
 
     A stateful Structured Streaming query instantiates one state-store
     (with per-batch delta/commit files) per shuffle partition, fixed at
@@ -107,28 +125,31 @@ def _stream_state_scope(spark):
     event types / window keys), so 32 stores were pure per-batch commit
     machinery — measured r12: streaming_hopping_counts 3.7 -> 1.8s,
     streaming_dedup_keys 6.5 -> 3.7s at sf0.1. State partitioning
-    should track key cardinality/throughput, not cluster width;
-    `SPARK_GRAFT_STREAM_STATE_PARTS` overrides for production streams
-    (raise it for high-cardinality keys), default min(8, cores) so the
-    driver's lower-core-count runs stay comparable. Only the stateful
-    drains are wrapped; the conf is restored immediately after the
-    drain, so batch plans never see it."""
-    import os
-    from contextlib import contextmanager
+    should track key cardinality/throughput, not cluster width: the
+    scope uses min(8, cores), at least 2, so the driver's lower-core-count
+    runs stay comparable. Only the stateful drains are wrapped; the conf
+    is restored immediately after the drain, so batch plans never see
+    it."""
+    want = max(2, min(8, spark.sparkContext.defaultParallelism))
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(want))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
-    @contextmanager
-    def scope():
-        want = int(os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS", "0"))
-        if want <= 0:
-            want = max(2, min(8, spark.sparkContext.defaultParallelism))
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(want))
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
 
-    return scope()
+def _overlap(*fns):
+    """Run independent eager steps (checkpoints, bounded collects) on
+    one driver thread each and return their results in order. Each
+    pipeline's single-task stages and planning gaps back-fill with the
+    other's tasks; the threads share the session, and the results are
+    materialized, so downstream plans are unaffected."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
+        futures = [pool.submit(fn) for fn in fns]
+        return [f.result() for f in futures]
 
 
 #: bound-margin instrumentation for the *_ok bound-boolean contract
@@ -1481,21 +1502,9 @@ def minhash_recall_docs(spark, sf_dir):
             .localCheckpoint(storageLevel=StorageLevel.DISK_ONLY)
         )
 
-    import os
-
-    if os.environ.get("SPARK_GRAFT_PAR_RECALL", "1") != "0":
-        # the two eager materializations are independent until the
-        # intersection — overlap them (guide §2.6): each pipeline's
-        # single-task stages and planning gaps back-fill with the
-        # other's tasks. Two driver threads, same session; results are
-        # checkpointed frames, so downstream plans are unaffected.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_truth, f_cands = pool.submit(_truth), pool.submit(_cands)
-            truth, cands = f_truth.result(), f_cands.result()
-    else:
-        truth, cands = _truth(), _cands()
+    # the two eager materializations are independent until the
+    # intersection
+    truth, cands = _overlap(_truth, _cands)
     # left-semi join, not intersect (r12): both pair sets are DISTINCT
     # by construction (each is a groupBy over (id_a, id_b)), so
     # intersect's distinct-aggregate on both sides was pure overhead —
@@ -1810,16 +1819,7 @@ def emb_lsh_recall(spark, sf_dir):
             .localCheckpoint()
         )
 
-    import os
-
-    if os.environ.get("SPARK_GRAFT_PAR_RECALL", "1") != "0":
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_brute, f_lsh = pool.submit(_brute), pool.submit(_lsh)
-            brute, lsh = f_brute.result(), f_lsh.result()
-    else:
-        brute, lsh = _brute(), _lsh()
+    brute, lsh = _overlap(_brute, _lsh)
     common = brute.intersect(lsh)
     return (
         brute.agg(F.count(F.lit(1)).alias("n_exact"))
@@ -2400,14 +2400,7 @@ def streaming_winnow_index(spark, sf_dir):
     from henbun_spark.operators import dedup
 
     docs = _load(spark, sf_dir, "documents").select("doc_id", "text")
-    base = _scratch_dir("henbun_swx_")
-    in_dir = f"{base}/in"
-    docs.repartition(4).write.mode("overwrite").parquet(in_dir)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream, base = _file_stream(docs, "henbun_swx_", one_file_per_batch=True)
 
     def partials(d):
         return (
@@ -2529,14 +2522,7 @@ def streaming_simhash_degree(spark, sf_dir):
     from henbun_spark import streaming
 
     docs = _load(spark, sf_dir, "documents").select("doc_id", "text")
-    base = _scratch_dir("henbun_shd_")
-    in_dir = f"{base}/in"
-    docs.repartition(4).write.mode("overwrite").parquet(in_dir)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream, base = _file_stream(docs, "henbun_shd_", one_file_per_batch=True)
     q = streaming.simhash_degree_stream_maintenance(
         stream,
         f"{base}/state",
@@ -2584,14 +2570,7 @@ def streaming_bloom_filter(spark, sf_dir):
     sel = orders.where(F.col("o_totalprice") > 400000).select(
         F.col("o_orderkey").alias("k")
     )
-    base = _scratch_dir("henbun_sbf_")
-    in_dir = f"{base}/in"
-    sel.repartition(4).write.mode("overwrite").parquet(in_dir)
-    stream = (
-        spark.readStream.schema(sel.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream, base = _file_stream(sel, "henbun_sbf_", one_file_per_batch=True)
     q = streaming.bloom_stream_maintenance(
         stream, "k", f"{base}/state", f"{base}/ckpt", m_bits=1 << 16, k=4
     )
@@ -2646,14 +2625,7 @@ def streaming_bottomk_sample(spark, sf_dir):
     from henbun_spark import streaming
 
     docs = _load(spark, sf_dir, "documents").select("doc_id", "source")
-    base = _scratch_dir("henbun_sbk_")
-    in_dir = f"{base}/in"
-    docs.repartition(4).write.mode("overwrite").parquet(in_dir)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream, base = _file_stream(docs, "henbun_sbk_", one_file_per_batch=True)
     q = streaming.bottomk_stream_maintenance(
         stream,
         "doc_id",
@@ -4519,9 +4491,6 @@ def streaming_vi_training(spark, sf_dir):
     from henbun_spark.spark_exec import ColumnData, SparkTrainer
 
     ev = _load(spark, sf_dir, "events").select("value")
-    base = _scratch_dir("henbun_strain_")
-    in_dir = f"{base}/in"
-    ev.repartition(4).write.mode("overwrite").parquet(in_dir)
 
     class MeanModel(hb.Model):
         def setUp(self):
@@ -4541,11 +4510,7 @@ def streaming_vi_training(spark, sf_dir):
         cache=False,
     )
     st = streaming.StreamingTrainer(tr, steps_per_batch=6)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream, base = _file_stream(ev, "henbun_strain_", one_file_per_batch=True)
     q = st.attach(stream, f"{base}/ckpt")
     q.awaitTermination()
     true_mean = float(ev.agg(F.avg("value")).collect()[0][0])
@@ -5304,10 +5269,7 @@ def streaming_windowed_counts(spark, sf_dir):
         F.lit(0.0).alias("value"),
     )
     data = ev.unionByName(sentinel)
-    base = _scratch_dir("henbun_stream_")
-    in_dir = f"{base}/in"
-    data.repartition(4).write.mode("overwrite").parquet(in_dir)
-    stream = spark.readStream.schema(data.schema).parquet(in_dir)
+    stream, base = _file_stream(data, "henbun_stream_")
     agg = streaming.windowed_counts(
         stream, ts_col="ts", key_col="event_type", window="1 hour",
         watermark="2 hours",
@@ -5355,10 +5317,7 @@ def streaming_asof_purchase(spark, sf_dir):
         F.lit(0.0).alias("value"),
     )
     data = tagged.unionByName(sentinel)
-    base = _scratch_dir("henbun_sasof_")
-    in_dir = f"{base}/in"
-    data.repartition(4).write.mode("overwrite").parquet(in_dir)
-    stream = spark.readStream.schema(data.schema).parquet(in_dir)
+    stream, base = _file_stream(data, "henbun_sasof_")
     out = streaming.asof_join_stream(
         stream, ts_col="ts", key_col="user_id", watermark="2 hours"
     )
@@ -5378,14 +5337,7 @@ def streaming_hll_users(spark, sf_dir):
     from henbun_spark.operators import sketch
 
     ev = _load(spark, sf_dir, "events").select("user_id", "ts")
-    base = _scratch_dir("henbun_shll_")
-    in_dir = f"{base}/in"
-    ev.repartition(4).write.mode("overwrite").parquet(in_dir)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream, base = _file_stream(ev, "henbun_shll_", one_file_per_batch=True)
     q = streaming.hll_stream_maintenance(
         stream, "user_id", f"{base}/state", f"{base}/ckpt", b=8
     )
@@ -5416,14 +5368,7 @@ def streaming_pca_gram(spark, sf_dir):
     from henbun_spark.operators import decomposition
 
     pts = _walsh_planted(spark)
-    base = _scratch_dir("henbun_spca_")
-    in_dir = f"{base}/in"
-    pts.repartition(4).write.mode("overwrite").parquet(in_dir)
-    stream = (
-        spark.readStream.schema(pts.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream, base = _file_stream(pts, "henbun_spca_", one_file_per_batch=True)
     q = streaming.pca_stream_maintenance(
         stream, "embedding", f"{base}/state", f"{base}/ckpt"
     )
@@ -5455,10 +5400,7 @@ def streaming_hopping_counts(spark, sf_dir):
         F.lit(0.0).alias("value"),
     )
     data = ev.unionByName(sentinel)
-    base = _scratch_dir("henbun_hop_")
-    in_dir = f"{base}/in"
-    data.repartition(4).write.mode("overwrite").parquet(in_dir)
-    stream = spark.readStream.schema(data.schema).parquet(in_dir)
+    stream, base = _file_stream(data, "henbun_hop_")
     agg = streaming.windowed_counts(
         stream, ts_col="ts", key_col="event_type", window="2 hours",
         slide="1 hour", watermark="2 hours",
@@ -5487,10 +5429,7 @@ def streaming_enrich_static(spark, sf_dir):
     cust = _load(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
-    base = _scratch_dir("henbun_senrich_")
-    in_dir = f"{base}/in"
-    ev.repartition(4).write.mode("overwrite").parquet(in_dir)
-    stream = spark.readStream.schema(ev.schema).parquet(in_dir)
+    stream, base = _file_stream(ev, "henbun_senrich_")
     enriched = stream.join(F.broadcast(cust), "user_id").select(
         "event_id", "c_mktsegment", "value"
     )
@@ -5527,10 +5466,7 @@ def streaming_dedup_keys(spark, sf_dir):
     from henbun_spark import streaming
 
     ev = _load(spark, sf_dir, "events").select("user_id", "event_type", "ts")
-    base = _scratch_dir("henbun_sdedup_")
-    in_dir = f"{base}/in"
-    ev.repartition(4).write.mode("overwrite").parquet(in_dir)
-    stream = spark.readStream.schema(ev.schema).parquet(in_dir)
+    stream, base = _file_stream(ev, "henbun_sdedup_")
     deduped = streaming.dedup_stream(
         stream, ["user_id", "event_type"], ts_col="ts", watermark="31 days"
     )
@@ -5742,10 +5678,7 @@ def streaming_interval_join(spark, sf_dir):
     from henbun_spark import streaming
 
     ev = _load(spark, sf_dir, "events")
-    base = _scratch_dir("henbun_sjoin_")
-    in_dir = f"{base}/in"
-    ev.repartition(4).write.mode("overwrite").parquet(in_dir)
-    stream = spark.readStream.schema(ev.schema).parquet(in_dir)
+    stream, base = _file_stream(ev, "henbun_sjoin_")
     clicks = stream.where(F.col("event_type") == "click").select(
         "user_id", F.col("ts").alias("c_ts"), F.col("event_id").alias("click_id")
     )
@@ -5798,10 +5731,7 @@ def streaming_sessionize(spark, sf_dir):
         (F.max("ts") + F.expr("INTERVAL 2 HOURS")).alias("ts")
     ).select("user_id", "ts", F.lit(0.0).alias("value"))
     data = ev.unionByName(sentinels)
-    base = _scratch_dir("henbun_ssess_")
-    in_dir = f"{base}/in"
-    data.repartition(4).write.mode("overwrite").parquet(in_dir)
-    stream = spark.readStream.schema(data.schema).parquet(in_dir)
+    stream, base = _file_stream(data, "henbun_ssess_")
     sess = streaming.sessionize_stream(
         stream, gap_minutes=30.0, watermark="3650 days"
     )
@@ -5968,14 +5898,8 @@ def ann_topk_ivf(spark, sf_dir):
         emb, wide, k=3, n_cells=8, nprobe=2, train_sample=2000, seed=42
     )
     exact_wide = similarity.cosine_topk(emb, wide, k=3)
-    # the two measurement collects are independent jobs — overlap them
-    # (guide §2.6); r12
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_exact = pool.submit(exact_wide.collect)
-        f_approx = pool.submit(approx.collect)
-        exact_rows, approx_rows = f_exact.result(), f_approx.result()
+    # the two measurement collects are independent jobs (r12)
+    exact_rows, approx_rows = _overlap(exact_wide.collect, approx.collect)
     eset = {(r["query_id"], r["neighbor_id"]) for r in exact_rows}
     aset = {(r["query_id"], r["neighbor_id"]) for r in approx_rows}
     # empty query set -> exact frame is empty, the boolean is unread
@@ -6657,14 +6581,7 @@ def streaming_corpus_ingest(spark, sf_dir):
     from henbun_spark.operators import text
 
     docs = _load(spark, sf_dir, "documents")
-    base = _scratch_dir("henbun_singest_")
-    in_dir = f"{base}/in"
-    docs.repartition(4).write.mode("overwrite").parquet(in_dir)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream, base = _file_stream(docs, "henbun_singest_", one_file_per_batch=True)
     scored = text.bpe_ish_token_count(text.lang_id(text.quality_score(stream)))
     kept = scored.where(F.col("quality") >= 0.5).select(
         "doc_id", "pred_lang", "quality",
@@ -8969,14 +8886,7 @@ def streaming_mv_daily(spark, sf_dir):
     from henbun_spark import streaming
 
     ev = _load(spark, sf_dir, "events").select("ts", "event_type", "value")
-    base = _scratch_dir("henbun_smv_")
-    in_dir = f"{base}/in"
-    ev.repartition(4).write.mode("overwrite").parquet(in_dir)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream, base = _file_stream(ev, "henbun_smv_", one_file_per_batch=True)
 
     def partials(d):
         return d.groupBy(F.to_date("ts").alias("day"), "event_type").agg(
@@ -9019,14 +8929,7 @@ def streaming_mv_partitioned_daily(spark, sf_dir):
     from henbun_spark import streaming
 
     ev = _load(spark, sf_dir, "events").select("ts", "event_type", "value")
-    base = _scratch_dir("henbun_smvp_")
-    in_dir = f"{base}/in"
-    ev.repartition(4).write.mode("overwrite").parquet(in_dir)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream, base = _file_stream(ev, "henbun_smvp_", one_file_per_batch=True)
 
     def partials(d):
         return d.groupBy(
@@ -9072,8 +8975,6 @@ def streaming_interval_left_join(spark, sf_dir):
     from henbun_spark import streaming
 
     ev = _load(spark, sf_dir, "events")
-    base = _scratch_dir("henbun_sloj_")
-    in_dir = f"{base}/in"
     far = ev.agg((F.max("ts") + F.expr("INTERVAL 240 HOURS")).alias("ts"))
     sentinel = far.select(
         F.lit(-1).cast("long").alias("event_id"),
@@ -9095,8 +8996,7 @@ def streaming_interval_left_join(spark, sf_dir):
     data = ev.select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     ).unionByName(sentinel)
-    data.repartition(4).write.mode("overwrite").parquet(in_dir)
-    stream = spark.readStream.schema(data.schema).parquet(in_dir)
+    stream, base = _file_stream(data, "henbun_sloj_")
     clicks = stream.where(F.col("event_type") == "click").select(
         "user_id", F.col("ts").alias("c_ts"), F.col("event_id").alias("click_id")
     )
@@ -9164,14 +9064,7 @@ def streaming_ivf_ingest(spark, sf_dir):
     centroids = similarity.train_coarse_quantizer(
         emb, "embedding", "vec_id", n_cells=8, train_sample=2000, seed=42
     )
-    base = _scratch_dir("henbun_sivf_")
-    in_dir = f"{base}/in"
-    emb.repartition(4).write.mode("overwrite").parquet(in_dir)
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream, base = _file_stream(emb, "henbun_sivf_", one_file_per_batch=True)
     q = similarity.ivf_index_write_stream(
         stream, centroids, f"{base}/index", f"{base}/ckpt"
     )
@@ -9214,14 +9107,7 @@ def streaming_dedup_index(spark, sf_dir):
         (F.col("doc_id") + 1000000).alias("doc_id"), "text"
     )
     docs = base_docs.unionByName(recrawl)
-    base = _scratch_dir("henbun_sdi_")
-    in_dir = f"{base}/in"
-    docs.repartition(4).write.mode("overwrite").parquet(in_dir)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream, base = _file_stream(docs, "henbun_sdi_", one_file_per_batch=True)
 
     def partials(d):
         return d.groupBy(F.md5("text").alias("digest")).agg(
@@ -9274,14 +9160,7 @@ def streaming_substr_index(spark, sf_dir):
     from henbun_spark import streaming
 
     docs = _load(spark, sf_dir, "documents").select("doc_id", "text")
-    base = _scratch_dir("henbun_ssx_")
-    in_dir = f"{base}/in"
-    docs.repartition(4).write.mode("overwrite").parquet(in_dir)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream, base = _file_stream(docs, "henbun_ssx_", one_file_per_batch=True)
 
     def partials(d):
         ln = F.length("text")
@@ -9349,14 +9228,7 @@ def streaming_neardup_index(spark, sf_dir):
     from henbun_spark.operators import dedup
 
     docs = _load(spark, sf_dir, "documents").select("doc_id", "text")
-    base = _scratch_dir("henbun_sni_")
-    in_dir = f"{base}/in"
-    docs.repartition(4).write.mode("overwrite").parquet(in_dir)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream, base = _file_stream(docs, "henbun_sni_", one_file_per_batch=True)
 
     def partials(d):
         sig = dedup.minhash_signatures(d, "text", "doc_id", n=8, bands=4)
@@ -9413,14 +9285,7 @@ def streaming_static_enrich(spark, sf_dir):
         )
         .select(F.col("c_custkey").alias("user_id"), "n_name")
     )
-    base = _scratch_dir("henbun_sse_")
-    in_dir = f"{base}/in"
-    ev.repartition(4).write.mode("overwrite").parquet(in_dir)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream, base = _file_stream(ev, "henbun_sse_", one_file_per_batch=True)
 
     def partials(d):
         return (
@@ -9495,14 +9360,7 @@ def streaming_heavy_hitters(spark, sf_dir):
     from henbun_spark.operators import sketch
 
     ev = _load(spark, sf_dir, "events").select("user_id", "ts")
-    base = _scratch_dir("henbun_smg_")
-    in_dir = f"{base}/in"
-    ev.repartition(4).write.mode("overwrite").parquet(in_dir)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream, base = _file_stream(ev, "henbun_smg_", one_file_per_batch=True)
     q = streaming.mg_stream_maintenance(
         stream, "user_id", f"{base}/state", f"{base}/ckpt", k=128
     )
@@ -9642,14 +9500,7 @@ def streaming_tdigest_value(spark, sf_dir):
     from henbun_spark.operators import relational, sketch
 
     ev = _load(spark, sf_dir, "events").select("value", "ts")
-    base = _scratch_dir("henbun_std_")
-    in_dir = f"{base}/in"
-    ev.repartition(4).write.mode("overwrite").parquet(in_dir)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream, base = _file_stream(ev, "henbun_std_", one_file_per_batch=True)
     q = streaming.tdigest_stream_maintenance(
         stream, "value", f"{base}/state", f"{base}/ckpt", delta=100
     )
@@ -9777,13 +9628,8 @@ def ann_topk_pq(spark, sf_dir):
         emb, queries, k=3, m_sub=8, n_codes=16, refine=32, seed=42
     )
     exact = similarity.cosine_topk(emb, queries, k=3)
-    # overlap the two independent measurement collects (guide §2.6); r12
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_exact = pool.submit(exact.collect)
-        f_approx = pool.submit(approx.collect)
-        exact_rows, approx_rows = f_exact.result(), f_approx.result()
+    # the two measurement collects are independent jobs (r12)
+    exact_rows, approx_rows = _overlap(exact.collect, approx.collect)
     eset = {(r["query_id"], r["neighbor_id"]) for r in exact_rows}
     aset = {(r["query_id"], r["neighbor_id"]) for r in approx_rows}
     # empty query set -> exact frame is empty, the boolean is unread
@@ -9839,14 +9685,7 @@ def streaming_kmeans_update(spark, sf_dir):
         key=lambda r: r["vec_id"],
     )  # bounded: exactly 4 rows to the driver, then plan-time literals
     cents = [list(r["u"]) for r in seeds]
-    base = _scratch_dir("henbun_skm_")
-    in_dir = f"{base}/in"
-    emb.repartition(4).write.mode("overwrite").parquet(in_dir)
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream, base = _file_stream(emb, "henbun_skm_", one_file_per_batch=True)
 
     def partials(d):
         w = clustering.quantize_units(d, "embedding")
@@ -10250,14 +10089,7 @@ def streaming_lttb_value(spark, sf_dir):
     from henbun_spark.operators import relational
 
     ev = _load(spark, sf_dir, "events").select("ts", "event_type", "value")
-    base = _scratch_dir("henbun_slttb_")
-    in_dir = f"{base}/in"
-    ev.repartition(4).write.mode("overwrite").parquet(in_dir)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream, base = _file_stream(ev, "henbun_slttb_", one_file_per_batch=True)
     q = streaming.mv_stream_maintenance(
         stream,
         lambda d: relational.lttb_m4_partials(
@@ -10679,14 +10511,7 @@ def streaming_ohlc_value(spark, sf_dir):
     from henbun_spark.operators import relational
 
     ev = _load(spark, sf_dir, "events").select("ts", "value")
-    base = _scratch_dir("henbun_sohlc_")
-    in_dir = f"{base}/in"
-    ev.repartition(4).write.mode("overwrite").parquet(in_dir)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream, base = _file_stream(ev, "henbun_sohlc_", one_file_per_batch=True)
     q = streaming.mv_stream_maintenance(
         stream,
         lambda d: relational.ohlc_partials(d, "ts", "value", 3600),
@@ -11291,7 +11116,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # dedup widening, VI moments collect, simhash persist, substring
     # persist, sql_udf, ann_topk payload rebuild, transform/priors VI
     # surfaces). Slots 19-22: the r13 optimization targets (streaming
-    # as-of rewrite, bloom gated literal probe, vi_minibatch replay,
+    # as-of rewrite, bloom probe, vi_minibatch replay,
     # kmeans local replay). Slots 23-47: the remaining r8-stale cohort
     # (alphabetical; the 5 r8 names already pinned above are not
     # repeated). Slots 48-50: head of the r9 cohort (alphabetical) —

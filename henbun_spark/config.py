@@ -28,7 +28,6 @@ import numpy as np
 @dataclass
 class _Dtypes:
     float_type: type = np.float64
-    int_type: type = np.int32
 
 
 @dataclass
@@ -41,12 +40,7 @@ class _Numerics:
 
 @dataclass
 class _Training:
-    # reference Indexer holds out 10% for test (Henbun/model.py:132)
-    test_frac: float = 0.1
     seed: int = 0
-    # variational init defaults (Henbun/param.py:160-166)
-    init_mean: float = 0.0
-    init_stddev: float = 1.0
 
 
 @dataclass
@@ -54,15 +48,6 @@ class Settings:
     dtypes: _Dtypes = field(default_factory=_Dtypes)
     numerics: _Numerics = field(default_factory=_Numerics)
     training: _Training = field(default_factory=_Training)
-    verbosity: bool = False
-
-    @property
-    def float_type(self) -> type:
-        return self.dtypes.float_type
-
-    @property
-    def jitter_level(self) -> float:
-        return self.numerics.jitter_level
 
 
 def parse_rc_value(string: str):
@@ -120,8 +105,9 @@ def load_rc(path: str | None = None) -> Settings:
     """Defaults -> rc file layer (`_settings.py:26-149` semantics):
     build a `Settings` from dataclass defaults, then overlay any
     matching [section] keys from the INI rc file. Unknown sections/keys
-    are ignored (this engine's settings surface is typed; the
-    reference's profiling/tf-verbosity knobs have no Spark meaning).
+    are ignored (this engine's settings surface is typed and holds only
+    what the engine reads; a reference rc's `[verbosity]`/`[profiling]`
+    sections and `int_type`/`test_frac`/`init_*` keys set nothing).
     With no rc file anywhere, returns pure defaults."""
     import configparser
 
@@ -137,13 +123,6 @@ def load_rc(path: str | None = None) -> Settings:
         "training": out.training,
     }
     for section in cp.sections():
-        if section == "verbosity":
-            # the reference splits verbosity into per-subsystem flags;
-            # any true flag turns this engine's single switch on
-            out.verbosity = any(
-                parse_rc_value(v) is True for v in cp[section].values()
-            )
-            continue
         target = groups.get(section)
         if target is None:
             continue
@@ -192,4 +171,3 @@ def _assign(dst: Settings, src: Settings) -> None:
     dst.dtypes = copy.deepcopy(src.dtypes)
     dst.numerics = copy.deepcopy(src.numerics)
     dst.training = copy.deepcopy(src.training)
-    dst.verbosity = src.verbosity

@@ -209,8 +209,6 @@ def kmeans_fit(
     embedding column once PER ITERATION — the lazy plan re-executes).
     Centroid values may move by the usual ~1 ulp treeAggregate
     association wobble, exactly as any partitioning change would."""
-    import os
-
     from henbun_spark.local_replay import fetch_batches
     from henbun_spark.operators._parallel import _plan_partitions
     from henbun_spark.spark_exec import LOCAL_ROWS_CAP, _tree_depth
@@ -235,12 +233,12 @@ def kmeans_fit(
     # 1/P share of the rows and bytes, else the fit stays distributed
     # (a skewed frame under both totals included); past
     # TREE_DEPTH_CUTOVER partitions no fetch runs and iterations x one
-    # scan + tree reduction is the 100 TB design. Override with
-    # SPARK_GRAFT_KMEANS_LOCAL_CAP (0 disables).
+    # scan + tree reduction is the 100 TB design. The cap is read here,
+    # at call time, so setting it to 0 forces the distributed loop.
     local = fetch_batches(
         data.select(F.col(emb_col).cast("array<double>").alias("_v")),
         lambda pdf: np.stack(pdf["_v"].to_numpy()).astype(np.float64),
-        int(os.environ.get("SPARK_GRAFT_KMEANS_LOCAL_CAP", LOCAL_ROWS_CAP)),
+        LOCAL_ROWS_CAP,
     )
     for _ in range(max_iter):
         if local is not None:

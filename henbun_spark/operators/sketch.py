@@ -254,33 +254,6 @@ def hll_estimate(
 _BLOOM_WORD_BITS = 32  # 32-bit words inside BIGINTs: 1 << bit stays positive
                        # and shift semantics match across engines
 
-#: widest bitmap that may inline as a literal array in the probe (words,
-#: so m_bits <= 2^18 by default). Above it a multi-MB literal would
-#: bloat every task binary; the joinable-bitmap path stays.
-_BLOOM_LITERAL_MAX_WORDS = 1 << 13
-
-#: probe-side plan-size floor (bytes) for the literal path. Collecting
-#: the bitmap executes the BUILD pipeline eagerly at construction
-#: (~0.5s at sf0.1 — the r12 commit pair 3850fda/78ac95b measured the
-#: unconditional version as a net loss there), so the literal path must
-#: only engage when the probe side is large enough that per-row savings
-#: (k broadcast-hash joins -> one Column predicate) amortize it. The
-#: default 64 MB keeps every driver-SF plan on the joinable path
-#: (lineitem at sf0.1 is ~11 MB) and flips the 100 TB regime, where the
-#: probe is the big side by construction. SPARK_GRAFT_BLOOM_LITERAL_MIN_MB
-#: overrides (0 forces the literal path, negative disables it).
-_BLOOM_LITERAL_PROBE_MIN_BYTES = 64 << 20
-
-
-def _plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's size estimate for `df` (bytes; file sizes at the scan,
-    propagated through the plan) — a plan-only read, no job. -1 when
-    unavailable (e.g. Spark Connect)."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # pragma: no cover
-        return -1
-
 
 def bloom_build(
     df: DataFrame,
@@ -342,64 +315,28 @@ def bloom_filter_probe(
     The bitmap table (<= ceil(m_bits/32) rows) broadcasts; each probe row
     joins its k words and passes iff every bit is present. The passing
     subset then feeds the real (shuffle) join — at 100 TB the bloom
-    drops the non-matching majority before any exchange.
+    drops the non-matching majority before any exchange. A missing word
+    reads as 0 (``coalesce``), and when ``m_bits % 32 != 0`` the partial
+    top word is joined like any other.
     """
-    import os
-
     key = F.col(key_col)
-    with_pos = probe.select(
+    out = probe.select(
         "*", *[_bucket(key, i, m_bits, salt).alias(f"__p{i}") for i in range(k)]
     )
-    min_mb = float(os.environ.get("SPARK_GRAFT_BLOOM_LITERAL_MIN_MB",
-                                  _BLOOM_LITERAL_PROBE_MIN_BYTES >> 20))
-    # ceil: when m_bits % 32 != 0 the top word is partial but still used
-    n_words = (m_bits + _BLOOM_WORD_BITS - 1) // _BLOOM_WORD_BITS
-    use_literal = (
-        min_mb >= 0
-        and n_words <= _BLOOM_LITERAL_MAX_WORDS
-        and _plan_size_bytes(probe) >= min_mb * (1 << 20)
-    )
-    if use_literal:
-        # r13 (guide §2.4 / §1.2, gated re-land of the r12 pair
-        # 3850fda/78ac95b): the bitmap is PARAMETER-bounded (<= n_words
-        # rows regardless of data size), so collect it once into a dense
-        # literal array and test all k bits with pure Column math — the
-        # k chained broadcast-hash joins this replaces each added a
-        # broadcast exchange, a build, and a probe per key. Missing
-        # words read as 0, exactly like the join path's
-        # coalesce(bits, 0): same md5 positions, same bit tests ->
-        # bit-identical pass set. Only engages when the probe side's
-        # size estimate amortizes the eager build collect (see
-        # _BLOOM_LITERAL_PROBE_MIN_BYTES).
-        words = {int(r["word_idx"]): int(r["bits"]) for r in bloom.collect()}
-        arr = F.lit([words.get(i, 0) for i in range(n_words)])
-        cond = None
-        for i in range(k):
-            p = F.col(f"__p{i}")
-            word = F.element_at(arr, (p / _BLOOM_WORD_BITS).cast("int") + 1)
-            bit = F.expr(
-                f"shiftleft(CAST(1 AS BIGINT), "
-                f"CAST(__p{i} % {_BLOOM_WORD_BITS} AS INT))"
+    for i in range(k):
+        b = bloom.select(
+            F.col("word_idx").alias(f"__w{i}"), F.col("bits").alias(f"__b{i}")
+        )
+        out = out.join(
+            F.broadcast(b),
+            (F.col(f"__p{i}") / _BLOOM_WORD_BITS).cast("int") == F.col(f"__w{i}"),
+            "left",
+        ).where(
+            F.expr(
+                f"coalesce(__b{i}, CAST(0 AS BIGINT)) & "
+                f"shiftleft(CAST(1 AS BIGINT), CAST(__p{i} % {_BLOOM_WORD_BITS} AS INT)) != 0"
             )
-            test = word.bitwiseAND(bit) != 0
-            cond = test if cond is None else (cond & test)
-        out = with_pos.where(cond)
-    else:
-        out = with_pos
-        for i in range(k):
-            b = bloom.select(
-                F.col("word_idx").alias(f"__w{i}"), F.col("bits").alias(f"__b{i}")
-            )
-            out = out.join(
-                F.broadcast(b),
-                (F.col(f"__p{i}") / _BLOOM_WORD_BITS).cast("int") == F.col(f"__w{i}"),
-                "left",
-            ).where(
-                F.expr(
-                    f"coalesce(__b{i}, CAST(0 AS BIGINT)) & "
-                    f"shiftleft(CAST(1 AS BIGINT), CAST(__p{i} % {_BLOOM_WORD_BITS} AS INT)) != 0"
-                )
-            )
+        )
     drop = [c for c in out.columns if c.startswith("__")]
     return out.drop(*drop)
 

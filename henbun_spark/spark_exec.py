@@ -169,8 +169,8 @@ def _tree_depth(nparts: int) -> int:
 #: (step, pid, bi) seeds, and the same partial-fold order — so the Adam
 #: trajectory is REPLICATED BIT-FOR-BIT (pytest-pinned). Past
 #: TREE_DEPTH_CUTOVER partitions no fetch runs: the distributed loop is
-#: the 100 TB design. Override with SPARK_GRAFT_TRAINER_LOCAL_CAP
-#: (0 disables). `clustering.kmeans_fit` replays under the same cap.
+#: the 100 TB design. `fit` and `clustering.kmeans_fit` read this cap
+#: at call time; 0 disables the replay (tests set it for the twin).
 LOCAL_ROWS_CAP = 1 << 17
 
 
@@ -637,10 +637,7 @@ class SparkTrainer:
         exactly as the distributed ``mapInPandas`` would iterate them, in
         one bounded job; None when the frame is over its budget or has
         too many partitions (`local_replay.fetch_batches`)."""
-        import os
-
-        cap = int(os.environ.get("SPARK_GRAFT_TRAINER_LOCAL_CAP", LOCAL_ROWS_CAP))
-        return fetch_batches(self.df, lambda pdf: pdf, cap)
+        return fetch_batches(self.df, lambda pdf: pdf, LOCAL_ROWS_CAP)
 
     def _release_if_rebatched(self) -> None:
         """Release the held replay if the session's Arrow batch rows

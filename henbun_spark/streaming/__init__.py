@@ -488,10 +488,9 @@ def asof_join_stream(
     State per group = buffered rows inside the watermark horizon + one
     (uid, value) per user with an emitted right row — the same total
     bounded by horizon x rate, just partitioned coarser.
-    ``num_groups`` defaults to the cluster's default parallelism
-    (env ``SPARK_GRAFT_ASOF_GROUPS`` overrides): it scales with the
-    cluster, and the per-group batch slice stays large enough that the
-    per-group boundary cost amortizes.
+    ``num_groups`` defaults to the cluster's default parallelism: it
+    scales with the cluster, and the per-group batch slice stays large
+    enough that the per-group boundary cost amortizes.
 
     Tie rule: a right row at ts == left ts matches (right sorts before
     left at equal timestamps) — identical to the batch
@@ -505,15 +504,13 @@ def asof_join_stream(
     float key would be truncated into colliding keys. Any other type
     raises ``TypeError`` here, before the query is planned.
     """
-    import os
-
     key_type = tagged.schema[key_col].dataType
     if not isinstance(key_type, T.IntegralType):
         raise TypeError(
             f"asof_join_stream: key column {key_col!r} must be integral, "
             f"got {key_type.simpleString()}"
         )
-    groups = num_groups or int(os.environ.get("SPARK_GRAFT_ASOF_GROUPS", "0"))
+    groups = num_groups or 0
     if groups <= 0:
         groups = tagged.sparkSession.sparkContext.defaultParallelism
     tagged = tagged.withWatermark(ts_col, watermark).withColumn(

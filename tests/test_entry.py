@@ -88,6 +88,68 @@ def test_queries_dict_has_no_duplicate_keys():
     raise AssertionError("queries() literal not found")
 
 
+def _spark_graft_env_reads(tree):
+    """Line numbers of the env reads of a ``SPARK_GRAFT_*`` literal in
+    ``tree``: ``os.environ.get/pop/setdefault(...)``, ``os.getenv(...)``,
+    ``os.environ[...]`` and ``... in os.environ`` (also through a bare
+    ``environ``/``getenv`` name)."""
+    import ast
+
+    def is_environ(n):
+        return (isinstance(n, ast.Name) and n.id == "environ") or (
+            isinstance(n, ast.Attribute) and n.attr == "environ"
+            and isinstance(n.value, ast.Name) and n.value.id == "os"
+        )
+
+    def is_getenv(n):
+        return (isinstance(n, ast.Name) and n.id == "getenv") or (
+            isinstance(n, ast.Attribute) and n.attr == "getenv"
+            and isinstance(n.value, ast.Name) and n.value.id == "os"
+        )
+
+    def graft(n):
+        return (
+            isinstance(n, ast.Constant) and isinstance(n.value, str)
+            and n.value.startswith("SPARK_GRAFT_")
+        )
+
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Call) and n.args and graft(n.args[0]):
+            f = n.func
+            if is_getenv(f) or (
+                isinstance(f, ast.Attribute) and is_environ(f.value)
+                and f.attr in ("get", "pop", "setdefault")
+            ):
+                yield n.lineno
+        elif isinstance(n, ast.Subscript) and is_environ(n.value) and graft(n.slice):
+            yield n.lineno
+        elif isinstance(n, ast.Compare) and graft(n.left) and any(
+            is_environ(c) for c in n.comparators
+        ):
+            yield n.lineno
+
+
+def test_no_inline_spark_graft_env_knobs():
+    """Settings live in `config.Settings`, not in `SPARK_GRAFT_*` env
+    lookups spread over the library: only `sources.get_spark` reads the
+    deployment settings (`SPARK_GRAFT_CPUS`, `SPARK_GRAFT_DRIVER_MEM`)."""
+    import ast
+    from pathlib import Path
+
+    root = Path(entry_mod.__file__).resolve().parent
+    allowed = root / "henbun_spark" / "sources" / "__init__.py"
+    files = [root / "__spark_entry__.py", *sorted((root / "henbun_spark").rglob("*.py"))]
+    hits = [
+        f"{path.relative_to(root)}:{line}"
+        for path in files
+        if path != allowed
+        for line in _spark_graft_env_reads(ast.parse(path.read_text()))
+    ]
+    assert not hits, f"inline SPARK_GRAFT_* env reads: {hits}"
+    # the scan sees the reads it must allow
+    assert len(list(_spark_graft_env_reads(ast.parse(allowed.read_text())))) == 2
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     rows = df.collect()

@@ -831,18 +831,20 @@ def test_kmeans_matches_numpy_replica(emb):
 
 
 def test_kmeans_local_replay_bitwise_equals_distributed(emb, monkeypatch):
-    """The driver-local Lloyd replay under KMEANS_LOCAL_ROWS_CAP must
+    """The driver-local Lloyd replay under LOCAL_ROWS_CAP must
     REPLICATE the distributed iteration bit-for-bit on non-dyadic real
     embeddings: same per-batch matrices, same partition partials, same
     partition-order fold. Exact float equality on centroids and every
     SSE history entry — not allclose."""
+    from henbun_spark import spark_exec
     from henbun_spark.operators import clustering
 
-    monkeypatch.setenv("SPARK_GRAFT_KMEANS_LOCAL_CAP", "0")  # distributed
+    cap = spark_exec.LOCAL_ROWS_CAP
+    monkeypatch.setattr(spark_exec, "LOCAL_ROWS_CAP", 0)  # distributed
     c_dist, h_dist = clustering.kmeans_fit(
         emb, "embedding", "vec_id", k=4, max_iter=4
     )
-    monkeypatch.delenv("SPARK_GRAFT_KMEANS_LOCAL_CAP")  # local replay
+    monkeypatch.setattr(spark_exec, "LOCAL_ROWS_CAP", cap)  # local replay
     calls = []
     orig = clustering._iteration
 
@@ -2754,15 +2756,11 @@ def test_bloom_no_false_negatives_and_low_fp(spark):
     assert fp <= 60, fp
 
 
-def test_bloom_literal_path_matches_join_path(spark, monkeypatch):
-    """The size-gated literal-array probe (r13) must produce the
-    BIT-IDENTICAL pass set as the joinable-bitmap path: same md5
-    positions, same bit tests, missing words read as 0 on both. Forced
-    on via SPARK_GRAFT_BLOOM_LITERAL_MIN_MB=0 / off via -1 (the default
-    gate keys on Catalyst's probe-side size estimate, which small test
-    frames never reach). m_bits=1000 leaves a partial top word (31 full
-    words + 8 bits) that the literal array must still hold, or its
-    positions index past the array and inserted keys are lost."""
+def test_bloom_join_path_holds_partial_top_word(spark):
+    """The joinable-bitmap probe keeps every inserted key when m_bits is
+    a power of two and when it is not: m_bits=1000 leaves a partial top
+    word (31 full words + 8 bits), which the bitmap must hold and the
+    probe must join, or keys hashed into it are lost."""
     from pyspark.sql import functions as F
 
     from henbun_spark.operators import sketch
@@ -2771,18 +2769,11 @@ def test_bloom_literal_path_matches_join_path(spark, monkeypatch):
     probe = spark.range(0, 5000).select(F.col("id").alias("k"))
     for m_bits in (1 << 12, 1000):
         bloom = sketch.bloom_build(right, "k", m_bits=m_bits, k=4)
-        monkeypatch.setenv("SPARK_GRAFT_BLOOM_LITERAL_MIN_MB", "-1")
-        via_join = sorted(
+        passed = {
             r["k"] for r in
             sketch.bloom_filter_probe(probe, bloom, "k", m_bits=m_bits, k=4).collect()
-        )
-        monkeypatch.setenv("SPARK_GRAFT_BLOOM_LITERAL_MIN_MB", "0")
-        lit_df = sketch.bloom_filter_probe(probe, bloom, "k", m_bits=m_bits, k=4)
-        via_literal = sorted(r["k"] for r in lit_df.collect())
-        assert via_join == via_literal, m_bits
-        assert set(range(0, 300 * 11, 11)) <= set(via_literal), m_bits
-        # the literal plan must carry no join at all
-        assert "Join" not in lit_df._jdf.queryExecution().executedPlan().toString()
+        }
+        assert set(range(0, 300 * 11, 11)) <= passed, m_bits
     # the partial top word is present in the bitmap
     assert bloom.where(F.col("word_idx") == 1000 // 32).count() == 1
 

@@ -17,7 +17,7 @@ import pytest
 
 import henbun_spark as hb
 from henbun_spark import autodiff as ad
-from henbun_spark import variationals
+from henbun_spark import spark_exec, variationals
 from henbun_spark.model import Adam
 from henbun_spark.param import graph_key
 from henbun_spark.spark_exec import ColumnData, SparkTrainer, predict
@@ -150,7 +150,8 @@ def test_local_replay_bitwise_equals_distributed(spark, monkeypatch, model_cls, 
     tr1 = SparkTrainer(m1, df, optimizer=Adam(learning_rate=lr))
     init = tr1._state()
 
-    monkeypatch.setenv("SPARK_GRAFT_TRAINER_LOCAL_CAP", "0")  # distributed
+    cap = spark_exec.LOCAL_ROWS_CAP
+    monkeypatch.setattr(spark_exec, "LOCAL_ROWS_CAP", 0)  # distributed
     tr1.fit(maxiter=6)
 
     m2 = model_cls()
@@ -159,7 +160,7 @@ def test_local_replay_bitwise_equals_distributed(spark, monkeypatch, model_cls, 
         v._array = np.array(init[v.long_name])
         v._pending = None
         v.finalize()
-    monkeypatch.delenv("SPARK_GRAFT_TRAINER_LOCAL_CAP")  # local replay
+    monkeypatch.setattr(spark_exec, "LOCAL_ROWS_CAP", cap)  # local replay
     calls = []
     orig_job = tr2._job
 
@@ -219,8 +220,6 @@ def test_sampler_replica_verified_for_running_spark(spark):
 def test_unverified_spark_samples_minibatch_on_cluster(spark, monkeypatch):
     """Under a Spark version outside SAMPLER_VERIFIED_SPARK a minibatch
     fit never replays the sampler: every step is a distributed job."""
-    from henbun_spark import spark_exec
-
     monkeypatch.setattr(spark_exec, "SAMPLER_VERIFIED_SPARK", ("3.5",))
     df, _, _ = make_df(spark)
     tr = SparkTrainer(LinReg(), df, optimizer=Adam(learning_rate=0.05))
@@ -248,8 +247,6 @@ def test_unverified_spark_minibatch_after_full_fit_samples_on_cluster(
     """A full-batch fit leaves its batches held; a minibatch fit after it
     on a Spark version outside SAMPLER_VERIFIED_SPARK must still sample
     on the cluster, not replay `df.sample` from the held batches."""
-    from henbun_spark import spark_exec
-
     monkeypatch.setattr(spark_exec, "SAMPLER_VERIFIED_SPARK", ("3.5",))
     df, _, _ = make_df(spark)
     tr = SparkTrainer(LinReg(), df, optimizer=Adam(learning_rate=0.05))
@@ -306,7 +303,8 @@ def test_minibatch_replay_bitwise_equals_distributed(
         tr1 = SparkTrainer(m1, df, optimizer=Adam(learning_rate=lr))
         init = tr1._state()
 
-        monkeypatch.setenv("SPARK_GRAFT_TRAINER_LOCAL_CAP", "0")  # distributed
+        cap = spark_exec.LOCAL_ROWS_CAP
+        monkeypatch.setattr(spark_exec, "LOCAL_ROWS_CAP", 0)  # distributed
         tr1.fit(maxiter=6, minibatch_fraction=fraction)
 
         m2 = model_cls()
@@ -315,7 +313,7 @@ def test_minibatch_replay_bitwise_equals_distributed(
             v._array = np.array(init[v.long_name])
             v._pending = None
             v.finalize()
-        monkeypatch.delenv("SPARK_GRAFT_TRAINER_LOCAL_CAP")  # local replay
+        monkeypatch.setattr(spark_exec, "LOCAL_ROWS_CAP", cap)  # local replay
         calls = []
         orig_job = tr2._job
 
@@ -343,7 +341,8 @@ def test_local_replay_refetches_reassigned_frame(spark, monkeypatch):
     m1 = LinReg()
     tr1 = SparkTrainer(m1, df_a, optimizer=Adam(learning_rate=0.05))
     init = tr1._state()
-    monkeypatch.setenv("SPARK_GRAFT_TRAINER_LOCAL_CAP", "0")  # distributed
+    cap = spark_exec.LOCAL_ROWS_CAP
+    monkeypatch.setattr(spark_exec, "LOCAL_ROWS_CAP", 0)  # distributed
     tr1.fit(maxiter=5)
     tr1.df = df_b
     tr1.fit(maxiter=5)
@@ -354,7 +353,7 @@ def test_local_replay_refetches_reassigned_frame(spark, monkeypatch):
         v._array = np.array(init[v.long_name])
         v._pending = None
         v.finalize()
-    monkeypatch.delenv("SPARK_GRAFT_TRAINER_LOCAL_CAP")  # local replay
+    monkeypatch.setattr(spark_exec, "LOCAL_ROWS_CAP", cap)  # local replay
     fetched = []
     orig_fetch = tr2._fetch_local_batches
 
@@ -403,8 +402,6 @@ def test_fit_fetches_an_over_budget_frame_once(spark, monkeypatch):
     """A frame over the replay budget (the fetch returns None) is
     fetched once while the trainer holds it, not again at every fit;
     assigning `df` releases that outcome like a held replay."""
-    from henbun_spark import spark_exec
-
     calls = []
 
     def over_budget(*a, **k):
@@ -449,9 +446,10 @@ def test_held_replay_serves_later_fits_and_evaluate(spark, monkeypatch, model_cl
     df, _, _ = make_df(spark)
     tr1 = SparkTrainer(model_cls(), df, optimizer=Adam(learning_rate=0.05))
     tr2 = _twin(model_cls, df, tr1._state())
-    monkeypatch.setenv("SPARK_GRAFT_TRAINER_LOCAL_CAP", "0")  # distributed
+    cap = spark_exec.LOCAL_ROWS_CAP
+    monkeypatch.setattr(spark_exec, "LOCAL_ROWS_CAP", 0)  # distributed
     want = _fit_evaluate_pass(tr1)
-    monkeypatch.delenv("SPARK_GRAFT_TRAINER_LOCAL_CAP")  # local replay
+    monkeypatch.setattr(spark_exec, "LOCAL_ROWS_CAP", cap)  # local replay
     tracker = spark.sparkContext.statusTracker()
     tr2.df.count()  # builds the cache, whatever an earlier test cached
     before = set(tracker.getJobIdsForGroup(None))
@@ -487,9 +485,10 @@ def test_reassigned_frame_releases_held_replay(spark, monkeypatch):
 
     tr1 = SparkTrainer(AmortizedVI(), df_a, optimizer=Adam(learning_rate=0.02))
     tr2 = _twin(AmortizedVI, df_a, tr1._state(), lr=0.02)
-    monkeypatch.setenv("SPARK_GRAFT_TRAINER_LOCAL_CAP", "0")  # distributed
+    cap = spark_exec.LOCAL_ROWS_CAP
+    monkeypatch.setattr(spark_exec, "LOCAL_ROWS_CAP", 0)  # distributed
     want = rounds(tr1)
-    monkeypatch.delenv("SPARK_GRAFT_TRAINER_LOCAL_CAP")  # local replay
+    monkeypatch.setattr(spark_exec, "LOCAL_ROWS_CAP", cap)  # local replay
     fetched = []
     orig_fetch = tr2._fetch_local_batches
 
@@ -525,7 +524,8 @@ def _replay_and_distributed(spark, monkeypatch, model_cls, df, lr, maxiter=6):
     m1 = model_cls()
     tr1 = SparkTrainer(m1, df, optimizer=Adam(learning_rate=lr))
     init = tr1._state()
-    monkeypatch.setenv("SPARK_GRAFT_TRAINER_LOCAL_CAP", "0")  # distributed
+    cap = spark_exec.LOCAL_ROWS_CAP
+    monkeypatch.setattr(spark_exec, "LOCAL_ROWS_CAP", 0)  # distributed
     tr1.fit(maxiter=maxiter)
 
     m2 = model_cls()
@@ -534,7 +534,7 @@ def _replay_and_distributed(spark, monkeypatch, model_cls, df, lr, maxiter=6):
         v._array = np.array(init[v.long_name])
         v._pending = None
         v.finalize()
-    monkeypatch.delenv("SPARK_GRAFT_TRAINER_LOCAL_CAP")  # local replay
+    monkeypatch.setattr(spark_exec, "LOCAL_ROWS_CAP", cap)  # local replay
     fetched = []
     orig_fetch = tr2._fetch_local_batches
 
