@@ -3083,22 +3083,21 @@ def equidepth_histogram(spark, sf_dir):
     `ntile() OVER (PARTITION BY event_type ...)`: event_type is
     low-cardinality, so that window sorts ~1/|types| of the table in ONE
     task at 100 TB. Instead the bucket id comes from the IN-PLAN binned
-    per-key rank (`relational.binned_keyed_ranks`: sampled equi-depth
-    value bins -> map-side cell counts -> in-plan broadcast offsets ->
-    within-cell row_number; one data shuffle, no driver round-trip, no
-    pinned partitioning) and `relational.ntile_from_rank`, pure Column
-    math that reproduces ANSI ntile bucket ids bitwise — so the DuckDB
-    ntile oracle still hash-matches while every task sorts only its
-    bin slice."""
+    per-key rank (`relational.keyed_prefix_sum` in rank mode: sampled
+    equi-depth value bins -> map-side cell counts -> in-plan broadcast
+    offsets -> within-cell running count; one data shuffle, no driver
+    round-trip, no pinned partitioning) and `relational.ntile_from_rank`,
+    pure Column math that reproduces ANSI ntile bucket ids bitwise — so
+    the DuckDB ntile oracle still hash-matches while every task sorts
+    only its bin slice."""
     from henbun_spark.operators import relational
 
     ev = _load(spark, sf_dir, "events").select("event_type", "value", "event_id")
-    ranked = relational.binned_keyed_ranks(
+    ranked = relational.keyed_prefix_sum(
         ev,
         "event_type",
-        "value",
-        ["event_id"],
-        "rk",
+        ["value", "event_id"],
+        out_name="rk",
         total_name="__n",  # per-type totals ride the offset broadcast: no extra scan
     )
     return (
@@ -3139,8 +3138,8 @@ def curriculum_order_docs(spark, sf_dir):
     docs = _load(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    ranked = relational.binned_keyed_ranks(
-        docs, [], "n_chars", ["doc_id"], "rk", total_name="__n"
+    ranked = relational.keyed_prefix_sum(
+        docs, [], ["n_chars", "doc_id"], out_name="rk", total_name="__n"
     )
     lev = ranked.withColumn(
         "level", relational.ntile_from_rank(F.col("rk"), F.col("__n"), 10)
@@ -3186,8 +3185,8 @@ def quality_topq_per_source(spark, sf_dir):
             "q"
         ),
     )
-    ranked = relational.binned_keyed_ranks(
-        scored, "source", "q", ["doc_id"], "rk", total_name="n"
+    ranked = relational.keyed_prefix_sum(
+        scored, "source", ["q", "doc_id"], out_name="rk", total_name="n"
     )
     kept = ranked.where(
         F.col("rk") > F.col("n") - F.ceil(F.lit(0.3) * F.col("n"))
@@ -3357,10 +3356,10 @@ def vocab_coverage_curve(spark, sf_dir):
     OCCURRENCES is covered by the top-N vocabulary, at N in {100, 1000,
     5000}? Token frequencies are one map-side-combinable groupBy
     (shuffle bounded by |vocab|, not tokens); the frequency rank comes
-    from the IN-PLAN GLOBAL binned rank over (-freq, token) — web-scale
-    vocabularies are exactly the table a partition-less `row_number()`
-    window would sort in one task — and coverage is a conditional sum
-    per cutoff (exact integer sums; the ratio floor-quantizes to 1e-6
+    from the IN-PLAN GLOBAL binned rank over (freq DESC, token) —
+    web-scale vocabularies are exactly the table a partition-less
+    `row_number()` window would sort in one task — and coverage is a
+    conditional sum per cutoff (exact integer sums; the ratio floor-quantizes to 1e-6
     so the boundary is engine-identical)."""
     from henbun_spark.operators import relational
 
@@ -3371,12 +3370,8 @@ def vocab_coverage_curve(spark, sf_dir):
         ).alias("token")
     )
     vocab = toks.groupBy("token").agg(F.count(F.lit(1)).alias("freq"))
-    ranked = relational.binned_keyed_ranks(
-        vocab.withColumn("negf", -F.col("freq")),
-        [],
-        "negf",
-        ["token"],
-        "rk",
+    ranked = relational.keyed_prefix_sum(
+        vocab, [], [F.desc("freq"), "token"], out_name="rk"
     )
     cutoffs = [100, 1000, 5000]
     agg = ranked.agg(
@@ -7470,9 +7465,9 @@ FROM (
 
 def row_ids_documents(spark, sf_dir):
     """Global consecutive row ids WITHOUT a single-reducer global window:
-    the IN-PLAN binned prefix rank (`relational.binned_prefix_sum`,
+    the IN-PLAN binned prefix rank (`relational.keyed_prefix_sum`,
     rank mode, global, DESC) — sampled value bins, map-side cell
-    counts, in-plan offsets, within-bin row_number; one data shuffle
+    counts, in-plan offsets, within-bin running count; one data shuffle
     and nothing that re-executes a sampled range shuffle across jobs
     (the earlier two-pass form needed a persist pin for that). The
     oracle is the naive `row_number() OVER (ORDER BY ...)` — same ids,
@@ -7480,14 +7475,11 @@ def row_ids_documents(spark, sf_dir):
     from henbun_spark.operators import relational
 
     docs = _load(spark, sf_dir, "documents")
-    out = relational.binned_prefix_sum(
+    out = relational.keyed_prefix_sum(
         docs.select("doc_id", F.length("text").alias("text_len")),
         [],
-        "text_len",
-        ["doc_id"],
-        None,
+        [F.desc("text_len"), "doc_id"],
         out_name="row_id",
-        descending=True,
     )
     return out.select("doc_id", "text_len", "row_id")
 
@@ -7514,8 +7506,8 @@ def row_ids_wide_bins(spark, sf_dir):
     ev = _load(spark, sf_dir, "events").select(
         "event_id", F.col("value").cast("double").alias("value")
     )
-    out = relational.assign_row_ids(
-        ev, [F.asc("value"), F.asc("event_id")], "ord", n_partitions=512
+    out = relational.keyed_prefix_sum(
+        ev, [], [F.asc("value"), F.asc("event_id")], out_name="ord", n_bins=512
     )
     return out.select("event_id", "value", "ord")
 
@@ -7554,8 +7546,8 @@ def row_ids_string_bins(spark, sf_dir):
             )
         ).alias("row_key"),
     )
-    out = relational.assign_row_ids(
-        li, [F.asc("row_key"), F.asc("l_orderkey")], "ord", n_partitions=512
+    out = relational.keyed_prefix_sum(
+        li, [], [F.asc("row_key"), F.asc("l_orderkey")], out_name="ord", n_bins=512
     )
     return out.select("l_orderkey", "l_linenumber", "row_key", "ord")
 
@@ -7576,18 +7568,20 @@ def corpus_layout_order(spark, sf_dir):
     global ordering (source ASC, doc_id ASC) -> consecutive ordinal ->
     round-robin shard id, so re-running data prep on re-ingested data
     yields byte-identical shard assignment. The ordinal comes from the
-    r7 GENERALIZED in-plan `assign_row_ids` with a STRING leading sort
-    key — and because `source` is LOW-cardinality, the COMPOSITE path
-    engages: cells are keyed by the exact source value x doc_id value
-    bins (|sources| x |bins| parallel slices), not one near-global
-    sort task per source. No global window, no persisted scaffold,
-    nothing partition-id dependent; the oracle is the naive
+    r7 GENERALIZED in-plan global rank (`relational.keyed_prefix_sum`,
+    `key_cols=[]`) with a STRING leading sort key — and where the
+    shuffle width asks for more bins than `source` has values, the
+    sampled bounds dedupe below the count requested and the COMPOSITE
+    path engages: cells are keyed by the exact source value x doc_id
+    value bins (|sources| x |bins| parallel slices), not one
+    near-global sort task per source. No global window, no persisted
+    scaffold, nothing partition-id dependent; the oracle is the naive
     `row_number() OVER (ORDER BY source, doc_id)`."""
     from henbun_spark.operators import relational
 
     docs = _load(spark, sf_dir, "documents").select("doc_id", "source")
-    out = relational.assign_row_ids(
-        docs, [F.asc("source"), F.asc("doc_id")], "ord"
+    out = relational.keyed_prefix_sum(
+        docs, [], [F.asc("source"), F.asc("doc_id")], out_name="ord"
     )
     return out.select(
         "doc_id",
@@ -7615,7 +7609,8 @@ def corpus_layout_desc(spark, sf_dir):
     injected deterministically (every 17th doc) because the test data
     has none; the leading key is therefore a COMPUTED nullable string,
     which also exercises the composite low-card path's expression (not
-    bare-column) handling. Oracle is the naive global window."""
+    bare-column) handling wherever that path engages (see
+    `corpus_layout_order`). Oracle is the naive global window."""
     from henbun_spark.operators import relational
 
     docs = _load(spark, sf_dir, "documents").select(
@@ -7624,8 +7619,8 @@ def corpus_layout_desc(spark, sf_dir):
         .otherwise(F.col("source"))
         .alias("src"),
     )
-    out = relational.assign_row_ids(
-        docs, [F.desc_nulls_last("src"), F.asc("doc_id")], "ord"
+    out = relational.keyed_prefix_sum(
+        docs, [], [F.desc_nulls_last("src"), F.asc("doc_id")], out_name="ord"
     )
     return out.select(
         "doc_id",
@@ -7981,22 +7976,21 @@ def rank_gauss_value(spark, sf_dir):
     rank window; the per-type count rides the same window pass. The
     oracle is generated from the same coefficient list with identical
     Horner op order. The rank comes from the IN-PLAN binned per-key
-    rank (`relational.binned_keyed_ranks`: sampled equi-depth value
-    bins, map-side cell counts, in-plan broadcast offsets, within-cell
-    row_number) instead of a `row_number() OVER (PARTITION BY
-    event_type ...)` window — the keyed window sorts ~1/|types| of the
+    rank (`relational.keyed_prefix_sum` in rank mode: sampled
+    equi-depth value bins, map-side cell counts, in-plan broadcast
+    offsets, within-cell running count) instead of a `row_number() OVER
+    (PARTITION BY event_type ...)` window — the keyed window sorts ~1/|types| of the
     table in one task at 100 TB; the binned shape sorts only bin
     slices, with no driver round-trip and nothing partition-id
     dependent."""
     from henbun_spark.operators import relational
 
     ev = _load(spark, sf_dir, "events").select("event_type", "value", "event_id")
-    ranked = relational.binned_keyed_ranks(
+    ranked = relational.keyed_prefix_sum(
         ev,
         "event_type",
-        "value",
-        ["event_id"],
-        "__rk",
+        ["value", "event_id"],
+        out_name="__rk",
         total_name="__n",  # per-type totals ride the offset broadcast: no extra scan
     ).select(
         "event_type",

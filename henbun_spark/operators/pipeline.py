@@ -9,9 +9,11 @@ Design rules shared by every operator here:
   identical under repartitioning, retries, speculative execution, and
   across engines (the DuckDB oracles mirror the same nibble arithmetic);
 * no driver-side loops — mixing is a pure-Column filter (zero shuffle),
-  packing is one window keyed on the shard column, contamination is an
-  inverted-index semi-join (shuffle keyed on the n-gram, never a cross
-  join of corpus x benchmark).
+  packing is the md5-bucketed prefix sum (`relational.
+  md5_bucketed_prefix_sum`: per-(shard, hash-prefix bucket) windows plus
+  an in-plan offsets table, never one window per shard), contamination
+  is an inverted-index semi-join (shuffle keyed on the n-gram, never a
+  cross join of corpus x benchmark).
 """
 
 from __future__ import annotations

@@ -672,7 +672,8 @@ def _lead_confirmed_low_card(df, entry) -> bool:
     """One shuffle-free-cheap aggregate (HLL++ partials) confirming the
     leading sort expression really has few distinct values before the
     composite path keys cells by the exact value. Runs ONLY when the
-    sampled bounds already deduped below `LOW_CARD_LEAD_BOUNDS`."""
+    sampled bounds deduped below the count requested (and below
+    `LOW_CARD_LEAD_BOUNDS`)."""
     child, _desc, _nf = _unwrap_sort(entry)
     if child is None:
         return False
@@ -686,24 +687,27 @@ def _lead_confirmed_low_card(df, entry) -> bool:
 
 
 def _generic_binned_offsets(df, kcols, order_by, wcol, n_bins):
-    """`_binned_cells` generalized to an arbitrary ``order_by`` leading
-    expression: (df + __bin, offsets, degenerate) — cells aggregate
-    map-side, offsets come from a window over the tiny cells table,
-    everything stays in-plan. ``degenerate`` is True when binning was
-    unavailable (empty sample / exotic type / unwrap failure): `__bin`
-    is then a CONSTANT, so a constant==constant join clause would
-    constant-fold away — with no key columns left that degrades the
-    broadcast HASH join to a BroadcastNestedLoopJoin (audit-banned).
-    Callers with kcols=[] must skip the join on degenerate input (the
-    offsets are all zero anyway); keyed callers keep it (the key
-    equality clauses preserve the hash join)."""
+    """Order-aligned bins over the leading ``order_by`` expression and
+    their in-plan offsets: ``(df + __bin, offsets, cell_keys,
+    degenerate)``. Cells aggregate map-side, offsets come from a window
+    over the tiny cells table, everything stays in-plan. ``cell_keys``
+    is ``kcols``, plus ``__lead`` on the composite path. ``degenerate``
+    is True when binning was unavailable (empty sample / exotic type /
+    unwrap failure): `__bin` is then a CONSTANT, so a constant==constant
+    join clause would constant-fold away — with no key columns left
+    that degrades the broadcast HASH join to a BroadcastNestedLoopJoin
+    (audit-banned). `keyed_prefix_sum` skips the join on degenerate
+    global input (the offsets are all zero anyway); keyed input keeps
+    it (the key equality clauses preserve the hash join)."""
     n_bins = min(n_bins or _shuffle_width(df.sparkSession), MAX_VALUE_BINS)
     bin_expr, desc, degenerate, n_bounds = _leading_sort_bins(
         df, order_by, n_bins
     )
     if (
         not degenerate
-        and n_bounds < LOW_CARD_LEAD_BOUNDS
+        # a continuous lead yields the n_bins - 1 bounds requested; only
+        # a sample that deduplicated below that may be low-cardinality
+        and n_bounds < min(LOW_CARD_LEAD_BOUNDS, n_bins - 1)
         and len(order_by) >= 2
         and _lead_confirmed_low_card(df, order_by[0])
     ):
@@ -730,168 +734,75 @@ def _generic_binned_offsets(df, kcols, order_by, wcol, n_bins):
                     lead.asc_nulls_first() if nf1 else lead.asc_nulls_last()
                 )
             b = df.withColumn("__lead", child1).withColumn("__bin", bin2)
-            cells = b.groupBy(*kcols, "__lead", "__bin").agg(
-                F.sum(wcol).alias("__bn")
-            )
-            off = _offsets_from_cells(
-                cells, kcols, desc2, pre_order=[border1],
-                extra_cols=("__lead",),
-            )
+            off = _offsets_from_cells(b, wcol, kcols, desc2, lead_order=border1)
             return b, off, [*kcols, "__lead"], False
     b = df.withColumn("__bin", bin_expr)
-    cells = b.groupBy(*kcols, "__bin").agg(F.sum(wcol).alias("__bn"))
-    return b, _offsets_from_cells(cells, kcols, desc), list(kcols), degenerate
+    return b, _offsets_from_cells(b, wcol, kcols, desc), list(kcols), degenerate
 
 
-def _offsets_from_cells(cells, kcols, descending, pre_order=None, extra_cols=()):
-    """Exclusive per-key bin offsets + per-key totals from the tiny
-    (key[, lead], bin, weight) cells table — one window over cells,
-    broadcast back by the caller. ``pre_order`` prepends sort columns
-    (the composite path's exact leading value, with its direction and
-    nulls placement) before the bin walk; ``extra_cols`` carries those
-    columns through to the offsets output. Shared by `_binned_cells`
-    (numeric value binning) and `_generic_binned_offsets` (arbitrary
-    leading sort, one- or two-level)."""
+def _offsets_from_cells(b, wcol, kcols, descending, lead_order=None):
+    """Exclusive per-cell offsets + per-key totals of ``wcol``: one
+    map-side-combinable aggregate per (key[, __lead], __bin) cell, then
+    one window over that tiny cells table, broadcast back by
+    `_join_binned_offsets`. ``lead_order`` (the composite path's exact
+    leading value, with its direction and nulls placement) sorts before
+    the bin walk, and ``__lead`` rides through to the offsets."""
+    lead = [] if lead_order is None else ["__lead"]
+    cells = b.groupBy(*kcols, *lead, "__bin").agg(F.sum(wcol).alias("__bn"))
     border = F.col("__bin").desc() if descending else F.col("__bin").asc()
     wb = (
         Window.partitionBy(*kcols)
-        .orderBy(*list(pre_order or []), border)
+        .orderBy(*([lead_order] if lead else []), border)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     wt = Window.partitionBy(*kcols)
     return cells.select(
         *kcols,
-        *extra_cols,
+        *lead,
         "__bin",
         F.coalesce(F.sum("__bn").over(wb), F.lit(0)).alias("__boff"),
         F.sum("__bn").over(wt).alias("__btot"),
     )
 
 
-def assign_row_ids(
-    df: DataFrame,
-    order_by: list,
-    id_name: str = "row_id",
-    n_partitions: int | None = None,
-) -> DataFrame:
-    """Global consecutive row ids (1-based) in `order_by` order WITHOUT
-    the single-reducer global window (`row_number() OVER (ORDER BY ...)`
-    with no partition key funnels 100 TB through one task).
-
-    IN-PLAN since r7 (the two-pass persisted range-partition scaffold is
-    gone): order-aligned bins over the leading sort expression
-    (`_leading_sort_bins` — numeric, string, date, timestamp, boolean;
-    other types degrade to the plain window), per-bin counts via a
-    map-side-combinable aggregate, exclusive offsets from a window over
-    the tiny cells table, within-bin `row_number` over the FULL
-    ordering + broadcast offset. Nothing partition-id-dependent, no
-    persisted state, no driver offset round-trip — bin membership is a
-    pure function of the leading value, so the plan is deterministic
-    across any re-execution. The ordering must be total (include a
-    tiebreak column) for the ids to be deterministic.
-
-    `order_by` takes Column expressions (e.g. ``[F.desc("score"),
-    F.asc("doc_id")]``) or column-name strings (ascending).
-    ``n_partitions`` (optional) overrides the bin count.
-    """
-    ocols = [F.asc(c) if isinstance(c, str) else c for c in order_by]
-    b, off, cell_keys, degenerate = _generic_binned_offsets(
-        df, [], order_by, F.lit(1).cast("long"), n_partitions
-    )
-    w = Window.partitionBy(*cell_keys, "__bin").orderBy(*ocols)
-    if degenerate:
-        # single constant bin: every offset is 0 and a join on a
-        # constant key would fold to a BNLJ — this IS the plain global
-        # window, the documented tiny-data / exotic-type fallback
-        return b.withColumn(
-            id_name, F.row_number().over(w).cast("long")
-        ).select(*df.columns, id_name)
-    return (
-        _join_binned_offsets(b, off, cell_keys)
-        .withColumn(id_name, F.row_number().over(w) + F.col("__boff"))
-        .select(*df.columns, id_name)
-    )
-
-
-def assign_keyed_ranks(
-    df: DataFrame,
-    key_cols,
-    order_by: list,
-    rank_name: str = "rank",
-    n_partitions: int | None = None,
-    total_name: str | None = None,
-) -> DataFrame:
-    """Per-key consecutive ranks (1-based `row_number()` within each key,
-    ordered by `order_by`) WITHOUT a per-key single-task window sort.
-
-    `row_number() OVER (PARTITION BY k ORDER BY ...)` puts each key's
-    ENTIRE row set into one task; for a low-cardinality key (event_type,
-    language, shard) that is ~1/|keys| of the table sorted — and spilled
-    — by a single task at 100 TB.
-
-    IN-PLAN since r7 — the arbitrary-ordering generalization of
-    `binned_keyed_ranks` (which remains the lean path when the leading
-    key is a bare numeric column):
-
-    1. order-aligned bins over the LEADING sort expression
-       (`_leading_sort_bins`: numeric/date/timestamp through sampled
-       ~equi-depth value bounds, strings through hash-sampled
-       lexicographic bounds, direction and nulls ordering honored;
-       a leading-value class never splits across bins);
-    2. per-(key, bin) counts via a map-side-combinable aggregate (the
-       only extra shuffle is these tiny cell rows); exclusive per-key
-       bin offsets AND per-key totals from a window over the cells
-       table — in-plan, broadcast back (NULL-SAFE key join: NULL-key
-       rows are ranked, matching the window's NULL partition);
-    3. within-(key, bin) `row_number` over the FULL ordering + offset:
-       ONE shuffle of the data, each window partition
-       ~1/(|keys| x |bins|) of it.
-
-    No driver round-trip, no persisted two-pass partitioning to pin,
-    nothing partition-id-dependent — bin membership is a pure function
-    of the leading value (pytest asserts bitwise equality with the
-    `row_number()` window, including under forced-aggressive AQE
-    coalescing). Bin quality affects balance only, never correctness.
-    The ordering must be total per key (include a tiebreak column) for
-    deterministic ranks.
-
-    Regime: this targets LOW/MODERATE key cardinality — the offsets
-    broadcast is |keys| x |bins| rows, and that is exactly the regime
-    where the keyed window dies. For HIGH-cardinality keys (user_id,
-    doc_id) use the plain `row_number()` window: each key's partition
-    is small, the sort parallelizes fine, and the offsets table would
-    grow with |keys| for no benefit.
-
-    `total_name` (optional) also attaches each key's TOTAL row count as
-    a column — for free: the totals ride the same offsets broadcast, so
-    consumers that need (rank, n) pairs (ntile, rank-gauss
-    u = (rk-0.5)/n, percentile positions) skip a whole extra
-    scan + aggregate + broadcast join.
-    """
-    kcols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    ocols = [F.asc(c) if isinstance(c, str) else c for c in order_by]
-    b, off, cell_keys, degenerate = _generic_binned_offsets(
-        df, kcols, order_by, F.lit(1).cast("long"), n_partitions
-    )
-    if degenerate and not kcols:
-        w = Window.partitionBy("__bin").orderBy(*ocols)
-        out = b.withColumn(rank_name, F.row_number().over(w).cast("long"))
-        if total_name:
-            out = out.withColumn(
-                total_name, F.count(F.lit(1)).over(Window.partitionBy("__bin"))
-            )
-        return out.select(
-            *df.columns, rank_name, *([total_name] if total_name else [])
+def _cell_running_sum(
+    df, b, off, cell_keys, ocols, wcol, out_name, inclusive, total_name=None
+):
+    """The per-row half of the primitive: the running sum of ``wcol``
+    inside each (cell_keys, __bin) cell over the FULL ordering
+    ``ocols``, plus the cell's broadcast offset — ONE shuffle of the
+    data, each window partition one cell. ``off=None`` is the
+    degenerate global case: one constant bin, every offset 0 and no
+    join (on the constant bin alone it would fold to a
+    BroadcastNestedLoopJoin) — the plain global window, the documented
+    tiny-data / exotic-type fallback."""
+    if off is None:
+        out = b.withColumn("__boff", F.lit(0).cast("long")).withColumn(
+            "__btot", F.sum(wcol).over(Window.partitionBy("__bin"))
         )
-    wc = Window.partitionBy(*cell_keys, "__bin").orderBy(*ocols)
-    out = _join_binned_offsets(b, off, cell_keys).withColumn(
-        rank_name, F.row_number().over(wc) + F.col("__boff")
+    else:
+        out = _join_binned_offsets(b, off, cell_keys)
+    w = (
+        Window.partitionBy(*cell_keys, "__bin")
+        .orderBy(*ocols)
+        .rowsBetween(Window.unboundedPreceding, 0)
     )
-    extra = []
+    run = F.sum(wcol).over(w)
+    if not inclusive:
+        run = run - wcol
+    cols = [*df.columns, (run + F.col("__boff")).alias(out_name)]
     if total_name:
-        out = out.withColumn(total_name, F.col("__btot"))
-        extra = [total_name]
-    return out.select(*df.columns, rank_name, *extra)
+        cols.append(F.col("__btot").alias(total_name))
+    return out.select(*cols)
+
+
+def _long_weight(df: DataFrame, weight_col: str | None, fn: str):
+    """``weight_col`` as a long Column (integer columns only), or the
+    constant 1 — a row count, i.e. a rank — when it is None."""
+    if weight_col is None:
+        return F.lit(1).cast("long")
+    _require_integer_weight(df, weight_col, fn)
+    return F.col(weight_col).cast("long")
 
 
 def _require_integer_weight(df: DataFrame, weight_col: str, fn: str) -> None:
@@ -911,46 +822,80 @@ def keyed_prefix_sum(
     df: DataFrame,
     key_cols,
     order_by: list,
-    weight_col: str,
+    weight_col: str | None = None,
     out_name: str = "prefix_sum",
-    n_partitions: int | None = None,
+    inclusive: bool = False,
+    total_name: str | None = None,
+    n_bins: int | None = None,
 ) -> DataFrame:
-    """EXCLUSIVE per-key running sum of an integer ``weight_col`` in
-    `order_by` order — the prefix-sum sibling of `assign_keyed_ranks`
-    (same in-plan binned offsets, weighted), for the same
-    low-cardinality-key regime where `sum() OVER (PARTITION BY k ORDER
-    BY ...)` funnels each key through one task: sequence packing
-    offsets per source shard, byte offsets per file group, token
-    budgets per language. For md5-ordered flows prefer
-    `md5_bucketed_prefix_sum`; for a bare numeric leading key,
-    `binned_prefix_sum`.
+    """Per-key running sum of an integer ``weight_col`` — or the 1-based
+    rank (`row_number()`) when ``weight_col`` is None — in `order_by`
+    order, WITHOUT a single-task window sort: the one in-plan
+    rank/prefix-sum primitive. ``key_cols=[]`` gives a GLOBAL rank or
+    sum, where `row_number() OVER (ORDER BY ...)` funnels the whole
+    table through one task; with keys, `... OVER (PARTITION BY k ...)`
+    sorts ~1/|keys| of the table in one task for a low-cardinality key
+    (event_type, source, language, shard).
 
-    Integer weights make the sum exact under any grouping, so the
-    result is bitwise the window's. Ordering must be total per key;
-    NULL-key rows are kept (null-safe offset join), matching the
-    window. Input column order is preserved, with ``out_name``
-    appended.
+    1. order-aligned bins over the LEADING sort expression
+       (`_leading_sort_bins`: numeric/boolean/date/timestamp through
+       sampled ~equi-depth value bounds, strings through sampled
+       lexicographic bounds, direction and nulls ordering honored; a
+       leading-value class never splits across bins; other types
+       degrade to the single-bin plain window). When the sampled
+       bounds deduplicate below the count requested and the lead is
+       confirmed low-cardinality, cells are keyed by the exact leading
+       value x bins of the second entry (`_generic_binned_offsets`);
+    2. per-(key, bin) weight totals via a map-side-combinable aggregate
+       (the only extra shuffle is these tiny cell rows); exclusive
+       per-key bin offsets AND per-key totals from a window over the
+       cells table — in-plan, broadcast back (NULL-SAFE key join:
+       NULL-key rows are kept, matching the window's NULL partition);
+    3. within-cell running sum over the FULL ordering + offset: ONE
+       shuffle of the data, each window partition ~1/(|keys| x |bins|)
+       of it.
+
+    No driver round-trip, nothing persisted, nothing partition-id-
+    dependent — bin membership is a pure function of the leading value,
+    so the result is bitwise the `row_number()` / `sum() OVER` window's
+    (pytest-pinned, including NULLs, NaN and AQE coalescing). Bin
+    quality affects balance only, never correctness. The ordering must
+    be total per key (include a tiebreak column) to be deterministic.
+
+    `order_by` takes Column expressions (e.g. ``[F.desc("score"),
+    F.asc("doc_id")]``) or column-name strings (ascending).
+    ``inclusive`` selects the running total including the row (budget
+    semantics) over the exclusive one (offset semantics); a rank is a
+    rank either way. Integer weights only — fractional sums are not
+    exact under regrouping. ``total_name`` also attaches each key's
+    total weight (row count in rank mode) — for free, it rides the
+    offsets broadcast, so (rank, n) consumers (ntile, rank-gauss,
+    percentile positions) skip an extra scan + aggregate + join.
+    ``n_bins`` overrides the bin count (default: the shuffle width).
+
+    Regime: LOW/MODERATE key cardinality — the offsets broadcast is
+    |keys| x |bins| rows. For HIGH-cardinality keys (user_id, doc_id)
+    use the plain window: each key's partition is small already. For
+    md5-ordered flows `md5_bucketed_prefix_sum` needs no sampling job.
+    Input column order is preserved, with ``out_name`` (and
+    ``total_name``) appended.
     """
-    _require_integer_weight(df, weight_col, "keyed_prefix_sum")
     kcols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    ocols = [F.asc(c) if isinstance(c, str) else c for c in order_by]
-    wcol = F.col(weight_col).cast("long")
+    wcol = _long_weight(df, weight_col, "keyed_prefix_sum")
     b, off, cell_keys, degenerate = _generic_binned_offsets(
-        df, kcols, order_by, wcol, n_partitions
+        df, kcols, order_by, wcol, n_bins
     )
-    w = (
-        Window.partitionBy(*cell_keys, "__bin")
-        .orderBy(*ocols)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    if degenerate and not kcols:
-        return b.withColumn(out_name, F.sum(wcol).over(w) - wcol).select(
-            *df.columns, out_name
-        )
-    return (
-        _join_binned_offsets(b, off, cell_keys)
-        .withColumn(out_name, F.sum(wcol).over(w) - wcol + F.col("__boff"))
-        .select(*df.columns, out_name)
+    ocols = [F.asc(c) if isinstance(c, str) else c for c in order_by]
+    return _cell_running_sum(
+        df,
+        b,
+        None if degenerate and not kcols else off,
+        cell_keys,
+        ocols,
+        wcol,
+        out_name,
+        inclusive=inclusive or weight_col is None,
+        total_name=total_name,
     )
 
 
@@ -971,17 +916,14 @@ def md5_bucketed_prefix_sum(
 
     Key insight: the first ``prefix_chars`` hex chars of the hash are
     ORDER-ALIGNED with the full-hash sort (lexicographic prefix), so
-    they form 16^prefix_chars contiguous buckets per key. The plan is
-    pure DataFrame ops end-to-end:
-
-    1. map-side-combinable (key, bucket) weight totals — a tiny table
-       (|keys| x 16^prefix_chars rows);
-    2. per-key exclusive bucket offsets via a window over THAT tiny
-       table (each key's window is 16^prefix_chars rows — trivial);
-    3. broadcast-join the offsets back; running sum inside each
-       (key, bucket) cell — a parallel window whose partitions are
-       ~1/(|keys| * 16^prefix_chars) of the data (raise prefix_chars
-       for more parallelism at bigger scale).
+    they form 16^prefix_chars contiguous buckets per key — the bins of
+    `keyed_prefix_sum` without its sampling job. The buckets feed the
+    same in-plan tail: per-(key, bucket) weight totals and offsets
+    (`_offsets_from_cells`, a window over a |keys| x 16^prefix_chars
+    table), broadcast back (`_join_binned_offsets`), and a running sum
+    inside each (key, bucket) cell — a parallel window whose partitions
+    are ~1/(|keys| * 16^prefix_chars) of the data (raise prefix_chars
+    for more parallelism at bigger scale).
 
     md5 is uniform, so cells are balanced. Integer weights keep the
     offsets bitwise equal to the single window's. One data shuffle
@@ -989,11 +931,11 @@ def md5_bucketed_prefix_sum(
     count as the naive keyed window, without its single-task sort.
 
     NULL keys and NULL hashes are first-class: the offset join is
-    null-safe (`<=>`), NULL hash rows form the lowest bucket, and both
-    sort ascending-nulls-first — matching the keyed window's NULL
-    grouping/ordering exactly. (Rows with the SAME (hash, tiebreak)
-    pair — e.g. several NULL-id rows in one key — tie, and tie order is
-    arbitrary in the window too.)
+    null-safe (`<=>`) on the keys, NULL hash rows form the lowest
+    bucket (-1), and both sort ascending-nulls-first — matching the
+    keyed window's NULL grouping/ordering exactly. (Rows with the SAME
+    (hash, tiebreak) pair — e.g. several NULL-id rows in one key — tie,
+    and tie order is arbitrary in the window too.)
     """
     if prefix_chars is None:
         # derive from the session's shuffle width so cells stay at
@@ -1010,51 +952,21 @@ def md5_bucketed_prefix_sum(
         # 16^12 buckets is already absurd; beyond 15 the long overflows
         raise ValueError(f"prefix_chars must be in [1, 12], got {prefix_chars}")
     kcols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    wcol = (
-        F.lit(1).cast("long")
-        if weight_col is None
-        else F.col(weight_col).cast("long")
-    )
-    if weight_col is not None:
-        _require_integer_weight(df, weight_col, "md5_bucketed_prefix_sum")
+    wcol = _long_weight(df, weight_col, "md5_bucketed_prefix_sum")
     bucket = F.conv(
         F.substring(F.col(hash_col), 1, prefix_chars), 16, 10
     ).cast("long")
-    b = df.withColumn("__bkt", bucket)
-    cell = b.groupBy(*kcols, "__bkt").agg(F.sum(wcol).alias("__bs"))
-    wb = (
-        Window.partitionBy(*kcols)
-        .orderBy("__bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    b = df.withColumn("__bin", F.coalesce(bucket, F.lit(-1).cast("long")))
+    return _cell_running_sum(
+        df,
+        b,
+        _offsets_from_cells(b, wcol, kcols, False),
+        kcols,
+        [F.col(hash_col).asc(), F.col(tiebreak_col).asc()],
+        wcol,
+        out_name,
+        inclusive=weight_col is None,
     )
-    off = cell.select(
-        *kcols,
-        "__bkt",
-        F.coalesce(F.sum("__bs").over(wb), F.lit(0)).alias("__boff"),
-    )
-    wc = (
-        Window.partitionBy(*kcols, "__bkt")
-        .orderBy(F.col(hash_col).asc(), F.col(tiebreak_col).asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    # null-safe (<=>) offset join: NULL keys / NULL-hash buckets keep
-    # their offsets instead of being silently dropped (still a
-    # broadcast hash join — <=> is an equi-join condition)
-    off_r = off.select(
-        *[F.col(k).alias(f"__kr{i}") for i, k in enumerate(kcols)],
-        F.col("__bkt").alias("__bktr"),
-        "__boff",
-    )
-    cond = [b[k].eqNullSafe(off_r[f"__kr{i}"]) for i, k in enumerate(kcols)]
-    cond.append(b["__bkt"].eqNullSafe(off_r["__bktr"]))
-    out = (
-        b.join(F.broadcast(off_r), cond)
-        .drop(*[f"__kr{i}" for i in range(len(kcols))], "__bktr")
-        .withColumn(out_name, F.sum(wcol).over(wc) - wcol + F.col("__boff"))
-    )
-    if weight_col is None:
-        out = out.withColumn(out_name, F.col(out_name) + 1)  # 1-based rank
-    return out.select(*df.columns, out_name)
 
 
 #: Upper clamp for derived bin counts: bounds the cells-table size
@@ -1075,10 +987,11 @@ MAX_VALUE_BINS = 4096
 CODEGEN_SAFE_BOUNDS = 256
 
 #: Composite-binning trigger: a leading sort key whose sampled bounds
-#: dedupe below this is low-cardinality — one bin per value class would
-#: leave each cell a ~n/|values| single-task sort, so the generalized
-#: primitives re-bin on the SECOND order entry within exact leading-
-#: value classes (see _generic_binned_offsets).
+#: dedupe below this (and below the n_bins - 1 requested) may be
+#: low-cardinality — one bin per value class would leave each cell a
+#: ~n/|values| single-task sort, so `keyed_prefix_sum` re-bins on the
+#: SECOND order entry within exact leading-value classes (see
+#: _generic_binned_offsets).
 LOW_CARD_LEAD_BOUNDS = 32
 
 
@@ -1104,8 +1017,9 @@ def _sampled_value_bounds(df, vexpr, n_bins):
     this). accuracy=100 bounds rank error at ~1%, which only affects
     bin BALANCE, never correctness. NaN must be excluded here: it would
     poison the sketch before any downstream NaN check fires. Returns a
-    sorted deduplicated list (possibly empty). Shared by `_binned_cells`
-    and `_percentile_value_cells` so the bin definition cannot drift."""
+    sorted deduplicated list (possibly empty). Shared by
+    `_leading_sort_bins` and `_percentile_value_cells` so the bin
+    definition cannot drift."""
     qsrc = df.select(vexpr.alias("__v")).where(
         F.col("__v").isNotNull() & ~F.isnan("__v")
     )
@@ -1379,150 +1293,6 @@ def _percentile_targets(cells, ps, kcols_types):
     )
     rschema = T.StructType(common + [T.StructField("__v", T.DoubleType())])
     return need, schema, resolved, rschema
-
-
-def binned_keyed_ranks(
-    df: DataFrame,
-    key_cols,
-    value_col: str,
-    tiebreak_cols,
-    rank_name: str = "rank",
-    total_name: str | None = None,
-    n_bins: int | None = None,
-) -> DataFrame:
-    """Per-key 1-based rank in ``(value ASC, *tiebreaks ASC)`` order
-    with IN-PLAN offsets — the arbitrary-numeric-value generalization
-    of `md5_bucketed_prefix_sum`, and the lean single-numeric-column
-    path beside the fully general `assign_keyed_ranks` (r7: itself
-    in-plan over `_leading_sort_bins`):
-
-    1. sampled ~equi-depth bin boundaries over the value column
-       (`percentile_approx`: one codegen aggregate, NO data movement)
-       — bins are ORDER-ALIGNED contiguous slices of the
-       value axis, and a value class never splits across bins;
-    2. per-(key, bin) counts via a map-side-combinable aggregate (the
-       only extra shuffle is these tiny cell rows); exclusive per-key
-       bin offsets AND per-key totals from a window over that tiny
-       cells table — in-plan, broadcast back;
-    3. within-cell `row_number` (+ offset): ONE shuffle of the data,
-       each window partition ~1/(|keys| x |bins|) of it.
-
-    vs `assign_keyed_ranks`: no driver round-trip, no persisted
-    two-pass partitioning to pin, nothing partition-id-dependent —
-    bin membership is a pure function of the value. Bin quality
-    affects balance only, never correctness (pytest asserts bitwise
-    equality with the `row_number()` window). NULLs sort first and
-    NaNs last, exactly like the ASC window; NULL-KEY rows are kept
-    (the offset join is null-safe, matching the window's NULL
-    partition); ties beyond
-    (value, *tiebreaks) make ranks nondeterministic in both shapes.
-    Values may be any numeric type (binning compares through a double
-    cast, which can only COARSEN bins, never reorder them).
-    """
-    kcols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    tcols = (
-        [tiebreak_cols] if isinstance(tiebreak_cols, str) else list(tiebreak_cols)
-    )
-    b, off = _binned_cells(
-        df, kcols, value_col, F.lit(1).cast("long"), n_bins, descending=False
-    )
-    wc = Window.partitionBy(*kcols, "__bin").orderBy(
-        F.col(value_col).asc(), *[F.col(t).asc() for t in tcols]
-    )
-    out = _join_binned_offsets(b, off, kcols).withColumn(
-        rank_name, F.row_number().over(wc) + F.col("__boff")
-    )
-    extra = []
-    if total_name:
-        out = out.withColumn(total_name, F.col("__btot"))
-        extra = [total_name]
-    return out.select(*df.columns, rank_name, *extra)
-
-
-def _binned_cells(df, kcols, value_col, wcol, n_bins, descending):
-    """Shared core of the binned primitives: sampled ~equi-depth bin
-    boundaries over the value column (`approxQuantile` — one scan, GK
-    sketch, no data movement), the order-aligned `__bin` column (a pure
-    function of the value: NULL -> first in ASC / own trailing bin in
-    DESC, NaN -> Spark's NaN-greatest ordering, boundary-equal values
-    go low, a value class never splits), per-(key, bin) weight totals,
-    and the broadcast in-plan offsets table. Returns
-    (df + __bin, offsets [kcols, __bin, __boff exclusive, __btot])."""
-    spark = df.sparkSession
-    n_bins = min(n_bins or _shuffle_width(spark), MAX_VALUE_BINS)
-    vd = F.col(value_col).cast("double")
-    bounds = _sampled_value_bounds(df, vd, n_bins)
-    bin_asc = _bin_expr_from_bounds(bounds, vd)
-    if descending and bounds:
-        # DESC: NULL must sort LAST (window desc-nulls-last) -> give
-        # NULL its own bin below every real one; NaN (greatest)
-        # already lands in the top bin and desc puts it first
-        bin_expr = F.when(vd.isNull(), F.lit(-1)).otherwise(bin_asc)
-    else:
-        bin_expr = bin_asc  # NULL -> bin 0, nulls-first like ASC
-    b = df.withColumn("__bin", bin_expr)
-    cells = b.groupBy(*kcols, "__bin").agg(F.sum(wcol).alias("__bn"))
-    return b, _offsets_from_cells(cells, kcols, descending)
-
-
-def binned_prefix_sum(
-    df: DataFrame,
-    key_cols,
-    value_col: str,
-    tiebreak_cols,
-    weight_col: str | None,
-    out_name: str = "prefix_sum",
-    descending: bool = False,
-    n_bins: int | None = None,
-    inclusive: bool = False,
-) -> DataFrame:
-    """Per-key (or GLOBAL, with ``key_cols=[]``) running sum of an
-    integer weight — or 1-based rank when ``weight_col`` is None — in
-    ``(value ASC|DESC, *tiebreaks ASC)`` order, with IN-PLAN offsets:
-    the prefix-sum sibling of `binned_keyed_ranks` (same sampled
-    equi-depth value bins, same tiny in-plan cells/offsets table, same
-    single data shuffle) and the scale-safe replacement for the
-    global running-sum window (single reducer); like every in-plan
-    binned primitive, nothing here crosses jobs or depends on
-    partition ids (the retired two-pass scaffolds needed a persist pin
-    for exactly that).
-
-    ``descending=True`` reverses the VALUE order only (tiebreaks stay
-    ascending), with the window's NULL placement (ASC nulls first,
-    DESC nulls last) and Spark's NaN-greatest semantics reproduced
-    bitwise. ``inclusive`` selects running-total-including-the-row
-    (budget semantics) vs exclusive (offset semantics). Integer weights
-    only — fractional sums are not exact under regrouping.
-    """
-    kcols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    tcols = (
-        [tiebreak_cols] if isinstance(tiebreak_cols, str) else list(tiebreak_cols)
-    )
-    if weight_col is not None:
-        _require_integer_weight(df, weight_col, "binned_prefix_sum")
-    wcol = (
-        F.lit(1).cast("long")
-        if weight_col is None
-        else F.col(weight_col).cast("long")
-    )
-    b, off = _binned_cells(df, kcols, value_col, wcol, n_bins, descending)
-    vorder = (
-        F.col(value_col).desc() if descending else F.col(value_col).asc()
-    )
-    wc = (
-        Window.partitionBy(*kcols, "__bin")
-        .orderBy(vorder, *[F.col(t).asc() for t in tcols])
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    out = _join_binned_offsets(b, off, kcols).withColumn(
-        out_name,
-        F.sum(wcol).over(wc)
-        - (F.lit(0) if inclusive else wcol)
-        + F.col("__boff"),
-    )
-    if weight_col is None and not inclusive:
-        out = out.withColumn(out_name, F.col(out_name) + 1)  # 1-based rank
-    return out.select(*df.columns, out_name)
 
 
 def keyed_percentiles_exact(

@@ -6,7 +6,7 @@ a training mix.
 The naive formulation is a running sum over a GLOBAL ordering, which in
 Spark means a window with no partition key — every row moves to ONE
 reducer (the canonical scale failure). The running sum comes from
-`relational.binned_prefix_sum` (r6): sampled equi-depth score bins ->
+`relational.keyed_prefix_sum`: sampled equi-depth score bins ->
 map-side per-bin weight totals -> IN-PLAN exclusive bin offsets ->
 within-bin running sum. One data shuffle, no driver round-trip, and —
 unlike the earlier two-pass range-partition form — nothing that
@@ -57,16 +57,14 @@ def take_budget(
     total INCLUDING the row)."""
     from henbun_spark.operators import relational
 
-    out = relational.binned_prefix_sum(
+    out = relational.keyed_prefix_sum(
         df,
         [],
-        score_col,
-        [id_col],
+        [F.desc(score_col), id_col],
         weight_col,
         out_name="cum_weight",
-        descending=True,
-        n_bins=n_partitions,
         inclusive=True,
+        n_bins=n_partitions,
     )
     return out.where(F.col("cum_weight") <= budget)
 

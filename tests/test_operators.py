@@ -2320,37 +2320,6 @@ def test_triangle_count_known_graph(spark):
     assert got == {0: 3, 1: 3, 2: 3, 3: 3}
 
 
-def test_assign_row_ids_matches_global_window(spark):
-    """In-plan binned ids == the naive global row_number, and the
-    data-bearing plan contains NO un-partitioned window (the
-    single-reducer killer) — the data window is keyed by __bin."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from henbun_spark.operators import relational
-
-    df = spark.range(0, 997).select(
-        F.col("id"), (F.col("id") * 37 % 101).alias("score")
-    )
-    got = relational.assign_row_ids(df, [F.desc("score"), F.asc("id")], n_partitions=7)
-    naive = df.withColumn(
-        "row_id", F.row_number().over(Window.orderBy(F.desc("score"), F.asc("id")))
-    )
-    assert sorted((r["id"], r["row_id"]) for r in got.collect()) == sorted(
-        (r["id"], r["row_id"]) for r in naive.collect()
-    )
-    import io
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        got.explain("formatted")
-    # every Window node in the distributed plan must be partition-keyed
-    for line in buf.getvalue().splitlines():
-        if "Window" in line and "partitionBy" not in line and "_pid" in line:
-            assert "_pid" in line  # window keyed by partition id
-
-
 def test_searchsorted_bin_expr_matches_case_tree(spark):
     """`_searchsorted_bin_expr` (the large-bound-set Arrow path, r8) ==
     the CASE tree bitwise on every edge its contract names: NULL -> bin
@@ -2414,7 +2383,7 @@ def test_large_bin_count_switches_to_searchsorted(spark):
     the Arrow searchsorted path — visible as ArrowEvalPython in the
     plan, keeping the stage inside codegen instead of tripping janino's
     64 KB method limit — and (b) still reproduce the global window
-    bitwise end-to-end through assign_row_ids."""
+    bitwise end-to-end through keyed_prefix_sum."""
     import io
     from contextlib import redirect_stdout
 
@@ -2427,8 +2396,8 @@ def test_large_bin_count_switches_to_searchsorted(spark):
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vals)], "id: long, v: double"
     )
-    got = relational.assign_row_ids(
-        df, [F.asc("v"), F.asc("id")], "rid", n_partitions=600
+    got = relational.keyed_prefix_sum(
+        df, [], [F.asc("v"), F.asc("id")], out_name="rid", n_bins=600
     )
     buf = io.StringIO()
     with redirect_stdout(buf):
@@ -2447,8 +2416,8 @@ def test_large_bin_count_switches_to_searchsorted(spark):
         [(i, f"w{(i * 2654435761) % 100000:05d}") for i in range(3000)],
         "id: long, s: string",
     )
-    sgot = relational.assign_row_ids(
-        sdf, [F.desc("s"), F.asc("id")], "rid", n_partitions=600
+    sgot = relational.keyed_prefix_sum(
+        sdf, [], [F.desc("s"), F.asc("id")], out_name="rid", n_bins=600
     )
     snaive = sdf.withColumn(
         "rid", F.row_number().over(Window.orderBy(F.desc("s"), F.asc("id")))
@@ -3356,43 +3325,8 @@ def test_acklam_ppf_accuracy(spark):
         assert abs(got[u] - z) < 5e-9, (u, got[u], z)
 
 
-def test_assign_keyed_ranks_matches_window_row_number(spark):
-    from pyspark.sql import Window
-    """Two-pass distributed per-key rank == row_number() window, on
-    random data with duplicate order values (tiebreak column included),
-    across several partitions."""
-    import pandas as pd
-
-    rng = np.random.default_rng(5)
-    pdf = pd.DataFrame(
-        {
-            "k": rng.choice(["a", "b", "c"], size=500),
-            "v": rng.integers(0, 40, size=500).astype(float),
-            "id": np.arange(500),
-        }
-    )
-    df = spark.createDataFrame(pdf).repartition(7)
-    got = relational.assign_keyed_ranks(
-        df, "k", [F.col("v").asc(), F.col("id").asc()], "rk", n_partitions=5,
-        total_name="n",
-    )
-    # per-key totals ride the offset broadcast and match group counts
-    tot = {r["k"]: r["n"] for r in got.select("k", "n").distinct().collect()}
-    exp_tot = {r["k"]: r["cnt"] for r in df.groupBy("k").agg(F.count(F.lit(1)).alias("cnt")).collect()}
-    assert tot == exp_tot
-    w = Window.partitionBy("k").orderBy(F.col("v").asc(), F.col("id").asc())
-    exp = df.withColumn("rk", F.row_number().over(w))
-    assert (
-        got.select("k", "id", "rk")
-        .exceptAll(exp.select("k", "id", "rk"))
-        .count()
-        == 0
-    )
-    assert got.count() == 500
-
-
 def test_keyed_ranks_default_partitions_under_aqe_coalescing(spark):
-    """Shake partition-plan sensitivity: n_partitions=None (the shipped
+    """Shake partition-plan sensitivity: n_bins=None (the shipped
     consumers' calling convention) with AQE partition coalescing forced
     aggressive (tiny advisory size, so the coalesce decision is
     maximally in play) must still reproduce the window bitwise. r7:
@@ -3425,8 +3359,8 @@ def test_keyed_ranks_default_partitions_under_aqe_coalescing(spark):
         conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1KB")
         conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1KB")
         df = spark.createDataFrame(pdf).repartition(9)
-        got = relational.assign_keyed_ranks(
-            df, "k", [F.col("v").asc(), F.col("id").asc()], "rk"
+        got = relational.keyed_prefix_sum(
+            df, "k", [F.col("v").asc(), F.col("id").asc()], out_name="rk"
         )
         w = Window.partitionBy("k").orderBy(F.col("v").asc(), F.col("id").asc())
         exp = df.withColumn("rk", F.row_number().over(w))
@@ -3477,7 +3411,7 @@ def test_keyed_ranks_high_cardinality_keys_now_work(spark):
             }
         )
     ).repartition(5)
-    got = relational.assign_keyed_ranks(df, "k", ["v", "id"], "rk")
+    got = relational.keyed_prefix_sum(df, "k", ["v", "id"], out_name="rk")
     w = Window.partitionBy("k").orderBy("v", "id")
     exp = df.withColumn("rk", F.row_number().over(w))
     assert (
@@ -3486,7 +3420,7 @@ def test_keyed_ranks_high_cardinality_keys_now_work(spark):
     )
 
 
-def test_assign_keyed_ranks_generalized_orderings(spark):
+def test_keyed_prefix_sum_generalized_orderings(spark):
     """r7 `_leading_sort_bins` parity sweep: every leading-dtype /
     direction / nulls-ordering combination the generalized in-plan
     path claims must reproduce `row_number()` bitwise — string
@@ -3531,7 +3465,7 @@ def test_assign_keyed_ranks_generalized_orderings(spark):
         [F.desc("ts"), F.asc("id")],                    # timestamp desc
     ]
     for order in cases:
-        got = relational.assign_keyed_ranks(df, "k", order, "rk")
+        got = relational.keyed_prefix_sum(df, "k", order, out_name="rk")
         w = Window.partitionBy("k").orderBy(*order)
         exp = df.withColumn("rk", F.row_number().over(w))
         assert (
@@ -3543,7 +3477,7 @@ def test_assign_keyed_ranks_generalized_orderings(spark):
 
     # exotic leading type (array) -> single-bin fallback, still correct
     adf = df.withColumn("arr", F.array("id"))
-    got = relational.assign_keyed_ranks(adf, "k", [F.asc("arr")], "rk")
+    got = relational.keyed_prefix_sum(adf, "k", [F.asc("arr")], out_name="rk")
     w = Window.partitionBy("k").orderBy(F.asc("arr"))
     exp = adf.withColumn("rk", F.row_number().over(w))
     assert (
@@ -3551,8 +3485,10 @@ def test_assign_keyed_ranks_generalized_orderings(spark):
         == 0
     )
 
-    # global ids over a string ordering (assign_row_ids generalization)
-    gids = relational.assign_row_ids(df, [F.desc("s"), F.asc("id")], "rid")
+    # global ids over a string ordering
+    gids = relational.keyed_prefix_sum(
+        df, [], [F.desc("s"), F.asc("id")], out_name="rid"
+    )
     gexp = df.withColumn(
         "rid", F.row_number().over(Window.orderBy(F.desc("s"), F.asc("id")))
     )
@@ -3607,7 +3543,7 @@ def test_generalized_ranks_nan_null_empty_edges(spark):
         [F.col("x").asc_nulls_last(), F.asc("id")],
         [F.col("x").desc_nulls_first(), F.asc("id")],
     ):
-        got = relational.assign_keyed_ranks(df, "k", order, "rk")
+        got = relational.keyed_prefix_sum(df, "k", order, out_name="rk")
         exp = df.withColumn(
             "rk", F.row_number().over(Window.partitionBy("k").orderBy(*order))
         )
@@ -3617,15 +3553,17 @@ def test_generalized_ranks_nan_null_empty_edges(spark):
         ), [str(c) for c in order]
 
     nulls = spark.createDataFrame([(None, i) for i in range(20)], "s string, id long")
-    got = relational.assign_row_ids(nulls, [F.asc("s"), F.asc("id")], "rid")
+    got = relational.keyed_prefix_sum(
+        nulls, [], [F.asc("s"), F.asc("id")], out_name="rid"
+    )
     exp = nulls.withColumn(
         "rid", F.row_number().over(Window.orderBy(F.asc("s"), F.asc("id")))
     )
     assert got.exceptAll(exp).count() == 0
 
     empty = spark.createDataFrame([], "s string, id long")
-    assert relational.assign_row_ids(empty, ["s", "id"], "rid").count() == 0
-    assert relational.assign_keyed_ranks(empty, "s", ["id"], "rk").count() == 0
+    assert relational.keyed_prefix_sum(empty, [], ["s", "id"]).count() == 0
+    assert relational.keyed_prefix_sum(empty, "s", ["id"]).count() == 0
 
 
 def test_composite_binning_low_cardinality_leading_key(spark):
@@ -3664,15 +3602,15 @@ def test_composite_binning_low_cardinality_leading_key(spark):
         [F.desc("src"), F.asc("v"), F.asc("id")],
         [F.asc("src"), F.desc("v"), F.asc("id")],
     ):
-        got = relational.assign_row_ids(df, order, "rid")
+        got = relational.keyed_prefix_sum(df, [], order, out_name="rid")
         exp = df.withColumn("rid", F.row_number().over(Window.orderBy(*order)))
         assert (
             got.select("id", "rid").exceptAll(exp.select("id", "rid")).count()
             == 0
         ), [str(c) for c in order]
 
-    got = relational.assign_keyed_ranks(
-        df, "grp", [F.asc("src"), F.asc("v"), F.asc("id")], "rk",
+    got = relational.keyed_prefix_sum(
+        df, "grp", [F.asc("src"), F.asc("v"), F.asc("id")], out_name="rk",
         total_name="n",
     )
     w = Window.partitionBy("grp").orderBy("src", "v", "id")
@@ -3704,9 +3642,9 @@ def test_composite_binning_low_cardinality_leading_key(spark):
 
 
 def test_inplan_primitives_register_no_caches(spark):
-    """r7 scaffold retirement: assign_keyed_ranks / assign_row_ids /
-    keyed_prefix_sum are in-plan — nothing persisted, nothing
-    registered, nothing for a long session to leak."""
+    """`keyed_prefix_sum` is in-plan in every mode (keyed rank, global
+    rank, weighted) — nothing persisted, nothing registered, nothing
+    for a long session to leak."""
     import pandas as pd
 
     relational.release_scaffold_caches()
@@ -3715,11 +3653,55 @@ def test_inplan_primitives_register_no_caches(spark):
             {"k": ["a", "b"] * 20, "v": range(40), "w": [1] * 40}
         )
     )
-    relational.assign_keyed_ranks(df, "k", ["v"], "rk").count()
-    relational.assign_row_ids(df, ["v"]).count()
+    relational.keyed_prefix_sum(df, "k", ["v"], out_name="rk").count()
+    relational.keyed_prefix_sum(df, [], ["v"]).count()
     relational.keyed_prefix_sum(df, "k", ["v"], "w").count()
     assert not relational._SCAFFOLD_CACHES
     assert relational.release_scaffold_caches() == 0
+
+
+def test_continuous_lead_skips_low_card_probe(spark, monkeypatch):
+    """A continuous leading column yields every bound requested, so the
+    composite path's distinct-count probe (two Spark jobs) must not run:
+    at the session's shuffle width, with two or more order entries,
+    `_generic_binned_offsets` never calls `_lead_confirmed_low_card`."""
+
+    def probe(*_a, **_k):
+        raise AssertionError("low-cardinality probe ran on a continuous lead")
+
+    monkeypatch.setattr(relational, "_lead_confirmed_low_card", probe)
+    assert relational._shuffle_width(spark) == 8
+    df = spark.range(0, 4000, numPartitions=4).select(
+        "id", (F.sin(F.col("id") * 0.37) * 1e3).alias("v")
+    )
+    for order in ([F.asc("v"), F.asc("id")], [F.desc("v"), F.asc("id")]):
+        _b, _off, cell_keys, degen = relational._generic_binned_offsets(
+            df, [], order, F.lit(1).cast("long"), None
+        )
+        assert not degen and cell_keys == [], [str(c) for c in order]
+
+
+def test_global_all_null_lead_plans_no_nested_loop_join(spark):
+    """``key_cols=[]`` over an order column that yields no bounds (all
+    NULL): the single constant bin must not become the only join key,
+    which plans a BroadcastNestedLoopJoin (outside the plan audit's
+    whitelist). Ranks read 1..n, and a weighted inclusive sum with its
+    total matches the window."""
+    df = spark.range(0, 50, numPartitions=3).select(
+        "id", F.lit(None).cast("double").alias("v"), F.lit(2).alias("w")
+    )
+    got = relational.keyed_prefix_sum(df, [], ["v", "id"], out_name="rk")
+    assert sorted((r["id"], r["rk"]) for r in got.collect()) == [
+        (i, i + 1) for i in range(50)
+    ]
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    got = relational.keyed_prefix_sum(
+        df, [], ["v", "id"], "w", out_name="c", inclusive=True, total_name="t"
+    )
+    assert sorted((r["id"], r["c"], r["t"]) for r in got.collect()) == [
+        (i, 2 * (i + 1), 100) for i in range(50)
+    ]
 
 
 def test_ntile_from_rank_matches_ntile_window(spark):
@@ -3832,11 +3814,12 @@ def test_keyed_median_mad_both_regimes(spark):
         relational.keyed_median_mad(bad, "k", "v").collect()
 
 
-def test_binned_keyed_ranks_matches_window(spark):
-    """In-plan binned per-key rank == row_number() window bitwise, on
-    random data with duplicate values, NULL values (nulls-first like
-    ASC), several keys, and totals riding the broadcast; also with too
-    few distinct values for the requested bins."""
+def test_keyed_prefix_sum_rank_mode_matches_row_number(spark):
+    """Rank mode (``weight_col=None``) == the `row_number()` window
+    bitwise, keyed and GLOBAL: duplicate order values broken by a
+    tiebreak, NULL values (nulls-first like ASC), more bins than
+    distinct values down to a single bin, and a DESC global lead; the
+    per-key totals ride the offsets broadcast and match group counts."""
     import pandas as pd
     from pyspark.sql import Window
 
@@ -3850,12 +3833,18 @@ def test_binned_keyed_ranks_matches_window(spark):
     )
     pdf.loc[::53, "v"] = None
     df = spark.createDataFrame(pdf).repartition(6)
-    for n_bins in (16, 2, 1):
-        got = relational.binned_keyed_ranks(
-            df, "k", "v", ["id"], "rk", total_name="n", n_bins=n_bins
+    order = [F.col("v").asc(), F.col("id").asc()]
+    exp = df.withColumn(
+        "rk", F.row_number().over(Window.partitionBy("k").orderBy(*order))
+    )
+    exp_tot = {
+        r["k"]: r["cnt"]
+        for r in df.groupBy("k").agg(F.count(F.lit(1)).alias("cnt")).collect()
+    }
+    for n_bins in (16, 5, 2, 1):
+        got = relational.keyed_prefix_sum(
+            df, "k", order, out_name="rk", total_name="n", n_bins=n_bins
         )
-        w = Window.partitionBy("k").orderBy(F.col("v").asc(), F.col("id").asc())
-        exp = df.withColumn("rk", F.row_number().over(w))
         assert (
             got.select("k", "id", "rk")
             .exceptAll(exp.select("k", "id", "rk"))
@@ -3863,89 +3852,35 @@ def test_binned_keyed_ranks_matches_window(spark):
             == 0
         ), n_bins
         tot = {r["k"]: r["n"] for r in got.select("k", "n").distinct().collect()}
-        exp_tot = {
-            r["k"]: r["cnt"]
-            for r in df.groupBy("k").agg(F.count(F.lit(1)).alias("cnt")).collect()
-        }
         assert tot == exp_tot, n_bins
+
     # GLOBAL mode (key_cols=[]): one corpus-wide ranking, still binned
-    gg = relational.binned_keyed_ranks(
-        df, [], "v", ["id"], "rk", total_name="n", n_bins=8
+    gg = relational.keyed_prefix_sum(
+        df, [], order, out_name="rk", total_name="n", n_bins=8
     )
-    wgl = Window.orderBy(F.col("v").asc(), F.col("id").asc())
-    egl = df.withColumn("rk", F.row_number().over(wgl))
+    egl = df.withColumn("rk", F.row_number().over(Window.orderBy(*order)))
     assert (
         gg.select("id", "rk").exceptAll(egl.select("id", "rk")).count() == 0
     )
     assert gg.select("n").distinct().collect()[0][0] == 700
 
-
-def test_binned_prefix_sum_matches_window(spark):
-    """In-plan binned running sum == the ordering window bitwise, for:
-    global descending inclusive (budget semantics), keyed ascending
-    exclusive (offset semantics), and rank mode (weight None); NULL
-    scores sort like the window (desc -> last)."""
-    import pandas as pd
-    from pyspark.sql import Window
-
-    rng = np.random.default_rng(41)
-    pdf = pd.DataFrame(
-        {
-            "k": rng.choice(["a", "b"], size=600),
-            "s": rng.normal(size=600),
-            "w": rng.integers(1, 30, size=600),
-            "id": np.arange(600),
-        }
+    # GLOBAL over a DESC lead with heavy ties: consecutive ids
+    sdf = spark.range(0, 997).select(
+        F.col("id"), (F.col("id") * 37 % 101).alias("score")
     )
-    pdf.loc[::71, "s"] = None
-    df = spark.createDataFrame(pdf).repartition(5)
-
-    # global DESC inclusive
-    got = relational.binned_prefix_sum(
-        df, [], "s", ["id"], "w", out_name="c", descending=True,
-        inclusive=True, n_bins=16,
-    )
-    wg = (
-        Window.orderBy(F.col("s").desc(), F.col("id").asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    exp = df.withColumn("c", F.sum(F.col("w").cast("long")).over(wg))
-    assert got.select("id", "c").exceptAll(exp.select("id", "c")).count() == 0
-
-    # keyed ASC exclusive
-    got2 = relational.binned_prefix_sum(
-        df, "k", "s", ["id"], "w", out_name="c", n_bins=8
-    )
-    wk = (
-        Window.partitionBy("k")
-        .orderBy(F.col("s").asc(), F.col("id").asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    exp2 = df.withColumn(
-        "c", F.sum(F.col("w").cast("long")).over(wk) - F.col("w").cast("long")
-    )
-    assert (
-        got2.select("k", "id", "c").exceptAll(exp2.select("k", "id", "c")).count()
-        == 0
-    )
-
-    # rank mode (weight None) == row_number
-    got3 = relational.binned_prefix_sum(
-        df, "k", "s", ["id"], None, out_name="r", n_bins=8
-    )
-    wr = Window.partitionBy("k").orderBy(F.col("s").asc(), F.col("id").asc())
-    exp3 = df.withColumn("r", F.row_number().over(wr).cast("long"))
-    assert (
-        got3.select("k", "id", "r").exceptAll(exp3.select("k", "id", "r")).count()
-        == 0
+    sorder = [F.desc("score"), F.asc("id")]
+    got = relational.keyed_prefix_sum(sdf, [], sorder, out_name="row_id", n_bins=7)
+    naive = sdf.withColumn("row_id", F.row_number().over(Window.orderBy(*sorder)))
+    assert sorted((r["id"], r["row_id"]) for r in got.collect()) == sorted(
+        (r["id"], r["row_id"]) for r in naive.collect()
     )
 
 
 def test_binned_primitives_null_keys_match_window(spark):
     """NULL KEY rows are kept and ranked exactly like the window's NULL
     partition (r6: the offset join is null-safe — a plain equi-join
-    silently dropped them), for both binned_keyed_ranks and
-    binned_prefix_sum's keyed mode."""
+    silently dropped them), in `keyed_prefix_sum`'s rank and weighted
+    modes."""
     import pandas as pd
     from pyspark.sql import Window
 
@@ -3961,7 +3896,7 @@ def test_binned_primitives_null_keys_match_window(spark):
     df = spark.createDataFrame(pdf).repartition(5)
     assert df.where(F.col("k").isNull()).count() > 0
 
-    got = relational.binned_keyed_ranks(df, "k", "v", ["id"], "rk", n_bins=8)
+    got = relational.keyed_prefix_sum(df, "k", ["v", "id"], out_name="rk", n_bins=8)
     w = Window.partitionBy("k").orderBy(F.col("v").asc(), F.col("id").asc())
     exp = df.withColumn("rk", F.row_number().over(w))
     assert got.count() == 400  # nothing dropped
@@ -3970,8 +3905,8 @@ def test_binned_primitives_null_keys_match_window(spark):
         == 0
     )
 
-    got2 = relational.binned_prefix_sum(
-        df, "k", "v", ["id"], "w", out_name="c", n_bins=8
+    got2 = relational.keyed_prefix_sum(
+        df, "k", ["v", "id"], "w", out_name="c", n_bins=8
     )
     wk = (
         Window.partitionBy("k")
@@ -4187,8 +4122,8 @@ def test_keyed_rank_and_percentiles_empty_input(spark):
     )
     empty = spark.createDataFrame([], schema)
     assert (
-        relational.assign_keyed_ranks(
-            empty, "k", ["v"], "rk", total_name="n"
+        relational.keyed_prefix_sum(
+            empty, "k", ["v"], out_name="rk", total_name="n"
         ).count()
         == 0
     )
@@ -4390,8 +4325,12 @@ def test_tdigest_grouped_rank_error_and_bounds(spark):
 
 
 def test_keyed_prefix_sum_matches_window(spark):
-    """Distributed per-key prefix sum == the keyed running-sum window,
-    bitwise (integer weights), on random data across partitions."""
+    """Weighted running sum == the `sum() OVER` window bitwise (integer
+    weights), across partitions: keyed ASC exclusive (offset semantics)
+    over a permutation order; GLOBAL DESC inclusive (budget semantics)
+    with NULL scores sorting last like the window; keyed ASC exclusive
+    over the same NULLs; and rank mode, a 1-based rank whatever
+    ``inclusive`` says."""
     import pandas as pd
     from pyspark.sql import Window
 
@@ -4405,7 +4344,7 @@ def test_keyed_prefix_sum_matches_window(spark):
     )
     df = spark.createDataFrame(pdf).repartition(5)
     got = relational.keyed_prefix_sum(
-        df, "k", [F.col("o").asc()], "w", out_name="s", n_partitions=4
+        df, "k", [F.col("o").asc()], "w", out_name="s", n_bins=4
     )
     win = (
         Window.partitionBy("k")
@@ -4419,6 +4358,59 @@ def test_keyed_prefix_sum_matches_window(spark):
         got.select("k", "o", "s").exceptAll(exp.select("k", "o", "s")).count()
         == 0
     )
+
+    rng = np.random.default_rng(41)
+    pdf = pd.DataFrame(
+        {
+            "k": rng.choice(["a", "b"], size=600),
+            "s": rng.normal(size=600),
+            "w": rng.integers(1, 30, size=600),
+            "id": np.arange(600),
+        }
+    )
+    pdf.loc[::71, "s"] = None
+    df = spark.createDataFrame(pdf).repartition(5)
+
+    # global DESC inclusive
+    got = relational.keyed_prefix_sum(
+        df, [], [F.col("s").desc(), "id"], "w", out_name="c", inclusive=True,
+        n_bins=16,
+    )
+    wg = (
+        Window.orderBy(F.col("s").desc(), F.col("id").asc())
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    exp = df.withColumn("c", F.sum(F.col("w").cast("long")).over(wg))
+    assert got.select("id", "c").exceptAll(exp.select("id", "c")).count() == 0
+
+    # keyed ASC exclusive
+    got2 = relational.keyed_prefix_sum(
+        df, "k", ["s", "id"], "w", out_name="c", n_bins=8
+    )
+    wk = (
+        Window.partitionBy("k")
+        .orderBy(F.col("s").asc(), F.col("id").asc())
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    exp2 = df.withColumn(
+        "c", F.sum(F.col("w").cast("long")).over(wk) - F.col("w").cast("long")
+    )
+    assert (
+        got2.select("k", "id", "c").exceptAll(exp2.select("k", "id", "c")).count()
+        == 0
+    )
+
+    # rank mode (weight None) == row_number, exclusive or inclusive
+    wr = Window.partitionBy("k").orderBy(F.col("s").asc(), F.col("id").asc())
+    exp3 = df.withColumn("r", F.row_number().over(wr).cast("long"))
+    for inclusive in (False, True):
+        got3 = relational.keyed_prefix_sum(
+            df, "k", ["s", "id"], out_name="r", inclusive=inclusive, n_bins=8
+        )
+        assert (
+            got3.select("k", "id", "r").exceptAll(exp3.select("k", "id", "r")).count()
+            == 0
+        ), inclusive
 
 
 def test_sample_per_group_distributed_matches_window_route(spark):

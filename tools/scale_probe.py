@@ -77,14 +77,14 @@ DEFAULT = [
 BIG_DEFAULT = [
     "percentile_quantity",       # keyed_percentiles_exact (lineitem)
     "weighted_percentile_price", # keyed_weighted_percentiles_exact
-    "equidepth_histogram",       # assign_keyed_ranks (events)
+    "equidepth_histogram",       # keyed_prefix_sum keyed rank (events)
     "anomaly_mad_events",        # two percentile passes
     "pack_materialize_docs",     # md5_bucketed_prefix_sum (documents)
     "cap_docs_per_source",       # distributed rank quota
     # r7 additions (VERDICT item 8): the r6 fast paths at larger SFs
     "robust_scale_value",        # keyed_median_mad one-job histogram
-    "budget_select_docs",        # binned_prefix_sum (take_budget)
-    "row_ids_documents",         # binned_prefix_sum global rank mode
+    "budget_select_docs",        # keyed_prefix_sum (take_budget)
+    "row_ids_documents",         # keyed_prefix_sum global rank mode
     "source_kl_matrix",          # factored-KL decimal bucket sums
 ]
 
