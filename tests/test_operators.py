@@ -3814,12 +3814,66 @@ def test_keyed_median_mad_both_regimes(spark):
         relational.keyed_median_mad(bad, "k", "v").collect()
 
 
-def test_keyed_prefix_sum_rank_mode_matches_row_number(spark):
+def test_assign_row_ids_matches_global_window(spark):
+    """Global rank mode (``key_cols=[]``) over a DESC lead with heavy
+    ties == the naive global `row_number()`: consecutive 1-based ids."""
+    from pyspark.sql import Window
+
+    df = spark.range(0, 997).select(
+        F.col("id"), (F.col("id") * 37 % 101).alias("score")
+    )
+    order = [F.desc("score"), F.asc("id")]
+    got = relational.keyed_prefix_sum(df, [], order, out_name="row_id", n_bins=7)
+    naive = df.withColumn("row_id", F.row_number().over(Window.orderBy(*order)))
+    assert sorted((r["id"], r["row_id"]) for r in got.collect()) == sorted(
+        (r["id"], r["row_id"]) for r in naive.collect()
+    )
+
+
+def test_assign_keyed_ranks_matches_window_row_number(spark):
+    """Keyed rank mode == the `row_number()` window, on random data with
+    duplicate order values (tiebreak column included), across several
+    partitions; the per-key totals ride the offsets broadcast and match
+    group counts."""
+    import pandas as pd
+    from pyspark.sql import Window
+
+    rng = np.random.default_rng(5)
+    pdf = pd.DataFrame(
+        {
+            "k": rng.choice(["a", "b", "c"], size=500),
+            "v": rng.integers(0, 40, size=500).astype(float),
+            "id": np.arange(500),
+        }
+    )
+    df = spark.createDataFrame(pdf).repartition(7)
+    got = relational.keyed_prefix_sum(
+        df, "k", [F.col("v").asc(), F.col("id").asc()], out_name="rk",
+        total_name="n", n_bins=5,
+    )
+    tot = {r["k"]: r["n"] for r in got.select("k", "n").distinct().collect()}
+    exp_tot = {
+        r["k"]: r["cnt"]
+        for r in df.groupBy("k").agg(F.count(F.lit(1)).alias("cnt")).collect()
+    }
+    assert tot == exp_tot
+    w = Window.partitionBy("k").orderBy(F.col("v").asc(), F.col("id").asc())
+    exp = df.withColumn("rk", F.row_number().over(w))
+    assert (
+        got.select("k", "id", "rk")
+        .exceptAll(exp.select("k", "id", "rk"))
+        .count()
+        == 0
+    )
+    assert got.count() == 500
+
+
+def test_binned_keyed_ranks_matches_window(spark):
     """Rank mode (``weight_col=None``) == the `row_number()` window
     bitwise, keyed and GLOBAL: duplicate order values broken by a
-    tiebreak, NULL values (nulls-first like ASC), more bins than
-    distinct values down to a single bin, and a DESC global lead; the
-    per-key totals ride the offsets broadcast and match group counts."""
+    tiebreak, NULL values (nulls-first like ASC), totals riding the
+    broadcast, and more bins than distinct values down to a single
+    bin."""
     import pandas as pd
     from pyspark.sql import Window
 
@@ -3841,7 +3895,7 @@ def test_keyed_prefix_sum_rank_mode_matches_row_number(spark):
         r["k"]: r["cnt"]
         for r in df.groupBy("k").agg(F.count(F.lit(1)).alias("cnt")).collect()
     }
-    for n_bins in (16, 5, 2, 1):
+    for n_bins in (16, 2, 1):
         got = relational.keyed_prefix_sum(
             df, "k", order, out_name="rk", total_name="n", n_bins=n_bins
         )
@@ -3863,17 +3917,6 @@ def test_keyed_prefix_sum_rank_mode_matches_row_number(spark):
         gg.select("id", "rk").exceptAll(egl.select("id", "rk")).count() == 0
     )
     assert gg.select("n").distinct().collect()[0][0] == 700
-
-    # GLOBAL over a DESC lead with heavy ties: consecutive ids
-    sdf = spark.range(0, 997).select(
-        F.col("id"), (F.col("id") * 37 % 101).alias("score")
-    )
-    sorder = [F.desc("score"), F.asc("id")]
-    got = relational.keyed_prefix_sum(sdf, [], sorder, out_name="row_id", n_bins=7)
-    naive = sdf.withColumn("row_id", F.row_number().over(Window.orderBy(*sorder)))
-    assert sorted((r["id"], r["row_id"]) for r in got.collect()) == sorted(
-        (r["id"], r["row_id"]) for r in naive.collect()
-    )
 
 
 def test_binned_primitives_null_keys_match_window(spark):
@@ -4325,12 +4368,9 @@ def test_tdigest_grouped_rank_error_and_bounds(spark):
 
 
 def test_keyed_prefix_sum_matches_window(spark):
-    """Weighted running sum == the `sum() OVER` window bitwise (integer
-    weights), across partitions: keyed ASC exclusive (offset semantics)
-    over a permutation order; GLOBAL DESC inclusive (budget semantics)
-    with NULL scores sorting last like the window; keyed ASC exclusive
-    over the same NULLs; and rank mode, a 1-based rank whatever
-    ``inclusive`` says."""
+    """Weighted keyed running sum == the keyed `sum() OVER` window,
+    bitwise (integer weights), exclusive (offset semantics) over a
+    permutation order, on random data across partitions."""
     import pandas as pd
     from pyspark.sql import Window
 
@@ -4358,6 +4398,15 @@ def test_keyed_prefix_sum_matches_window(spark):
         got.select("k", "o", "s").exceptAll(exp.select("k", "o", "s")).count()
         == 0
     )
+
+
+def test_binned_prefix_sum_matches_window(spark):
+    """Weighted running sum == the ordering window bitwise, for: global
+    DESC inclusive (budget semantics), keyed ASC exclusive (offset
+    semantics), and rank mode (weight None), a 1-based rank whatever
+    ``inclusive`` says; NULL scores sort like the window (DESC -> last)."""
+    import pandas as pd
+    from pyspark.sql import Window
 
     rng = np.random.default_rng(41)
     pdf = pd.DataFrame(
