@@ -4543,7 +4543,7 @@ def logreg_quality_classifier(spark, sf_dir):
     median), and a logistic regression over the UNDERLYING statistics
     (length score, punctuation ratio, stopword score) is trained
     DISTRIBUTED through the same broadcast-params -> mapInPandas grads ->
-    treeAggregate -> driver Adam loop as the VI flagships — the
+    sum_partials -> driver Adam loop as the VI flagships — the
     reference's Model/Variable machinery (`model.py:113-263`,
     `param.py:97-205`) driving a plain MAP objective. The teacher's
     decision boundary is linear in these features, so the student can
@@ -4663,7 +4663,7 @@ def vi_amortized_encoder(spark, sf_dir):
     """The reference's core differentiator end-to-end, DISTRIBUTED: the
     global/local split (README.md:14-21) — a NeuralNet encoder emits
     per-row LOCAL variational parameters (amortized inference), globals
-    train via broadcast -> mapInPandas grads -> treeAggregate -> driver
+    train via broadcast -> mapInPandas grads -> sum_partials -> driver
     Adam, and posterior summaries stream back per Arrow batch through
     `spark_exec.predict` (no n-sized state on the driver at any point);
     the encoder/LOCAL mechanics carry pytest parity in
@@ -4755,7 +4755,7 @@ def gp_experts_events(spark, sf_dir):
     gates them, and the per-row likelihood is the stable-LSE
     `bimixture` of the two experts' Gaussian densities. Everything
     trains through one SparkTrainer (broadcast params -> mapInPandas
-    grads through kernel/Cholesky/bimixture -> treeAggregate -> Adam);
+    grads through kernel/Cholesky/bimixture -> sum_partials -> Adam);
     the analytic KLs of both experts enter via global_objective.
 
     ORACLE-CHECKED (r9, retiring the LAST GP rows-only driver row):
@@ -4933,7 +4933,7 @@ def gp_regression_events(spark, sf_dir):
     GPR notebook lifecycle (whitened variational u over inducing points,
     trainable lengthscale, Gaussian likelihood) on events(hour -> value)
     via the distributed trainer: broadcast params -> per-batch
-    K(z, x_batch) + sample inside mapInPandas -> treeAggregate grads ->
+    K(z, x_batch) + sample inside mapInPandas -> sum_partials grads ->
     driver Adam; the analytic Normal KL enters once per step through
     `global_objective`; the GP math itself carries numpy-parity pytests.
 
@@ -6748,9 +6748,9 @@ GROUP BY 1
 
 def kmeans_embeddings(spark, sf_dir):
     """Distributed Lloyd's k-means (SURVEY §2.11): deterministic
-    xxhash-min init, mapInPandas assignment scan + treeAggregate
-    reduction per iteration (driver sees k x dim doubles only), final
-    assignment as pure-Column codegen.
+    xxhash-min init, mapInPandas assignment scan per iteration, its
+    partials added by `local_replay.sum_partials` (driver sees k x dim
+    doubles per partition), final assignment as pure-Column codegen.
 
     ORACLE-CHECKED (r8, retiring the rows-only driver row): the fit runs
     on PLANTED data — 256 synthesized points in 4 well-separated
@@ -6759,7 +6759,7 @@ def kmeans_embeddings(spark, sf_dir):
     xxhash-min init seeds land in four DISTINCT planted clusters, making
     Lloyd's recovery of the exact planted partition deterministic. All
     values are dyadic rationals, so every float sum is EXACT and
-    summation order (partitioning, treeAggregate shape) cannot move a
+    summation order (partitioning, the fold's shape) cannot move a
     bit: the oracle recomputes per-true-cluster (n_vecs, mean_x0) with
     plain SQL arithmetic over the same synthesis formula. Output drops
     the arbitrary init-dependent cluster LABEL (rows compare
@@ -6961,8 +6961,8 @@ def _walsh_planted(spark):
 
 def pca_embeddings(spark, sf_dir):
     """Distributed PCA (SURVEY §2.11): one mapInPandas pass reduces the
-    input to (n, sum, Gram) sufficient statistics via treeAggregate
-    (driver sees one dim x dim matrix), driver eigendecomposes, and the
+    input to (n, sum, Gram) sufficient statistics added by
+    `local_replay.sum_partials`, driver eigendecomposes, and the
     projection runs as pure-Column codegen with literal coefficients.
 
     ORACLE-CHECKED (r8, retiring the rows-only driver row): the fit

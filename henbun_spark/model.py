@@ -24,6 +24,7 @@ from functools import wraps
 import numpy as np
 
 from henbun_spark import autodiff as ad
+from henbun_spark.config import settings
 from henbun_spark.param import (
     Data,
     MinibatchData,
@@ -113,7 +114,8 @@ class Model(Parameterized):
     def __init__(self, name="model", **kw):
         Parameterized.__init__(self)
         self._name = name
-        self._index = Indexer()
+        # seeded like Variable init, so a minibatch fit repeats its draws
+        self._index = Indexer(settings.training.seed)
         self._eval_step = 0
         self._eval_rng = np.random.default_rng(0)
         self.setUp(**kw)

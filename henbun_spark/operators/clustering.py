@@ -7,13 +7,16 @@ part of the brief-mandated training-data-pipeline surface, SURVEY §2.11):
 * centroids live on the driver (k x dim doubles — tiny at any corpus
   size) and are folded into each iteration's task closure;
 * one mapInPandas pass per iteration assigns every vector to its nearest
-  centroid and emits ONE partial-stats row per Arrow batch (per-cluster
+  centroid and emits ONE partial-stats vector per partition (per-cluster
   vector sums + counts + SSE), so the wide embedding column never
   shuffles;
-* partials reduce IN-CLUSTER via ``RDD.treeAggregate`` (depth 2) — the
-  driver receives exactly one (k x dim) matrix per iteration, never a
-  row per batch (the same scale fix applied to SparkTrainer's gradient
-  step, ``spark_exec.py``).
+* the partials are added by the one partial-sum fold of the iterative
+  fits, `local_replay.sum_partials` (shared with SparkTrainer's gradient
+  step and PCA): collected and added in partition order below
+  ``TREE_DEPTH_CUTOVER`` partitions, ``RDD.treeAggregate`` (depth 2) at
+  or above it, so at scale the driver receives one (k x dim) matrix per
+  iteration, never a row per partition. A small frame replays every
+  iteration on the driver through the same fold.
 
 At 100 TB: per iteration one scan + one tree reduction, no shuffle of
 the data itself; cost is iterations x scan, the textbook distributed
@@ -24,14 +27,15 @@ codegen with zero Python in the hot path when k is small.
 
 Determinism: init picks the k vectors with the smallest ``xxhash64(id)``
 (no dependence on partition layout or data order), and every update is a
-sum of the same values — floating-point association order differs only
-at the treeAggregate combine level, bounded by the usual ~1 ulp; the
-pytest compares against a single-process numpy replica at 1e-8 rtol.
+sum of the same values — floating-point association order depends only
+on the partition count, bounded by the usual ~1 ulp; the pytest
+compares against a single-process numpy replica at 1e-8 rtol.
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
+from functools import partial
+from typing import Iterator
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -62,125 +66,47 @@ def _init_centroids(
     return np.array([r["_v"] for r in rows], dtype=np.float64)
 
 
-def _acc_batch(x: np.ndarray, cent: np.ndarray, cn: np.ndarray,
-               sums: np.ndarray, cnts: np.ndarray) -> float:
-    """Fold one batch matrix into the per-partition Lloyd partials —
-    shared by the distributed closure and the driver-local replay so
-    both run the IDENTICAL float operations in the identical order."""
-    d2 = (x * x).sum(axis=1)[:, None] - 2.0 * (x @ cent.T) + cn[None, :]
-    assign = d2.argmin(axis=1)
-    sse = float(d2[np.arange(len(x)), assign].sum())
-    for c in np.unique(assign):
-        mask = assign == c
-        sums[c] += x[mask].sum(axis=0)
-        cnts[c] += int(mask.sum())
-    return sse
-
-
-def _iteration(
-    df: DataFrame, emb_col: str, centroids: np.ndarray, depth: int = 2
-) -> tuple[np.ndarray, np.ndarray, float]:
-    """One Lloyd's step: returns (per-cluster sums, counts, total SSE)."""
-    import pandas as pd
-
-    k, dim = centroids.shape
-    cent = centroids  # captured in the closure, shipped once per task
-
-    def partials(batches: Iterable["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        cn = (cent * cent).sum(axis=1)
-        sums = np.zeros((k, dim))
-        cnts = np.zeros(k, dtype=np.int64)
-        sse = 0.0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-            sse += _acc_batch(x, cent, cn, sums, cnts)
-        yield pd.DataFrame(
-            {
-                "sums": [sums.ravel().tolist()],
-                "cnts": [cnts.tolist()],
-                "sse": [sse],
-            }
-        )
-
-    part_df = df.select(F.col(emb_col).cast("array<double>").alias("_v")).mapInPandas(
-        partials, "sums array<double>, cnts array<long>, sse double"
-    )
-
-    if depth == 1:
-        # depth-1 regime (driver SFs: a handful of partitions): collect
-        # the one-row-per-partition partials and fold on the driver in
-        # PARTITION ORDER — the same r12 fix as SparkTrainer._job's
-        # depth-1 path (treeAggregate at depth 1 shipped the rows
-        # through a second Python-worker RDD layer plus a javaToPython
-        # plan conversion, pure per-iteration overhead; its final
-        # `reduce` also merges in task-COMPLETION order, whereas the
-        # collect fold is deterministic). Float sums regroup within the
-        # usual ~1 ulp treeAggregate association wobble the docstring
-        # already grants; the driver-local replay below replicates THIS
-        # order bit-for-bit.
-        sums = np.zeros(k * dim)
-        cnts = np.zeros(k, dtype=np.int64)
-        sse = 0.0
-        for row in part_df.collect():
-            sums += np.asarray(row["sums"])
-            cnts += np.asarray(row["cnts"], dtype=np.int64)
-            sse += row["sse"]
-        return sums.reshape(k, dim), cnts, sse
-
-    zero = (np.zeros(k * dim), np.zeros(k, dtype=np.int64), 0.0)
-
-    def seq(acc, row):
-        return (
-            acc[0] + np.asarray(row["sums"]),
-            acc[1] + np.asarray(row["cnts"], dtype=np.int64),
-            acc[2] + row["sse"],
-        )
-
-    def comb(a, b):
-        return (a[0] + b[0], a[1] + b[1], a[2] + b[2])
-
-    sums, cnts, sse = part_df.rdd.treeAggregate(zero, seq, comb, depth=depth)
-    return sums.reshape(k, dim), cnts, sse
-
-
-def _iteration_local(batches, centroids: np.ndarray):
-    """Driver-local replica of `_iteration` over the fetched
-    [(pid, bi, n x dim float64 matrix), ...] (see `kmeans_fit`):
-    per-partition partials accumulated in batch order via the SAME
-    `_acc_batch`, then folded across partitions in partition order —
-    identical to the depth-1 collect fold, so every float matches the
-    distributed iteration bit-for-bit (pytest-pinned)."""
+def _lloyd_partial(centroids: np.ndarray, _pid, frames) -> Iterator[np.ndarray]:
+    """Lloyd's partials of one partition's (bi, n x dim matrix) frames:
+    one ``[*per-cluster sums, *counts, sse]`` vector."""
     k, dim = centroids.shape
     cn = (centroids * centroids).sum(axis=1)
-    tot_sums = np.zeros(k * dim)
-    tot_cnts = np.zeros(k, dtype=np.int64)
-    tot_sse = 0.0
-    cur_pid = None
-    sums = cnts = None
+    sums = np.zeros((k, dim))
+    cnts = np.zeros(k, dtype=np.int64)
     sse = 0.0
+    for _bi, x in frames:
+        d2 = (x * x).sum(axis=1)[:, None] - 2.0 * (x @ centroids.T) + cn[None, :]
+        assign = d2.argmin(axis=1)
+        sse += float(d2[np.arange(len(x)), assign].sum())
+        for c in np.unique(assign):
+            mask = assign == c
+            sums[c] += x[mask].sum(axis=0)
+            cnts[c] += int(mask.sum())
+    yield np.concatenate((sums.ravel(), cnts, [sse]))
 
-    def fold():
-        nonlocal tot_sse
-        # replicate the collect fold's float path exactly: the partial
-        # crossed Arrow as a flat float64 list, added onto the totals
-        tot_sums.__iadd__(sums.ravel())
-        tot_cnts.__iadd__(cnts)
-        tot_sse += sse
 
-    for pid, _bi, x in batches:
-        if pid != cur_pid:
-            if cur_pid is not None:
-                fold()
-            sums = np.zeros((k, dim))
-            cnts = np.zeros(k, dtype=np.int64)
-            sse = 0.0
-            cur_pid = pid
-        sse += _acc_batch(x, centroids, cn, sums, cnts)
-    if cur_pid is not None:
-        fold()
-    return tot_sums.reshape(k, dim), tot_cnts, tot_sse
+def _to_matrix(pdf) -> np.ndarray:
+    return np.stack(pdf["_v"].to_numpy()).astype(np.float64)
+
+
+def _lloyd_step(centroids: np.ndarray, data=None, batches=None):
+    """One Lloyd's step, ``(per-cluster sums, counts, total SSE)``:
+    `local_replay.sum_partials` of `_lloyd_partial` over `data`'s ``_v``
+    column in one Spark job, or over the fetched `batches` on the
+    driver. Both paths add the same partition vectors in partition
+    order, so the replay matches the job bit for bit (pytest-pinned)."""
+    from henbun_spark.local_replay import sum_partials
+
+    k, dim = centroids.shape
+    total = sum_partials(data, _to_matrix, partial(_lloyd_partial, centroids),
+                         k * dim + k + 1, batches)
+    return (total[: k * dim].reshape(k, dim),
+            total[k * dim: -1].astype(np.int64), float(total[-1]))
+
+
+def _iteration(data: DataFrame, centroids: np.ndarray):
+    """One distributed Lloyd's step over `data`'s ``_v`` column."""
+    return _lloyd_step(centroids, data=data)
 
 
 def kmeans_fit(
@@ -207,44 +133,32 @@ def kmeans_fit(
     with a small floor — at corpus scale the coalesce no-ops and the
     plan is untouched (a repartition here would re-shuffle the full
     embedding column once PER ITERATION — the lazy plan re-executes).
-    Centroid values may move by the usual ~1 ulp treeAggregate
-    association wobble, exactly as any partitioning change would."""
+    Centroid values may move by ~1 ulp with the partition count, as
+    any change in the order of the partial sums would."""
     from henbun_spark.local_replay import fetch_batches
-    from henbun_spark.operators._parallel import _plan_partitions
-    from henbun_spark.spark_exec import LOCAL_ROWS_CAP, _tree_depth
+    from henbun_spark.spark_exec import LOCAL_ROWS_CAP
 
     centroids = _init_centroids(df, emb_col, id_col, k)
-    data = df.select(F.col(emb_col).cast("array<double>").alias(emb_col))
+    data = df.select(F.col(emb_col).cast("array<double>").alias("_v"))
     if slices is not None:
         data = data.coalesce(slices)
     history: list[float] = []
-    # adaptive combine depth (r12, same rule as spark_exec._tree_depth):
-    # below the cutover the depth-2 intermediate stage is pure per-
-    # iteration scheduling overhead; at cluster scale (partitions >>
-    # cutover) depth 2 keeps the driver at one k x dim matrix per
-    # iteration, unchanged
-    depth = _tree_depth(_plan_partitions(data))
     # driver-local Lloyd replay (the SparkTrainer replay, same
     # LOCAL_ROWS_CAP and byte budget): ONE bounded job fetches the exact
-    # per-(partition, Arrow-batch) float64 matrices the distributed
-    # partials closure builds, and every iteration replays the same
-    # `_acc_batch` math and partition-order fold on the driver, so a
+    # per-(partition, Arrow-batch) float64 matrices a distributed step
+    # builds, and every iteration replays `_lloyd_step` on them, so a
     # Lloyd step stops costing a Spark job. Each task sends at most its
     # 1/P share of the rows and bytes, else the fit stays distributed
     # (a skewed frame under both totals included); past
     # TREE_DEPTH_CUTOVER partitions no fetch runs and iterations x one
     # scan + tree reduction is the 100 TB design. The cap is read here,
     # at call time, so setting it to 0 forces the distributed loop.
-    local = fetch_batches(
-        data.select(F.col(emb_col).cast("array<double>").alias("_v")),
-        lambda pdf: np.stack(pdf["_v"].to_numpy()).astype(np.float64),
-        LOCAL_ROWS_CAP,
-    )
+    local = fetch_batches(data, _to_matrix, LOCAL_ROWS_CAP)
     for _ in range(max_iter):
         if local is not None:
-            sums, cnts, sse = _iteration_local(local, centroids)
+            sums, cnts, sse = _lloyd_step(centroids, batches=local)
         else:
-            sums, cnts, sse = _iteration(data, emb_col, centroids, depth=depth)
+            sums, cnts, sse = _iteration(data, centroids)
         nonempty = cnts > 0
         centroids = np.where(
             nonempty[:, None], sums / np.maximum(cnts, 1)[:, None], centroids

@@ -10,11 +10,13 @@ O(dim^3) driver work, trivial next to the scan). No reference analogue
 training-data-pipeline surface (SURVEY §2.11).
 
 Scale design (100 TB stance):
-* ONE mapInPandas pass emits one partial-stats row per Arrow batch
+* ONE mapInPandas pass emits one partial-stats vector per partition
   (count, sum vector, Gram matrix) — the wide embedding column never
-  shuffles; partials reduce in-cluster via ``RDD.treeAggregate``
-  (depth 2), so the driver receives exactly one (dim x dim) matrix —
-  the same pattern as ``clustering.kmeans_fit`` and SparkTrainer.
+  shuffles; the partials are added by `local_replay.sum_partials`, the
+  one partial-sum fold shared with ``clustering.kmeans_fit`` and
+  SparkTrainer: collected below ``TREE_DEPTH_CUTOVER`` partitions (one
+  stage), ``RDD.treeAggregate`` (depth 2) at or above it, so at scale
+  the driver receives exactly one (dim x dim) matrix.
 * Projection for serving is pure Column math with the component
   coefficients folded into the plan as literals (whole-stage codegen,
   zero Python in the hot path) — same pattern as ``kmeans_assign``.
@@ -26,7 +28,7 @@ ascending-eigenvalue order reversed (largest variance first).
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
+from typing import Iterator
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -35,61 +37,42 @@ from pyspark.sql import functions as F
 __all__ = ["pca_fit", "pca_project", "suff_stats", "eig_from_stats"]
 
 
+def _stats(_pid, frames) -> Iterator[np.ndarray]:
+    """One partition's ``[n, *sum vector, *Gram flat]`` over its
+    (bi, n x dim matrix) frames; nothing for an empty partition."""
+    n, s, g = 0, None, None
+    for _bi, x in frames:
+        n += len(x)
+        s = x.sum(axis=0) if s is None else s + x.sum(axis=0)
+        gram = x.T @ x
+        g = gram if g is None else g + gram
+    if n:
+        yield np.concatenate(([n], s, g.ravel()))
+
+
 def suff_stats(
     df: DataFrame, emb_col: str
 ) -> tuple[int, np.ndarray, np.ndarray]:
     """The (n, sum vector, Gram matrix flat) sufficient statistics of
-    ``df[emb_col]`` — ONE mapInPandas pass + treeAggregate; the driver
-    receives a single dim + dim^2 float vector regardless of row count.
-    Addition-mergeable (associative + commutative), which is what makes
-    the streaming maintenance (`streaming.pca_stream_maintenance`)
-    batch-split-independent.
+    ``df[emb_col]`` — ONE mapInPandas pass, summed by
+    `local_replay.sum_partials`; the driver receives one dim + dim^2
+    float vector per partition below its cutover, one in all at or
+    above it. Addition-mergeable (associative + commutative), which is
+    what makes the streaming maintenance
+    (`streaming.pca_stream_maintenance`) batch-split-independent.
     """
-    import pandas as pd
+    from henbun_spark.local_replay import sum_partials
+    from henbun_spark.operators.clustering import _to_matrix
 
-    def partials(batches: Iterable["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        n = 0
-        s = None
-        g = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-            n += len(x)
-            s = x.sum(axis=0) if s is None else s + x.sum(axis=0)
-            gram = x.T @ x
-            g = gram if g is None else g + gram
-        if n == 0:
-            return
-        yield pd.DataFrame(
-            {"n": [n], "s": [s.tolist()], "g": [g.ravel().tolist()]}
-        )
-
-    part_df = df.select(
-        F.col(emb_col).cast("array<double>").alias("_v")
-    ).mapInPandas(partials, "n long, s array<double>, g array<double>")
-
-    def seq(acc, row):
-        n, s, g = acc
-        return (
-            n + row["n"],
-            (np.asarray(row["s"]) if s is None else s + np.asarray(row["s"])),
-            (np.asarray(row["g"]) if g is None else g + np.asarray(row["g"])),
-        )
-
-    def comb(a, b):
-        if a[0] == 0:
-            return b
-        if b[0] == 0:
-            return a
-        return (a[0] + b[0], a[1] + b[1], a[2] + b[2])
-
-    n, s, g = part_df.rdd.treeAggregate((0, None, None), seq, comb, depth=2)
-    if n == 0:
+    total = sum_partials(
+        df.select(F.col(emb_col).cast("array<double>").alias("_v")),
+        _to_matrix, _stats, None,
+    )
+    if total is None:
         raise ValueError("suff_stats: empty input")
-    return int(n), np.asarray(s, dtype=np.float64), np.asarray(
-        g, dtype=np.float64
-    ).ravel()
+    # total.size = 1 + dim + dim^2
+    dim = int(round((np.sqrt(4 * total.size - 3) - 1) / 2))
+    return int(total[0]), total[1: 1 + dim], total[1 + dim:]
 
 
 def eig_from_stats(

@@ -799,7 +799,7 @@ def semantic_dedup(
     # pairs x a dim-length fold each) ran nearly serial; measured
     # 4.7 -> 2.0s at sf0.1 with bit-identical pairs (row placement is
     # invisible: assignment is per-row, pairs are keyed on cluster).
-    # The FIT input stays untouched so treeAggregate's combine order —
+    # The FIT input stays untouched so the partial sums' order —
     # and the centroids — cannot move a bit.
     assigned = clustering.kmeans_assign(
         ensure_parallelism(df), emb_col, centroids

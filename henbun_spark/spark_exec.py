@@ -8,14 +8,15 @@ per step:
   1. minibatch  = ``df.sample(fraction, seed=step)`` (or the full frame)
   2. broadcast  = current global parameters (small numpy arrays)
   3. one job    = ``mapInPandas`` evaluates the user objective per Arrow
-                  batch with `henbun_spark.autodiff`, emitting ONE row per
-                  batch: (loss, n_rows, flattened-gradient)
-  4. aggregate  = partial gradients sum linearly and are combined
-                  IN-CLUSTER via ``RDD.treeAggregate`` (MLlib's pattern):
-                  executors reduce their batch partials, a tree of
-                  combiners folds partition results, and the driver
-                  receives exactly ONE (loss, n, |params|-vector) triple
-                  per step — never one row per batch
+                  batch with `henbun_spark.autodiff`, yielding ONE
+                  [loss, n_rows, *flattened-gradient] vector per batch
+  4. aggregate  = partial gradients sum linearly: the one partial-sum
+                  fold `local_replay.sum_partials` (shared with k-means
+                  and PCA) adds them, collecting one small row per batch
+                  below `local_replay.TREE_DEPTH_CUTOVER` partitions and
+                  ``RDD.treeAggregate`` (depth 2, MLlib's pattern) at or
+                  above it, so the driver never receives a row per batch
+                  at scale
   5. update     = driver-side Adam on the free-space parameter vector
 
 Objective contract (why two methods): a distributed objective must
@@ -46,9 +47,9 @@ a skewed frame under both totals trains distributed (same result,
 slower). Every replayed step and `evaluate` then runs on the driver with
 no Spark job: one `_Replica` per partition, unpickled at its first
 batch, gets the step's global state injected and evaluates that
-partition's batches with the distributed job's seeds and fold order, so
-training history and objective values are bit-identical. The partition
-count P (and so the tree depth) is read once per frame.
+partition's batches with the distributed job's seeds, through the same
+`sum_partials` fold, so training history and objective values are
+bit-identical.
 
 Determinism under task retry (SURVEY §4 O3): the per-batch sample RNG is
 seeded with (step, partitionId, batch_index), so a re-executed task
@@ -56,9 +57,9 @@ redraws identical noise.
 
 Scale: executors never see the whole dataset; the driver never sees rows.
 Traffic per step = |params| broadcast down + |params| collected up (one
-tree-aggregated vector), independent of the number of partitions/batches.
-At 1000 executors with ~1e6 parameters that is ~8 MB each way per step;
-the tree depth (default 2) bounds any single combiner's fan-in.
+tree-aggregated vector past the cutover), independent of the number of
+partitions/batches. At 1000 executors with ~1e6 parameters that is
+~8 MB each way per step; depth 2 bounds any single combiner's fan-in.
 """
 
 from __future__ import annotations
@@ -70,7 +71,7 @@ import numpy as np
 
 from henbun_spark import autodiff as ad
 from henbun_spark.config import settings
-from henbun_spark.local_replay import fetch_batches
+from henbun_spark.local_replay import fetch_batches, sum_partials
 from henbun_spark.model import Adam, Model
 from henbun_spark.param import Data, graph_key
 
@@ -138,21 +139,6 @@ def _trainable(model: Model, collection):
     ]
 
 
-#: partition count above which treeAggregate uses depth 2. Below it the
-#: intermediate combine stage is pure scheduling overhead — with P
-#: partitions depth 2 inserts a ~sqrt(P)-partition shuffle stage per
-#: step, which at the driver SFs (P = 1-32, one small parquet per
-#: table) doubled every training step's stage count for nothing
-#: (measured r12: vi_linear_regression ~30% step-time cut at depth 1).
-#: At the 1000-executor design point P is thousands and depth 2 keeps
-#: driver traffic at one |params| vector — unchanged there.
-TREE_DEPTH_CUTOVER = 64
-
-
-def _tree_depth(nparts: int) -> int:
-    return 2 if nparts >= TREE_DEPTH_CUTOVER else 1
-
-
 #: row cap of the DRIVER-LOCAL replay (r12, guide §1.2 "the distributed
 #: algorithm" / §5 driver): a full-batch training loop is maxiter
 #: sequential Spark jobs whose per-job scheduling + Python-boundary
@@ -168,9 +154,10 @@ def _tree_depth(nparts: int) -> int:
 #: `_Replica` per partition with the same state injection, the same
 #: (step, pid, bi) seeds, and the same partial-fold order — so the Adam
 #: trajectory is REPLICATED BIT-FOR-BIT (pytest-pinned). Past
-#: TREE_DEPTH_CUTOVER partitions no fetch runs: the distributed loop is
-#: the 100 TB design. `fit` and `clustering.kmeans_fit` read this cap
-#: at call time; 0 disables the replay (tests set it for the twin).
+#: `local_replay.TREE_DEPTH_CUTOVER` partitions no fetch runs: the
+#: distributed loop is the 100 TB design. `fit` and
+#: `clustering.kmeans_fit` read this cap at call time; 0 disables the
+#: replay (tests set it for the twin).
 LOCAL_ROWS_CAP = 1 << 17
 
 
@@ -539,98 +526,64 @@ class SparkTrainer:
         # any assignment releases what is held for the frame: the replay
         # ([(pid, bi, pandas frame), ...] from fit(), _sampled_batches'
         # per-partition frames, {pid: _Replica}), whether fit() fetched
-        # it (a frame over the budget fetches None, once), the Arrow batch
-        # rows of the last fit or evaluate, and the partition count (_job)
+        # it (a frame over the budget fetches None, once), and the Arrow
+        # batch rows of the last fit or evaluate
         self._df = frame
         self._local_batches = self._local_parts = self._replicas = None
         self._fetched = False
-        self._arrow_max_records = self._nparts = None
+        self._arrow_max_records = None
 
     # -- internals --------------------------------------------------------
     def _state(self) -> dict:
         return {v.long_name: np.array(v._array) for v in self.vars}
 
     def _job(self, df, state, step, want_grad: bool):
-        """One Spark job: per-batch (loss, n, grad) partials, summed
-        in-cluster; returns a single ``(loss, n, grad-or-None)`` triple.
+        """One Spark job over `df`: ``(loss, n, grad-or-None)`` summed by
+        `local_replay.sum_partials`. Each task builds its partition's
+        `_Replica`, which keeps no tape."""
+        bc, names = self._model_bytes_bc, list(self.var_names)
+        return self._sum(lambda pid: _Replica(bc.value, names, keep_bytes=0),
+                         state, step, want_grad, df=df)
 
-        The mapInPandas stage emits one small row per Arrow batch; a
-        ``treeAggregate`` (depth 2) folds those rows executor-side so
-        driver traffic is one |params| vector regardless of partition
-        count — the flat ``collect()`` of partials would be ~8 GB/step at
-        the 1000-executor x 1e6-param design point and trip
-        spark.driver.maxResultSize.
-        """
-        model_bytes_bc = self._model_bytes_bc
-        var_names = list(self.var_names)
-        state_items = {k: np.array(v) for k, v in state.items()}
-        # the driver's float_type travels with the job, so the float32
-        # mode's Arrow/compute savings materialize cluster-side
+    def _replica(self, pid) -> _Replica:
+        """The held replay's `_Replica` of partition `pid`, built at its
+        first batch with a 1/P share of TAPE_BUDGET_BYTES and kept while
+        the trainer holds its frame, as a task keeps its model across its
+        Arrow batches."""
+        rep = self._replicas.get(pid)
+        if rep is None:
+            nparts = len({p for p, _, _ in self._local_batches})
+            rep = self._replicas[pid] = _Replica(
+                self._model_bytes_bc.value,
+                self.var_names,
+                keep_bytes=TAPE_BUDGET_BYTES // nparts,
+            )
+        return rep
+
+    def _sum(self, replica, state, step, want_grad: bool, df=None, batches=None):
+        """``(loss, n, grad-or-None)`` of one step: `sum_partials` over
+        `df` in one job, or over `batches` (the held list, or a minibatch
+        step's sampled chunks) on the driver. Both paths evaluate each
+        Arrow batch on ``replica(pid)`` with the step's state, under the
+        driver's float_type and the (step, pid, bi) seed, and sum one
+        ``[loss, n, *grad]`` vector per batch in the same order, so the
+        replay matches the job bit for bit (pytest-pinned)."""
         float_name = np.dtype(settings.dtypes.float_type).name
+        n_params = int(np.sum(self.var_sizes)) if want_grad and self.var_sizes else 0
 
-        def fn(iterator):
-            import pandas as pd
-
+        def partial(pid, frames):
+            # the float_type travels with the job, so the float32 mode's
+            # Arrow/compute savings materialize cluster-side
             with _float_type(float_name):
-                rep = _Replica(model_bytes_bc.value, var_names, keep_bytes=0)
-                rep.load(state_items, np.dtype(float_name).type)
-                pid = TaskContext.get().partitionId() if TaskContext.get() else 0
-                for bi, pdf in enumerate(iterator):
-                    if len(pdf) == 0:
-                        continue
+                rep = replica(pid)
+                rep.load(state, np.dtype(float_name).type)
+                for bi, pdf in frames:
                     seed = hash((int(step), int(pid), int(bi))) % (2**63)
                     loss, grad = rep.evaluate(pdf, seed, want_grad)
-                    out = {"loss": [loss], "n": [len(pdf)]}
-                    out["grad"] = [
-                        (grad if grad is not None else np.zeros(0)).tolist()
-                    ]
-                    yield pd.DataFrame(out)
+                    yield np.concatenate(([loss, len(pdf)], grad if want_grad else ()))
 
-        schema = "loss double, n long, grad array<double>"
-        partials = df.mapInPandas(fn, schema=schema)
-        n_params = int(np.sum(self.var_sizes)) if want_grad and self.var_sizes else 0
-        zero = (0.0, 0, np.zeros(n_params, dtype=np.float64))
-        if self._nparts is None:  # `df` is self.df or a sample of it
-            from henbun_spark.operators._parallel import _plan_partitions
-
-            self._nparts = _plan_partitions(self.df)
-        depth = _tree_depth(self._nparts)
-
-        if depth == 1:
-            # depth-1 regime (driver SFs: a handful of partitions, one
-            # small partial row per Arrow batch): collect the partials
-            # directly and fold on the driver in partition/batch order.
-            # `partials.rdd.treeAggregate` at depth 1 shipped every
-            # partial row back through a SECOND Python-worker evaluation
-            # layer (the RDD seq/comb funcs) plus a javaToPython plan
-            # conversion per step — pure per-step overhead when the
-            # driver receives the same few rows either way (guide §4:
-            # eliminate boundary crossings). Float sums regroup at the
-            # batch level (~1 ulp), same class of reorder the tree
-            # combine already allowed. `evaluate` takes this path too:
-            # one stage, where a groupBy sum planned a shuffle and a
-            # second stage to add a few rows.
-            loss, n, grad = zero
-            for row in partials.collect():
-                g = np.asarray(row["grad"], dtype=np.float64)
-                grad[: g.size] += g
-                loss += row["loss"]
-                n += int(row["n"])
-            return float(loss), int(n), grad if want_grad else None
-
-        def seq(acc, row):
-            g = np.asarray(row["grad"], dtype=np.float64)
-            gacc = acc[2]
-            gacc[: g.size] += g  # zero is per-partition; in-place is safe
-            return (acc[0] + row["loss"], acc[1] + int(row["n"]), gacc)
-
-        def comb(a, b):
-            gacc = b[2]
-            gacc += a[2]
-            return (a[0] + b[0], a[1] + b[1], gacc)
-
-        loss, n, grad = partials.rdd.treeAggregate(zero, seq, comb, depth=depth)
-        return float(loss), int(n), grad if want_grad else None
+        total = sum_partials(df, lambda pdf: pdf, partial, 2 + n_params, batches)
+        return float(total[0]), int(total[1]), total[2:] if want_grad else None
 
     def _fetch_local_batches(self):
         """The frame's (partitionId, batch index, pandas frame) triples,
@@ -648,46 +601,6 @@ class SparkTrainer:
         ))
         if rows != self._arrow_max_records:
             self.df, self._arrow_max_records = self.df, rows
-
-    def _job_local(self, state, step, want_grad: bool, batches):
-        """Driver-local replica of `_job` over `batches` (the held list,
-        or a minibatch step's sampled chunks): one `_Replica` per
-        partition, unpickled at its first batch and kept while the
-        trainer holds its frame (as a task keeps its model across its
-        Arrow batches), the step's state injected into it, the same
-        (step, pid, bi) seeds, partials folded in (pid, bi) order — the
-        identical order the depth-1 collect fold uses — so every float
-        matches the distributed job bit-for-bit (pytest-pinned). Each
-        replica keeps its traces across steps and fits within its 1/P
-        share of TAPE_BUDGET_BYTES, so a full-batch step replays every
-        partition's objective (the enforced contract in the module
-        docstring). The replay holds REPLAY_BUDGET_BYTES of batches plus
-        TAPE_BUDGET_BYTES of tapes at most."""
-        float_type = np.dtype(settings.dtypes.float_type).type
-        n_params = int(np.sum(self.var_sizes)) if self.var_sizes else 0
-        loss, n = 0.0, 0
-        grad = np.zeros(n_params, dtype=np.float64) if want_grad else None
-        rep, cur_pid = None, None
-        for pid, bi, pdf in batches:
-            if pid != cur_pid:
-                rep = self._replicas.get(pid)
-                if rep is None:
-                    nparts = len({p for p, _, _ in self._local_batches})
-                    rep = self._replicas[pid] = _Replica(
-                        self._model_bytes_bc.value,
-                        self.var_names,
-                        keep_bytes=TAPE_BUDGET_BYTES // nparts,
-                    )
-                rep.load(state, float_type)
-                cur_pid = pid
-            seed = hash((int(step), int(pid), int(bi))) % (2**63)
-            bloss, bgrad = rep.evaluate(pdf, seed, want_grad)
-            if want_grad:
-                g = bgrad if bgrad is not None else np.zeros(0)
-                grad[: g.size] += g
-            loss += bloss
-            n += len(pdf)
-        return float(loss), int(n), grad
 
     def _unflatten(self, flat: np.ndarray):
         out, off = [], 0
@@ -734,7 +647,8 @@ class SparkTrainer:
         if self._local_batches is not None and self._replays(fraction):
             batches = (self._local_batches if full
                        else self._sampled_batches(fraction, step))
-            return (*self._job_local(state, step, want_grad, batches), scale)
+            return (*self._sum(self._replica, state, step, want_grad,
+                               batches=batches), scale)
         df = self.df if full else self.df.sample(fraction=fraction, seed=step)
         return (*self._job(df, state, step, want_grad), scale)
 

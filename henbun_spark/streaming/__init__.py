@@ -709,8 +709,8 @@ def pca_stream_maintenance(
 ):
     """Incremental PCA sufficient statistics over a stream (r8): every
     micro-batch reduces to ONE (n, sum, Gram) row
-    (`decomposition.suff_stats` — mapInPandas partials + treeAggregate,
-    the driver sees dim + dim^2 doubles), and foreachBatch ADDS it into
+    (`decomposition.suff_stats` — mapInPandas partials added by
+    `local_replay.sum_partials`), and foreachBatch ADDS it into
     a persistent 1-row parquet state under the same versioned-snapshot
     exactly-once commit machinery as the sketch/MV maintenance sinks.
 

@@ -150,6 +150,46 @@ def test_no_inline_spark_graft_env_knobs():
     assert len(list(_spark_graft_env_reads(ast.parse(allowed.read_text())))) == 2
 
 
+def _partial_fold_uses(tree):
+    """Line numbers of `treeAggregate` calls and `TREE_DEPTH_CUTOVER`
+    reads (by name or as a module attribute)."""
+    import ast
+
+    for node in ast.walk(tree):
+        if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "treeAggregate"):
+            yield node.lineno
+        elif isinstance(node, ast.Name) and node.id == "TREE_DEPTH_CUTOVER":
+            if isinstance(node.ctx, ast.Load):
+                yield node.lineno
+        elif isinstance(node, ast.Attribute) and node.attr == "TREE_DEPTH_CUTOVER":
+            yield node.lineno
+        elif isinstance(node, ast.ImportFrom) and any(
+                a.name == "TREE_DEPTH_CUTOVER" for a in node.names):
+            yield node.lineno
+
+
+def test_partial_sums_fold_in_one_place():
+    """The iterative fits (SparkTrainer, k-means, PCA) add their
+    per-partition partials through `local_replay.sum_partials` alone: no
+    other library module calls `treeAggregate` or reads the cutover that
+    picks its depth."""
+    import ast
+    from pathlib import Path
+
+    root = Path(entry_mod.__file__).resolve().parent
+    allowed = root / "henbun_spark" / "local_replay.py"
+    hits = [
+        f"{path.relative_to(root)}:{line}"
+        for path in sorted((root / "henbun_spark").rglob("*.py"))
+        if path != allowed
+        for line in _partial_fold_uses(ast.parse(path.read_text()))
+    ]
+    assert not hits, f"partial-sum folds outside local_replay: {hits}"
+    # the scan sees the fold it must allow: one call, two cutover reads
+    assert len(list(_partial_fold_uses(ast.parse(allowed.read_text())))) == 3
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     rows = df.collect()

@@ -1,5 +1,7 @@
 """`local_replay.fetch_batches`: the one-job driver fetch under the row
-cap and the byte budget, each task bounded by its 1/P share."""
+cap and the byte budget, each task bounded by its 1/P share; and
+`local_replay.sum_partials`, whose replay over those batches adds the
+bits its distributed job adds."""
 
 import hashlib
 import pickle
@@ -9,7 +11,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from henbun_spark.local_replay import REPLAY_BUDGET_BYTES, fetch_batches
+from henbun_spark.local_replay import REPLAY_BUDGET_BYTES, fetch_batches, sum_partials
 from henbun_spark.spark_exec import LOCAL_ROWS_CAP
 
 
@@ -108,3 +110,50 @@ def test_fetch_batches_budget_edges(spark, make, rows_cap, fetched, to_payload):
         assert sum(len(pickle.dumps(data)) for _, _, data in got) < REPLAY_BUDGET_BYTES
     finally:
         spark.conf.set(key, prev)
+
+
+@pytest.mark.parametrize("per", ["batch", "partition"])
+def test_sum_partials_replay_bitwise_equals_distributed(spark, per):
+    """One vector per Arrow batch, or one per partition, summed over a
+    frame whose partitions hold 3 Arrow batches each, with an empty
+    partition between them: the driver replay over `fetch_batches` adds
+    the same bits the distributed job adds. The values span 7 orders of
+    magnitude, so a sum in another order moves bits."""
+    a = F.sin(F.col("id") * 0.37) * F.pow(F.lit(10.0), F.col("id") % 7)
+    # 4 partitions of 750 ids; the filter empties the third
+    df = (
+        spark.range(0, 3000, 1, 4)
+        .where((F.col("id") < 1500) | (F.col("id") >= 2250))
+        .select(a.alias("a"), F.cos(F.col("id") * 1.3).alias("b"))
+    )
+
+    def per_batch(pid, frames):
+        for bi, x in frames:
+            yield np.concatenate(([len(x), x[:, 0].sum() * (bi + 1),
+                                   (x[:, 0] * x[:, 1]).sum() + pid],
+                                  x[:5, 0] / (x[:5, 1] + 2.0)))
+
+    def per_partition(pid, frames):
+        total = np.zeros(8)
+        for v in per_batch(pid, frames):
+            total = total * 0.5 + v
+        yield total
+
+    def to_payload(pdf):
+        return pdf[["a", "b"]].to_numpy()
+
+    partial = per_batch if per == "batch" else per_partition
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "300")
+    try:
+        batches = fetch_batches(df, to_payload, LOCAL_ROWS_CAP)
+        distributed = sum_partials(df, to_payload, partial, 8)
+    finally:
+        spark.conf.set(key, prev)
+    assert [(pid, bi) for pid, bi, _ in batches] == [
+        (pid, bi) for pid in (0, 1, 3) for bi in range(3)
+    ]
+    assert sum(len(x) for _, _, x in batches) == 2250
+    replayed = sum_partials(None, None, partial, 8, batches)
+    assert distributed.tobytes() == replayed.tobytes()

@@ -104,6 +104,19 @@ def test_minibatch_training():
     np.testing.assert_allclose(m.mu.value[0], true_mean, atol=0.15)
 
 
+def test_minibatch_fit_repeats_bitwise():
+    """Minibatch draws come from `settings.training.seed`, not OS
+    entropy: two fresh models fit to the same bits."""
+    mus = []
+    for _ in range(2):
+        m = MinibatchModel()
+        m.lik().compile(optimizer=Adam(learning_rate=0.05)).optimize(
+            maxiter=50, minibatch_size=32
+        )
+        mus.append(m.mu.value.tobytes())
+    assert mus[0] == mus[1]
+
+
 def test_validate_rejects_mismatched_minibatch_sizes():
     class Bad(hb.Model):
         def setUp(self):

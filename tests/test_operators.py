@@ -1634,6 +1634,29 @@ def test_gapfill_locf_fills_and_carries(spark):
     assert len(u2) == 1 and u2[0]["n_events"] == 1 and not u2[0]["filled"]
 
 
+def test_suff_stats_runs_one_stage_and_repeats_its_bits(spark):
+    """Below the fold's cutover `suff_stats` collects its per-partition
+    partials: one stage per call at 8 partitions, where a depth-2
+    treeAggregate added a reduceByKey stage; repeated calls give the same
+    bits."""
+    from henbun_spark.operators import decomposition
+
+    df = spark.range(0, 4000, 1, 8).select(
+        F.array(F.sin(F.col("id") * 0.37), F.cos(F.col("id") * 1.3),
+                F.col("id") / 7.0).alias("emb")
+    )
+    tracker = spark.sparkContext.statusTracker()
+    stages, bits = [], set()
+    for _ in range(3):
+        before = set(tracker.getJobIdsForGroup(None))
+        n, s, g = decomposition.suff_stats(df, "emb")
+        jobs = set(tracker.getJobIdsForGroup(None)) - before
+        stages.append(sum(len(tracker.getJobInfo(j).stageIds) for j in jobs))
+        bits.add((n, s.tobytes(), g.tobytes()))
+    assert stages == [1, 1, 1]
+    assert len(bits) == 1 and n == 4000 and s.shape == (3,) and g.shape == (9,)
+
+
 def test_pca_matches_numpy(emb):
     from henbun_spark.operators import decomposition
 
