@@ -5416,8 +5416,10 @@ def streaming_enrich_static(spark, sf_dir):
     customer dimension (stateless — no watermark, no join state; at
     scale the static side is broadcast per batch), projected and drained
     with availableNow into a parquet sink. Decimal-exact value sums per
-    (mktsegment, event_type) are re-aggregated from the sink scan, so
-    the hash covers the enriched rows end to end."""
+    mktsegment are re-aggregated from the sink scan, so the hash covers
+    the enriched rows end to end. Its twin `streaming_static_enrich`
+    folds per-batch partials into exactly-once state instead; only this
+    one covers the stateless row-level sink drain."""
     from henbun_spark import streaming
 
     ev = _load(spark, sf_dir, "events").select("event_id", "user_id", "value")
@@ -5503,8 +5505,10 @@ FROM (SELECT unnest(range(64)) AS i)
 def image_dedup_ahash(spark, sf_dir):
     """Perceptual image dedup end-to-end on REAL pixels: genuine BMP
     payloads -> decode + box resize + average-hash (Arrow-batched
-    mapInPandas, binary never leaves the scan) -> banded Hamming pair
-    join (pigeonhole blocks, no all-pairs). 8 planted noisy copies must
+    mapInPandas, binary never leaves the scan) -> the one pigeonhole
+    Hamming band join shared with the SimHash operators and the
+    streaming degree index (`dedup.hamming_band_pairs`, no all-pairs,
+    no pair dedup shuffle). 8 planted noisy copies must
     pair with their originals. ORACLE-CHECKED (r7): seeded sf-
     independent synthesis makes the pair output a deterministic
     constant; the oracle pins (id_a, id_b, hamming) as a VALUES table,
@@ -5533,7 +5537,7 @@ def image_dedup_ahash(spark, sf_dir):
         spark.createDataFrame(extras, multimodal.MEDIA_SCHEMA)
     )
     hashes = multimodal.ahash_images(all_media)
-    pairs = multimodal.ahash_near_pairs(hashes, max_hamming=8)
+    pairs = multimodal.hamming_near_pairs(hashes, max_hamming=8)
     return pairs.orderBy("id_a", "id_b")
 
 
@@ -5541,8 +5545,8 @@ def image_dedup_phash(spark, sf_dir):
     """DCT perceptual-hash image dedup — the level-change-robust sibling
     of `image_dedup_ahash`: BMP decode -> box resize -> 2-D DCT (pure
     numpy, no scipy) -> 8x8 low-frequency block -> median-threshold
-    64-bit fingerprint (DC excluded), then the same banded Hamming pair
-    join. The planted copies get a GLOBAL BRIGHTNESS SHIFT plus noise;
+    64-bit fingerprint (DC excluded), then the same one pigeonhole
+    Hamming band join (`dedup.hamming_band_pairs`). The planted copies get a GLOBAL BRIGHTNESS SHIFT plus noise;
     8 shifted copies must pair with their originals. pHash and aHash
     have complementary failure modes, which is why pipelines carry
     both. ORACLE-CHECKED (r7): seeded sf-independent synthesis makes
@@ -5585,8 +5589,8 @@ def audio_dedup_fp(spark, sf_dir):
     sibling of `image_dedup_ahash`: genuine PCM16 WAV payloads (multi-tone
     mixes, so spectra are diverse) -> decode + spectral-envelope
     fingerprint (Arrow-batched mapInPandas; only (id, 31-bit fp) leaves
-    the scan) -> banded Hamming pair join (pigeonhole blocks, no
-    all-pairs). 8 planted re-levelled+noisy copies must pair with their
+    the scan) -> the one pigeonhole Hamming band join shared with the
+    SimHash operators (`dedup.hamming_band_pairs`, no all-pairs). 8 planted re-levelled+noisy copies must pair with their
     originals: the fingerprint bits are cumulative-energy-curve signs,
     invariant to gain and robust to additive noise. ORACLE-CHECKED
     (r7): seeded sf-independent synthesis makes the FULL pair output
@@ -5624,7 +5628,7 @@ def audio_dedup_fp(spark, sf_dir):
         )
     media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA).coalesce(8)
     fp = multimodal.audio_fingerprint(media).withColumnRenamed("afp", "ahash")
-    pairs = multimodal.ahash_near_pairs(fp, bits=31, max_hamming=3)
+    pairs = multimodal.hamming_near_pairs(fp, bits=31, max_hamming=3)
     return pairs.orderBy("id_a", "id_b")
 
 
@@ -9265,7 +9269,11 @@ def streaming_static_enrich(spark, sf_dir):
     hash protocol rendered the decimal differently; pure BIGINTs leave
     nothing representation-dependent to hash (the floor-quantize is the
     same IEEE op sequence in both engines, the repo's standard recipe).
-    The drained state equals the batch join+groupBy bit-for-bit."""
+    The drained state equals the batch join+groupBy bit-for-bit. Its
+    twin `streaming_enrich_static` drains enriched rows statelessly to
+    parquet over `customer` alone; only this one covers the exactly-once
+    `mv_stream_maintenance` fold and the two-table `customer ⋈ nation`
+    dimension."""
     from henbun_spark import streaming
 
     ev = _load(spark, sf_dir, "events").select(

@@ -466,70 +466,95 @@ def simhash(
     return agg.select(F.col(id_col), fp.alias("simhash"))
 
 
-def simhash_near_pairs(
-    df: DataFrame, text_col: str, id_col: str, bits: int = 16, max_hamming: int = 2
+def _band_block(fp, i: int, bits: int, nblocks: int):
+    """Block i of a `bits`-wide fingerprint cut into `nblocks` blocks of
+    bits // nblocks bits (a remainder of high bits is in no block)."""
+    width = bits // nblocks
+    return F.shiftright(fp, i * width).bitwiseAND(F.lit((1 << width) - 1))
+
+
+def hamming_band_blocks(
+    fps: DataFrame, id_col: str, fp_col: str, bits: int, max_hamming: int
 ) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance, candidate-generated by
-    banding the fingerprint into (max_hamming+1) blocks (pigeonhole: any
-    pair within distance k agrees on >= 1 of k+1 blocks).
-
-    The blocks are unpivoted to (block_idx, block_val) rows and matched in
-    ONE self-join keyed on both — one shuffle of (k+1)*n rows instead of
-    k+1 separate self-joins. The key space is only (k+1) * 2^block_bits
-    buckets with large membership, so the self-join (parallel across join
-    output) beats `intra_bucket_pairs` here — see its docstring.
-
-    A pair agreeing on several blocks matches the join once per block;
-    instead of a `distinct()` (a full shuffle of the candidate volume —
-    at sf1 that is 660M rows for 166M true pairs, most of them
-    hamming-0 ⇒ (k+1)-fold duplicated), each pair is emitted from its
-    FIRST agreeing block only: `for all j < bi: block_j(a) != block_j(b)`
-    is pure Column math on the two fingerprints carried by the join row,
-    so the dedup happens MAP-SIDE on the join output and the result
-    needs zero further shuffle."""
-    fps = simhash(df, text_col, id_col, bits)
+    """The pigeonhole banding of fixed-width fingerprints: each row of
+    `fps` unpivots to max_hamming + 1 rows `(id, fp, bi, blk)`, one per
+    block. Any two fingerprints within Hamming distance k agree on
+    at least one of k + 1 disjoint blocks, so an equi-join on (bi, blk)
+    misses no near pair. Join two bandings with `hamming_band_pairs`."""
     nblocks = max_hamming + 1
-    block_bits = bits // nblocks
-
-    def block_of(col, i):
-        return F.shiftright(col, i * block_bits).bitwiseAND(
-            F.lit((1 << block_bits) - 1)
-        )
-
-    blocks = [block_of(F.col("simhash"), i).alias(f"blk{i}") for i in range(nblocks)]
+    blocks = [
+        _band_block(F.col(fp_col), i, bits, nblocks).alias(f"blk{i}")
+        for i in range(nblocks)
+    ]
     pairs = ", ".join(f"{i}, blk{i}" for i in range(nblocks))
-    stacked = fps.select(id_col, "simhash", *blocks).selectExpr(
-        id_col, "simhash", f"stack({nblocks}, {pairs}) as (bi, blk)"
+    return fps.select(id_col, fp_col, *blocks).selectExpr(
+        id_col, fp_col, f"stack({nblocks}, {pairs}) as (bi, blk)"
     )
-    # r12: persist the (n x nblocks)-row banded fingerprints — the self-
-    # join's broadcast build side otherwise re-runs the whole fingerprint
-    # pipeline (token explode + per-bit md5 sums) a second time (no
-    # exchange reuse across a broadcast build). Tiny table, released per
-    # query via the scaffold registry.
-    stacked = _register_scaffold(stacked, slot="simhash")
-    a = stacked.alias("a")
-    b = stacked.alias("b")
-    first_match = None
-    for j in range(nblocks):
-        cond = (F.col("bi") <= F.lit(j)) | (
-            block_of(F.col("a.simhash"), j) != block_of(F.col("b.simhash"), j)
+
+
+def hamming_band_pairs(
+    a: DataFrame, b: DataFrame, id_col: str, fp_col: str, bits: int, max_hamming: int
+) -> DataFrame:
+    """The one band join of near-dup detection over fingerprints (SimHash
+    pairs and neighbours, media fingerprints, the streaming degree index):
+    `(id_a, id_b, hamming)` for every row pair of the two
+    `hamming_band_blocks` tables within `max_hamming` bits, ONE join keyed
+    on (bi, blk) — one shuffle of (k+1)*n rows instead of k+1 self-joins.
+
+    A pair agreeing on several blocks matches once per block; instead of a
+    `distinct()` (a full shuffle of the candidate volume — at sf1 660M rows
+    for 166M true SimHash pairs, most of them hamming-0 and so (k+1)-fold
+    duplicated), each pair is kept from its FIRST agreeing block only:
+    `for all j < bi: block_j(a) != block_j(b)` is Column math on the two
+    fingerprints the join row carries, so the pairs are unique MAP-SIDE
+    and need no further shuffle. Hamming is computed and filtered on the
+    join output, so only true near pairs flow downstream. The caller adds
+    its id predicate (`<` for a pair set, `!=` for neighbour lists)."""
+    nblocks = max_hamming + 1
+    fa, fb = F.col(f"a.{fp_col}"), F.col(f"b.{fp_col}")
+    first = F.lit(True)
+    for j in range(max_hamming):
+        first = first & (
+            (F.col("bi") <= F.lit(j))
+            | (_band_block(fa, j, bits, nblocks) != _band_block(fb, j, bits, nblocks))
         )
-        first_match = cond if first_match is None else (first_match & cond)
     return (
-        a.join(b, on=["bi", "blk"])
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .where(first_match)
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))),
-        )
-        .where(F.col("hamming") <= max_hamming)
+        a.alias("a")
+        .join(b.alias("b"), on=["bi", "blk"])
+        .where(first)
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
-            "hamming",
+            F.bit_count(fa.bitwiseXOR(fb)).alias("hamming"),
         )
+        .where(F.col("hamming") <= max_hamming)
     )
+
+
+def _simhash_band_pairs(df, text_col, id_col, bits, max_hamming):
+    # persist the (n x nblocks)-row banded fingerprints — the self-join's
+    # broadcast build side otherwise re-runs the whole fingerprint
+    # pipeline (token explode + per-bit md5 sums) a second time (no
+    # exchange reuse across a broadcast build). Tiny table, released per
+    # query via the scaffold registry.
+    fps = simhash(df, text_col, id_col, bits)
+    bands = hamming_band_blocks(fps, id_col, "simhash", bits, max_hamming)
+    bands = _register_scaffold(bands, slot="simhash")
+    return hamming_band_pairs(bands, bands, id_col, "simhash", bits, max_hamming)
+
+
+def simhash_near_pairs(
+    df: DataFrame, text_col: str, id_col: str, bits: int = 16, max_hamming: int = 2
+) -> DataFrame:
+    """Near-dup pairs (id_a < id_b) by SimHash Hamming distance,
+    candidate-generated by the pigeonhole band join
+    (`hamming_band_pairs`: the fingerprint cut into max_hamming + 1
+    blocks; any pair within distance k agrees on >= 1 of k+1 blocks).
+    The key space is only (k+1) * 2^block_bits buckets with large
+    membership, so the self-join (parallel across join output) beats
+    `intra_bucket_pairs` here — see its docstring."""
+    pairs = _simhash_band_pairs(df, text_col, id_col, bits, max_hamming)
+    return pairs.where(F.col("id_a") < F.col("id_b"))
 
 
 def simhash_neighbor_topk(
@@ -549,62 +574,19 @@ def simhash_neighbor_topk(
     for 10x the rows). At 100 TB nobody materializes that set; the
     production question is per-doc: HOW MANY near neighbors (dup-cluster
     mass) and WHICH k are nearest (canonical-pick / inspect). Candidate
-    generation reuses the same pigeonhole banding; only the finalization
-    changes:
+    generation is the same band join (`hamming_band_pairs`, whose rows are
+    true near pairs, unique map-side); only the finalization changes:
 
-    * hamming is computed and filtered on the banded join output BEFORE
-      any further shuffle, so only true near pairs flow downstream;
-    * a pair agreeing on several blocks is emitted from its FIRST
-      agreeing block only (`for all j < bi: block_j(a) != block_j(b)` —
-      pure Column math on the fingerprints the join row already
-      carries), so (doc, nbr) rows are unique MAP-SIDE and no dedup
-      groupBy/distinct shuffle exists at all;
     * n_near and the rank come from one window keyed on the doc id
       (per-doc neighbor lists are dup-cluster-sized, not corpus-sized);
     * ties break deterministically on (hamming asc, neighbor id asc).
 
     Output: (id_col, n_near, nn_rank, nbr_id, hamming) with nn_rank <= k.
     """
-    fps = simhash(df, text_col, id_col, bits)
-    nblocks = max_hamming + 1
-    block_bits = bits // nblocks
-
-    def block_of(col, i):
-        return F.shiftright(col, i * block_bits).bitwiseAND(
-            F.lit((1 << block_bits) - 1)
-        )
-
-    blocks = [block_of(F.col("simhash"), i).alias(f"blk{i}") for i in range(nblocks)]
-    pairs = ", ".join(f"{i}, blk{i}" for i in range(nblocks))
-    stacked = fps.select(id_col, "simhash", *blocks).selectExpr(
-        id_col, "simhash", f"stack({nblocks}, {pairs}) as (bi, blk)"
-    )
-    # r12: persist the (n x nblocks)-row banded fingerprints — the self-
-    # join's broadcast build side otherwise re-runs the whole fingerprint
-    # pipeline (token explode + per-bit md5 sums) a second time (no
-    # exchange reuse across a broadcast build). Tiny table, released per
-    # query via the scaffold registry.
-    stacked = _register_scaffold(stacked, slot="simhash")
-    a = stacked.alias("a")
-    b = stacked.alias("b")
-    first_match = None
-    for j in range(nblocks):
-        cond = (F.col("bi") <= F.lit(j)) | (
-            block_of(F.col("a.simhash"), j) != block_of(F.col("b.simhash"), j)
-        )
-        first_match = cond if first_match is None else (first_match & cond)
     near = (
-        a.join(b, on=["bi", "blk"])
-        .where(F.col(f"a.{id_col}") != F.col(f"b.{id_col}"))
-        .where(first_match)
-        .select(
-            F.col(f"a.{id_col}").alias(id_col),
-            F.col(f"b.{id_col}").alias("nbr_id"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
+        _simhash_band_pairs(df, text_col, id_col, bits, max_hamming)
+        .where(F.col("id_a") != F.col("id_b"))
+        .select(F.col("id_a").alias(id_col), F.col("id_b").alias("nbr_id"), "hamming")
     )
     by_doc = Window.partitionBy(id_col)
     ordered = by_doc.orderBy(F.col("hamming").asc(), F.col("nbr_id").asc())

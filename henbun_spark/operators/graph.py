@@ -41,12 +41,14 @@ __all__ = [
     "pagerank",
 ]
 
-# Driver union-find fast-path cap (edges). Near-dup graphs after
-# candidate pruning are usually far smaller than the corpus; under the
-# cap, one collect + path-compressed union-find replaces O(rounds)
-# shuffle iterations (each round costs a join + groupBy + checkpoint +
-# count action). Over the cap, the distributed iteration runs — same
-# output contract either way.
+#: Driver fast-path cap (edges) of `connected_components`,
+#: `connected_components_star` and `pagerank`. Near-dup graphs after
+#: candidate pruning are usually far smaller than the corpus; under the
+#: cap, one collect + a driver union-find (or PageRank recurrence)
+#: replaces O(rounds) shuffle iterations (each round costs a join +
+#: groupBy + checkpoint + count action). Over the cap, the distributed
+#: iteration runs — same output contract either way. Read at call time;
+#: 0 disables the fast path (tests set it for the distributed twin).
 DRIVER_UNION_FIND_MAX_EDGES = 200_000
 
 
@@ -140,7 +142,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    driver_cap: int | None = None,
 ) -> DataFrame:
     """Label every node reachable through `edges` with the minimum node id
     of its connected component.
@@ -155,10 +156,10 @@ def connected_components(
     use a doubling algorithm instead of silently-wrong labels.
 
     Graphs whose (deduplicated, symmetrized) edge list fits under
-    ``driver_cap`` (default `DRIVER_UNION_FIND_MAX_EDGES`) take the
-    driver union-find fast path instead of iterating: the count is free
-    on the already-checkpointed edges, and one collect replaces
-    O(diameter) shuffle rounds. Same (node, min-id comp) contract.
+    `DRIVER_UNION_FIND_MAX_EDGES` take the driver union-find fast path
+    instead of iterating: the count is free on the already-checkpointed
+    edges, and one collect replaces O(diameter) shuffle rounds. Same
+    (node, min-id comp) contract.
 
     Dirty edge lists: an edge with a NULL endpoint is dropped by the
     ``u != v`` guard BEFORE either path sees it (NULL-safe by SQL
@@ -179,7 +180,7 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    cap = DRIVER_UNION_FIND_MAX_EDGES if driver_cap is None else driver_cap
+    cap = DRIVER_UNION_FIND_MAX_EDGES
     if cap and sym.count() <= cap:
         return _driver_union_find(edges.sparkSession, sym)
     labels = (
@@ -222,7 +223,6 @@ def connected_components_star(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 40,
-    driver_cap: int | None = None,
 ) -> DataFrame:
     """Connected components via alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -277,7 +277,7 @@ def connected_components_star(
     ).localCheckpoint(eager=True)
     # small-graph fast path: see connected_components — one collect +
     # union-find beats O(log^2 n) x (4 shuffles + checkpoint + count)
-    cap = DRIVER_UNION_FIND_MAX_EDGES if driver_cap is None else driver_cap
+    cap = DRIVER_UNION_FIND_MAX_EDGES
     if cap and cur.count() <= cap:
         return _driver_union_find(edges.sparkSession, cur)
     prev_sig = None
@@ -348,7 +348,6 @@ def pagerank(
     dst: str = "dst",
     iters: int = 10,
     damping: float = 0.85,
-    _driver_cap: int | None = None,
 ) -> DataFrame:
     """PageRank on an undirected edge list (each edge walks both ways),
     fixed `iters` power iterations:
@@ -386,7 +385,7 @@ def pagerank(
     # pinned), so one collect replaces iters x (2 joins + groupBy +
     # periodic checkpoint) of fixed-latency jobs. Same bounded-driver
     # design (and cap) as connected_components' union-find path.
-    cap = DRIVER_UNION_FIND_MAX_EDGES if _driver_cap is None else _driver_cap
+    cap = DRIVER_UNION_FIND_MAX_EDGES
     if cap and sym.count() <= cap:
         return _driver_pagerank(edges.sparkSession, sym, iters, damping)
     deg = (

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from henbun_spark.operators import dedup
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -475,11 +477,16 @@ def ahash_images(df: DataFrame, hash_size: int = 8, strict: bool = True) -> Data
 def hamming_near_pairs(
     df: DataFrame, bits: int = 63, max_hamming: int = 3, hash_col: str = "ahash"
 ) -> DataFrame:
-    """Near-duplicate pairs by Hamming distance over any 64-bit
-    fingerprint column (aHash, pHash, audio fp), banded with the
-    pigeonhole block join (any pair within distance k agrees on one of
-    k+1 blocks) — identical candidate-generation shape to
-    `dedup.simhash_near_pairs`, never an all-pairs comparison.
+    """Near-duplicate pairs (id_a < id_b) by Hamming distance over any
+    64-bit fingerprint column (aHash, pHash, audio fp): the pigeonhole
+    band join `dedup.hamming_band_pairs` of `dedup.simhash_near_pairs`
+    (any pair within distance k agrees on one of k+1 blocks), never an
+    all-pairs comparison.
+
+    Output: one row per distinct (media_id, hash) row pair, so the
+    n-row input is deduplicated before banding (a repeated row would
+    otherwise pair twice); the candidate pairs are unique map-side and
+    never shuffle again.
 
     Scale caveat: block width is bits // (max_hamming + 1); a large
     max_hamming shrinks blocks (max_hamming=10 -> 5-bit blocks, 32
@@ -488,41 +495,10 @@ def hamming_near_pairs(
     loose thresholds at corpus scale prefer a longer fingerprint or a
     two-stage (tight-band candidates, then verify at the loose
     threshold) pipeline."""
-    from pyspark.sql import functions as FF
-
-    nblocks = max_hamming + 1
-    block_bits = bits // nblocks
-    blocks = [
-        FF.shiftright(FF.col(hash_col), i * block_bits)
-        .bitwiseAND(FF.lit((1 << block_bits) - 1))
-        .alias(f"blk{i}")
-        for i in range(nblocks)
-    ]
-    pairs = ", ".join(f"{i}, blk{i}" for i in range(nblocks))
-    stacked = df.select("media_id", hash_col, *blocks).selectExpr(
-        "media_id", hash_col, f"stack({nblocks}, {pairs}) as (bi, blk)"
-    )
-    a, b = stacked.alias("a"), stacked.alias("b")
-    return (
-        a.join(b, on=["bi", "blk"])
-        .where(FF.col("a.media_id") < FF.col("b.media_id"))
-        .select(
-            FF.col("a.media_id").alias("id_a"),
-            FF.col("b.media_id").alias("id_b"),
-            FF.col(f"a.{hash_col}").alias("h_a"),
-            FF.col(f"b.{hash_col}").alias("h_b"),
-        )
-        .distinct()
-        .withColumn(
-            "hamming", FF.bit_count(FF.col("h_a").bitwiseXOR(FF.col("h_b")))
-        )
-        .where(FF.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-
-
-# back-compat name (pre-r5 callers/tests)
-ahash_near_pairs = hamming_near_pairs
+    band = ("media_id", hash_col, bits, max_hamming)
+    bands = dedup.hamming_band_blocks(df.select("media_id", hash_col).distinct(), *band)
+    pairs = dedup.hamming_band_pairs(bands, bands, *band)
+    return pairs.where(F.col("id_a") < F.col("id_b"))
 
 
 def audio_fingerprint(df: DataFrame, n_bands: int = 32, strict: bool = True) -> DataFrame:
@@ -530,7 +506,7 @@ def audio_fingerprint(df: DataFrame, n_bands: int = 32, strict: bool = True) -> 
     one frame): decode WAV -> magnitude spectrum -> `n_bands` log-spaced
     band energies -> sign-of-derivative bits (band[i] > band[i-1]) ->
     integer fingerprint. Pitch/level shifts that preserve the spectral
-    envelope shape keep most bits; pair with `ahash_near_pairs` (both
+    envelope shape keep most bits; pair with `hamming_near_pairs` (both
     emit a plain integer hash column).
 
     Arrow-batched mapInPandas; only (media_id, afp) leaves the stage.

@@ -173,27 +173,6 @@ def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_b
     w.parquet(path)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int = 32,
-    mode: str = "overwrite",
-    sort_cols: list[str] | None = None,
-):
-    """Sink: bucketed managed table (`bucketBy` requires saveAsTable).
-
-    Two tables bucketed on the same keys with the same bucket count
-    join WITHOUT a shuffle — the exchange is elided because both sides
-    already share the hash partitioning. At 100 TB this turns every
-    repeated fact-to-fact join on the bucket key into a zero-shuffle
-    SortMergeJoin; pay the layout cost once at ingest."""
-    w = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.format("parquet").saveAsTable(table)
-
-
 def compact_parquet(
     spark: SparkSession,
     in_path: str,

@@ -904,8 +904,8 @@ def simhash_degree_stream_maintenance(
     is known the moment a doc lands (admission control / dedup routing),
     without ever re-scanning the corpus. Per-batch cost is
     O(|batch| x bucket-mates): the batch's fingerprints band-join the
-    INDEX's fingerprints (same pigeonhole blocks as the batch
-    `simhash_neighbor_topk`), never index-vs-index.
+    INDEX's fingerprints (`dedup.hamming_band_pairs`, the band join of
+    the batch `simhash_neighbor_topk`), never index-vs-index.
 
     Exactly-once accounting under ANY batch split: a pair (a, b) is
     counted precisely when the LATER of the two arrives (or once
@@ -933,75 +933,26 @@ def simhash_degree_stream_maintenance(
     """
     from henbun_spark.operators import dedup
 
-    nblocks = max_hamming + 1
-    block_bits = bits // nblocks
-
-    def blocks_of(fps: DataFrame) -> DataFrame:
-        cols = [
-            F.shiftright(F.col("fp"), i * block_bits)
-            .bitwiseAND(F.lit((1 << block_bits) - 1))
-            .alias(f"blk{i}")
-            for i in range(nblocks)
-        ]
-        pairs = ", ".join(f"{i}, blk{i}" for i in range(nblocks))
-        return fps.select(id_col, "fp", *cols).selectExpr(
-            id_col, "fp", f"stack({nblocks}, {pairs}) as (bi, blk)"
-        )
-
-    def hamming(a, b):
-        return F.bit_count(F.col(a).bitwiseXOR(F.col(b)))
-
-    def block_of(col, i):
-        return F.shiftright(col, i * block_bits).bitwiseAND(
-            F.lit((1 << block_bits) - 1)
-        )
-
-    def first_match():
-        # emit a pair from its FIRST agreeing block only — per-pair
-        # uniqueness without any distinct shuffle (same trick as the
-        # batch simhash_near_pairs / simhash_neighbor_topk)
-        cond = None
-        for j in range(nblocks):
-            c = (F.col("bi") <= F.lit(j)) | (
-                block_of(F.col("a.fp"), j) != block_of(F.col("b.fp"), j)
-            )
-            cond = c if cond is None else (cond & c)
-        return cond
-
     def fold(state, bdf: DataFrame):
         fps_new = dedup.simhash(
             bdf.select(id_col, text_col), text_col, id_col, bits
         ).withColumnRenamed("simhash", "fp")
-        bn = blocks_of(fps_new)
+        band = (id_col, "fp", bits, max_hamming)
+        bn = dedup.hamming_band_blocks(fps_new, *band)
         # within-batch pairs once (a < b) ...
-        cands = (
-            bn.alias("a")
-            .join(bn.alias("b"), on=["bi", "blk"])
-            .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-            .where(first_match())
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-                hamming("a.fp", "b.fp").alias("h"),
-            )
+        pairs = dedup.hamming_band_pairs(bn, bn, *band).where(
+            F.col("id_a") < F.col("id_b")
         )
         if state is not None:
-            # ... plus batch-vs-index pairs (the index never self-joins)
-            bo = blocks_of(state.select(F.col(id_col), F.col("fp")))
-            cands = cands.unionByName(
-                bn.alias("a")
-                .join(bo.alias("b"), on=["bi", "blk"])
-                # a re-ingested id must not pair with its own index row
-                # (hamming 0 would inflate its n_near by nblocks-dedup'd 1)
-                .where(F.col(f"a.{id_col}") != F.col(f"b.{id_col}"))
-                .where(first_match())
-                .select(
-                    F.col(f"a.{id_col}").alias("id_a"),
-                    F.col(f"b.{id_col}").alias("id_b"),
-                    hamming("a.fp", "b.fp").alias("h"),
+            # ... plus batch-vs-index pairs (the index never self-joins);
+            # a re-ingested id must not pair with its own index row
+            # (hamming 0 would inflate its n_near by 1)
+            bo = dedup.hamming_band_blocks(state.select(id_col, "fp"), *band)
+            pairs = pairs.unionByName(
+                dedup.hamming_band_pairs(bn, bo, *band).where(
+                    F.col("id_a") != F.col("id_b")
                 )
             )
-        pairs = cands.where(F.col("h") <= max_hamming).select("id_a", "id_b")
         deltas = (
             pairs.select(F.col("id_a").alias(id_col))
             .unionByName(pairs.select(F.col("id_b").alias(id_col)))

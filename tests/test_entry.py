@@ -190,6 +190,65 @@ def test_partial_sums_fold_in_one_place():
     assert len(list(_partial_fold_uses(ast.parse(allowed.read_text())))) == 3
 
 
+def _band_join_parts(tree):
+    """(line, kind) of each `stack(...) as (bi, blk)` band unpivot and
+    each `bit_count(x.bitwiseXOR(y))` Hamming distance, with the name of
+    the top-level function holding it."""
+    import ast
+    import re
+
+    unpivot = re.compile(r"stack\(.*\)\s*as\s*\(\s*bi\s*,\s*blk\s*\)")
+    for top in tree.body:
+        for node in ast.walk(top):
+            if isinstance(node, ast.JoinedStr):
+                text = "".join(
+                    v.value if isinstance(v, ast.Constant) else "{}"
+                    for v in node.values
+                )
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                text = node.value
+            else:
+                text = None
+            if text is not None and unpivot.search(text):
+                yield getattr(top, "name", None), node.lineno, "unpivot"
+            func = getattr(node, "func", None)
+            name = getattr(func, "attr", getattr(func, "id", None))
+            if isinstance(node, ast.Call) and name == "bit_count" and any(
+                isinstance(a, ast.Call)
+                and getattr(a.func, "attr", None) == "bitwiseXOR"
+                for a in node.args
+            ):
+                yield getattr(top, "name", None), node.lineno, "hamming"
+
+
+def test_hamming_band_join_in_one_place():
+    """SimHash pairs and neighbours, the media fingerprints and the
+    streaming degree index share one pigeonhole band join: the `(bi,
+    blk)` unpivot lives in `dedup.hamming_band_blocks` and the Hamming
+    distance in `dedup.hamming_band_pairs`, nowhere else in the library.
+    (The multiprobe `bitwiseXOR` masks of similarity.py are bucket
+    perturbations, not a distance, and are not flagged.)"""
+    import ast
+    from pathlib import Path
+
+    root = Path(entry_mod.__file__).resolve().parent
+    helper = root / "henbun_spark" / "operators" / "dedup.py"
+    allowed = {"hamming_band_blocks", "hamming_band_pairs"}
+    hits = [
+        f"{path.relative_to(root)}:{line} {kind}"
+        for path in sorted((root / "henbun_spark").rglob("*.py"))
+        for fn, line, kind in _band_join_parts(ast.parse(path.read_text()))
+        if not (path == helper and fn in allowed)
+    ]
+    assert not hits, f"band-join copies outside dedup.hamming_band_*: {hits}"
+    # the scan sees the helper it must allow: one unpivot, one distance
+    seen = sorted(
+        (fn, kind) for fn, _l, kind in _band_join_parts(ast.parse(helper.read_text()))
+    )
+    assert seen == [("hamming_band_blocks", "unpivot"),
+                    ("hamming_band_pairs", "hamming")], seen
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     rows = df.collect()

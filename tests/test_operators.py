@@ -580,20 +580,18 @@ def test_salted_join_matches_plain_join(spark, sf_dir):
 def test_bucketed_join_elides_shuffle(spark, sf_dir, tmp_path):
     """Co-located join: both sides bucketed on the join key -> no shuffle
     exchange above either scan (the 100 TB repeated-join layout)."""
+    from henbun_spark.operators import bucketing
+
     li = sources.load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity"
     )
     orders = sources.load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    import shutil
-
-    spark.sql("DROP TABLE IF EXISTS li_b")
-    spark.sql("DROP TABLE IF EXISTS ord_b")
-    for t in ("li_b", "ord_b"):  # orphan locations from interrupted runs
-        shutil.rmtree(f"/tmp/henbun_test_warehouse/{t}", ignore_errors=True)
-    sources.write_bucketed(li, "li_b", ["l_orderkey"], n_buckets=8)
-    sources.write_bucketed(orders, "ord_b", ["o_orderkey"], n_buckets=8)
+    bucketing.write_bucketed(li, "li_b", "l_orderkey", 8, str(tmp_path / "li_b"))
+    bucketing.write_bucketed(
+        orders, "ord_b", "o_orderkey", 8, str(tmp_path / "ord_b")
+    )
     # disable broadcast so the planner must consider the bucket layout
     # (at real scale both sides are too big to broadcast anyway)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -1321,7 +1319,7 @@ def test_contamination_flags_exact_copy(spark):
     assert set(out["doc_id"]) == {10}
 
 
-def test_connected_components_matches_union_find(spark):
+def test_connected_components_matches_union_find(spark, monkeypatch):
     from henbun_spark.operators import graph
 
     rng = np.random.default_rng(11)
@@ -1346,14 +1344,16 @@ def test_connected_components_matches_union_find(spark):
     want = {v: min(vs) for vs in expect.values() for v in vs}
 
     edf = spark.createDataFrame(edges, "src: long, dst: long")
-    # driver_cap=None -> driver union-find fast path; driver_cap=0 ->
-    # the distributed iteration. Same contract from all four routes.
+    # the default cap -> driver union-find fast path; cap 0 -> the
+    # distributed iteration. Same contract from all four routes.
     for fn in (graph.connected_components, graph.connected_components_star):
-        for cap in (None, 0):
-            got = {
-                r["node"]: r["comp"]
-                for r in fn(edf, "src", "dst", driver_cap=cap).collect()
-            }
+        for cap in (graph.DRIVER_UNION_FIND_MAX_EDGES, 0):
+            with monkeypatch.context() as m:
+                m.setattr(graph, "DRIVER_UNION_FIND_MAX_EDGES", cap)
+                got = {
+                    r["node"]: r["comp"]
+                    for r in fn(edf, "src", "dst").collect()
+                }
             assert got == want, (fn.__name__, cap)
 
 
@@ -1390,7 +1390,7 @@ def test_scaffold_scope_releases_and_shuffle_width_defensive(spark):
     assert relational._shuffle_width(spark) > 0
 
 
-def test_connected_components_null_and_self_edges(spark):
+def test_connected_components_null_and_self_edges(spark, monkeypatch):
     """Dirty edge lists: NULL-endpoint edges and self-loops are dropped
     by the u != v guard BEFORE either path — the driver union-find
     never meets a None (its Python < would raise), the distributed
@@ -1404,11 +1404,13 @@ def test_connected_components_null_and_self_edges(spark):
     )
     want = {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
     for fn in (graph.connected_components, graph.connected_components_star):
-        for cap in (None, 0):
-            got = {
-                r["node"]: r["comp"]
-                for r in fn(edges, "src", "dst", driver_cap=cap).collect()
-            }
+        for cap in (graph.DRIVER_UNION_FIND_MAX_EDGES, 0):
+            with monkeypatch.context() as m:
+                m.setattr(graph, "DRIVER_UNION_FIND_MAX_EDGES", cap)
+                got = {
+                    r["node"]: r["comp"]
+                    for r in fn(edges, "src", "dst").collect()
+                }
             assert got == want, (fn.__name__, cap, got)
 
 
@@ -1929,11 +1931,52 @@ def test_ahash_image_near_dup(spark):
     hashes = multimodal.ahash_images(df)
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]
-        for r in multimodal.ahash_near_pairs(hashes, max_hamming=6).collect()
+        for r in multimodal.hamming_near_pairs(hashes, max_hamming=6).collect()
     }
     assert pairs[(0, 2)] == 0          # identical images -> identical hash
     assert (0, 1) in pairs             # noisy copy within hamming budget
     assert (0, 3) not in pairs or pairs[(0, 3)] > pairs[(0, 1)]
+
+
+def _media_hashes(spark):
+    # (media_id, ahash) rows: (2, 0b1011) occurs twice, and id 3 carries
+    # two hashes that both lie 2 bits from id 1
+    rows = [(1, 0b1111), (2, 0b1011), (2, 0b1011), (3, 0b0011), (3, 0b0101),
+            (4, 0b1 << 40), (5, (0b1 << 40) | 0b110)]
+    return rows, spark.createDataFrame(rows, "media_id long, ahash long")
+
+
+def test_hamming_near_pairs_keeps_distinct_form_multiset(spark):
+    """One row per distinct ((id_a, h_a), (id_b, h_b)) row pair within
+    the threshold — the multiset the candidate-pair `distinct()` gave
+    before the first-agreeing-block emission, also when a (media_id,
+    hash) row repeats and an id carries two hashes."""
+    from collections import Counter
+
+    rows, df = _media_hashes(spark)
+    uniq = sorted(set(rows))
+    want = Counter(
+        (ia, ib, bin(ha ^ hb).count("1"))
+        for ia, ha in uniq
+        for ib, hb in uniq
+        if ia < ib and bin(ha ^ hb).count("1") <= 3
+    )
+    got = Counter(
+        tuple(r) for r in multimodal.hamming_near_pairs(df, max_hamming=3).collect()
+    )
+    assert want[(1, 3, 2)] == 2 and want[(1, 2, 1)] == 1 and want[(4, 5, 2)] == 1
+    assert got == want
+
+
+def test_hamming_near_pairs_plans_no_aggregate_above_band_join(spark):
+    """The media band join dedups its n input rows, never the candidate
+    pairs: no Aggregate sits above the join in the optimized plan (a
+    pair `distinct()` there shuffles the whole candidate volume)."""
+    _rows, df = _media_hashes(spark)
+    plan = multimodal.hamming_near_pairs(df)._jdf.queryExecution()
+    lines = plan.optimizedPlan().treeString().splitlines()
+    above = lines[: next(i for i, ln in enumerate(lines) if "Join" in ln)]
+    assert not [ln for ln in above if "Aggregate" in ln], "\n".join(lines)
 
 
 def test_snapshot_diff_classifies(spark):
@@ -2178,7 +2221,7 @@ def test_pagerank_matches_numpy_power_iteration(spark):
     assert got[2] > got[3]
 
 
-def test_pagerank_driver_path_bitwise_equals_distributed(spark):
+def test_pagerank_driver_path_bitwise_equals_distributed(spark, monkeypatch):
     """r12: graphs under the union-find cap iterate on the driver
     (`graph._driver_pagerank`). The decimal-exact recurrence makes the
     rank vector a pure function of the edge list, so the two paths must
@@ -2206,9 +2249,10 @@ def test_pagerank_driver_path_bitwise_equals_distributed(spark):
         for r in graph._driver_pagerank(spark, sym, 10, 0.85).collect()
     }
     # force the distributed loop by dropping the cap
+    monkeypatch.setattr(graph, "DRIVER_UNION_FIND_MAX_EDGES", 0)
     slow = {
         r["node"]: r["rank"]
-        for r in graph.pagerank(edf, iters=10, _driver_cap=0).collect()
+        for r in graph.pagerank(edf, iters=10).collect()
     }
     assert fast == slow  # bitwise: dict equality on float values
 

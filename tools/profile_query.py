@@ -3,7 +3,9 @@
 For each named query: optionally dumps `explain("formatted")` to
 plans/<tag>/<name>_<suffix>.txt, then times N noop-sink runs in one
 warmed session (same protocol as bench.py: force() via the noop sink,
-release_scaffold_caches between runs).
+release_scaffold_caches between runs), printing each run's wall time,
+Spark jobs and stages (the stage ids of those jobs, skipped ones
+included).
 
 Usage:
     python tools/profile_query.py [--sf-dir DIR] [--runs N]
@@ -60,17 +62,25 @@ def main():
                 f.write(buf.getvalue())
             relational.release_scaffold_caches()
             print(f"# plan -> {path}", flush=True)
-        runs = []
+        runs, jobs, stages = [], [], []
+        tracker = spark.sparkContext.statusTracker()
         for i in range(args.runs):
             spark.sparkContext.setJobDescription(f"profile {name} run{i}")
+            before = set(tracker.getJobIdsForGroup(None))
             t0 = time.time()
             fn(spark, args.sf_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
             runs.append(round(time.time() - t0, 3))
+            new = set(tracker.getJobIdsForGroup(None)) - before
+            jobs.append(len(new))
+            stages.append(sum(len(tracker.getJobInfo(j).stageIds) for j in new))
             relational.release_scaffold_caches()
         spark.sparkContext.setJobDescription(None)
-        print(f"{name}: runs={runs} min={min(runs)}", flush=True)
+        print(
+            f"{name}: runs={runs} min={min(runs)} jobs={jobs} stages={stages}",
+            flush=True,
+        )
 
 
 if __name__ == "__main__":
