@@ -734,9 +734,9 @@ def weighted_percentile_price(spark, sf_dir):
     """Exact WEIGHTED percentiles per group — `percentile(value, p,
     freq)` semantics (price distribution where each lineitem counts
     l_quantity times), computed by the bounded-memory distributed path
-    (`relational.keyed_weighted_percentiles_exact`: one weighted
-    prefix-mass pass, broadcast rank targets) instead of the builtin's
-    unbounded per-group value map. Interpolation is bitwise the
+    (`relational.keyed_percentiles_exact` with ``weight_col``: one
+    weighted cells pass, broadcast mass-rank targets) instead of the
+    builtin's unbounded per-group value map. Interpolation is bitwise the
     builtin's (pytest-asserted); the oracle replays the semantics by
     frequency-expanding rows and taking quantile_cont."""
     from henbun_spark.operators import relational
@@ -746,8 +746,8 @@ def weighted_percentile_price(spark, sf_dir):
         "l_extendedprice",
         F.col("l_quantity").cast("long").alias("qty"),
     )
-    pct = relational.keyed_weighted_percentiles_exact(
-        li, "l_returnflag", "l_extendedprice", "qty", [0.5, 0.95]
+    pct = relational.keyed_percentiles_exact(
+        li, "l_returnflag", "l_extendedprice", [0.5, 0.95], weight_col="qty"
     )
     return pct.groupBy("l_returnflag").agg(
         F.round(F.max(F.when(F.col("p") == 0.5, F.col("value"))), 6).alias("p50"),
@@ -8276,14 +8276,15 @@ HAVING COUNT(*) * 128 > tot.N
 def heavy_hitters_by_type(spark, sf_dir):
     """GROUPED Misra-Gries heavy hitters: per event_type, the users with
     within-segment frequency > segment_n / 128 — "trending per segment"
-    with O(k) sketch state per (task, group), candidate summaries (not
-    raw data) shuffling on the group, and one exact candidate-only
-    verify pass. Same no-false-negative guarantee per group, so the
+    with O(k) sketch state per (task, group), the distinct union of the
+    per-(task, group) summaries as the broadcast candidate table, and
+    one exact candidate-only verify pass (`sketch.heavy_hitters` with
+    ``group_cols``). Same no-false-negative guarantee per group, so the
     oracle is the plain per-group HAVING."""
     from henbun_spark.operators import sketch
 
     ev = _load(spark, sf_dir, "events")
-    return sketch.heavy_hitters_grouped(ev, "event_type", "user_id", k=128)
+    return sketch.heavy_hitters(ev, "user_id", k=128, group_cols=["event_type"])
 
 
 _HH_GROUPED_SQL = """
@@ -9384,7 +9385,7 @@ def tdigest_quantiles_value(spark, sf_dir):
     at sf0.01/0.1 — 20x margin), computed from one conditional-sum scan
     — the `minhash_recall_docs` oracle-checked-metric pattern, so a
     broken digest flips the boolean and fails the driver hash."""
-    from henbun_spark.operators import relational, sketch
+    from henbun_spark.operators import sketch
 
     ev = _load(spark, sf_dir, "events")
     dig = sketch.tdigest_merge(sketch.tdigest_build(ev, "value", delta=100))
@@ -9404,29 +9405,35 @@ def tdigest_quantiles_value(spark, sf_dir):
         }
     finally:
         dig.unpersist(blocking=False)
-    # ONE scan: n + per-q "values <= estimate" counts (map-side combine)
+    return _tdigest_contract(spark, "tdigest_quantiles_value", ev, ests, 0.02)
+
+
+def _tdigest_contract(spark, query, ev, ests, bound):
+    """(q, exact, rank_ok) contract tail of the global t-digest queries:
+    ``rank_ok`` per q from ONE scan of ``ev`` (n + per-q "values <=
+    estimate" counts, map-side combine) against the query's rank-error
+    ``bound``, that statistic recorded by `_rec_bound`, joined to the
+    floor-quantized EXACT twin from the distributed order-statistics
+    path (== quantile_cont bitwise)."""
+    from henbun_spark.operators import relational
+
+    qs = sorted(ests)
     row = ev.agg(
         F.count(F.lit(1)).alias("n"),
         *[
             F.sum((F.col("value") <= F.lit(ests[q])).cast("long")).alias(
-                f"le_{int(q * 100)}"
+                f"le_{i}"
             )
-            for q in qs
+            for i, q in enumerate(qs)
         ],
     ).collect()[0]
+    errs = [abs(row[f"le_{i}"] / row["n"] - q) for i, q in enumerate(qs)]
     ok = spark.createDataFrame(
-        [
-            (float(q), bool(abs(row[f"le_{int(q * 100)}"] / row["n"] - q) <= 0.02))
-            for q in qs
-        ],
+        [(float(q), bool(e <= bound)) for q, e in zip(qs, errs)],
         "q double, rank_ok boolean",
     )
-    _rec_bound("tdigest_quantiles_value", "rank_ok",
-               max(abs(row[f"le_{int(q * 100)}"] / row["n"] - q) for q in qs),
-               0.02, "<=", step=1.0 / row["n"])
-    exact = relational.keyed_percentiles_exact(
-        ev.select(F.lit(1).alias("g"), "value"), "g", "value", qs
-    ).select(
+    _rec_bound(query, "rank_ok", max(errs), bound, "<=", step=1.0 / row["n"])
+    exact = relational.keyed_percentiles_exact(ev, [], "value", qs).select(
         F.col("p").alias("q"),
         (F.floor(F.col("value") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
             "exact"
@@ -9440,24 +9447,27 @@ def tdigest_by_type(spark, sf_dir):
     HLL by type = distinct, Misra-Gries by type = heavy keys, t-digest
     by type = quantiles): per-event_type p50/p95 estimated from
     ~100-centroid digests built over (group, md5-value-bucket) cells —
-    summaries, never raw values, shuffle on the group key — next to the
-    EXACT per-type percentiles from the distributed order-statistics
-    path. ORACLE-CHECKED (r7): greedy compression has no SQL form, so
-    the contract output is (event_type, q, exact floor-quantized ==
-    quantile_cont bitwise, rank_ok) with `rank_ok` asserting the
-    per-group empirical-CDF rank error under the 2.5% pytest bound
-    (measured <= 0.0024 at sf0.01 — 10x margin) via one broadcast-join
-    conditional-sum pass — a broken grouped digest flips the boolean
-    and fails the driver hash."""
+    the one keyed `sketch.tdigest_build`/`tdigest_merge`/
+    `tdigest_quantile` chain with ``group_cols``, 8 value buckets per
+    group; summaries, never raw values, shuffle on the group key — next
+    to the EXACT per-type percentiles from the distributed
+    order-statistics path. ORACLE-CHECKED (r7): greedy compression has
+    no SQL form, so the contract output is (event_type, q, exact
+    floor-quantized == quantile_cont bitwise, rank_ok) with `rank_ok`
+    asserting the per-group empirical-CDF rank error under the 2.5%
+    pytest bound (measured <= 0.0024 at sf0.01 — 10x margin) via one
+    broadcast-join conditional-sum pass — a broken grouped digest flips
+    the boolean and fails the driver hash."""
     from henbun_spark.operators import relational, sketch
 
     ev = _load(spark, sf_dir, "events")
-    dig = sketch.tdigest_merge_grouped(
-        sketch.tdigest_build_grouped(ev, "event_type", "value", delta=100),
-        "event_type",
+    by = ["event_type"]
+    dig = sketch.tdigest_merge(
+        sketch.tdigest_build(ev, "value", delta=100, n_buckets=8, group_cols=by),
         delta=100,
+        group_cols=by,
     )
-    est = sketch.tdigest_quantile_grouped(dig, "event_type", [0.5, 0.95])
+    est = sketch.tdigest_quantile(dig, [0.5, 0.95], group_cols=by)
     joined = ev.join(F.broadcast(est), "event_type").groupBy(
         "event_type", "q"
     )
@@ -9499,7 +9509,7 @@ def streaming_tdigest_value(spark, sf_dir):
     the 2.5% pytest bound — the streaming fold path itself is held to
     the driver hash."""
     from henbun_spark import streaming
-    from henbun_spark.operators import relational, sketch
+    from henbun_spark.operators import sketch
 
     ev = _load(spark, sf_dir, "events").select("value", "ts")
     stream, base = _file_stream(ev, "henbun_std_", one_file_per_batch=True)
@@ -9516,37 +9526,7 @@ def streaming_tdigest_value(spark, sf_dir):
     ests = {
         r["q"]: r["est"] for r in sketch.tdigest_quantile(dig, qs).collect()
     }
-    row = ev.agg(
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.sum((F.col("value") <= F.lit(ests[p])).cast("long")).alias(
-                f"le_{int(p * 100)}"
-            )
-            for p in qs
-        ],
-    ).collect()[0]
-    ok = spark.createDataFrame(
-        [
-            (
-                float(p),
-                bool(abs(row[f"le_{int(p * 100)}"] / row["n"] - p) <= 0.025),
-            )
-            for p in qs
-        ],
-        "q double, rank_ok boolean",
-    )
-    _rec_bound("streaming_tdigest_value", "rank_ok",
-               max(abs(row[f"le_{int(p * 100)}"] / row["n"] - p) for p in qs),
-               0.025, "<=", step=1.0 / row["n"])
-    exact = relational.keyed_percentiles_exact(
-        ev.select(F.lit(1).alias("g"), "value"), "g", "value", qs
-    ).select(
-        F.col("p").alias("q"),
-        (F.floor(F.col("value") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
-            "exact"
-        ),
-    )
-    return exact.join(F.broadcast(ok), "q")
+    return _tdigest_contract(spark, "streaming_tdigest_value", ev, ests, 0.025)
 
 
 _TDIGEST_QUANTILES_SQL = """

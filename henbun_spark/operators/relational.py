@@ -1162,7 +1162,7 @@ def _join_binned_offsets(b, off, kcols):
     )
 
 
-def _percentile_value_cells(vals, kcols, n_partitions, weighted: bool):
+def _percentile_value_cells(vals, kcols, n_partitions):
     """The cells pass behind the exact-percentile family — with NO
     shuffle of the data, at any scale:
 
@@ -1173,9 +1173,10 @@ def _percentile_value_cells(vals, kcols, n_partitions, weighted: bool):
        sorted boundaries (`size(filter(bounds, b -> v > b))` — rows
        equal to a boundary go to the lower bin, so bin membership is a
        deterministic function of the VALUE alone);
-    3. one map-side-combinable aggregate per (key, bin) cell (count or
-       weight total, min/max value, any-NaN flag) — the only shuffle
-       anywhere is these |keys| x |bins| cell rows.
+    3. one map-side-combinable aggregate per (key, bin) cell (weight
+       total — the row count when every `__w` is 1 — min/max value,
+       any-NaN flag) — the only shuffle anywhere is these |keys| x
+       |bins| cell rows.
 
     Returns {key tuple: [(total, lo, hi), ... ascending by value]}.
 
@@ -1193,12 +1194,11 @@ def _percentile_value_cells(vals, kcols, n_partitions, weighted: bool):
     n_bins = min(n_partitions or _shuffle_width(spark), MAX_VALUE_BINS)
     bounds = _sampled_value_bounds(vals, F.col("__v"), n_bins)
     bin_expr = _bin_expr_from_bounds(bounds, F.col("__v"))
-    agg_total = F.sum(F.col("__w")) if weighted else F.count(F.lit(1))
     rows = (
         vals.withColumn("_bin", bin_expr)
         .groupBy("_bin", *kcols)
         .agg(
-            agg_total.alias("_n"),
+            F.sum("__w").alias("_n"),
             F.min("__v").alias("_lo"),
             F.max("__v").alias("_hi"),
             F.max(F.isnan("__v")).alias("_nan"),
@@ -1300,35 +1300,40 @@ def keyed_percentiles_exact(
     key_cols,
     value_col: str,
     ps: list,
+    weight_col: str | None = None,
     n_partitions: int | None = None,
     histogram_cap: int | None = None,
 ) -> DataFrame:
     """EXACT interpolated per-key percentiles with bounded memory at any
-    scale — the 100-TB replacement for ``percentile(value, p)``:
-    Spark's exact `percentile` buffers a value->count OpenHashMap per
-    group in executor memory, unbounded in DISTINCT values, so a
-    high-cardinality double column OOMs the aggregate at scale.
+    scale — the 100-TB replacement for ``percentile(value, p)`` and, with
+    ``weight_col``, ``percentile(value, p, freq)`` (each row counts
+    `weight` times in the multiset): Spark's exact `percentile` buffers
+    a value->count OpenHashMap per group in executor memory, unbounded
+    in DISTINCT values, so a high-cardinality double column OOMs the
+    aggregate at scale. ``weight_col=None`` weighs every row 1 (plain
+    percentiles); ``key_cols=[]`` is one global group.
 
-    Shape (cell-pruned order statistics): ONE full pass — range
-    repartition on (key, value) + per-(partition, key) cell
-    count/min/max to the driver (bounded by n_partitions + n_keys) —
-    turns each percentile into two (covering cell, local rank) targets;
-    a SECOND, cheap pass extracts them with a broadcast-join value-range
-    filter and a row_number window over ONLY the matched cells (at most
-    2·|ps|·|keys| cells, each one range-slice of one key — everything
-    else is filtered at the scan). No persisted state, no full-data
+    Shape (cell-pruned order statistics): ONE full pass — sampled value
+    bins + per-(key, bin) cell weight total/min/max to the driver
+    (bounded by bins x keys) — turns each percentile into two (covering
+    cell, local mass rank) targets; a SECOND, cheap pass extracts them
+    with a broadcast-join value-range filter and a running-weight window
+    over ONLY the matched cells (at most 2·|ps|·|keys| cells, each one
+    range-slice of one key — everything else is filtered at the scan).
+    A row covers the weighted rank interval (cum - w, cum] — with w = 1
+    that is `row_number() == local`. No persisted state, no full-data
     window, and no partition-id reuse across jobs: cells are re-matched
-    by value range, which the range-partition invariant makes exact.
+    by value range, which the value-disjoint bins make exact.
     The interpolation ``(ceil(pos) - pos) * v_lo + (pos - floor(pos)) *
     v_hi`` reproduces Spark's `percentile` (and DuckDB's
     `quantile_cont`) arithmetic bit-for-bit — same op order as
     Percentile.getPercentile in spark/sql catalyst.
 
     Fast path (``histogram_cap`` > 0, the default): an optimistic
-    (key, value) -> count histogram — ONE map-side-combinable job whose
-    shuffle is bounded by |distinct pairs|, not rows — resolves every
-    percentile as driver order-statistics math when the pairs fit under
-    the cap. This is exactly the heavy-duplicate regime where the
+    (key, value) -> weight-sum histogram — ONE map-side-combinable job
+    whose shuffle is bounded by |distinct pairs|, not rows — resolves
+    every percentile as driver order-statistics math when the pairs fit
+    under the cap. This is exactly the heavy-duplicate regime where the
     buffering builtin dies, and it turns the 3-job cell path into 1
     job. Continuous-value columns overflow the cap and fall through to
     the cell path, paying one bounded extra scan for the probe; pass
@@ -1336,22 +1341,21 @@ def keyed_percentiles_exact(
     continuous.
 
     Intended for low/moderate key cardinality (the regime where the
-    keyed window dies); NULL values are ignored like the builtin; NaN
-    values raise (checked for free in the cells pass). Returns long
+    keyed window dies). Weights must be integers; rows with a NULL
+    value or a non-positive weight are ignored like the builtin; NaN
+    values raise (checked for free in either pass). Returns long
     format: (*key_cols, p, value).
     """
     ps = _require_percentages(ps, "keyed_percentiles_exact")
     kcols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
+    vals = _percentile_values(df, kcols, value_col, weight_col)
     if histogram_cap is None:
         histogram_cap = SCAFFOLD_MAX_CELLS
     if histogram_cap:
-        hists = _value_histograms(df, kcols, value_col, histogram_cap)
+        hists = _value_histograms(vals, kcols, histogram_cap)
         if hists is not None:
             return _hist_fastpath_frame(df, kcols, ps, hists)
-    vals = df.select(
-        *kcols, F.col(value_col).cast("double").alias("__v")
-    ).where(F.col("__v").isNotNull())
-    cells = _percentile_value_cells(vals, kcols, n_partitions, weighted=False)
+    cells = _percentile_value_cells(vals, kcols, n_partitions)
     need, schema, resolved, rschema = _percentile_targets(
         cells, ps, [T.StructField(k, df.schema[k].dataType) for k in kcols]
     )
@@ -1374,11 +1378,19 @@ def keyed_percentiles_exact(
         tgt["__which"],
         tgt["__local"],
         vals["__v"],
+        vals["__w"],
     )
-    w = Window.partitionBy(*kcols, "p", "__which").orderBy(F.col("__v").asc())
+    w = (
+        Window.partitionBy(*kcols, "p", "__which")
+        .orderBy(F.col("__v").asc())
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
     picked = (
-        hit.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == F.col("__local"))
+        hit.withColumn("__cum", F.sum("__w").over(w))
+        .where(
+            (F.col("__cum") - F.col("__w") < F.col("__local"))
+            & (F.col("__local") <= F.col("__cum"))
+        )
         .select(*kcols, "p", "__lo", "__hi", "__pos", "__which", "__v")
     )
     if resolved:
@@ -1392,6 +1404,17 @@ def keyed_percentiles_exact(
         .agg(v_lo.alias("__vlo"), v_hi.alias("__vhi"))
         .select(*kcols, "p", _percentile_interp().alias("value"))
     )
+
+
+def _percentile_values(df, kcols, value_col, weight_col=None):
+    """The (*kcols, __v double, __w long) frame every exact-percentile
+    pass reads: rows with a NULL value or a non-positive weight dropped,
+    `__w` = 1 when ``weight_col`` is None (the filter then folds away)."""
+    return df.select(
+        *kcols,
+        F.col(value_col).cast("double").alias("__v"),
+        _long_weight(df, weight_col, "keyed_percentiles_exact").alias("__w"),
+    ).where(F.col("__v").isNotNull() & (F.col("__w") > 0))
 
 
 def _hist_percentile(hist, p):
@@ -1421,17 +1444,16 @@ def _hist_percentile(hist, p):
     return (float(hi - 1) - pos) * vlo + (pos - float(lo - 1)) * vhi
 
 
-def _value_histograms(df, kcols, value_col, cap, weight_col=None):
-    """(key, value) -> count histogram collect for the exact percentile
-    family's one-job fast path: a single map-side-combinable aggregate
-    whose shuffle is bounded by |distinct (key, value) pairs| (NOT
-    rows). Returns {key tuple: ascending [(value, count)]} when the
-    histogram fits under ``cap``, else None (continuous-value regime —
-    caller falls back to the cell-pruned path). With ``weight_col`` the
-    per-value count is the WEIGHT SUM (positive integer weights; rows
-    with NULL value or non-positive weight ignored, like the builtin
-    `percentile(v, p, freq)`) — `_hist_percentile`'s cumulative walk
-    then implements exactly the builtin's weighted multiset ranks.
+def _value_histograms(vals, kcols, cap):
+    """(key, value) -> weight-sum histogram collect for the exact
+    percentile family's one-job fast path over a `_percentile_values`
+    frame: a single map-side-combinable aggregate whose shuffle is
+    bounded by |distinct (key, value) pairs| (NOT rows). Returns {key
+    tuple: ascending [(value, weight sum)]} when the histogram fits
+    under ``cap``, else None (continuous-value regime — caller falls
+    back to the cell-pruned path). With all weights 1 the sums are row
+    counts; `_hist_percentile`'s cumulative walk implements exactly the
+    builtin's (weighted) multiset ranks either way.
 
     Guarded by a SHUFFLE-FREE `approx_count_distinct` probe first (one
     scan, sketch-merge partials, ONE row to the driver): without it, a
@@ -1441,22 +1463,10 @@ def _value_histograms(df, kcols, value_col, cap, weight_col=None):
     the hard ``limit(cap + 1)`` stays on the collect as the correctness
     backstop if the estimate lied low. NaN values raise — they have no
     meaningful percentile and would corrupt downstream value
-    comparisons. NULL values are ignored like the builtin."""
+    comparisons."""
     import math
 
     global LAST_SCAFFOLD_CELLS
-    if weight_col is None:
-        vals = df.select(
-            *kcols, F.col(value_col).cast("double").alias("__v")
-        ).where(F.col("__v").isNotNull())
-        agg_n = F.count(F.lit(1))
-    else:
-        vals = df.select(
-            *kcols,
-            F.col(value_col).cast("double").alias("__v"),
-            F.col(weight_col).cast("long").alias("__w"),
-        ).where(F.col("__v").isNotNull() & (F.col("__w") > 0))
-        agg_n = F.sum("__w")
     est = vals.agg(
         F.approx_count_distinct(F.struct(*kcols, "__v")).alias("__d")
     ).collect()[0]["__d"]
@@ -1465,7 +1475,7 @@ def _value_histograms(df, kcols, value_col, cap, weight_col=None):
         return None
     rows = (
         vals.groupBy(*kcols, "__v")
-        .agg(agg_n.alias("__n"))
+        .agg(F.sum("__w").alias("__n"))
         .limit(cap + 1)
         .collect()
     )
@@ -1490,9 +1500,8 @@ def _value_histograms(df, kcols, value_col, cap, weight_col=None):
 
 def _hist_fastpath_frame(df, kcols, ps, hists):
     """Materialize the histogram fast path's percentile results as the
-    (*key_cols, p, value) long-format frame both exact-percentile
-    variants return — one shared block so the output shape cannot
-    drift between the weighted and unweighted paths."""
+    (*key_cols, p, value) long-format frame `keyed_percentiles_exact`
+    returns."""
     out = [
         (*key, p, _hist_percentile(hist, p))
         for key, hist in hists.items()
@@ -1545,11 +1554,9 @@ def keyed_median_mad(
     """
     kcols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     cap = SCAFFOLD_MAX_CELLS if max_cells is None else max_cells
-    hists = _value_histograms(df, kcols, value_col, cap)
+    vals = _percentile_values(df, kcols, value_col)
+    hists = _value_histograms(vals, kcols, cap)
     if hists is None:
-        vals = df.select(
-            *kcols, F.col(value_col).cast("double").alias("__v")
-        ).where(F.col("__v").isNotNull())
         # continuous-value regime: two-pass cell-pruned percentiles.
         # The med table is collected (bounded by n_keys — the cell-
         # pruned path already requires low key cardinality) and
@@ -1985,110 +1992,6 @@ def asof_nearest(
         within, F.when(choose_b, F.col(f"__b_{c}")).otherwise(F.col(f"__f_{c}"))
     ).alias(c)
     return filled.select(*[c for c in left.columns], *[pick(c) for c in rcols])
-
-
-def keyed_weighted_percentiles_exact(
-    df: DataFrame,
-    key_cols,
-    value_col: str,
-    weight_col: str,
-    ps: list,
-    n_partitions: int | None = None,
-    histogram_cap: int | None = None,
-) -> DataFrame:
-    """EXACT per-key WEIGHTED percentiles — `percentile(value, p, freq)`
-    semantics (each row counts `weight` times in the multiset) on the
-    bounded-memory distributed path: the builtin buffers a value->count
-    map per group (unbounded in distinct values), while this runs one
-    weighted cell-pruned cells pass. Each row covers the weighted
-    rank interval (cum - w, cum]; a percentile target at 0-based position p*(W-1)
-    picks the covering rows (1-based ranks floor+1 / ceil+1), and interpolation between the floor/ceil
-    target values reproduces the builtin bit-for-bit.
-
-    Shape: same cell-pruned design as `keyed_percentiles_exact` — one
-    full pass collects per-(partition, key) WEIGHT totals + value
-    ranges; the driver maps each target mass rank to its covering cell
-    and LOCAL mass rank; a second cheap pass re-matches only the
-    covering cells by value range and runs the running-weight window
-    over those cells alone. No persisted state, no full-data window,
-    no cross-job partition-id reuse.
-
-    Weights must be positive integers (rows with NULL value or
-    non-positive weight are ignored, like the builtin); NaN values
-    raise. Returns (*key_cols, p, value) long format.
-
-    Duplicate-heavy value columns take the same one-job histogram fast
-    path as the plain variant (``histogram_cap``, shuffle-free
-    approx-distinct probe first, 0 disables): per-value WEIGHT SUMS
-    collected once, every target resolved by `_hist_percentile`'s
-    cumulative-weight walk — bitwise the builtin's multiset ranks.
-    """
-    ps = _require_percentages(ps, "keyed_weighted_percentiles_exact")
-    _require_integer_weight(df, weight_col, "keyed_weighted_percentiles_exact")
-    kcols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    if histogram_cap is None:
-        histogram_cap = SCAFFOLD_MAX_CELLS
-    if histogram_cap:
-        hists = _value_histograms(
-            df, kcols, value_col, histogram_cap, weight_col=weight_col
-        )
-        if hists is not None:
-            return _hist_fastpath_frame(df, kcols, ps, hists)
-    vals = df.select(
-        *kcols,
-        F.col(value_col).cast("double").alias("__v"),
-        F.col(weight_col).cast("long").alias("__w"),
-    ).where(F.col("__v").isNotNull() & (F.col("__w") > 0))
-    cells = _percentile_value_cells(vals, kcols, n_partitions, weighted=True)
-    need, schema, resolved, rschema = _percentile_targets(
-        cells, ps, [T.StructField(k, df.schema[k].dataType) for k in kcols]
-    )
-    tgt = F.broadcast(df.sparkSession.createDataFrame(need, schema))
-    # eqNullSafe: keep NULL-key groups matched, same as the plain variant
-    hit = vals.join(
-        tgt,
-        on=[vals[k].eqNullSafe(tgt[k]) for k in kcols]
-        + [
-            (vals["__v"] >= tgt["__clo"]) & (vals["__v"] <= tgt["__chi"])
-        ],
-    ).select(
-        *[tgt[k] for k in kcols],
-        tgt["p"],
-        tgt["__lo"],
-        tgt["__hi"],
-        tgt["__pos"],
-        tgt["__which"],
-        tgt["__local"],
-        vals["__v"],
-        vals["__w"],
-    )
-    # running weight inside each target's covering cell: a row covers
-    # local mass rank m iff cum - w < m <= cum (each row spans the
-    # weighted interval (cum - w, cum]) — builtin multiset semantics
-    w = (
-        Window.partitionBy(*kcols, "p", "__which")
-        .orderBy(F.col("__v").asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    picked = (
-        hit.withColumn("__cum", F.sum("__w").over(w))
-        .where(
-            (F.col("__cum") - F.col("__w") < F.col("__local"))
-            & (F.col("__local") <= F.col("__cum"))
-        )
-        .select(*kcols, "p", "__lo", "__hi", "__pos", "__which", "__v")
-    )
-    if resolved:
-        picked = picked.unionByName(
-            df.sparkSession.createDataFrame(resolved, rschema)
-        )
-    v_lo = F.max(F.when(F.col("__which") == 0, F.col("__v")))
-    v_hi = F.max(F.when(F.col("__which") == 1, F.col("__v")))
-    return (
-        picked.groupBy(*kcols, "p", "__lo", "__hi", "__pos")
-        .agg(v_lo.alias("__vlo"), v_hi.alias("__vhi"))
-        .select(*kcols, "p", _percentile_interp().alias("value"))
-    )
 
 
 def time_weighted_avg(

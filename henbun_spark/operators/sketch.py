@@ -29,6 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def _bucket(col, d: int, width: int, salt: str):
@@ -432,80 +433,104 @@ def mg_fold(d: dict, items, k: int) -> dict:
     return d
 
 
-def mg_summary(df: DataFrame, key_col: str, k: int = 128) -> DataFrame:
-    """Per-partition Misra-Gries summaries with residual weights,
-    unioned: (key string, wt bigint), <= (k-1) rows per scan task.
+def _keyed_schema(df: DataFrame, gcols: list, ddl: str) -> T.StructType:
+    """Output schema of a keyed sketch stage: ``df``'s ``gcols`` fields
+    (types kept) followed by the ``ddl`` columns."""
+    return T.StructType(
+        [df.schema[c] for c in gcols] + T.DataType.fromDDL(ddl).fields
+    )
 
-    A key with partition frequency > n_p / k survives its partition's
-    summary, so by pigeonhole any key with GLOBAL frequency > N / k
-    appears in the union — the no-false-negative candidate property.
-    The residual weights are what make summaries MERGEABLE (fold one
-    summary's counters into another via `mg_fold`), which the streaming
-    maintenance path relies on. One mapInPandas pass, O(k) state per
-    task, no shuffle.
+
+def mg_summary(
+    df: DataFrame, key_col: str, k: int = 128, group_cols=()
+) -> DataFrame:
+    """Per-(partition, group) Misra-Gries summaries with residual
+    weights, unioned: (*group_cols, key string, wt bigint), <= (k-1)
+    rows per (scan task, group); no ``group_cols`` is one group.
+
+    A key with partition-group frequency > n_pg / k survives that
+    summary, so by pigeonhole any key with group frequency > N_g / k
+    appears in the union — the no-false-negative candidate property,
+    per group. The residual weights are what make summaries MERGEABLE
+    (fold one summary's counters into another via `mg_fold`), which the
+    streaming maintenance path relies on. One mapInPandas pass,
+    O(groups_in_task * k) state per task, no shuffle. Rows whose key or
+    group is NULL never become candidates.
     """
     import pandas as pd
 
+    gcols = list(group_cols)
+
     def mg(batches):
-        d: dict = {}
+        ds: dict = {}
         for pdf in batches:
-            mg_fold(d, pdf["key"].value_counts().items(), k)
-        yield pd.DataFrame(
-            {"key": pd.array(list(d.keys()), dtype="string"),
-             "wt": list(d.values())}
-        )
+            parts = pdf.groupby(gcols, sort=False) if gcols else [((), pdf)]
+            for g, part in parts:
+                mg_fold(ds.setdefault(g, {}), part["key"].value_counts().items(), k)
+        rows = [(*g, key, w) for g, d in ds.items() for key, w in d.items()]
+        out = pd.DataFrame(rows, columns=[*gcols, "key", "wt"])
+        out["key"] = out["key"].astype("string")
+        yield out
 
-    keys = df.select(F.col(key_col).cast("string").alias("key"))
-    return keys.mapInPandas(mg, "key string, wt bigint")
-
-
-def mg_candidates(df: DataFrame, key_col: str, k: int = 128) -> DataFrame:
-    """Distinct union of the per-partition MG summaries — the candidate
-    superset of every key with global frequency > N/k."""
-    return mg_summary(df, key_col, k).select("key").distinct()
+    keys = df.select(*gcols, F.col(key_col).cast("string").alias("key"))
+    return keys.mapInPandas(mg, _keyed_schema(df, gcols, "key string, wt bigint"))
 
 
-def heavy_hitters(df: DataFrame, key_col: str, k: int = 128) -> DataFrame:
-    """Exact counts of every key with frequency strictly > N/k, found
+def mg_candidates(
+    df: DataFrame, key_col: str, k: int = 128, group_cols=()
+) -> DataFrame:
+    """Distinct union of the per-(partition, group) MG summaries — the
+    candidate superset of every key with group frequency > N_g/k."""
+    return mg_summary(df, key_col, k, group_cols).select(
+        *group_cols, "key"
+    ).distinct()
+
+
+def heavy_hitters(
+    df: DataFrame, key_col: str, k: int = 128, group_cols=()
+) -> DataFrame:
+    """Exact counts of every key with frequency strictly > N/k — per
+    ``group_cols`` group, > N_g/k ("trending items per segment") — found
     WITHOUT a full groupBy over the key space.
 
     Pass 1 (`mg_candidates`): bounded-state scan -> candidate table
-    (<= tasks * (k-1) rows, broadcastable by construction). Pass 2: one
-    scan counting ONLY candidate keys (non-candidates collapse into a
-    single NULL group), so shuffle volume is O(tasks * k) partials —
-    independent of the true key cardinality, which is what a 100 TB
-    group-by-user_id cannot say. The MG guarantee makes pass 2's
-    candidate set a superset of the answer; the exact counts then drop
-    false positives, so the output is exactly the true heavy hitters
-    with exact counts.
+    (<= tasks * (k-1) rows per group, broadcastable by construction).
+    Pass 2: one scan counting ONLY candidate keys (non-candidates
+    collapse into a single NULL key per group), so shuffle volume is
+    O(tasks * k) partials per group — independent of the true key
+    cardinality, which is what a 100 TB group-by-user_id cannot say.
+    The MG guarantee makes pass 2's candidate set a superset of the
+    answer; the exact counts then drop false positives, so the output
+    is exactly the true heavy hitters with exact counts.
 
-    Output: (key string, n bigint), n * k > N.
+    Output: (*group_cols, key string, n bigint), n * k > N (or N_g).
     """
-    return heavy_hitters_verify(df, key_col, mg_candidates(df, key_col, k), k)
+    return heavy_hitters_verify(
+        df, key_col, mg_candidates(df, key_col, k, group_cols), k, group_cols
+    )
 
 
 def heavy_hitters_verify(
-    df: DataFrame, key_col: str, candidates: DataFrame, k: int
+    df: DataFrame, key_col: str, candidates: DataFrame, k: int, group_cols=()
 ) -> DataFrame:
     """Exact-verification pass shared by the batch and streaming heavy-
-    hitter paths: count ONLY candidate keys (non-candidates collapse
-    into one NULL group, so shuffle partials are O(tasks * k)), derive
-    the total N from the same aggregation, keep keys with n * k > N.
-    ``candidates`` must carry a string `key` column and be a superset of
-    the true heavy hitters (the MG guarantee)."""
-    cands = candidates.select("key").withColumn("is_c", F.lit(True))
-    keys = df.select(F.col(key_col).cast("string").alias("key"))
-    flagged = keys.join(F.broadcast(cands), "key", "left")
+    hitter paths: count ONLY candidate (group, key) pairs (non-
+    candidates collapse into one NULL key per group, so shuffle
+    partials are O(tasks * k)), derive each group's total from the same
+    aggregation, keep keys with n * k > total. ``candidates`` must carry
+    the ``group_cols`` and a string `key` column, hold each pair once,
+    and be a superset of the true heavy hitters (the MG guarantee)."""
+    gcols = list(group_cols)
+    cands = candidates.select(*gcols, "key").withColumn("is_c", F.lit(True))
+    rows = df.select(*gcols, F.col(key_col).cast("string").alias("key"))
+    flagged = rows.join(F.broadcast(cands), [*gcols, "key"], "left")
     counts = flagged.groupBy(
-        F.when(F.col("is_c"), F.col("key")).alias("key")
+        *gcols, F.when(F.col("is_c"), F.col("key")).alias("key")
     ).agg(F.count(F.lit(1)).alias("n"))
-    total = counts.agg(F.sum("n").alias("n_total"))
-    return (
-        counts.where(F.col("key").isNotNull())
-        .crossJoin(F.broadcast(total))
-        .where(F.col("n") * k > F.col("n_total"))
-        .select("key", "n")
-    )
+    total = F.broadcast(counts.groupBy(*gcols).agg(F.sum("n").alias("n_total")))
+    hits = counts.where(F.col("key").isNotNull())
+    hits = hits.join(total, gcols) if gcols else hits.crossJoin(total)
+    return hits.where(F.col("n") * k > F.col("n_total")).select(*gcols, "key", "n")
 
 
 # ---------------------------------------------------------------------------
@@ -551,44 +576,51 @@ def _tdigest_compress(means, weights, delta: int):
     return out_m, out_w
 
 
+def _keyed_groups(df: DataFrame, gcols: list):
+    """``df`` grouped on ``gcols`` — or, with none, as ONE group on a
+    constant `__g` column that the grouped functions never emit."""
+    if gcols:
+        return df.groupBy(*gcols)
+    return df.withColumn("__g", F.lit(0)).groupBy("__g")
+
+
 def tdigest_build(
     df: DataFrame,
     value_col: str,
     delta: int = 100,
     n_buckets: int = 16,
-    bucket_col: str | None = None,
+    group_cols=(),
 ) -> DataFrame:
-    """Distributed t-digest: rows hash into ``n_buckets`` DETERMINISTIC
-    buckets (md5 of the value's string form when no ``bucket_col`` —
-    layout-independent, so the digest is reproducible across engines,
-    partitionings, and retries, unlike per-physical-partition digests);
-    each bucket builds its own digest with `applyInPandas` (sorted
-    one-pass greedy k1 merge, ~delta centroids); `tdigest_merge`
-    folds the bucket digests into one.
+    """Distributed t-digest per ``group_cols`` group (no group columns:
+    one digest): rows hash into ``n_buckets`` DETERMINISTIC buckets
+    (md5 of the value's string form — layout-independent, so the digest
+    is reproducible across engines, partitionings, and retries, unlike
+    per-physical-partition digests); each (group, bucket) cell builds
+    its own digest with `applyInPandas` (sorted one-pass greedy k1
+    merge, ~delta centroids); `tdigest_merge` folds the bucket digests
+    into one per group. State is |groups| x n_buckets x ~2*delta
+    centroid rows — never raw data — so a per-type p99 over 100 TB
+    moves megabytes.
 
     vs the equi-width `histogram_build`: no [lo, hi] range needs to be
     known up front, and centroid widths shrink toward the tails, so
     extreme quantiles stay accurate on skewed data where fixed-width
     bins collapse into one bucket.
 
-    Output: (bucket int, centroid_mean double, centroid_weight double).
+    Output: (*group_cols, bucket int, centroid_mean double,
+    centroid_weight double).
     """
     import pandas as pd
 
-    key = (
-        F.col(bucket_col)
-        if bucket_col
-        else (
-            F.conv(
-                F.substring(
-                    F.md5(F.col(value_col).cast("string")), 1, 6
-                ), 16, 10
-            ).cast("long")
-            % n_buckets
-        ).cast("int")
-    )
+    gcols = list(group_cols)
+    bucket = (
+        F.conv(
+            F.substring(F.md5(F.col(value_col).cast("string")), 1, 6), 16, 10
+        ).cast("long")
+        % n_buckets
+    ).cast("int")
     vals = df.select(
-        key.alias("bucket"), F.col(value_col).cast("double").alias("v")
+        *gcols, bucket.alias("bucket"), F.col(value_col).cast("double").alias("v")
     )
 
     def digest(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -596,25 +628,32 @@ def tdigest_build(
         m, w = _tdigest_compress(v, [1.0] * len(v), delta)
         return pd.DataFrame(
             {
+                **{c: pdf[c].iloc[0] for c in gcols},
                 "bucket": pdf["bucket"].iloc[0],
                 "centroid_mean": m,
                 "centroid_weight": w,
             }
         )
 
-    return vals.groupBy("bucket").applyInPandas(
-        digest, "bucket int, centroid_mean double, centroid_weight double"
+    return vals.groupBy(*gcols, "bucket").applyInPandas(
+        digest,
+        _keyed_schema(
+            df, gcols, "bucket int, centroid_mean double, centroid_weight double"
+        ),
     )
 
 
-def tdigest_merge(*digests: DataFrame, delta: int = 100) -> DataFrame:
+def tdigest_merge(*digests: DataFrame, delta: int = 100, group_cols=()) -> DataFrame:
     """Merge digests (bucketed or already-merged) into ONE digest of
-    ~delta centroids: union the centroid tables (each bounded) and
-    re-compress in a single bounded `applyInPandas` group. Centroid
-    merging is the t-digest's mergeability contract — per-day digests
-    roll up without touching raw data."""
+    ~delta centroids per ``group_cols`` group: union the centroid tables
+    (each bounded) and re-compress each group in one bounded
+    `applyInPandas` call over centroid rows only. Centroid merging is
+    the t-digest's mergeability contract — per-day digests roll up
+    without touching raw data. Output: (*group_cols, centroid_mean,
+    centroid_weight)."""
     import pandas as pd
 
+    gcols = list(group_cols)
     out = digests[0]
     for d in digests[1:]:
         out = out.unionByName(d)
@@ -625,229 +664,44 @@ def tdigest_merge(*digests: DataFrame, delta: int = 100) -> DataFrame:
             pdf["centroid_weight"].to_numpy(),
             delta,
         )
-        return pd.DataFrame({"centroid_mean": m, "centroid_weight": w})
-
-    return (
-        out.withColumn("__g", F.lit(0))
-        .groupBy("__g")
-        .applyInPandas(
-            lambda pdf: compress(pdf),
-            "centroid_mean double, centroid_weight double",
-        )
-    )
-
-
-def tdigest_quantile(digest: DataFrame, qs: list[float]) -> DataFrame:
-    """Quantile estimates from a merged digest: linear interpolation
-    between centroid means at the target cumulative weight (each
-    centroid's mass centered at its midpoint). The digest is tiny
-    (~delta rows), so this collects it and emits one row per q:
-    (q double, est double)."""
-    import pandas as pd  # noqa: F401
-
-    rows = sorted(
-        digest.collect(), key=lambda r: r["centroid_mean"]
-    )
-    means = [r["centroid_mean"] for r in rows]
-    weights = [r["centroid_weight"] for r in rows]
-    total = sum(weights)
-    # midpoint cumulative positions
-    cum, acc = [], 0.0
-    for w in weights:
-        cum.append(acc + w / 2.0)
-        acc += w
-    out = []
-    for q in qs:
-        target = q * total
-        if target <= cum[0]:
-            est = means[0]
-        elif target >= cum[-1]:
-            est = means[-1]
-        else:
-            import bisect
-
-            i = bisect.bisect_left(cum, target)
-            frac = (target - cum[i - 1]) / (cum[i] - cum[i - 1])
-            est = means[i - 1] + frac * (means[i] - means[i - 1])
-        out.append((float(q), float(est)))
-    spark = digest.sparkSession
-    return spark.createDataFrame(out, "q double, est double")
-
-
-def heavy_hitters_grouped(
-    df: DataFrame, group_col: str, key_col: str, k: int = 32
-) -> DataFrame:
-    """Per-group heavy hitters: for every ``group_col`` value, the keys
-    with within-group frequency > group_n / k — "trending items per
-    segment" without a full (group, key) groupBy over the key space.
-
-    Pass 1a (mapInPandas, no shuffle): each scan task keeps one
-    Misra-Gries dict PER GROUP seen (O(groups_in_task * k) state) and
-    emits weighted summaries — <= (k-1) rows per (task, group). Pass 1b:
-    the summaries shuffle on the group (bounded rows, never raw data)
-    and fold per group into <= k-1 candidates (`mg_fold` is the MG
-    merge, so the per-group undercount bound N_g/k survives the merge
-    tree). Pass 2: counts ONLY candidate (group, key) pairs —
-    non-candidates collapse into one NULL key per group — and the group
-    totals come out of the same aggregation.
-
-    Output: (group string, key string, n bigint) with n * k > group_n
-    (both columns stringified for genericity).
-    """
-    import pandas as pd
-
-    pairs = df.select(
-        F.col(group_col).cast("string").alias("grp"),
-        F.col(key_col).cast("string").alias("key"),
-    )
-
-    def summaries(batches):
-        ds: dict = {}
-        for pdf in batches:
-            for (g, key), c in pdf.groupby(["grp", "key"]).size().items():
-                mg_fold(ds.setdefault(g, {}), [(key, int(c))], k)
-        yield pd.DataFrame(
-            [
-                (g, key, int(w))
-                for g, d in ds.items()
-                for key, w in d.items()
-            ],
-            columns=["grp", "key", "wt"],
-        )
-
-    summ = pairs.mapInPandas(
-        summaries, "grp string, key string, wt bigint"
-    )
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        d: dict = {}
-        mg_fold(d, zip(pdf["key"], pdf["wt"]), k)
-        return pd.DataFrame({"grp": pdf["grp"].iloc[0], "key": list(d.keys())})
-
-    cands = summ.groupBy("grp").applyInPandas(
-        merge, "grp string, key string"
-    ).withColumn("is_c", F.lit(True))
-    flagged = pairs.join(F.broadcast(cands), ["grp", "key"], "left")
-    counts = flagged.groupBy(
-        "grp", F.when(F.col("is_c"), F.col("key")).alias("key")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    totals = counts.groupBy("grp").agg(F.sum("n").alias("grp_n"))
-    return (
-        counts.where(F.col("key").isNotNull())
-        .join(F.broadcast(totals), "grp")
-        .where(F.col("n") * k > F.col("grp_n"))
-        .select(F.col("grp").alias(group_col), "key", "n")
-    )
-
-
-def tdigest_build_grouped(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    delta: int = 100,
-    n_buckets: int = 8,
-) -> DataFrame:
-    """Per-GROUP distributed t-digests — the quantile sibling of
-    `hll_registers(group)` / `heavy_hitters_grouped`: rows hash into
-    deterministic md5 value-buckets WITHIN each group, each
-    (group, bucket) cell compresses its own ~delta-centroid digest in
-    one `applyInPandas` pass, and `tdigest_merge_grouped` folds the
-    cells per group. State is |groups| x n_buckets x ~2*delta centroid
-    rows — never raw data — and every stage shuffles summaries keyed on
-    the group, so a per-type p99 over 100 TB moves megabytes.
-
-    Output: (group_col, bucket int, centroid_mean, centroid_weight).
-    """
-    import pandas as pd
-
-    key = (
-        F.conv(
-            F.substring(F.md5(F.col(value_col).cast("string")), 1, 6), 16, 10
-        ).cast("long")
-        % n_buckets
-    ).cast("int")
-    vals = df.select(
-        F.col(group_col).alias("__grp"),
-        key.alias("bucket"),
-        F.col(value_col).cast("double").alias("v"),
-    )
-    gtype = df.schema[group_col].dataType.simpleString()
-
-    def digest(pdf: pd.DataFrame) -> pd.DataFrame:
-        m, w = _tdigest_compress(
-            pdf["v"].to_numpy(dtype=float), [1.0] * len(pdf), delta
-        )
         return pd.DataFrame(
             {
-                "__grp": pdf["__grp"].iloc[0],
-                "bucket": pdf["bucket"].iloc[0],
+                **{c: pdf[c].iloc[0] for c in gcols},
                 "centroid_mean": m,
                 "centroid_weight": w,
             }
         )
 
-    return (
-        vals.groupBy("__grp", "bucket")
-        .applyInPandas(
-            digest,
-            f"__grp {gtype}, bucket int, centroid_mean double,"
-            " centroid_weight double",
-        )
-        .withColumnRenamed("__grp", group_col)
-    )
-
-
-def tdigest_merge_grouped(
-    digest: DataFrame, group_col: str, delta: int = 100
-) -> DataFrame:
-    """Fold a grouped bucket-digest table into ONE ~delta-centroid
-    digest per group (bounded per-group applyInPandas over centroid
-    rows only). Output: (group_col, centroid_mean, centroid_weight)."""
-    import pandas as pd
-
-    gtype = digest.schema[group_col].dataType.simpleString()
-
-    def compress(pdf: pd.DataFrame) -> pd.DataFrame:
-        m, w = _tdigest_compress(
-            pdf["centroid_mean"].to_numpy(),
-            pdf["centroid_weight"].to_numpy(),
-            delta,
-        )
-        return pd.DataFrame(
-            {
-                group_col: pdf[group_col].iloc[0],
-                "centroid_mean": m,
-                "centroid_weight": w,
-            }
-        )
-
-    return digest.groupBy(group_col).applyInPandas(
+    return _keyed_groups(out, gcols).applyInPandas(
         compress,
-        f"{group_col} {gtype}, centroid_mean double, centroid_weight double",
+        _keyed_schema(out, gcols, "centroid_mean double, centroid_weight double"),
     )
 
 
-def tdigest_quantile_grouped(
-    digest: DataFrame, group_col: str, qs: list[float]
-) -> DataFrame:
-    """Per-group quantile estimates from merged grouped digests —
-    midpoint-interpolated like `tdigest_quantile`, but computed INSIDE
-    an `applyInPandas` group (no driver collect: the group count may be
-    large even though each digest is tiny).
+def tdigest_quantile(digest: DataFrame, qs: list[float], group_cols=()) -> DataFrame:
+    """Quantile estimates from merged digests, one row per (group, q):
+    linear interpolation between centroid means at the target
+    cumulative weight (each centroid's mass centered at its midpoint).
+    Runs per group inside `applyInPandas` — no driver collect, since the
+    group count may be large even though each digest is tiny; centroids
+    sort STABLY by mean, so equal means keep their digest order.
 
-    Output: (group_col, q double, est double)."""
+    Output: (*group_cols, q double, est double)."""
     import numpy as np
     import pandas as pd
 
-    gtype = digest.schema[group_col].dataType.simpleString()
+    gcols = list(group_cols)
     qlist = [float(q) for q in qs]
 
     def est(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("centroid_mean")
+        pdf = pdf.sort_values("centroid_mean", kind="stable")
         means = pdf["centroid_mean"].to_numpy()
         weights = pdf["centroid_weight"].to_numpy()
-        total = float(weights.sum())
-        cum = np.cumsum(weights) - weights / 2.0
+        acc = np.cumsum(weights)
+        total = float(acc[-1])
+        # midpoint positions: (mass before the centroid) + w/2
+        cum = np.concatenate(([0.0], acc[:-1])) + weights / 2.0
+        key = [pdf[c].iloc[0] for c in gcols]
         out = []
         for q in qlist:
             target = q * total
@@ -859,11 +713,11 @@ def tdigest_quantile_grouped(
                 i = int(np.searchsorted(cum, target, side="left"))
                 frac = (target - cum[i - 1]) / (cum[i] - cum[i - 1])
                 e = means[i - 1] + frac * (means[i] - means[i - 1])
-            out.append((pdf[group_col].iloc[0], q, float(e)))
-        return pd.DataFrame(out, columns=[group_col, "q", "est"])
+            out.append((*key, q, float(e)))
+        return pd.DataFrame(out, columns=[*gcols, "q", "est"])
 
-    return digest.groupBy(group_col).applyInPandas(
-        est, f"{group_col} {gtype}, q double, est double"
+    return _keyed_groups(digest, gcols).applyInPandas(
+        est, _keyed_schema(digest, gcols, "q double, est double")
     )
 
 

@@ -249,6 +249,44 @@ def test_hamming_band_join_in_one_place():
                     ("hamming_band_pairs", "hamming")], seen
 
 
+def test_operators_inventory_is_generated():
+    """docs/OPERATORS.md is exactly what `tools/gen_inventory.py`
+    renders from the registry: an entry docstring edited without
+    regenerating the file fails here."""
+    import importlib.util
+    from pathlib import Path
+
+    root = Path(entry_mod.__file__).resolve().parent
+    spec = importlib.util.spec_from_file_location(
+        "gen_inventory", root / "tools" / "gen_inventory.py"
+    )
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    committed = (root / "docs" / "OPERATORS.md").read_text()
+    assert committed == gen.render(), "run python tools/gen_inventory.py"
+
+
+def test_sketch_families_have_no_twins():
+    """Each sketch family is one keyed function: exact percentiles take
+    ``weight_col`` and ``key_cols=[]``, t-digest and heavy hitters take
+    ``group_cols`` — no operator defines a `*_grouped` or
+    `keyed_weighted_*` twin."""
+    import ast
+    import fnmatch
+    from pathlib import Path
+
+    root = Path(entry_mod.__file__).resolve().parent
+    twins = [
+        f"{path.relative_to(root)}:{node.lineno} {node.name}"
+        for path in sorted((root / "henbun_spark" / "operators").glob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.FunctionDef)
+        and (fnmatch.fnmatch(node.name, "*_grouped")
+             or fnmatch.fnmatch(node.name, "keyed_weighted_*"))
+    ]
+    assert not twins, f"keyed/grouped twins of a sketch family: {twins}"
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     rows = df.collect()

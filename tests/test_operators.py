@@ -3229,7 +3229,7 @@ def test_heavy_hitters_grouped_planted_skew(spark):
     ).repartition(8)
     from henbun_spark.operators import sketch
 
-    got = sketch.heavy_hitters_grouped(df, "g", "k", k=40).toPandas()
+    got = sketch.heavy_hitters(df, "k", k=40, group_cols=["g"]).toPandas()
     pdf = pd.DataFrame(rows, columns=["g", "k"])
     truth = set()
     for g, sub in pdf.groupby("g"):
@@ -3817,6 +3817,7 @@ def test_keyed_percentiles_exact_matches_builtin(spark):
     ).collect()
     # histogram_cap=None -> one-job histogram fast path (200 distinct
     # values fit); histogram_cap=0 -> the cell-pruned general path.
+    ones = df.withColumn("w", F.lit(1)).withColumn("c", F.lit("all"))
     for cap in (None, 0):
         got = {
             (r["k"], r["p"]): r["value"]
@@ -3827,6 +3828,28 @@ def test_keyed_percentiles_exact_matches_builtin(spark):
         for r in exp_rows:
             for i, p in enumerate(ps):
                 assert got[(r["k"], p)] == r[f"q{i}"], (cap, r["k"], p)
+        # all-ones weights are the unweighted multiset, bitwise
+        got_w = {
+            (r["k"], r["p"]): r["value"]
+            for r in relational.keyed_percentiles_exact(
+                ones, "k", "v", ps, weight_col="w", histogram_cap=cap
+            ).collect()
+        }
+        assert got_w == got, cap
+        # key_cols=[] is one global group, bitwise a constant key
+        glob = {
+            r["p"]: r["value"]
+            for r in relational.keyed_percentiles_exact(
+                ones, [], "v", ps, histogram_cap=cap
+            ).collect()
+        }
+        const = {
+            r["p"]: r["value"]
+            for r in relational.keyed_percentiles_exact(
+                ones, "c", "v", ps, histogram_cap=cap
+            ).collect()
+        }
+        assert glob == const and len(glob) == len(ps), cap
 
 
 def test_keyed_median_mad_both_regimes(spark):
@@ -4403,14 +4426,16 @@ def test_tdigest_grouped_rank_error_and_bounds(spark):
         }
     )
     df = spark.createDataFrame(pdf).repartition(6)
-    dig = sketch.tdigest_merge_grouped(
-        sketch.tdigest_build_grouped(df, "g", "v", delta=100), "g", delta=100
+    dig = sketch.tdigest_merge(
+        sketch.tdigest_build(df, "v", delta=100, n_buckets=8, group_cols=["g"]),
+        delta=100,
+        group_cols=["g"],
     )
     per_group = {r["g"]: r["n"] for r in dig.groupBy("g").agg(F.count(F.lit(1)).alias("n")).collect()}
     assert set(per_group) == {"a", "b", "c"}
     assert all(n <= 220 for n in per_group.values())
     qs = [0.01, 0.5, 0.99]
-    ests = sketch.tdigest_quantile_grouped(dig, "g", qs).collect()
+    ests = sketch.tdigest_quantile(dig, qs, group_cols=["g"]).collect()
     assert len(ests) == 9
     for r in ests:
         vals = pdf.loc[pdf["g"] == r["g"], "v"].to_numpy()
@@ -4421,17 +4446,17 @@ def test_tdigest_grouped_rank_error_and_bounds(spark):
     one = spark.createDataFrame(pdf[pdf["g"] == "a"])
     d1 = sketch.tdigest_merge(sketch.tdigest_build(one, "v", delta=100))
     exp = {r["q"]: r["est"] for r in sketch.tdigest_quantile(d1, qs).collect()}
-    dg = sketch.tdigest_merge_grouped(
-        sketch.tdigest_build_grouped(one, "g", "v", delta=100, n_buckets=16),
-        "g",
+    dg = sketch.tdigest_merge(
+        sketch.tdigest_build(one, "v", delta=100, group_cols=["g"]),
         delta=100,
+        group_cols=["g"],
     )
     got = {
         r["q"]: r["est"]
-        for r in sketch.tdigest_quantile_grouped(dg, "g", qs).collect()
+        for r in sketch.tdigest_quantile(dg, qs, group_cols=["g"]).collect()
     }
     for q in qs:
-        assert abs(got[q] - exp[q]) < 1e-9, q
+        assert got[q] == exp[q], q
 
 
 def test_keyed_prefix_sum_matches_window(spark):
@@ -4764,8 +4789,8 @@ def test_keyed_weighted_percentiles_match_builtin(spark):
     for cap in (None, 0):
         got = {
             (r["k"], r["p"]): r["value"]
-            for r in relational.keyed_weighted_percentiles_exact(
-                df, "k", "v", "w", ps, histogram_cap=cap
+            for r in relational.keyed_percentiles_exact(
+                df, "k", "v", ps, weight_col="w", histogram_cap=cap
             ).collect()
         }
         for r in exp:
@@ -4797,8 +4822,8 @@ def test_percentile_paths_bitwise_random_ps(spark):
     ps = sorted(set([0.0, 1.0] + list(rng.random(13))))
     got_w = {
         (r["k"], r["p"]): r["value"]
-        for r in relational.keyed_weighted_percentiles_exact(
-            df, "k", "v", "w", ps
+        for r in relational.keyed_percentiles_exact(
+            df, "k", "v", ps, weight_col="w"
         ).collect()
     }
     exp_w = df.groupBy("k").agg(
@@ -4827,7 +4852,7 @@ def test_percentile_paths_reject_bad_fractions(spark):
     with _pytest.raises(ValueError, match="percentages"):
         relational.keyed_percentiles_exact(df, "k", "v", [50])
     with _pytest.raises(ValueError, match="percentages"):
-        relational.keyed_weighted_percentiles_exact(df, "k", "v", "w", [1.5])
+        relational.keyed_percentiles_exact(df, "k", "v", [1.5], weight_col="w")
 
 
 def test_merge_agg_states_min_max_spec(spark):

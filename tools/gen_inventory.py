@@ -1,7 +1,8 @@
 """Generate docs/OPERATORS.md: one row per driver-contract query with its
 check mode and the first docstring sentence — the single map from
 contract query to implementation, regenerated from the registry so it
-cannot drift (tests/test_entry.py pins the counts).
+cannot drift (tests/test_entry.py pins the counts and that the committed
+file equals `render()`).
 
 Usage: python tools/gen_inventory.py
 """
@@ -26,7 +27,15 @@ def first_sentence(doc: str | None) -> str:
     return text
 
 
-def main() -> None:
+OUT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "docs",
+    "OPERATORS.md",
+)
+
+
+def render() -> str:
+    """The full text of docs/OPERATORS.md for the current registry."""
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     lines = [
@@ -52,11 +61,15 @@ def main() -> None:
     for name, fn in qs.items():
         mode = "oracle" if name in oracles else "rows-only"
         lines.append(f"| `{name}` | {mode} | {first_sentence(fn.__doc__)} |")
-    out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "docs", "OPERATORS.md")
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    with open(out, "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"wrote {out}: {len(qs)} rows")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    text = render()
+    os.makedirs(os.path.dirname(OUT), exist_ok=True)
+    with open(OUT, "w") as f:
+        f.write(text)
+    print(f"wrote {OUT}: {len(entry_mod.queries())} rows")
 
 
 if __name__ == "__main__":

@@ -76,7 +76,7 @@ DEFAULT = [
 #: the bounded driver collect / order-aligned cells staying flat.
 BIG_DEFAULT = [
     "percentile_quantity",       # keyed_percentiles_exact (lineitem)
-    "weighted_percentile_price", # keyed_weighted_percentiles_exact
+    "weighted_percentile_price", # keyed_percentiles_exact(weight_col=)
     "equidepth_histogram",       # keyed_prefix_sum keyed rank (events)
     "anomaly_mad_events",        # two percentile passes
     "pack_materialize_docs",     # md5_bucketed_prefix_sum (documents)
